@@ -6,9 +6,12 @@ import graft.pipeline.CallCenterPipeline
 
 /** The reference's read-side API: the five Athena queries run VERBATIM —
   * [[queries]] holds the literal statement text of
-  * sql/athena_queries.sql:7-63 (fidelity-tested character-for-character
-  * against the reference file, comments and trailing `;` aside), including
-  * the `callcenter_analytics.` database qualifier.
+  * sql/athena_queries.sql:7-63, including the `callcenter_analytics.`
+  * database qualifier. `AthenaQueriesSpec` checks it character for
+  * character, comments and trailing `;` aside: always against the committed
+  * pin of the verified text (test resource
+  * `graft/sqlapi/athena_queries.statements.sql`), and against
+  * `sql/athena_queries.sql` itself where a reference checkout is present.
   *
   * The qualifier resolves without copying a byte of data: graft sessions
   * set `spark.sql.globalTempDatabase=callcenter_analytics`

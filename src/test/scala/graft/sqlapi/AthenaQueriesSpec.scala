@@ -4,16 +4,20 @@ import graft.SparkSpec
 
 /** Fidelity of the Athena surface: the SQL graft executes IS the reference
   * file's literal text, and the `callcenter_analytics.` qualifier resolves
-  * on a graft session.
+  * on a graft session. The text is checked against a committed pin of the
+  * verified statements always, and against the reference checkout's
+  * `sql/athena_queries.sql` as well where that file exists.
   */
 class AthenaQueriesSpec extends SparkSpec {
 
-  /** Statements of sql/athena_queries.sql in file order: comment lines
-    * dropped, split on `;`, trimmed.
-    */
-  private def referenceStatements: Seq[String] = {
-    val text = java.nio.file.Files.readString(
+  /** The reference checkout's own file, where one is present. */
+  private val liveReference = Option(
       java.nio.file.Paths.get("/root/reference/sql/athena_queries.sql"))
+    .filter(p => java.nio.file.Files.exists(p))
+
+  /** `text`'s statements in file order: `--` lines dropped, split on `;`,
+    * each trimmed. */
+  private def statements(text: String): Seq[String] =
     text.linesIterator
       .filterNot(_.trim.startsWith("--"))
       .mkString("\n")
@@ -21,18 +25,31 @@ class AthenaQueriesSpec extends SparkSpec {
       .map(_.trim)
       .filter(_.nonEmpty)
       .toSeq
-  }
 
   private val fileOrder = Seq(
     "daily_call_summary", "agent_performance_overview",
     "daily_duration_metrics", "top_agents", "high_failure_days")
 
-  test("stored statements are the reference file's text, verbatim") {
-    val ref = referenceStatements
-    assert(ref.size == 5)
+  /** The stored statements equal `source`'s statements, one for one. */
+  private def assertVerbatim(source: String, text: String): Unit = {
+    val ref = statements(text)
+    assert(ref.size == 5, s"$source holds ${ref.size} statements, not 5")
     fileOrder.zip(ref).foreach { case (name, expected) =>
       assert(AthenaQueries.queries(name) == expected,
-        s"$name diverges from the reference file text")
+        s"$name diverges from the reference file text ($source)")
+    }
+  }
+
+  /** The verified statement text, committed as a test resource. */
+  private val pinResource = "/graft/sqlapi/athena_queries.statements.sql"
+
+  test("stored statements are the reference file's text, verbatim") {
+    val pin = getClass.getResource(pinResource)
+    assert(pin != null, s"test resource $pinResource is missing")
+    assertVerbatim(pinResource, scala.util.Using.resource(pin.openStream())(
+      in => new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)))
+    liveReference.foreach { p =>
+      assertVerbatim(p.toString, java.nio.file.Files.readString(p))
     }
   }
 
