@@ -115,12 +115,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     */
   @volatile private[graft] var lastCheckpointBuildVia: String = ""
 
-  /** How the LAST merge on this handle published — `"commit"` (won the
-    * race first try) or `"rebase"` (lost it, re-committed its output with
-    * zero recomputation via [[rebaseMerge]]). Observability only.
-    */
-  @volatile private[graft] var lastMergeCommitVia: String = ""
-
   /** One commit = ONE log file (`<version>.commit`: schema + file list +
     * per-file stats), published atomically by hard-link put-if-absent — the
     * commit either fully exists or doesn't, there is no window where a
@@ -139,7 +133,18 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
                             retired: Seq[String],
                             props: Seq[(String, String)],
                             tsMillis: Option[Long],
-                            features: Seq[String])
+                            features: Seq[String]) {
+    /** Columns with at least one recorded stats line in this snapshot. A
+      * pruning conjunct on any other column keeps every file in both
+      * pruning engines, so [[pruneFilesFor]] leaves it out.
+      */
+    lazy val statsColumns: Set[String] =
+      statsLines.iterator.map { l =>
+        val i = l.indexOf('\t')
+        val j = l.indexOf('\t', i + 1)
+        if (j < 0) l.substring(i + 1) else l.substring(i + 1, j)
+      }.toSet.map(dec) - MergeTable.CountStatKey
+  }
 
   /** Single-slot resolved-snapshot cache. SOUND because a published commit
     * file is immutable (put-if-absent link; vacuum deletes whole versions,
@@ -442,13 +447,11 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       .flatMap(e => org.apache.spark.sql.GraftSqlShims.translateFilter(e))
   }
 
-  /** Time-travel read of any retained snapshot. Files may span several data
-    * directories (untouched files are carried forward across versions), and
-    * partition-column values live in directory names — so we group by data
-    * dir and read each group with its own `basePath`, which preserves both
-    * partition columns and partition pruning. Versions older than the
-    * vacuum horizon fail fast with a clear error instead of a mid-scan
-    * missing-file failure.
+  /** Time-travel read of any retained snapshot: that version's file list,
+    * schema, column mapping and deletion vectors, scanned as one relation
+    * over the log's file list (see [[readFiles]]) — no file listing, at any
+    * version. Versions older than the vacuum horizon fail fast with a
+    * clear error instead of a mid-scan missing-file failure.
     */
   def readVersion(spark: SparkSession, version: Long): DataFrame = {
     val horizon = vacuumHorizon
@@ -535,6 +538,15 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       else MergeTable.derivedPartitionConjuncts(spark, conjuncts0,
         generatedCols.filter { case (p, _) => partitionCols.contains(p) }, types)
     val conjuncts = conjuncts0 ++ derived
+    // A conjunct on a column with no recorded stats can only keep every
+    // file, so the stats prune skips it: a merge's key list on an
+    // unstatted key then builds no per-key expression at all. IN over only
+    // NULLs needs no stats (it is never TRUE).
+    val statted = readCommit(version).statsColumns
+    val statConjuncts = conjuncts.filter {
+      case sources.In(_, vs) if vs.forall(_ == null) => true
+      case c => c.references.forall(statted)
+    }
     // At large file counts the per-file driver loop below becomes the
     // bottleneck (O(files) stat-string parses + predicate evals PER READ).
     // When a columnar checkpoint covers this version, the same pruning
@@ -542,7 +554,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     // distributed, codegen'd, O(kept + tail churn) on the driver.
     val viaCheckpoint: Option[Seq[String]] =
       if (all.size >= MergeTable.checkpointThreshold(spark))
-        pruneFilesDistributed(spark, version, all, conjuncts, types)
+        pruneFilesDistributed(spark, version, all, conjuncts, statConjuncts, types)
       else None
     lastPruneVia = if (viaCheckpoint.isDefined) "checkpoint" else "driver"
     var files = viaCheckpoint.getOrElse {
@@ -606,7 +618,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     // the checkpoint path already applied partition + stats pruning inside
     // Catalyst — re-running the driver admit loop would only repeat work
     if (viaCheckpoint.isEmpty)
-      files = files.filter(f => conjuncts.forall(c => admit(f, c)))
+      files = files.filter(f => statConjuncts.forall(c => admit(f, c)))
     val eqs = conjuncts.collect {
       case sources.EqualTo(a, v) if v != null       => (a, v)
       case sources.EqualNullSafe(a, v) if v != null => (a, v)
@@ -892,6 +904,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
   private def pruneFilesDistributed(spark: SparkSession, version: Long,
                                     all: Seq[String],
                                     conjuncts: Seq[sources.Filter],
+                                    statConjuncts: Seq[sources.Filter],
                                     types: Map[String, org.apache.spark.sql.types.DataType])
       : Option[Seq[String]] = try {
     import org.apache.spark.sql.types.{DataType, StringType}
@@ -955,7 +968,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
         case _ => None
       }
     }
-    val statKeep = conjuncts.flatMap(statExcluded)
+    val statKeep = statConjuncts.flatMap(statExcluded)
       .reduceOption(_ || _).map(e => !coalesce(e, lit(false)))
       .getOrElse(lit(true))
 
@@ -964,9 +977,13 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     // preserve the manifest's file order (scan determinism): O(all) set
     // lookups, no parsing
     Some(all.filter(keptSet))
-  } catch { case scala.util.control.NonFatal(e) =>
-    if (sys.env.contains("GRAFT_DEBUG_CHECKPOINT")) e.printStackTrace()
-    None
+  } catch {
+    // StackOverflowError too: a long IN list on a statted column is an Or
+    // chain as deep as the list, which can overflow the planner — the
+    // driver loop then prunes instead of the merge failing
+    case e: Throwable if scala.util.control.NonFatal(e) || e.isInstanceOf[StackOverflowError] =>
+      if (sys.env.contains("GRAFT_DEBUG_CHECKPOINT")) e.printStackTrace()
+      None
   }
 
   /** [[aggregateFromStats]]'s DISTRIBUTED twin: answer the same pushed
@@ -1292,15 +1309,18 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       substring_index(col("_metadata.file_path"), "/", -(partitionCols.size + 2)),
       "\\+", "%2B"))
 
-  /** Read a subset of a snapshot's files with its schema. Files may span
-    * several data directories (untouched files are carried forward across
-    * versions), and partition-column values live in directory names — so
-    * group by data dir and read each group with its own `basePath`, which
-    * preserves both partition columns and partition pruning.
+  /** Read a subset of a snapshot's files with its schema, as ONE parquet
+    * relation over a [[ManifestFileIndex]] of exactly those files. The log
+    * already names every live file, so nothing is listed: each file costs
+    * one driver-side stat, with no Spark job. Files may span several data
+    * directories (untouched files are carried forward across versions);
+    * the index parses each directory's partition values with that data
+    * dir as base path, so partition columns and partition pruning come out
+    * as they would from a per-data-dir `basePath` read.
     *
     * `dvs` (the snapshot's deletion-vector map, restricted here to the files
-    * actually read) masks out deleted row positions: each read branch
-    * attaches the scan's `_metadata` file/row-position columns — evaluated
+    * actually read) masks out deleted row positions: the read attaches the
+    * scan's `_metadata` file/row-position columns — evaluated
     * at the scan itself, zero cost beyond two extra columns — and one
     * LEFT ANTI join against the referenced dv rows drops masked positions.
     * The dv side is broadcast when the commit-recorded counts bound it
@@ -1346,32 +1366,25 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       val physSchema =
         if (withRowIds) physSchema0.add(RowIdCol, org.apache.spark.sql.types.LongType)
         else physSchema0
-      val byDataDir = fs.groupBy(f => f.takeWhile(_ != '/'))
-      byDataDir.toSeq.sortBy(_._1).map { case (dataDir, rel) =>
-        val df = spark.read
-          .option("basePath", s"$root/$dataDir")
-          .schema(physSchema) // uniform schema incl. partition cols; skips footer merging
-          .parquet(rel.map(r => s"$root/$r"): _*)
-        // _metadata must be projected directly above each file source —
-        // it does not resolve through the union. The dv key is the
-        // MANIFEST-relative path (see relPathCol): both join sides derive
-        // from this same expression, so keys match by construction — and
-        // a bare basename would be ambiguous (dynamic partitioning gives
-        // every partition dir of one task the SAME part-file name).
-        val posCols =
-          (if (needPos)
-            Seq(relPathCol.as(DvFileCol),
-              col("_metadata.row_index").as(DvIdxCol))
-          else Nil) ++
-            fileCol.map(c => relPathCol.as(c)).toSeq
-        // always project to the COMMIT schema's column order — the raw
-        // scan appends partition columns last, which would diverge from
-        // the declared schema once ADD COLUMNS places one mid-schema
-        val logicalCols =
-          schema.fields.toSeq.map(f => col(physOf(colmap, f.name)).as(f.name)) ++
-            (if (withRowIds) Seq(col(RowIdCol)) else Nil)
-        df.select(logicalCols ++ posCols: _*)
-      }.reduce(_ unionByName _)
+      // ONE relation over the snapshot's file list (see ManifestFileIndex).
+      // The dv key is the MANIFEST-relative path (see relPathCol): both join sides derive
+      // from this same expression, so keys match by construction — and a
+      // bare basename would be ambiguous (dynamic partitioning gives every
+      // partition dir of one task the SAME part-file name).
+      val df = ManifestFileIndex.read(spark, root, fs, physSchema)
+      val posCols =
+        (if (needPos)
+          Seq(relPathCol.as(DvFileCol),
+            col("_metadata.row_index").as(DvIdxCol))
+        else Nil) ++
+          fileCol.map(c => relPathCol.as(c)).toSeq
+      // always project to the COMMIT schema's column order — the raw scan
+      // appends partition columns last, which would diverge from the
+      // declared schema once ADD COLUMNS places one mid-schema
+      val logicalCols =
+        schema.fields.toSeq.map(f => col(physOf(colmap, f.name)).as(f.name)) ++
+          (if (withRowIds) Seq(col(RowIdCol)) else Nil)
+      df.select(logicalCols ++ posCols: _*)
     }
     if (hit.isEmpty) base
     else {
@@ -1809,7 +1822,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       val commitSchema = StructType(
         newData.schema.fields.filterNot(_.name == MergeTable.RowIdCol))
       val newStats = collectStats(spark, newFiles, commitSchema, cmap)
-      lastMergeCommitVia = "commit"
       try commit(newVersion, keptRel ++ newFiles, commitSchema,
         carryStats(v, keptRel) ++ newStats,
         cdfDir, txn = txn,
@@ -1933,7 +1945,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
           cTip.statsLines.filterNot(l =>
             touchedSet.contains(dec(l.takeWhile(_ != '\t')))) ++ newStats,
           txn = txn, op = op)
-        lastMergeCommitVia = "rebase"
         return
       } catch {
         case _: java.util.ConcurrentModificationException
@@ -2301,7 +2312,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       val newFiles = listParquet(Paths.get(root, dataDir)).map(p => relativize(p))
 
       val newStats = collectStats(spark, newFiles, schema, cmap)
-      lastMergeCommitVia = "commit"
       try commit(newVersion, keptRel ++ newFiles, schema,
         carryStats(v, keptRel) ++ newStats,
         cdfDir, txn = txn,
@@ -2556,7 +2566,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       } finally if (direct) tdf.unpersist()
     val newFiles = listParquet(Paths.get(root, dataDir)).map(relativize)
     val newStats = collectStats(spark, newFiles, schemaOf(v), colmapOf(v))
-    lastMergeCommitVia = "commit"
     try commit(newVersion, keptRel ++ newFiles, schemaOf(v),
       carryStats(v, keptRel) ++ newStats, cdfDir, op = "DELETE")
     catch {
@@ -2672,7 +2681,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
         matched.drop(DvFileCol, DvIdxCol).withColumn(ChangeType, lit("delete")),
         newVersion, attempt))
       else None
-    lastMergeCommitVia = "commit"
     try commit(newVersion, files, schema, carryStats(v, files), cdfDir,
       dvsOverride = Some(newDvs), op = "DELETE (DV)")
     catch {
@@ -2715,7 +2723,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
           try {
             commit(tip + 1, cTip.files, cTip.schema, cTip.statsLines,
               dvsOverride = Some(rebasedDvs), op = "DELETE (DV)")
-            lastMergeCommitVia = "rebase"
             done = true
           } catch {
             case _: java.util.ConcurrentModificationException if attempt < 10 => ()
@@ -2852,7 +2859,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
 
       matched.unpersist()
       val newStats = collectStats(spark, newFiles, schema, colmapOf(v))
-      lastMergeCommitVia = "commit"
       try commit(newVersion, files ++ newFiles, schema,
         carryStats(v, files) ++ newStats,
         cdfDir, dvsOverride = Some(newDvs), txn = txn, op = "MERGE (DV)")
@@ -2897,7 +2903,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
               commit(tip + 1, cTip.files ++ newFiles, cTip.schema,
                 cTip.statsLines ++ newStats,
                 dvsOverride = Some(rebasedDvs), txn = txn, op = "MERGE (DV)")
-              lastMergeCommitVia = "rebase"
               done = true
             } catch {
               case _: java.util.ConcurrentModificationException if attempt < 10 => ()
@@ -3016,7 +3021,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       else None
     matched.unpersist()
     val newStats = collectStats(spark, newFiles, schema, colmapOf(v))
-    lastMergeCommitVia = "commit"
     try commit(newVersion, files ++ newFiles, schema,
       carryStats(v, files) ++ newStats,
       cdfDir, dvsOverride = Some(newDvs), op = "UPDATE (DV)")
@@ -3058,7 +3062,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
             commit(tip + 1, cTip.files ++ newFiles, cTip.schema,
               cTip.statsLines ++ newStats,
               dvsOverride = Some(rebasedDvs), op = "UPDATE (DV)")
-            lastMergeCommitVia = "rebase"
             done = true
           } catch {
             case _: java.util.ConcurrentModificationException if attempt2 < 10 => ()
@@ -3145,7 +3148,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       } finally if (direct) tdf.unpersist()
     val newFiles = listParquet(Paths.get(root, dataDir)).map(relativize)
     val newStats = collectStats(spark, newFiles, schema, colmapOf(v))
-    lastMergeCommitVia = "commit"
     try commit(newVersion, keptRel ++ newFiles, schema,
       carryStats(v, keptRel) ++ newStats, cdfDir, op = "UPDATE")
     catch {
@@ -3234,7 +3236,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
           newVersion, dataDir))
       } else None
     val newStats = collectStats(spark, newFiles, schema, colmapOf(v))
-    lastMergeCommitVia = "commit"
     try commit(newVersion, keptRel ++ newFiles, schema,
       carryStats(v, keptRel) ++ newStats,
       cdfDir,
@@ -3450,7 +3451,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     writeData(packed, dataDir, colmapOf(v))
     val newFiles = listParquet(Paths.get(root, dataDir)).map(relativize)
     val newStats = collectStats(spark, newFiles, schema, colmapOf(v))
-    lastMergeCommitVia = "commit"
     try commit(newVersion, keptRel ++ newFiles, schema,
       carryStats(v, keptRel) ++ newStats, op = "OPTIMIZE")
     catch {
@@ -3497,7 +3497,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     writeData(packed, dataDir, colmapOf(v))
     val newFiles = listParquet(Paths.get(root, dataDir)).map(relativize)
     val newStats = collectStats(spark, newFiles, c.schema, colmapOf(v))
-    lastMergeCommitVia = "commit"
     try commit(newVersion, keptRel ++ newFiles, c.schema,
       carryStats(v, keptRel) ++ newStats,
       dvsOverride = Some(Nil), // purged: the new snapshot carries no masks

@@ -68,8 +68,9 @@ class PlanSpec extends SparkSpec {
     val q = t.read(spark).filter($"month" === 4)
     val perScan = scans(q).map(_.selectedPartitions.partitionCount)
     assert(perScan.nonEmpty)
-    // each per-data-dir scan prunes to at most the single matching partition
-    assert(perScan.forall(_ <= 1), s"partitions scanned per data dir: $perScan")
+    // ONE scan over the snapshot's file list, pruned to the single matching
+    // partition (month=4 lives only in the first data dir)
+    assert(perScan === Seq(1), s"partitions scanned: $perScan")
     assert(q.count() === 100)
   }
 

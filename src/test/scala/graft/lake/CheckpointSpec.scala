@@ -421,4 +421,24 @@ class CheckpointSpec extends SparkSpec {
       assert(kept.contains(40L), s"newest checkpoint must survive (kept: $kept)")
     }
   }
+
+  test("a 2,000-key merge on the checkpoint path equals the driver-loop merge") {
+    // The key list prunes through a per-key Or chain over the checkpoint's
+    // stats; at this depth planning it can overflow the stack, and the
+    // merge must fall back to the driver loop instead of failing.
+    def merged(threshold: Int): Set[(Long, String)] = withThreshold(threshold) {
+      val t = new MergeTable(scratch(s"cp_deep_$threshold"), Seq("p"), statsCols = Seq("k"))
+      t.overwrite(spark.range(4000).select(col("id").as("k"),
+        concat(lit("v"), col("id").cast("string")).as("v"),
+        (col("id") % 16).cast("string").as("p")).repartition(1))
+      assert(t.filesOf(0).size === 16)
+      t.merge(spark, spark.range(0, 4000, 2).select(col("id").as("k"),
+        lit("m").as("v"), (col("id") % 16).cast("string").as("p")), Seq("k"))
+      t.read(spark).select("k", "v").as[(Long, String)].collect().toSet
+    }
+    val viaCheckpoint = merged(4)
+    assert(viaCheckpoint.size === 4000)
+    assert(viaCheckpoint.count(_._2 == "m") === 2000)
+    assert(viaCheckpoint === merged(Int.MaxValue))
+  }
 }
