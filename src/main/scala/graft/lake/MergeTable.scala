@@ -838,15 +838,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     Some((added.map(f => f -> statByFile.getOrElse(f, Nil)), removed))
   }
 
-  /** Distributed data skipping: evaluate partition + min/max/null pruning
-    * as ONE Catalyst filter over (checkpoint frame − tail removes + tail
-    * adds) and collect only the kept paths. Driver cost is O(tail churn +
-    * kept), never O(total files); the filter itself is codegen'd and runs
-    * wherever the checkpoint's splits are scheduled. None whenever the
-    * checkpoint chain cannot be resolved incrementally — the caller then
-    * runs the (sound, slower) driver loop. Every decision here mirrors the
-    * driver path's conservatism: an undecidable case keeps the file.
-    */
   /** The checkpoint frame RESOLVED to `version`: (checkpoint − tail
     * removes + tail adds), with typed partition columns. Driver cost is
     * O(tail churn) — the add/remove fold over at most CheckpointEvery
@@ -901,6 +892,15 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     None
   }
 
+  /** Distributed data skipping: evaluate partition + min/max/null pruning
+    * as ONE Catalyst filter over (checkpoint frame − tail removes + tail
+    * adds) and collect only the kept paths. Driver cost is O(tail churn +
+    * kept), never O(total files); the filter itself is codegen'd and runs
+    * wherever the checkpoint's splits are scheduled. None whenever the
+    * checkpoint chain cannot be resolved incrementally — the caller then
+    * runs the (sound, slower) driver loop. Every decision here mirrors the
+    * driver path's conservatism: an undecidable case keeps the file.
+    */
   private def pruneFilesDistributed(spark: SparkSession, version: Long,
                                     all: Seq[String],
                                     conjuncts: Seq[sources.Filter],
@@ -1476,29 +1476,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     found
   }
 
-  /** Delta MERGE semantics (SURVEY.md §2.6): UPDATE-ALL / INSERT-ALL
-    * equi-key upsert — "source wins":
-    *  - target rows matching a source key are replaced by the source row
-    *    (even if that moves them to another partition — quirk §2.6.5);
-    *  - unmatched source rows are inserted;
-    *  - unmatched target rows are untouched (their files are not rewritten);
-    *  - duplicate keys in the source are an error, like Delta
-    *    (§2.6.4), unless `checkUniqueSource=false`.
-    *
-    * `deleteNotMatchedBySource` adds Delta's
-    * `WHEN NOT MATCHED BY SOURCE THEN DELETE` clause: target rows whose
-    * key has no source row are DELETED, making the merge a full
-    * synchronization — the scanned scope becomes exactly the source.
-    * The cost is honest about the semantics: every in-scope file is
-    * rewritten (any file may hold now-unmatched rows), so there is no
-    * touched-file probe — but the SCOPE still prunes: with
-    * `keysDeterminePartitions`, only the source's partitions are
-    * synchronized and every other partition's files carry forward
-    * untouched (Delta users scope the clause with a condition for the
-    * same reason; an unscoped full sync rewrites the table by
-    * definition). Incompatible with `mergeSchema` (a full sync dictates
-    * the schema; evolve first with [[addColumns]]).
-    */
   /** Touched-file probe shared by [[merge]] / [[mergeClauses]]: which of
     * `probeRel`'s data files hold at least one row whose key tuple appears
     * in the source. Two engines (guide §2.4/§3.2/§6):
@@ -1520,13 +1497,15 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     * broadcast semi-join applies the exact tuple equality the legacy join
     * applied. NULL source keys match nothing under `===` and are dropped
     * before sampling.
-    */
-  /** Returns (touched file set, source-bounded flag). The flag is true iff
-    * the FAST probe path fired — the source key set collected under the
-    * `mergeProbeInMax` cap — which doubles as the merge's eligibility
-    * signal for the driver-side direct write ([[writeDirectInto]]): a
-    * probe-bounded source plus a byte-bounded touched set bounds the
-    * merge OUTPUT, so collecting it to the driver is safe by construction.
+    *
+    * Returns (touched file set, source-bounded flag). The touched names
+    * are [[relPathCol]]'s, i.e. exactly the manifest's strings. The flag
+    * is true iff the FAST probe path fired — the source key set collected
+    * under the `mergeProbeInMax` cap — which doubles as the merge's
+    * eligibility signal for the driver-side direct write
+    * ([[writeDirectInto]]): a probe-bounded source plus a byte-bounded
+    * touched set bounds the merge OUTPUT, so collecting it to the driver
+    * is safe by construction.
     */
   private def probeTouchedFiles(spark: SparkSession, srcKeys: DataFrame,
                                 keys: Seq[String], version: Long,
@@ -1581,7 +1560,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
             }
           dumpPlan("merge_probe_fast", exact)
           (exact.agg(collect_set(col("_graft_file"))).head
-            .getSeq[String](0).map(normalize).toSet, true)
+            .getSeq[String](0).toSet, true)
         }
       } else {
         val legacy = readFiles(spark, probeRel, schema, cmap, dvs,
@@ -1590,10 +1569,287 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
         dumpPlan("merge_probe_legacy", legacy)
         (legacy
           .select("_graft_file").distinct()
-          .collect().map(r => normalize(r.getString(0))).toSet, false)
+          .collect().map(_.getString(0)).toSet, false)
       }
     }
 
+  // ---- DML steps: each step the DML entry points share, once ----
+
+  /** Delta's MERGE duplicate-source check: a key appearing twice in the
+    * source would match one target row twice.
+    */
+  private def requireUniqueKeys(src: DataFrame, keys: Seq[String]): Unit = {
+    val dup = Timing.time("merge.dupCheck")(
+      src.groupBy(keys.map(col): _*).count().filter(col("count") > 1).limit(1).count())
+    require(dup == 0L,
+      s"merge source has duplicate keys on (${keys.mkString(",")}) — Delta MERGE would fail (multiple source rows matched one target row)")
+  }
+
+  /** A manifest file's partition directory (`a=1/b=2`, "" unpartitioned):
+    * every data file sits at `dataDir/<partition dirs>/<file>` (see
+    * [[relPathCol]]).
+    */
+  private def partDirOf(f: String): String = {
+    val segs = f.split('/')
+    segs.slice(1, segs.length - 1).mkString("/")
+  }
+
+  /** The files of `files` inside the partition directories `dirs` — one
+    * set lookup per file.
+    */
+  private def inScope(files: Seq[String], dirs: Set[String]): Seq[String] =
+    files.filter(f => dirs.contains(partDirOf(f)))
+
+  /** The partition DIRECTORIES a `keysDeterminePartitions` write can
+    * touch: the source's distinct partition tuples, stringified by Spark's
+    * own cast-to-string and escaped/null-mapped by Spark's partition-path
+    * rules — exactly the directories the write path produces.
+    */
+  private def sourceScopeDirs(src: DataFrame): Set[String] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    src.select(partitionCols.map(c => col(c).cast("string")): _*)
+      .distinct().collect().map(r =>
+        partitionCols.indices.map { i =>
+          val seg = ExternalCatalogUtils.getPartitionValueString(r.getString(i))
+          s"${partitionCols(i)}=$seg"
+        }.mkString("/")).toSet
+  }
+
+  /** A key merge's read scope over `files`: (scope dirs, in-scope files).
+    *
+    * Opt-in partition pruning of the probe (see class doc for why it is
+    * NOT the default): when the caller vouches that the merge keys
+    * functionally determine the partition values — every row of a given
+    * key always lands in the same partition — a matched target row can
+    * only live in one of the SOURCE's partitions, so the touched-file
+    * probe (and therefore the rewrite) needs to scan only those
+    * partitions' files. At 100 TB this turns a full-table semi-join into
+    * a probe of the day/month being merged. The source must carry the
+    * partition columns; values are stringified by SPARK's cast-to-string
+    * (session timezone, same Cast the parquet write path feeds into its
+    * partition-path expression — JVM toString diverges for Timestamp's
+    * trailing ".0" and decimal scales) and escaped/null-mapped by
+    * Spark's own partition-path rules, so the probe resolves exactly
+    * the directories Spark actually wrote.
+    *
+    * The scope dirs double as the merge's READ-SET record for conflict
+    * resolution: a race-winning commit whose adds are disjoint from
+    * these directories provably could not change what this merge read,
+    * so the already-written output re-commits against the tip with zero
+    * recomputation (see [[rebaseMerge]]). None = the whole table.
+    */
+  private def mergeScope(src: DataFrame, files: Seq[String],
+                         keysDeterminePartitions: Boolean): (Option[Set[String]], Seq[String]) =
+    if (keysDeterminePartitions && partitionCols.nonEmpty) {
+      val dirs = sourceScopeDirs(src)
+      (Some(dirs), inScope(files, dirs))
+    } else (None, files)
+
+  /** Snapshot `v`'s files split for a key merge: [[mergeScope]], then the
+    * touched-file probe over the scope ([[probeTouchedFiles]]). Only file
+    * *names* are collected — metadata, not data. `wholeScope` (a full
+    * sync, or BY SOURCE clauses) skips the probe: every in-scope file is
+    * rewritten regardless of matches, because any may hold now-unmatched
+    * rows.
+    *
+    * The flag is the rewrite's driver-side direct-write eligibility (see
+    * [[writeDirectInto]]): a probe-bounded source (≤ mergeProbeInMax keys)
+    * over a byte-bounded touched set bounds the rewrite output, so both
+    * the data write AND the change feed skip the distributed write
+    * machinery entirely.
+    */
+  private def splitByKeys(spark: SparkSession, src: DataFrame, srcKeys: DataFrame,
+                          keys: Seq[String], v: Long, keysDeterminePartitions: Boolean,
+                          wholeScope: Boolean): (MergeTable.TouchedSplit, Boolean) = {
+    val oldFiles = filesOf(v)
+    val (scopeDirs, probeRel) = mergeScope(src, oldFiles, keysDeterminePartitions)
+    val (touched, bounded) =
+      if (wholeScope) (probeRel.toSet, false)
+      else probeTouchedFiles(spark, srcKeys, keys, v, probeRel, schemaOf(v),
+        colmapOf(v), dvsOf(v))
+    val (t, k) = oldFiles.partition(touched.contains)
+    val direct = bounded && directWriteOk(spark, t,
+      extraRows = spark.conf.get("spark.graft.mergeProbeInMax", "10000").toLong)
+    (MergeTable.TouchedSplit(t, k, scopeDirs.map(scopeConflict)), direct)
+  }
+
+  /** Snapshot `v`'s files split for a predicate DML ([[delete]],
+    * [[update]], [[overwriteWhere]]): the files holding at least one
+    * predicate-TRUE row, probed over the predicate's partition candidates
+    * only, then the rest. The predicate doubles as the read set.
+    */
+  private def splitByPredicate(spark: SparkSession, v: Long,
+                               predicate: Column): MergeTable.TouchedSplit = {
+    val schema = schemaOf(v)
+    val probe = partitionCandidates(spark, filesOf(v), schema, predicate)
+    val touched = readFiles(spark, probe, schema, colmapOf(v), dvsOf(v),
+        fileCol = Some("_graft_file"))
+      .filter(predicate)
+      .select("_graft_file").distinct()
+      .collect().map(_.getString(0)).toSet
+    val (t, k) = filesOf(v).partition(touched.contains)
+    MergeTable.TouchedSplit(t, k, Some(predicateConflict(spark, schema, predicate)))
+  }
+
+  /** Read set of a scoped merge: a winner-added file conflicts iff it
+    * lies in one of the scope directories.
+    */
+  private def scopeConflict(dirs: Set[String]): Seq[String] => Boolean =
+    adds => inScope(adds, dirs).nonEmpty
+
+  /** Read set of a predicate DML: a winner-added file conflicts iff its
+    * partition tuple could satisfy the predicate ([[partitionCandidates]]
+    * is conservative: an undecidable predicate keeps files → treated as a
+    * conflict → full re-run by the caller, never a wrong rebase).
+    */
+  private def predicateConflict(spark: SparkSession, schema: StructType,
+                                predicate: Column): Seq[String] => Boolean =
+    adds => partitionCandidates(spark, adds, schema, predicate).nonEmpty
+
+  /** Touched-file rows of snapshot `v`, read once and dv-masked (a rewrite
+    * must never resurrect deleted rows); the row-tracking id column rides
+    * the read. `pin` caches them: on the byte-bounded direct path the
+    * rewrite and the change feed each consume these rows.
+    */
+  private def readTouched(spark: SparkSession, v: Long, touchedRel: Seq[String],
+                          pin: Boolean): DataFrame = {
+    val td = readFiles(spark, touchedRel, schemaOf(v), colmapOf(v), dvsOf(v),
+      withRowIds = rowTrackingEnabled)
+    if (pin) td.cache() else td
+  }
+
+  /** A merge's data write for version `v + 1`, with its change feed
+    * written CONCURRENTLY (guide §2.6: overlap independent jobs; the two
+    * small writes back-fill each other's task tails). The feed derives
+    * only from the OLD files and the cached source, so it is independent
+    * of the data write; it is staged before the commit that records it
+    * (see [[writeChanges]]). `pinned` (the direct path's cached touched
+    * rows) is released once both writes are done. Returns the feed dir.
+    */
+  private def writeWithFeed(v: Long, data: DataFrame, feed: Option[DataFrame],
+                            dataDir: String, direct: Boolean,
+                            pinned: Option[DataFrame]): Option[String] = {
+    val cdfTask = feed.map(f => MergeTable.startAsync(() =>
+      // the feed speaks user columns only
+      writeChanges(f.drop(MergeTable.RowIdCol), v + 1, dataDir, direct)))
+    try {
+      // a direct write packs one file per partition dir itself, so the
+      // rebalance hint (an exchange) would be pure overhead
+      writeData(if (direct) data else optimizeWriteIfEnabled(data),
+        dataDir, colmapOf(v), direct)
+      cdfTask.map(MergeTable.awaitAsync)
+    } catch { case e: Throwable =>
+      cdfTask.foreach(_.cancel(false)); throw e
+    } finally if (direct) pinned.foreach(_.unpersist())
+  }
+
+  /** The dv writers' shared mask step: stage `matched`'s (file, position)
+    * rows under `dv/<attempt>` (one scan; counts then come from the staged
+    * rows at metadata cost), append the prior masks of every touched file,
+    * and count the result per file. Returns None above `maxNewDvRows` (a
+    * mass change is cheaper rewritten once than carried as a huge mask on
+    * every scan — the caller falls back to its rewriting twin) and empty
+    * masks when nothing matched; both remove the staging dir. An abandoned
+    * attempt dir (lost commit race, crash) is unreferenced and vacuumed
+    * like any orphan data dir. repartition (not coalesce) keeps the scan
+    * parallel — only the position rows shuffle, and there are at most
+    * maxNewDvRows.
+    *
+    * Union-on-rewrite invariant: a touched file's binding points at ONE
+    * dir holding ALL its masked positions, so prior masks for touched
+    * files are appended into the new dir. Older dirs may retain stale
+    * subsets of these rows for OTHER still-bound files' sake — duplicates
+    * are harmless under the read path's LEFT ANTI.
+    */
+  private def stageMasks(spark: SparkSession, matched: DataFrame, attempt: String,
+                         dvs: Map[String, (String, Long)],
+                         maxNewDvRows: Long): Option[MergeTable.DvMasks] = {
+    import MergeTable.{DvFileCol, DvIdxCol}
+    val dvRel = s"dv/$attempt"
+    matched.select(DvFileCol, DvIdxCol)
+      .repartition(1).write.parquet(s"$root/$dvRel")
+    def staged = spark.read.schema(MergeTable.DvSchema).parquet(s"$root/$dvRel")
+    val newCnt = staged.count()
+    if (newCnt == 0L || newCnt > maxNewDvRows) {
+      deleteRecursively(Paths.get(root, dvRel))
+      return if (newCnt == 0L) Some(MergeTable.DvMasks(dvRel, Nil, Map.empty)) else None
+    }
+    val touchedFiles = staged.select(DvFileCol).distinct()
+      .collect().map(_.getString(0)).toSeq
+    val priorBound = touchedFiles.filter(dvs.contains)
+    if (priorBound.nonEmpty) {
+      val oldDirs = priorBound.map(f => dvs(f)._1).distinct.sorted
+      spark.read.schema(MergeTable.DvSchema)
+        .parquet(oldDirs.map(d => s"$root/$d"): _*)
+        .filter(col(DvFileCol).isin(priorBound: _*))
+        .repartition(1).write.mode("append").parquet(s"$root/$dvRel")
+    }
+    val cum = staged.groupBy(DvFileCol).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    Some(MergeTable.DvMasks(dvRel, touchedFiles, cum))
+  }
+
+  /** A DML that changed nothing still records its operation: a
+    * metadata-only version with the same file list (Delta's no-op commit).
+    */
+  private def commitUnchanged(v: Long, op: String): Unit =
+    commit(v + 1, filesOf(v), schemaOf(v), carryStats(v, filesOf(v)), op = op)
+
+  /** Every data-writing DML's commit of version `v + 1`: `split.kept` plus
+    * the files written under `dataDir` (stats collected here), or — for a
+    * dv write, whose `split.kept` is every file — the same manifest with
+    * `masks` bound. A lost race goes to [[rebaseMerge]] with the split's
+    * read set and the caller's rules.
+    */
+  private def commitOrRebase(spark: SparkSession, v: Long, split: MergeTable.TouchedSplit,
+                             dataDir: Option[String], schema: StructType,
+                             cdfDir: Option[String], op: String,
+                             txn: Option[(String, Long)] = None,
+                             rowHwm: Option[Long] = None,
+                             masks: Option[MergeTable.DvMasks] = None,
+                             checkConstraints: Boolean = true,
+                             allowRowTracking: Boolean = false): Unit = {
+    val cmap = colmapOf(v)
+    val newFiles = dataDir.toSeq.flatMap(d => listParquet(Paths.get(root, d)).map(relativize))
+    val newStats = collectStats(spark, newFiles, schema, cmap)
+    try commit(v + 1, split.kept ++ newFiles, schema,
+      carryStats(v, split.kept) ++ newStats, cdfDir, txn = txn,
+      dvsOverride = masks.map(_.bind(split.kept, dvsOf(v))),
+      propsOverride = propsWith(
+        rowHwm.toSeq.map(h => MergeTable.RowIdHwmProp -> h.toString)),
+      op = op)
+    catch {
+      case e: java.util.ConcurrentModificationException =>
+        rebaseMerge(v, split.touched, newFiles, newStats, schema, cmap, split.readConflict,
+          e, op, txn, cdfDefined = cdfDir.isDefined, usedIds = rowHwm.isDefined,
+          allowRowTracking = allowRowTracking, checkConstraints = checkConstraints,
+          masks = masks)
+    }
+  }
+
+  /** Delta MERGE semantics (SURVEY.md §2.6): UPDATE-ALL / INSERT-ALL
+    * equi-key upsert — "source wins":
+    *  - target rows matching a source key are replaced by the source row
+    *    (even if that moves them to another partition — quirk §2.6.5);
+    *  - unmatched source rows are inserted;
+    *  - unmatched target rows are untouched (their files are not rewritten);
+    *  - duplicate keys in the source are an error, like Delta
+    *    (§2.6.4), unless `checkUniqueSource=false`.
+    *
+    * `deleteNotMatchedBySource` adds Delta's
+    * `WHEN NOT MATCHED BY SOURCE THEN DELETE` clause: target rows whose
+    * key has no source row are DELETED, making the merge a full
+    * synchronization — the scanned scope becomes exactly the source.
+    * The cost is honest about the semantics: every in-scope file is
+    * rewritten (any file may hold now-unmatched rows), so there is no
+    * touched-file probe — but the SCOPE still prunes: with
+    * `keysDeterminePartitions`, only the source's partitions are
+    * synchronized and every other partition's files carry forward
+    * untouched (Delta users scope the clause with a condition for the
+    * same reason; an unscoped full sync rewrites the table by
+    * definition). Incompatible with `mergeSchema` (a full sync dictates
+    * the schema; evolve first with [[addColumns]]).
+    */
   def merge(spark: SparkSession, source: DataFrame, keys: Seq[String],
             checkUniqueSource: Boolean = true,
             mergeSchema: Boolean = false,
@@ -1619,97 +1875,31 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
 
     val src = applyGenerated(source).cache()
     try {
-      if (checkUniqueSource) {
-        val dup = Timing.time("merge.dupCheck")(
-          src.groupBy(keys.map(col): _*).count().filter(col("count") > 1).limit(1).count())
-        require(dup == 0L,
-          s"merge source has duplicate keys on (${keys.mkString(",")}) — Delta MERGE would fail (multiple source rows matched one target row)")
-      }
+      if (checkUniqueSource) requireUniqueKeys(src, keys)
 
       val v = currentVersion
       val srcKeys = src.select(keys.map(col): _*)
-      val oldFiles = filesOf(v)
-      val dvs = dvsOf(v)
       val cmap = colmapOf(v)
 
-      // Opt-in partition pruning of the probe (see class doc for why it is
-      // NOT the default): when the caller vouches that the merge keys
-      // functionally determine the partition values — every row of a given
-      // key always lands in the same partition — a matched target row can
-      // only live in one of the SOURCE's partitions, so the touched-file
-      // probe (and therefore the rewrite) needs to scan only those
-      // partitions' files. At 100 TB this turns a full-table semi-join into
-      // a probe of the day/month being merged. The source must carry the
-      // partition columns; values are stringified by SPARK's cast-to-string
-      // (session timezone, same Cast the parquet write path feeds into its
-      // partition-path expression — JVM toString diverges for Timestamp's
-      // trailing ".0" and decimal scales) and escaped/null-mapped by
-      // Spark's own partition-path rules, so the probe resolves exactly
-      // the directories Spark actually wrote.
-      // scopeDirs doubles as the merge's READ-SET record for conflict
-      // resolution: a race-winning commit whose adds are disjoint from
-      // these directories provably could not change what this merge read,
-      // so the already-written output re-commits against the tip with zero
-      // recomputation (see [[rebaseMerge]]).
-      var scopeDirs: Option[Set[String]] = None
-      val probeRel: Seq[String] =
-        if (keysDeterminePartitions && partitionCols.nonEmpty) {
-          import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          val pvals = src
-            .select(partitionCols.map(c => col(c).cast("string")): _*)
-            .distinct().collect()
-          val dirs: Set[String] = pvals.map(r =>
-            partitionCols.indices.map { i =>
-              val seg = ExternalCatalogUtils.getPartitionValueString(r.getString(i))
-              s"${partitionCols(i)}=$seg"
-            }.mkString("/")).toSet
-          scopeDirs = Some(dirs)
-          oldFiles.filter(f => dirs.exists(d => f.contains(s"/$d/")))
-        } else oldFiles
-
       // File pruning: find the data files that contain at least one matched
-      // key. Broadcast the (small) source key set when Catalyst can; only
-      // file *names* are collected — metadata, not data. A full sync
+      // key, within the merge's scope ([[mergeScope]]). A full sync
       // (deleteNotMatchedBySource) skips the probe: every in-scope file is
-      // rewritten regardless of matches, because any may hold
-      // now-unmatched rows to delete.
-      val (touchedRel, keptRel, srcBounded) =
-        if (deleteNotMatchedBySource) {
-          val scope = probeRel.toSet
-          val (t, k) = oldFiles.partition(scope.contains)
-          (t, k, false)
-        } else {
-          val (touched, bounded) = probeTouchedFiles(spark, srcKeys, keys,
-            v, probeRel, schemaOf(v), cmap, dvs)
-          val (t, k) = oldFiles.partition(f =>
-            touched.exists(t0 => t0.endsWith("/" + f) || t0 == f))
-          (t, k, bounded)
-        }
-      // driver-side direct write (see [[writeDirectInto]]): a probe-bounded
-      // source (≤ mergeProbeInMax keys) over a byte-bounded touched set
-      // bounds the rewrite output, so both the data write AND the change
-      // feed skip the distributed write machinery entirely
-      val direct = srcBounded && directWriteOk(spark, touchedRel,
-        extraRows = spark.conf.get("spark.graft.mergeProbeInMax", "10000").toLong)
+      // rewritten, because any may hold now-unmatched rows to delete.
+      val (split, direct) = splitByKeys(spark, src, srcKeys, keys, v,
+        keysDeterminePartitions, wholeScope = deleteNotMatchedBySource)
 
-      // Touched-file rows, read once (dv-masked — a rewrite must never
-      // resurrect deleted rows); survivors of those files + all source
-      // rows form the rewrite. Rewritten files shed their dv bindings in
-      // the new commit (the carry-forward keeps bindings only for files
-      // the manifest still lists). Row tracking rides the same read: the
-      // hidden id column travels with survivors, matched source rows
-      // INHERIT the target row's id through one extra (key, id) join, and
-      // inserts (id NULL) get fresh ids right before the write.
+      // Touched-file rows, read once ([[readTouched]]); survivors of those
+      // files + all source rows form the rewrite. Rewritten files shed
+      // their dv bindings in the new commit (the carry-forward keeps
+      // bindings only for files the manifest still lists). Row tracking
+      // rides the same read: the hidden id column travels with survivors,
+      // matched source rows INHERIT the target row's id through one extra
+      // (key, id) join, and inserts (id NULL) get fresh ids right before
+      // the write. Pinned on the direct path: consumed by the rewrite AND
+      // up to three change-feed derivations.
       val touchedData =
-        if (touchedRel.isEmpty) None
-        else Some {
-          val td = readFiles(spark, touchedRel, schemaOf(v), cmap, dvs,
-            withRowIds = rowTrackingEnabled)
-          // byte-bounded on the direct path, and consumed by the rewrite
-          // AND up to three change-feed derivations — pin it so the
-          // touched files are read once, not per consumer
-          if (direct) td.cache() else td
-        }
+        if (split.touched.isEmpty) None
+        else Some(readTouched(spark, v, split.touched, pin = direct))
       val survivors = touchedData.map(_.join(srcKeys, keys, "left_anti"))
       val srcIded =
         if (!rowTrackingEnabled) src
@@ -1766,9 +1956,8 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
           case None    => srcIded
         }
 
-      val newVersion = v + 1
       val (newDataIded, rowHwm) = assignRowIds(newData)
-      val dataDir = newDataDir(newVersion)
+      val dataDir = newDataDir(v + 1)
 
       // Change data feed (Delta CDF analog): recorded AT WRITE TIME from the
       // already-pruned touched-file rows, never by diffing full snapshots —
@@ -1778,12 +1967,10 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       // can never leave a committed version with silently-missing change
       // rows; the commit records the feed directory, and a losing/crashed
       // attempt's orphan dir is referenced by no commit (cleaned on commit
-      // conflict, reconciled by vacuum). The feed derives only from the
-      // OLD files and the cached source — independent of the data write —
-      // so it runs CONCURRENTLY with it (guide §2.6: overlap independent
-      // jobs; the two small writes back-fill each other's task tails).
-      val cdfTask: Option[java.util.concurrent.FutureTask[String]] =
-        if (changeFeed) {
+      // conflict, reconciled by vacuum).
+      val feed =
+        if (!changeFeed) None
+        else {
           import MergeTable.ChangeType
           val matchedKeys = touchedData.map(
             _.join(srcKeys, keys, "left_semi").select(keys.map(col): _*))
@@ -1801,82 +1988,69 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
               touchedData.map(_.join(srcKeys, keys, "left_anti")
                 .withColumn(ChangeType, lit("delete")))
             else None
-          val all = (pre.toSeq ++ post.toSeq ++ del.toSeq :+ ins)
-            .reduce(_.unionByName(_, allowMissingColumns = true))
-            .drop(MergeTable.RowIdCol) // the feed speaks user columns only
-          Some(MergeTable.startAsync(() =>
-            writeChanges(all, newVersion, dataDir, direct)))
-        } else None
-      val cdfDir =
-        try {
-          // a direct write packs one file per partition dir itself, so the
-          // rebalance hint (an exchange) would be pure overhead
-          writeData(if (direct) newDataIded else optimizeWriteIfEnabled(newDataIded),
-            dataDir, cmap, direct)
-          cdfTask.map(MergeTable.awaitAsync)
-        } catch { case e: Throwable =>
-          cdfTask.foreach(_.cancel(false)); throw e
-        } finally if (direct) touchedData.foreach(_.unpersist())
-      val newFiles = listParquet(Paths.get(root, dataDir)).map(p => relativize(p))
+          Some((pre.toSeq ++ post.toSeq ++ del.toSeq :+ ins)
+            .reduce(_.unionByName(_, allowMissingColumns = true)))
+        }
+      val cdfDir = writeWithFeed(v, newDataIded, feed, dataDir, direct, touchedData)
 
       val commitSchema = StructType(
         newData.schema.fields.filterNot(_.name == MergeTable.RowIdCol))
-      val newStats = collectStats(spark, newFiles, commitSchema, cmap)
-      try commit(newVersion, keptRel ++ newFiles, commitSchema,
-        carryStats(v, keptRel) ++ newStats,
-        cdfDir, txn = txn,
-        propsOverride = propsWith(
-          rowHwm.toSeq.map(h => MergeTable.RowIdHwmProp -> h.toString)),
-        op = "MERGE")
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          rebaseMerge(v, scopeDirs, touchedRel, newFiles, newStats,
-            commitSchema, cmap, cdfDefined = cdfDir.isDefined,
-            usedIds = rowHwm.isDefined, txn = txn, first = e)
-      }
+      commitOrRebase(spark, v, split, Some(dataDir), commitSchema, cdfDir, "MERGE",
+        txn = txn, rowHwm = rowHwm)
     } finally src.unpersist()
   }
 
-  /** Delta's WriteSerializable conflict resolution for a PARTITION-SCOPED
-    * merge that lost the commit race: when the winner's changes are
-    * provably disjoint from everything this merge READ, the already-written
-    * output files re-commit against the winner's tip — zero recomputation,
-    * the same resolution [[rebaseAppend]] gives blind appends. The read
-    * set is the scope-directory set a `keysDeterminePartitions` merge
-    * probed (an unscoped merge read the whole table, so any winner add
+  /** Delta's WriteSerializable conflict resolution for every DML that
+    * lost the commit race: when the winner's changes are provably disjoint
+    * from everything this write READ, the already-written output re-commits
+    * against the winner's tip — zero recomputation, the same resolution
+    * [[rebaseAppend]] gives blind appends. `readConflict` is the read set,
+    * as a test over the winner's ADDED files: a scoped merge's partition
+    * directories ([[scopeConflict]]), a predicate DML's predicate
+    * ([[predicateConflict]]), or `_ => false` for a pure rewrite
+    * (compaction), whose output no winner add can invalidate.
+    * None is an unscoped merge: it read the whole table, so any winner add
     * conflicts and the original exception rethrows for mergeWithRetry's
-    * full re-derivation). Compatible iff:
+    * full re-derivation. Compatible iff:
     *
-    *  - the winner added NO file inside the loser's scope directories (a
-    *    new in-scope file could hold rows matching the loser's keys that
-    *    its probe never saw);
-    *  - every file the loser REWROTE is still live at the tip (a winner
-    *    rewriting/deleting one means both writers changed the same rows —
-    *    the lost-update case that MUST re-derive);
-    *  - no deletion-vector binding changed on those rewritten files (a dv
-    *    is a row-level rewrite in disguise);
-    *  - schema, column mapping, and CHECK constraints are unchanged (the
-    *    written bytes/validation would be stale otherwise);
-    *  - the merge assigned no row-tracking ids (the winner may have
+    *  - no winner-added file falls in the read set (a new in-scope file
+    *    could hold rows matching the loser's keys that its probe never saw);
+    *  - every file the loser REWROTE or MASKED is still live at the tip (a
+    *    winner rewriting/deleting one means both writers changed the same
+    *    rows — the lost-update case that MUST re-derive);
+    *  - no deletion-vector binding changed on those files (a dv is a
+    *    row-level rewrite in disguise — and a winner's extra masks on a
+    *    file this write masks would be lost by its cumulative union,
+    *    silently resurrecting rows);
+    *  - schema, column mapping, and — when `checkConstraints` — CHECK
+    *    constraints are unchanged (the written bytes/validation would be
+    *    stale otherwise; a pure mask write passes `checkConstraints =
+    *    false`, since masking rows can never violate one);
+    *  - the write assigned no row-tracking ids (the winner may have
     *    consumed the same high-water range) and recorded no change feed
     *    (its rows are stamped with the lost version number);
     *  - the txn marker was not applied meanwhile (then the whole merge is
     *    a replayed batch: drop it — the written dir is vacuum's orphan).
     *
-    * The rebased manifest is tip − rewritten + new: winner deletes of
-    * UNTOUCHED in-scope files are honored automatically (those files held
-    * no matching key, so the loser's output never depended on them).
+    * A rewrite's rebased manifest is tip − rewritten + new: winner deletes
+    * of UNTOUCHED in-scope files are honored automatically (those files
+    * held no matching key, so the loser's output never depended on them).
+    * A dv write (`masks`) keeps its masked files live: the manifest is
+    * tip + new, and its masks re-bind against the tip's bindings.
     */
-  private def rebaseMerge(baseV: Long, scopeDirs: Option[Set[String]],
-                          touchedRel: Seq[String], newFiles: Seq[String],
-                          newStats: Seq[String], commitSchema: StructType,
-                          cmapUsed: Map[String, String], cdfDefined: Boolean,
-                          usedIds: Boolean, txn: Option[(String, Long)],
-                          first: java.util.ConcurrentModificationException,
-                          maxAttempts: Int = 10,
-                          addConflict: Option[Seq[String] => Boolean] = None,
-                          op: String = "MERGE",
-                          allowRowTracking: Boolean = false): Unit = {
+  private[lake] def rebaseMerge(baseV: Long, touchedRel: Seq[String], newFiles: Seq[String],
+                                newStats: Seq[String], commitSchema: StructType,
+                                cmapUsed: Map[String, String],
+                                readConflict: Option[Seq[String] => Boolean],
+                                first: java.util.ConcurrentModificationException,
+                                op: String,
+                                txn: Option[(String, Long)] = None,
+                                cdfDefined: Boolean = false,
+                                usedIds: Boolean = false,
+                                allowRowTracking: Boolean = false,
+                                checkConstraints: Boolean = true,
+                                masks: Option[MergeTable.DvMasks] = None,
+                                maxAttempts: Int = 10): Unit = {
     // a REPLAYED BATCH is dropped before ANY conflict classification —
     // including the read-set requirement below: if the tip already
     // carries this merge's txn marker, the logical batch was fully
@@ -1892,16 +2066,10 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       if (readCommit(currentVersion).txns.get(app).exists(_ >= ver)) return
     }
     // does a winner's ADDED file set invalidate what this writer read?
-    // Merges scope by partition DIRECTORIES (the source's partition set);
-    // DELETE scopes by its own PREDICATE (an added file whose partition
-    // tuple could satisfy it may hold rows the delete should have removed)
-    val conflictsWith: Seq[String] => Boolean = addConflict.getOrElse {
-      val dirs = scopeDirs.getOrElse(throw first)
-      (adds: Seq[String]) => adds.exists(f => dirs.exists(d => f.contains(s"/$d/")))
-    }
+    val conflictsWith = readConflict.getOrElse(throw first)
     // row-tracking tables normally conflict (a re-derivation could mint
-    // different ids) — EXCEPT pure rewrites (compaction) that carry every
-    // id verbatim and mint none, which opt in via allowRowTracking
+    // different ids) — EXCEPT writes that carry every id verbatim and mint
+    // none (compaction, a dv delete), which opt in via allowRowTracking
     if (cdfDefined || usedIds || (rowTrackingEnabled && !allowRowTracking)) throw first
     val base = readCommit(baseV)
     val baseSet = base.files.toSet
@@ -1922,29 +2090,32 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       def shape(s: StructType): Seq[(String, org.apache.spark.sql.types.DataType)] =
         s.fields.map(f => (f.name, f.dataType)).toSeq
       if (shape(cTip.schema) != shape(base.schema) || colmapOf(tip) != cmapUsed ||
-          cTip.constraints.toSet != base.constraints.toSet)
+          (checkConstraints && cTip.constraints.toSet != base.constraints.toSet))
         throw first
       val tipSet = cTip.files.toSet
       if (!touchedRel.forall(tipSet.contains)) throw first
       val winnerAdds = cTip.files.filterNot(baseSet)
       if (winnerAdds.nonEmpty && conflictsWith(winnerAdds)) throw first
-      if (dvsOf(tip).view.filterKeys(touchedSet).toMap != baseDvs)
+      val tipDvs = dvsOf(tip)
+      if (tipDvs.view.filterKeys(touchedSet).toMap != baseDvs)
         throw first
       // carry the TIP's schema object whenever this write didn't evolve
       // the shape: a race winner's metadata-only schema change (column
       // COMMENT, CURRENT_DEFAULT/EXISTS_DEFAULT — which commit() JSON-
       // round-trips precisely to preserve) must not be reverted by the
       // rebased commit. commitSchema only wins for genuine evolution
-      // (its shape differs), matching the dv-rebase loops' cTip.schema.
+      // (its shape differs).
       val rebasedSchema =
         if (shape(commitSchema) == shape(cTip.schema)) cTip.schema
         else commitSchema
-      try {
-        commit(tip + 1, cTip.files.filterNot(touchedSet) ++ newFiles,
-          rebasedSchema,
+      val (files, stats) =
+        if (masks.isDefined) (cTip.files ++ newFiles, cTip.statsLines ++ newStats)
+        else (cTip.files.filterNot(touchedSet) ++ newFiles,
           cTip.statsLines.filterNot(l =>
-            touchedSet.contains(dec(l.takeWhile(_ != '\t')))) ++ newStats,
-          txn = txn, op = op)
+            touchedSet.contains(dec(l.takeWhile(_ != '\t')))) ++ newStats)
+      try {
+        commit(tip + 1, files, rebasedSchema, stats, txn = txn,
+          dvsOverride = masks.map(_.bind(cTip.files, tipDvs)), op = op)
         return
       } catch {
         case _: java.util.ConcurrentModificationException
@@ -1985,6 +2156,30 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     }
   }
 
+  /** [[mergeClauses]] with Delta's `WITH SCHEMA EVOLUTION`: source-only
+    * columns first evolve the table schema through [[addColumns]] (which
+    * mints fresh physical names past retired/mapped ones), then the
+    * standard clause merge runs against the evolved schema — update-all
+    * and insert-all clauses pick the new columns up, untouched files
+    * null-fill via parquet projection. Two atomic commits, not one:
+    * a crash between them leaves an evolved schema over old data, which
+    * reads as all-NULL new columns — benign, and the retry completes.
+    */
+  def mergeClausesEvolve(spark: SparkSession, source: DataFrame, keys: Seq[String],
+                         clauses: Seq[MergeTable.MergeClause],
+                         targetAlias: String = "t", sourceAlias: String = "s",
+                         checkUniqueSource: Boolean = true,
+                         changeFeed: Boolean = false,
+                         keysDeterminePartitions: Boolean = false,
+                         txn: Option[(String, Long)] = None): Unit = {
+    require(exists, s"MergeTable at $root does not exist")
+    val have = schemaOf(currentVersion).fieldNames.toSet
+    val fresh = source.schema.fields.filterNot(f => have.contains(f.name))
+    if (fresh.nonEmpty) addColumns(StructType(fresh))
+    mergeClauses(spark, source, keys, clauses, targetAlias, sourceAlias,
+      checkUniqueSource, changeFeed, keysDeterminePartitions, txn)
+  }
+
   /** Delta's FULL conditional-clause MERGE surface (the richer shape the
     * reference's update-all/insert-all call-sites are a special case of):
     * {{{
@@ -2017,30 +2212,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     * The target must exist (Delta likewise refuses MERGE into nothing —
     * the reference's bootstrap path is [[merge]]'s).
     */
-  /** [[mergeClauses]] with Delta's `WITH SCHEMA EVOLUTION`: source-only
-    * columns first evolve the table schema through [[addColumns]] (which
-    * mints fresh physical names past retired/mapped ones), then the
-    * standard clause merge runs against the evolved schema — update-all
-    * and insert-all clauses pick the new columns up, untouched files
-    * null-fill via parquet projection. Two atomic commits, not one:
-    * a crash between them leaves an evolved schema over old data, which
-    * reads as all-NULL new columns — benign, and the retry completes.
-    */
-  def mergeClausesEvolve(spark: SparkSession, source: DataFrame, keys: Seq[String],
-                         clauses: Seq[MergeTable.MergeClause],
-                         targetAlias: String = "t", sourceAlias: String = "s",
-                         checkUniqueSource: Boolean = true,
-                         changeFeed: Boolean = false,
-                         keysDeterminePartitions: Boolean = false,
-                         txn: Option[(String, Long)] = None): Unit = {
-    require(exists, s"MergeTable at $root does not exist")
-    val have = schemaOf(currentVersion).fieldNames.toSet
-    val fresh = source.schema.fields.filterNot(f => have.contains(f.name))
-    if (fresh.nonEmpty) addColumns(StructType(fresh))
-    mergeClauses(spark, source, keys, clauses, targetAlias, sourceAlias,
-      checkUniqueSource, changeFeed, keysDeterminePartitions, txn)
-  }
-
   def mergeClauses(spark: SparkSession, source: DataFrame, keys: Seq[String],
                    clauses: Seq[MergeTable.MergeClause],
                    targetAlias: String = "t", sourceAlias: String = "s",
@@ -2131,63 +2302,23 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
 
     val src = source.cache()
     try {
-      if (checkUniqueSource) {
-        val dup = Timing.time("merge.dupCheck")(
-          src.groupBy(keys.map(col): _*).count().filter(col("count") > 1).limit(1).count())
-        require(dup == 0L,
-          s"merge source has duplicate keys on (${keys.mkString(",")}) — Delta MERGE would fail (multiple source rows matched one target row)")
-      }
+      if (checkUniqueSource) requireUniqueKeys(src, keys)
       val srcKeys = src.select(keys.map(col): _*)
-      val oldFiles = filesOf(v)
-      val dvs = dvsOf(v)
       val cmap = colmapOf(v)
 
-      // scope + touched-file probe: same machinery as [[merge]] (see its
-      // comments); BY SOURCE clauses rewrite every in-scope file. As in
-      // [[merge]], scopeDirs records the READ SET for the lost-race
+      // scope + touched-file probe + direct-write eligibility: the same
+      // steps as [[merge]]; BY SOURCE clauses rewrite every in-scope file.
+      // As in [[merge]], the scope records the READ SET for the lost-race
       // rebase ([[rebaseMerge]]) — which extends WriteSerializable
       // conflict resolution to the SQL MERGE INTO surface too.
-      var scopeDirs: Option[Set[String]] = None
-      val probeRel: Seq[String] =
-        if (keysDeterminePartitions && partitionCols.nonEmpty) {
-          import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          val pvals = src
-            .select(partitionCols.map(c => col(c).cast("string")): _*)
-            .distinct().collect()
-          val dirs: Set[String] = pvals.map(r =>
-            partitionCols.indices.map { i =>
-              val seg = ExternalCatalogUtils.getPartitionValueString(r.getString(i))
-              s"${partitionCols(i)}=$seg"
-            }.mkString("/")).toSet
-          scopeDirs = Some(dirs)
-          oldFiles.filter(f => dirs.exists(d => f.contains(s"/$d/")))
-        } else oldFiles
-      val (touchedRel, keptRel, srcBounded) =
-        if (bySource.nonEmpty) {
-          val scope = probeRel.toSet
-          val (t, k) = oldFiles.partition(scope.contains)
-          (t, k, false)
-        } else {
-          val (touched, bounded) = probeTouchedFiles(spark, srcKeys, keys,
-            v, probeRel, schema, cmap, dvs)
-          val (t, k) = oldFiles.partition(f =>
-            touched.exists(t0 => t0.endsWith("/" + f) || t0 == f))
-          (t, k, bounded)
-        }
-      // direct-write eligibility: same contract as [[merge]]'s
-      val direct = srcBounded && directWriteOk(spark, touchedRel,
-        extraRows = spark.conf.get("spark.graft.mergeProbeInMax", "10000").toLong)
+      val (split, direct) = splitByKeys(spark, src, srcKeys, keys, v,
+        keysDeterminePartitions, wholeScope = bySource.nonEmpty)
 
+      // pinned on the direct path: consumed by matched / unmatched /
+      // insert frames plus the change-feed images
       val touchedData =
-        if (touchedRel.isEmpty) None
-        else Some {
-          val td = readFiles(spark, touchedRel, schema, cmap, dvs,
-            withRowIds = rowTrackingEnabled)
-          // byte-bounded on the direct path and consumed by matched /
-          // unmatched / insert frames plus the change-feed images — pin it
-          // so the touched files are read once, not per consumer
-          if (direct) td.cache() else td
-        }
+        if (split.touched.isEmpty) None
+        else Some(readTouched(spark, v, split.touched, pin = direct))
       val joinCond = keys.map(k =>
         col(s"$targetAlias.$k") === col(s"$sourceAlias.$k")).reduce(_ && _)
       // row tracking: updated rows keep the TARGET row's id; insert-claimed
@@ -2255,16 +2386,15 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       val newData = pieces.reduceOption(_ unionByName _)
         .getOrElse(readFiles(spark, Nil, schema, cmap, withRowIds = rowTrackingEnabled))
 
-      val newVersion = v + 1
       val (newDataIded, rowHwm) = assignRowIds(newData)
-      val dataDir = newDataDir(newVersion)
+      val dataDir = newDataDir(v + 1)
 
       // CDF at write time from the already-pruned frames (same discipline
       // as [[merge]] — never a snapshot diff). Only when asked: the extra
       // passes below re-derive pre/post/delete images from touched rows.
       // Independent of the data write (reads only OLD files + the cached
-      // source), so the two writes run CONCURRENTLY (guide §2.6).
-      val cdfTask: Option[java.util.concurrent.FutureTask[String]] =
+      // source), so the two writes run CONCURRENTLY ([[writeWithFeed]]).
+      val feed =
         if (!changeFeed) None
         else {
           def images(td: DataFrame, cs: Seq[MergeClause], paired: Boolean): Seq[DataFrame] = {
@@ -2295,35 +2425,12 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
             if (bySource.isEmpty) Nil
             else touchedData.toSeq.flatMap(td => images(td, bySource, paired = false))
           val insertImgs = insertOut.map(_.withColumn(ChangeType, lit("insert")))
-          val all = matchedImgs ++ bySourceImgs ++ insertImgs
-          if (all.isEmpty) None
-          else Some(MergeTable.startAsync(() =>
-            writeChanges(all.reduce(_.unionByName(_, allowMissingColumns = true))
-              .drop(MergeTable.RowIdCol), newVersion, dataDir, direct)))
+          (matchedImgs ++ bySourceImgs ++ insertImgs)
+            .reduceOption(_.unionByName(_, allowMissingColumns = true))
         }
-      val cdfDir =
-        try {
-          writeData(if (direct) newDataIded else optimizeWriteIfEnabled(newDataIded),
-            dataDir, cmap, direct)
-          cdfTask.map(MergeTable.awaitAsync)
-        } catch { case e: Throwable =>
-          cdfTask.foreach(_.cancel(false)); throw e
-        } finally if (direct) touchedData.foreach(_.unpersist())
-      val newFiles = listParquet(Paths.get(root, dataDir)).map(p => relativize(p))
-
-      val newStats = collectStats(spark, newFiles, schema, cmap)
-      try commit(newVersion, keptRel ++ newFiles, schema,
-        carryStats(v, keptRel) ++ newStats,
-        cdfDir, txn = txn,
-        propsOverride = propsWith(
-          rowHwm.toSeq.map(h => MergeTable.RowIdHwmProp -> h.toString)),
-        op = "MERGE")
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          rebaseMerge(v, scopeDirs, touchedRel, newFiles, newStats,
-            schema, cmap, cdfDefined = cdfDir.isDefined,
-            usedIds = rowHwm.isDefined, txn = txn, first = e)
-      }
+      val cdfDir = writeWithFeed(v, newDataIded, feed, dataDir, direct, touchedData)
+      commitOrRebase(spark, v, split, Some(dataDir), schema, cdfDir, "MERGE",
+        txn = txn, rowHwm = rowHwm)
     } finally src.unpersist()
   }
 
@@ -2520,39 +2627,19 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     */
   def delete(spark: SparkSession, predicate: Column, changeFeed: Boolean = false): Unit = {
     val v = currentVersion
-
-    val probe = partitionCandidates(spark, filesOf(v), schemaOf(v), predicate)
-    val touched: Set[String] = readFiles(spark, probe, schemaOf(v), colmapOf(v), dvsOf(v),
-        fileCol = Some("_graft_file"))
-      .filter(predicate)
-      .select("_graft_file").distinct()
-      .collect().map(r => normalize(r.getString(0))).toSet
-
-    val oldFiles = filesOf(v)
-    val (touchedRel, keptRel) =
-      oldFiles.partition(f => touched.exists(t => t.endsWith("/" + f) || t == f))
-
-    val newVersion = v + 1
-    if (touchedRel.isEmpty) {
-      commit(newVersion, oldFiles, schemaOf(v), carryStats(v, oldFiles), op = "DELETE")
-      return
-    }
+    val split = splitByPredicate(spark, v, predicate)
+    val touchedRel = split.touched
+    if (touchedRel.isEmpty) { commitUnchanged(v, "DELETE"); return }
 
     // the rewrite and the feed are both subsets of the touched rows, so
-    // touched bytes alone bound the driver-side direct write
+    // touched bytes alone bound the driver-side direct write. Surviving
+    // rows keep their row-tracking ids (the id column rides the read).
     val direct = directWriteOk(spark, touchedRel)
-    // dv-masked read: a rewrite must never resurrect rows an earlier
-    // vectorized delete masked out of these same files (surviving rows
-    // keep their row-tracking ids — the id column rides the read). On the
-    // direct path the byte-bounded touched rows are pinned: the survivor
-    // rewrite and the delete feed each consume them.
-    val tdf0 = readFiles(spark, touchedRel, schemaOf(v), colmapOf(v), dvsOf(v),
-      withRowIds = rowTrackingEnabled)
-    val tdf = if (direct) tdf0.cache() else tdf0
+    val tdf = readTouched(spark, v, touchedRel, pin = direct)
     // survivors: predicate FALSE or NULL (NOT(pred) alone would drop NULLs)
     val survivors = tdf.filter(coalesce(predicate, lit(false)) =!= true)
 
-    val dataDir = newDataDir(newVersion)
+    val dataDir = newDataDir(v + 1)
     val cdfDir =
       try {
         writeData(survivors, dataDir, colmapOf(v), direct)
@@ -2561,27 +2648,12 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
           tdf.filter(coalesce(predicate, lit(false)) === true)
             .drop(MergeTable.RowIdCol)
             .withColumn(MergeTable.ChangeType, lit("delete")),
-          newVersion, dataDir, direct))
+          v + 1, dataDir, direct))
         else None
       } finally if (direct) tdf.unpersist()
-    val newFiles = listParquet(Paths.get(root, dataDir)).map(relativize)
-    val newStats = collectStats(spark, newFiles, schemaOf(v), colmapOf(v))
-    try commit(newVersion, keptRel ++ newFiles, schemaOf(v),
-      carryStats(v, keptRel) ++ newStats, cdfDir, op = "DELETE")
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        // WriteSerializable for DELETE: the read set is the PREDICATE's
-        // partition scope — the loser rebases iff no winner-added file's
-        // partition tuple could satisfy the predicate (partitionCandidates
-        // is conservative: an undecidable predicate keeps files → treated
-        // as a conflict → full re-run by the caller, never a wrong rebase)
-        rebaseMerge(v, None, touchedRel, newFiles, newStats, schemaOf(v),
-          colmapOf(v), cdfDefined = cdfDir.isDefined, usedIds = false,
-          txn = None, first = e,
-          addConflict = Some((adds: Seq[String]) =>
-            partitionCandidates(spark, adds, schemaOf(v), predicate).nonEmpty),
-          op = "DELETE")
-    }
+    // WriteSerializable for DELETE: the read set is the PREDICATE's
+    // partition scope ([[predicateConflict]])
+    commitOrRebase(spark, v, split, Some(dataDir), schemaOf(v), cdfDir, "DELETE")
   }
 
   /** Deletion-vector DELETE (Delta deletion-vectors analog): instead of
@@ -2622,113 +2694,32 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       s"deleteVectorized on $root: schema collides with reserved columns $DvFileCol/$DvIdxCol")
     val files = filesOf(v)
     val dvs = dvsOf(v)
-    val newVersion = v + 1
 
     val probe = partitionCandidates(spark, files, schema, predicate)
     val live = readFiles(spark, probe, schema, colmapOf(v), dvs, keepPos = true)
     val matched = live.filter(coalesce(predicate, lit(false)) === true)
 
-    // Stage the new positions first (one scan); counts then come from the
-    // staged rows at metadata cost. An abandoned attempt dir (no match /
-    // fallback / lost commit race) is unreferenced and vacuumed like any
-    // orphan data dir. repartition (not coalesce) keeps the scan parallel —
-    // only the position rows shuffle, and there are at most maxNewDvRows.
-    val attempt = newDataDir(newVersion)
-    val dvRel = s"dv/$attempt"
-    matched.select(DvFileCol, DvIdxCol)
-      .repartition(1).write.parquet(s"$root/$dvRel")
-    val staged = spark.read.schema(MergeTable.DvSchema).parquet(s"$root/$dvRel")
-    val newCnt = staged.count()
-    if (newCnt == 0L) {
-      deleteRecursively(Paths.get(root, dvRel))
-      commit(newVersion, files, schema, carryStats(v, files), op = "DELETE")
-      return
-    }
-    if (newCnt > maxNewDvRows) {
-      deleteRecursively(Paths.get(root, dvRel))
-      delete(spark, predicate, changeFeed)
-      return
-    }
-
-    // Union-on-rewrite invariant: a touched file's binding points at ONE
-    // dir holding ALL its masked positions, so prior masks for touched
-    // files are appended into the new dir. Older dirs may retain stale
-    // subsets of these rows for OTHER still-bound files' sake — duplicates
-    // are harmless under the read path's LEFT ANTI.
-    val touchedFiles = staged.select(DvFileCol).distinct()
-      .collect().map(_.getString(0)).toSeq
-    val priorBound = touchedFiles.filter(dvs.contains)
-    if (priorBound.nonEmpty) {
-      val oldDirs = priorBound.map(f => dvs(f)._1).distinct.sorted
-      spark.read.schema(MergeTable.DvSchema)
-        .parquet(oldDirs.map(d => s"$root/$d"): _*)
-        .filter(col(DvFileCol).isin(priorBound: _*))
-        .repartition(1).write.mode("append").parquet(s"$root/$dvRel")
-    }
-    val cum = spark.read.schema(MergeTable.DvSchema).parquet(s"$root/$dvRel")
-      .groupBy(DvFileCol).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
-    val newDvs: Seq[(String, String, Long)] = files.flatMap { f =>
-      cum.get(f) match {
-        case Some(n) => Some((f, dvRel, n))
-        case None    => dvs.get(f).map { case (d, n) => (f, d, n) }
-      }
+    val attempt = newDataDir(v + 1)
+    val masks = stageMasks(spark, matched, attempt, dvs, maxNewDvRows) match {
+      case None => delete(spark, predicate, changeFeed); return
+      case Some(m) if m.touched.isEmpty => commitUnchanged(v, "DELETE"); return
+      case Some(m) => m
     }
     // CDF before the commit that records it — see merge()
     val cdfDir =
       if (changeFeed) Some(writeChanges(
         matched.drop(DvFileCol, DvIdxCol).withColumn(ChangeType, lit("delete")),
-        newVersion, attempt))
+        v + 1, attempt))
       else None
-    try commit(newVersion, files, schema, carryStats(v, files), cdfDir,
-      dvsOverride = Some(newDvs), op = "DELETE (DV)")
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        // WriteSerializable rebase for the HIGH-FREQUENCY concurrent
-        // operation at scale: a dv-delete writes only position sidecars,
-        // so a lost race re-BINDS them against the winner's tip — zero
-        // recomputation — when (a) no winner-added file's partition could
-        // satisfy the predicate, (b) every masked file survives at the tip
-        // un-rewritten, and (c) its dv binding is unchanged (a winner's
-        // extra masks on the same file would be lost by our cumulative
-        // union, silently resurrecting rows). CHECK constraints need no
-        // guard: masking rows can never violate one. CDF feeds are bound
-        // to the losing version's staging — conflict, re-run.
-        if (cdfDir.isDefined) throw e
-        val baseSet = files.toSet
-        var attempt = 0
-        var done = false
-        while (!done) {
-          attempt += 1
-          val tip = currentVersion
-          val cTip = readCommit(tip)
-          def shape(s: StructType): Seq[(String, org.apache.spark.sql.types.DataType)] =
-            s.fields.map(f => (f.name, f.dataType)).toSeq
-          val tipSet = cTip.files.toSet
-          val tipDvs = dvsOf(tip)
-          val winnerAdds = cTip.files.filterNot(baseSet)
-          if (shape(cTip.schema) != shape(schema) || colmapOf(tip) != colmapOf(v) ||
-              !touchedFiles.forall(tipSet.contains) ||
-              touchedFiles.exists(f => tipDvs.get(f) != dvs.get(f)) ||
-              (winnerAdds.nonEmpty &&
-                partitionCandidates(spark, winnerAdds, schema, predicate).nonEmpty))
-            throw e
-          val rebasedDvs: Seq[(String, String, Long)] = cTip.files.flatMap { f =>
-            cum.get(f) match {
-              case Some(n) => Some((f, dvRel, n))
-              case None    => tipDvs.get(f).map { case (d, n) => (f, d, n) }
-            }
-          }
-          try {
-            commit(tip + 1, cTip.files, cTip.schema, cTip.statsLines,
-              dvsOverride = Some(rebasedDvs), op = "DELETE (DV)")
-            done = true
-          } catch {
-            case _: java.util.ConcurrentModificationException if attempt < 10 => ()
-          }
-        }
-    }
+    // WriteSerializable rebase for the HIGH-FREQUENCY concurrent operation
+    // at scale: a dv-delete writes only position sidecars, so a lost race
+    // re-BINDS them against the winner's tip — zero recomputation — under
+    // the predicate's read set. CHECK constraints need no guard: masking
+    // rows can never violate one; and it mints no row ids.
+    commitOrRebase(spark, v, MergeTable.TouchedSplit(masks.touched, files,
+        Some(predicateConflict(spark, schema, predicate))),
+      None, schema, cdfDir, "DELETE (DV)", masks = Some(masks),
+      checkConstraints = false, allowRowTracking = true)
   }
 
   /** MERGE with DELETION VECTORS (Delta's DV-enabled MERGE, its flagship
@@ -2771,69 +2762,27 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       s"mergeVectorized on $root: schema collides with reserved columns $DvFileCol/$DvIdxCol")
     val src = applyGenerated(source).cache()
     try {
-      if (checkUniqueSource) {
-        val dup = Timing.time("merge.dupCheck")(
-          src.groupBy(keys.map(col): _*).count().filter(col("count") > 1).limit(1).count())
-        require(dup == 0L,
-          s"merge source has duplicate keys on (${keys.mkString(",")}) — Delta MERGE " +
-            "would fail (multiple source rows matched one target row)")
-      }
+      if (checkUniqueSource) requireUniqueKeys(src, keys)
       val files = filesOf(v)
       val dvs = dvsOf(v)
-      val newVersion = v + 1
       val srcKeys = src.select(keys.map(col): _*)
 
-      // same opt-in partition pruning as [[merge]]: when the keys
-      // functionally determine the partition values, matched rows can only
-      // live in the SOURCE's partitions — the position probe scans those
-      // files, not the table. scopeDirs doubles as the READ-SET record
-      // for the lost-race rebase below.
-      var scopeDirs: Option[Set[String]] = None
-      val probeRel: Seq[String] =
-        if (keysDeterminePartitions && partitionCols.nonEmpty) {
-          val dirs = sourceScopeDirs(src)
-          scopeDirs = Some(dirs)
-          files.filter(f => dirs.exists(d => f.contains(s"/$d/")))
-        } else files
+      // same opt-in partition pruning as [[merge]]: the position probe
+      // scans the scope's files, and the scope is the READ SET for the
+      // lost-race rebase
+      val (scopeDirs, probeRel) = mergeScope(src, files, keysDeterminePartitions)
 
       // matched target rows WITH their file/position — these become masks
       val live = readFiles(spark, probeRel, schema, colmapOf(v), dvs, keepPos = true)
       val matched = live.join(srcKeys, keys, "left_semi").cache()
 
-      val attempt = newDataDir(newVersion)
-      val dvRel = s"dv/$attempt"
-      matched.select(DvFileCol, DvIdxCol)
-        .repartition(1).write.parquet(s"$root/$dvRel")
-      val staged = spark.read.schema(MergeTable.DvSchema).parquet(s"$root/$dvRel")
-      val newCnt = staged.count()
-      if (newCnt > maxNewDvRows) {
+      val attempt = newDataDir(v + 1)
+      val masks = stageMasks(spark, matched, attempt, dvs, maxNewDvRows).getOrElse {
         // a mass update: one rewrite now beats a giant mask on every scan
         matched.unpersist()
-        deleteRecursively(Paths.get(root, dvRel))
         merge(spark, source, keys, checkUniqueSource, changeFeed = changeFeed,
           keysDeterminePartitions = keysDeterminePartitions, txn = txn)
         return
-      }
-      // union-on-rewrite invariant (see deleteVectorized): a touched
-      // file's binding points at ONE dir holding ALL its masked positions
-      val touchedFiles = staged.select(DvFileCol).distinct()
-        .collect().map(_.getString(0)).toSeq
-      val priorBound = touchedFiles.filter(dvs.contains)
-      if (priorBound.nonEmpty) {
-        val oldDirs = priorBound.map(f => dvs(f)._1).distinct.sorted
-        spark.read.schema(MergeTable.DvSchema)
-          .parquet(oldDirs.map(d => s"$root/$d"): _*)
-          .filter(col(DvFileCol).isin(priorBound: _*))
-          .repartition(1).write.mode("append").parquet(s"$root/$dvRel")
-      }
-      val cum = spark.read.schema(MergeTable.DvSchema).parquet(s"$root/$dvRel")
-        .groupBy(DvFileCol).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val newDvs: Seq[(String, String, Long)] = files.flatMap { f =>
-        cum.get(f) match {
-          case Some(n) => Some((f, dvRel, n))
-          case None    => dvs.get(f).map { case (d, n) => (f, d, n) }
-        }
       }
 
       // ALL source rows land in one new dir (updates + inserts alike —
@@ -2841,7 +2790,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       val dataDir = s"${attempt}m"
       writeData(src.select(schema.fieldNames.toIndexedSeq.map(col): _*),
         dataDir, colmapOf(v))
-      val newFiles = listParquet(Paths.get(root, dataDir)).map(relativize)
 
       val cdfDir =
         if (changeFeed) {
@@ -2854,77 +2802,19 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
             .withColumn(ChangeType, lit("insert"))
           Some(writeChanges(
             pre.unionByName(post, allowMissingColumns = true)
-              .unionByName(ins, allowMissingColumns = true), newVersion, dataDir))
+              .unionByName(ins, allowMissingColumns = true), v + 1, dataDir))
         } else None
 
       matched.unpersist()
-      val newStats = collectStats(spark, newFiles, schema, colmapOf(v))
-      try commit(newVersion, files ++ newFiles, schema,
-        carryStats(v, files) ++ newStats,
-        cdfDir, dvsOverride = Some(newDvs), txn = txn, op = "MERGE (DV)")
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          // dv-merge rebase (the dv-delete shape plus a data dir): masks
-          // re-bind and the source's new file re-commits against the
-          // winner's tip when the winner is provably outside this merge's
-          // read scope. Constraints must MATCH — the new rows were
-          // validated under the base's constraint set.
-          val dirs = scopeDirs.getOrElse(throw e)
-          if (cdfDir.isDefined) throw e
-          val baseSet = files.toSet
-          val baseConstraints = readMeta(v).constraints.toSet
-          var attempt = 0
-          var done = false
-          while (!done) {
-            attempt += 1
-            val tip = currentVersion
-            val cTip = readCommit(tip)
-            txn.foreach { case (app, ver) =>
-              if (cTip.txns.get(app).exists(_ >= ver)) return // replayed batch
-            }
-            def shape(st: StructType): Seq[(String, org.apache.spark.sql.types.DataType)] =
-              st.fields.map(f => (f.name, f.dataType)).toSeq
-            val tipSet = cTip.files.toSet
-            val tipDvs = dvsOf(tip)
-            val winnerAdds = cTip.files.filterNot(baseSet)
-            if (shape(cTip.schema) != shape(schema) || colmapOf(tip) != colmapOf(v) ||
-                cTip.constraints.toSet != baseConstraints ||
-                !touchedFiles.forall(tipSet.contains) ||
-                touchedFiles.exists(f => tipDvs.get(f) != dvs.get(f)) ||
-                winnerAdds.exists(f => dirs.exists(d => f.contains(s"/$d/"))))
-              throw e
-            val rebasedDvs: Seq[(String, String, Long)] = cTip.files.flatMap { f =>
-              cum.get(f) match {
-                case Some(n) => Some((f, dvRel, n))
-                case None    => tipDvs.get(f).map { case (d, n) => (f, d, n) }
-              }
-            }
-            try {
-              commit(tip + 1, cTip.files ++ newFiles, cTip.schema,
-                cTip.statsLines ++ newStats,
-                dvsOverride = Some(rebasedDvs), txn = txn, op = "MERGE (DV)")
-              done = true
-            } catch {
-              case _: java.util.ConcurrentModificationException if attempt < 10 => ()
-            }
-          }
-      }
+      // dv-merge rebase (the dv-delete shape plus a data dir): masks
+      // re-bind and the source's new file re-commits against the winner's
+      // tip when the winner is provably outside this merge's read scope.
+      // Constraints must MATCH — the new rows were validated under the
+      // base's constraint set.
+      commitOrRebase(spark, v, MergeTable.TouchedSplit(masks.touched, files,
+          scopeDirs.map(scopeConflict)),
+        Some(dataDir), schema, cdfDir, "MERGE (DV)", txn = txn, masks = Some(masks))
     } finally src.unpersist()
-  }
-
-  /** The partition DIRECTORIES a `keysDeterminePartitions` write can
-    * touch: the source's distinct partition tuples, stringified by Spark's
-    * own cast-to-string and escaped/null-mapped by Spark's partition-path
-    * rules — exactly the directories the write path produces.
-    */
-  private def sourceScopeDirs(src: DataFrame): Set[String] = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    src.select(partitionCols.map(c => col(c).cast("string")): _*)
-      .distinct().collect().map(r =>
-        partitionCols.indices.map { i =>
-          val seg = ExternalCatalogUtils.getPartitionValueString(r.getString(i))
-          s"${partitionCols(i)}=$seg"
-        }.mkString("/")).toSet
   }
 
   /** UPDATE with DELETION VECTORS (the [[mergeVectorized]] shape for
@@ -2955,47 +2845,17 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       s"updateVectorized on $root: schema collides with reserved columns $DvFileCol/$DvIdxCol")
     val files = filesOf(v)
     val dvs = dvsOf(v)
-    val newVersion = v + 1
     val probe = partitionCandidates(spark, files, schema, predicate)
     val live = readFiles(spark, probe, schema, colmapOf(v), dvs, keepPos = true)
     val matched = live.filter(coalesce(predicate, lit(false)) === true).cache()
 
-    val attempt = newDataDir(newVersion)
-    val dvRel = s"dv/$attempt"
-    matched.select(DvFileCol, DvIdxCol)
-      .repartition(1).write.parquet(s"$root/$dvRel")
-    val staged = spark.read.schema(MergeTable.DvSchema).parquet(s"$root/$dvRel")
-    val newCnt = staged.count()
-    if (newCnt == 0L) {
-      matched.unpersist()
-      deleteRecursively(Paths.get(root, dvRel))
-      commit(newVersion, files, schema, carryStats(v, files), op = "UPDATE")
-      return
-    }
-    if (newCnt > maxNewDvRows) {
-      matched.unpersist()
-      deleteRecursively(Paths.get(root, dvRel))
-      update(spark, predicate, set, changeFeed)
-      return
-    }
-    val touchedFiles = staged.select(DvFileCol).distinct()
-      .collect().map(_.getString(0)).toSeq
-    val priorBound = touchedFiles.filter(dvs.contains)
-    if (priorBound.nonEmpty) {
-      val oldDirs = priorBound.map(f => dvs(f)._1).distinct.sorted
-      spark.read.schema(MergeTable.DvSchema)
-        .parquet(oldDirs.map(d => s"$root/$d"): _*)
-        .filter(col(DvFileCol).isin(priorBound: _*))
-        .repartition(1).write.mode("append").parquet(s"$root/$dvRel")
-    }
-    val cum = spark.read.schema(MergeTable.DvSchema).parquet(s"$root/$dvRel")
-      .groupBy(DvFileCol).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val newDvs: Seq[(String, String, Long)] = files.flatMap { f =>
-      cum.get(f) match {
-        case Some(n) => Some((f, dvRel, n))
-        case None    => dvs.get(f).map { case (d, n) => (f, d, n) }
-      }
+    val attempt = newDataDir(v + 1)
+    val masks = stageMasks(spark, matched, attempt, dvs, maxNewDvRows) match {
+      case None =>
+        matched.unpersist(); update(spark, predicate, set, changeFeed); return
+      case Some(m) if m.touched.isEmpty =>
+        matched.unpersist(); commitUnchanged(v, "UPDATE"); return
+      case Some(m) => m
     }
 
     // post-SET images of exactly the masked rows (pre-update row visible
@@ -3011,63 +2871,21 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     }
     val dataDir = s"${attempt}u"
     writeData(regen, dataDir, colmapOf(v))
-    val newFiles = listParquet(Paths.get(root, dataDir)).map(relativize)
 
     val cdfDir =
       if (changeFeed) Some(writeChanges(
         pre.withColumn(ChangeType, lit("update_preimage"))
           .unionByName(regen.withColumn(ChangeType, lit("update_postimage")),
-            allowMissingColumns = true), newVersion, dataDir))
+            allowMissingColumns = true), v + 1, dataDir))
       else None
     matched.unpersist()
-    val newStats = collectStats(spark, newFiles, schema, colmapOf(v))
-    try commit(newVersion, files ++ newFiles, schema,
-      carryStats(v, files) ++ newStats,
-      cdfDir, dvsOverride = Some(newDvs), op = "UPDATE (DV)")
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        // the dv-delete rebase shape plus a data dir: re-bind the masks and
-        // re-commit the post-SET file against the winner's tip when no
-        // winner-added file's partition could satisfy the predicate;
-        // constraints must match (the post-SET rows were validated under
-        // the base's set)
-        if (cdfDir.isDefined) throw e
-        val baseSet = files.toSet
-        val baseConstraints = readMeta(v).constraints.toSet
-        var attempt2 = 0
-        var done = false
-        while (!done) {
-          attempt2 += 1
-          val tip = currentVersion
-          val cTip = readCommit(tip)
-          def shape(st: StructType): Seq[(String, org.apache.spark.sql.types.DataType)] =
-            st.fields.map(f => (f.name, f.dataType)).toSeq
-          val tipSet = cTip.files.toSet
-          val tipDvs = dvsOf(tip)
-          val winnerAdds = cTip.files.filterNot(baseSet)
-          if (shape(cTip.schema) != shape(schema) || colmapOf(tip) != colmapOf(v) ||
-              cTip.constraints.toSet != baseConstraints ||
-              !touchedFiles.forall(tipSet.contains) ||
-              touchedFiles.exists(f => tipDvs.get(f) != dvs.get(f)) ||
-              (winnerAdds.nonEmpty &&
-                partitionCandidates(spark, winnerAdds, schema, predicate).nonEmpty))
-            throw e
-          val rebasedDvs: Seq[(String, String, Long)] = cTip.files.flatMap { f =>
-            cum.get(f) match {
-              case Some(n) => Some((f, dvRel, n))
-              case None    => tipDvs.get(f).map { case (d, n) => (f, d, n) }
-            }
-          }
-          try {
-            commit(tip + 1, cTip.files ++ newFiles, cTip.schema,
-              cTip.statsLines ++ newStats,
-              dvsOverride = Some(rebasedDvs), op = "UPDATE (DV)")
-            done = true
-          } catch {
-            case _: java.util.ConcurrentModificationException if attempt2 < 10 => ()
-          }
-        }
-    }
+    // the dv-delete rebase shape plus a data dir: re-bind the masks and
+    // re-commit the post-SET file against the winner's tip under the
+    // predicate's read set; constraints must match (the post-SET rows were
+    // validated under the base's set)
+    commitOrRebase(spark, v, MergeTable.TouchedSplit(masks.touched, files,
+        Some(predicateConflict(spark, schema, predicate))),
+      Some(dataDir), schema, cdfDir, "UPDATE (DV)", masks = Some(masks))
   }
 
   /** Delta `UPDATE SET` analog: apply `set` (column → new-value expression)
@@ -3091,31 +2909,14 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     require(unknown.isEmpty,
       s"update on $root: SET columns ${unknown.mkString(", ")} are not in the table schema")
 
-    val probe = partitionCandidates(spark, filesOf(v), schema, predicate)
-    val touched: Set[String] = readFiles(spark, probe, schema, colmapOf(v), dvsOf(v),
-        fileCol = Some("_graft_file"))
-      .filter(predicate)
-      .select("_graft_file").distinct()
-      .collect().map(r => normalize(r.getString(0))).toSet
-
-    val oldFiles = filesOf(v)
-    val (touchedRel, keptRel) =
-      oldFiles.partition(f => touched.exists(t => t.endsWith("/" + f) || t == f))
-
-    val newVersion = v + 1
-    if (touchedRel.isEmpty) {
-      commit(newVersion, oldFiles, schema, carryStats(v, oldFiles), op = "UPDATE")
-      return
-    }
+    val split = splitByPredicate(spark, v, predicate)
+    val touchedRel = split.touched
+    if (touchedRel.isEmpty) { commitUnchanged(v, "UPDATE"); return }
 
     // the rewrite is the touched rows re-projected and the feed ≤ 2× the
     // matched rows, so touched bytes bound the direct write here too
     val direct = directWriteOk(spark, touchedRel)
-    val tdf0 = readFiles(spark, touchedRel, schema, colmapOf(v), dvsOf(v),
-      withRowIds = rowTrackingEnabled)
-    // byte-bounded on the direct path, consumed by the rewrite + both
-    // change-feed images — pin it so the touched files are read once
-    val tdf = if (direct) tdf0.cache() else tdf0
+    val tdf = readTouched(spark, v, touchedRel, pin = direct)
     val hit = coalesce(predicate, lit(false)) === true
     // all SET expressions evaluate against the pre-update row in ONE select
     // (the row-tracking id passes through untouched — an UPDATE may never
@@ -3132,7 +2933,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     }
     val rewritten = regen(applySet(tdf))
 
-    val dataDir = newDataDir(newVersion)
+    val dataDir = newDataDir(v + 1)
     val cdfDir =
       try {
         writeData(rewritten, dataDir, colmapOf(v), direct)
@@ -3143,27 +2944,15 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
             .withColumn(ChangeType, lit("update_preimage"))
           val post = regen(applySet(tdf.filter(hit))).drop(MergeTable.RowIdCol)
             .withColumn(ChangeType, lit("update_postimage"))
-          Some(writeChanges(pre.unionByName(post), newVersion, dataDir, direct))
+          Some(writeChanges(pre.unionByName(post), v + 1, dataDir, direct))
         } else None
       } finally if (direct) tdf.unpersist()
-    val newFiles = listParquet(Paths.get(root, dataDir)).map(relativize)
-    val newStats = collectStats(spark, newFiles, schema, colmapOf(v))
-    try commit(newVersion, keptRel ++ newFiles, schema,
-      carryStats(v, keptRel) ++ newStats, cdfDir, op = "UPDATE")
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        // same WriteSerializable rebase as [[delete]]: the read set is the
-        // predicate's partition scope; updated rows may land in OTHER
-        // partitions (SET on a partition column) — irrelevant to the
-        // conflict check, which guards what was READ, not where the
-        // rewrite lands (the same property merge's partition-move relies on)
-        rebaseMerge(v, None, touchedRel, newFiles, newStats, schema,
-          colmapOf(v), cdfDefined = cdfDir.isDefined, usedIds = false,
-          txn = None, first = e,
-          addConflict = Some((adds: Seq[String]) =>
-            partitionCandidates(spark, adds, schema, predicate).nonEmpty),
-          op = "UPDATE")
-    }
+    // same WriteSerializable rebase as [[delete]]: the read set is the
+    // predicate's partition scope; updated rows may land in OTHER
+    // partitions (SET on a partition column) — irrelevant to the
+    // conflict check, which guards what was READ, not where the
+    // rewrite lands (the same property merge's partition-move relies on)
+    commitOrRebase(spark, v, split, Some(dataDir), schema, cdfDir, "UPDATE")
   }
 
   /** Delta `replaceWhere` analog (`df.write.option("replaceWhere", p)` /
@@ -3197,21 +2986,11 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       s"overwriteWhere on $root: incoming rows do not all satisfy the replace " +
         "predicate — they would land outside the slice being replaced")
 
-    val probe = partitionCandidates(spark, filesOf(v), schema, predicate)
-    val touched: Set[String] = readFiles(spark, probe, schema, colmapOf(v), dvsOf(v),
-        fileCol = Some("_graft_file"))
-      .filter(predicate)
-      .select("_graft_file").distinct()
-      .collect().map(r => normalize(r.getString(0))).toSet
-    val oldFiles = filesOf(v)
-    val (touchedRel, keptRel) =
-      oldFiles.partition(f => touched.exists(t => t.endsWith("/" + f) || t == f))
-
-    val newVersion = v + 1
+    val split = splitByPredicate(spark, v, predicate)
+    val touchedRel = split.touched
     val survivors =
       if (touchedRel.isEmpty) None
-      else Some(readFiles(spark, touchedRel, schema, colmapOf(v), dvsOf(v),
-          withRowIds = rowTrackingEnabled)
+      else Some(readTouched(spark, v, touchedRel, pin = false)
         .filter(coalesce(predicate, lit(false)) =!= true))
     // survivors keep their ids; the replacement rows are all fresh
     val alignedIded =
@@ -3219,9 +2998,8 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       else aligned.withColumn(MergeTable.RowIdCol, lit(null).cast("long"))
     val (outData, rowHwm) =
       assignRowIds(survivors.fold(alignedIded)(_ unionByName alignedIded))
-    val dataDir = newDataDir(newVersion)
+    val dataDir = newDataDir(v + 1)
     writeData(outData, dataDir, colmapOf(v))
-    val newFiles = listParquet(Paths.get(root, dataDir)).map(relativize)
     // CDF before the commit that records it — see merge()
     val cdfDir =
       if (changeFeed) {
@@ -3233,45 +3011,16 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
             .withColumn(ChangeType, lit("delete")))
         val inserted = aligned.withColumn(ChangeType, lit("insert"))
         Some(writeChanges(deleted.fold(inserted)(_ unionByName inserted),
-          newVersion, dataDir))
+          v + 1, dataDir))
       } else None
-    val newStats = collectStats(spark, newFiles, schema, colmapOf(v))
-    try commit(newVersion, keptRel ++ newFiles, schema,
-      carryStats(v, keptRel) ++ newStats,
-      cdfDir,
-      propsOverride = propsWith(
-        rowHwm.toSeq.map(h => MergeTable.RowIdHwmProp -> h.toString)),
-      op = "REPLACE WHERE")
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        // the DELETE rebase shape: replaceWhere's read set is the
-        // predicate's partition scope (the incoming rows all satisfy the
-        // predicate, so the written file lands inside it); a backfill of
-        // yesterday's partition must not re-derive because today's ingest
-        // won its race
-        rebaseMerge(v, None, touchedRel, newFiles, newStats, schema,
-          colmapOf(v), cdfDefined = cdfDir.isDefined,
-          usedIds = rowHwm.isDefined, txn = None, first = e,
-          addConflict = Some((adds: Seq[String]) =>
-            partitionCandidates(spark, adds, schema, predicate).nonEmpty),
-          op = "REPLACE WHERE")
-    }
+    // the DELETE rebase shape: replaceWhere's read set is the predicate's
+    // partition scope (the incoming rows all satisfy the predicate, so the
+    // written file lands inside it); a backfill of yesterday's partition
+    // must not re-derive because today's ingest won its race
+    commitOrRebase(spark, v, split, Some(dataDir), schema, cdfDir, "REPLACE WHERE",
+      rowHwm = rowHwm)
   }
 
-  /** Compaction (Delta OPTIMIZE analog): rewrite the CURRENT snapshot
-    * BIN-PACKED to a file-size budget — each partition directory ends up
-    * with ceil(partitionBytes / targetFileBytes) files (Delta's 1 GiB
-    * default), so a 100 TB table compacts to ~10⁵ right-sized files
-    * instead of one unwritable file per partition, while a toy-scale
-    * partition still collapses to a single file. Current sizes come from
-    * one stat pass over the manifest (metadata, no data read); rows route
-    * to sub-files by a DETERMINISTIC hash salt (a rand() salt would break
-    * the shuffle-retry contract). MERGE leaves behind whatever file count
-    * the shuffle produced; on a long-lived table that accretes small
-    * files until scan/listing overhead dominates — compaction amortizes
-    * it away. Readers are unaffected mid-compact (snapshot isolation via
-    * `_LATEST`).
-    */
   /** Parameterless OPTIMIZE with clustering awareness (the liquid-
     * clustering shape): when the table carries a
     * [[MergeTable.ClusterByProp]] property (comma-joined numeric columns,
@@ -3311,6 +3060,20 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       case None => compact(spark, parallelism)
     }
 
+  /** Compaction (Delta OPTIMIZE analog): rewrite the CURRENT snapshot
+    * BIN-PACKED to a file-size budget — each partition directory ends up
+    * with ceil(partitionBytes / targetFileBytes) files (Delta's 1 GiB
+    * default), so a 100 TB table compacts to ~10⁵ right-sized files
+    * instead of one unwritable file per partition, while a toy-scale
+    * partition still collapses to a single file. Current sizes come from
+    * one stat pass over the manifest (metadata, no data read); rows route
+    * to sub-files by a DETERMINISTIC hash salt (a rand() salt would break
+    * the shuffle-retry contract). MERGE leaves behind whatever file count
+    * the shuffle produced; on a long-lived table that accretes small
+    * files until scan/listing overhead dominates — compaction amortizes
+    * it away. Readers are unaffected mid-compact (snapshot isolation via
+    * `_LATEST`).
+    */
   def compact(spark: SparkSession, parallelism: Int = 8,
               targetFileBytes: Long = MergeTable.DefaultTargetFileBytes): Unit = {
     require(parallelism > 0, "parallelism must be positive")
@@ -3419,11 +3182,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     val v = currentVersion
     val schema = schemaOf(v)
     val oldFiles = filesOf(v)
-    def partDir(f: String): String = {
-      val segs = f.split('/')
-      segs.slice(1, segs.length - 1).mkString("/")
-    }
-    val rows = oldFiles.map(partDir).distinct.map { d =>
+    val rows = oldFiles.map(partDirOf).distinct.map { d =>
       val vals = d.split('/').toSeq.map { seg =>
         val raw = seg.substring(seg.indexOf('=') + 1)
         if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
@@ -3438,35 +3197,21 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
         col(c).cast(schema(c).dataType).as(c)): _*)
       .filter(partitionPredicate)
       .select("_dir").collect().map(_.getString(0)).toSet
-    val (touchedRel, keptRel) = oldFiles.partition(f => matching.contains(partDir(f)))
-    val newVersion = v + 1
-    if (touchedRel.isEmpty) {
-      commit(newVersion, oldFiles, schema, carryStats(v, oldFiles), op = "OPTIMIZE")
-      return
-    }
-    val packed = readFiles(spark, touchedRel, schema, colmapOf(v), dvsOf(v),
-        withRowIds = rowTrackingEnabled)
+    val (touchedRel, keptRel) = oldFiles.partition(f => matching.contains(partDirOf(f)))
+    if (touchedRel.isEmpty) { commitUnchanged(v, "OPTIMIZE"); return }
+    val packed = readTouched(spark, v, touchedRel, pin = false)
       .repartition(parallelism, partitionCols.map(col): _*)
-    val dataDir = newDataDir(newVersion)
+    val dataDir = newDataDir(v + 1)
     writeData(packed, dataDir, colmapOf(v))
-    val newFiles = listParquet(Paths.get(root, dataDir)).map(relativize)
-    val newStats = collectStats(spark, newFiles, schema, colmapOf(v))
-    try commit(newVersion, keptRel ++ newFiles, schema,
-      carryStats(v, keptRel) ++ newStats, op = "OPTIMIZE")
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        // Background compaction racing ingest is THE canonical concurrent
-        // pair at scale — a lost race must not re-read and re-write the
-        // partition. Winner ADDS never conflict (their files simply stay
-        // uncompacted in the rebased manifest); only a winner that
-        // rewrote/removed/re-masked one of our INPUT files invalidates the
-        // packed output. Row tracking is safe here: a pure rewrite carries
-        // every id verbatim and mints none.
-        rebaseMerge(v, None, touchedRel, newFiles, newStats, schema,
-          colmapOf(v), cdfDefined = false, usedIds = false, txn = None,
-          first = e, addConflict = Some((_: Seq[String]) => false),
-          op = "OPTIMIZE", allowRowTracking = true)
-    }
+    // Background compaction racing ingest is THE canonical concurrent
+    // pair at scale — a lost race must not re-read and re-write the
+    // partition. Winner ADDS never conflict (their files simply stay
+    // uncompacted in the rebased manifest); only a winner that
+    // rewrote/removed/re-masked one of our INPUT files invalidates the
+    // packed output. Row tracking is safe here: a pure rewrite carries
+    // every id verbatim and mints none.
+    commitOrRebase(spark, v, MergeTable.TouchedSplit(touchedRel, keptRel, Some(_ => false)),
+      Some(dataDir), schema, None, "OPTIMIZE", allowRowTracking = true)
   }
 
   /** Delta's `REORG TABLE ... APPLY (PURGE)` analog: rewrite ONLY the
@@ -3486,35 +3231,22 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     if (c.dvs.isEmpty) return // nothing masked — a no-op, not a new version
     val masked = c.dvs.map(_._1).toSet
     val (touchedRel, keptRel) = c.files.partition(masked.contains)
-    val newVersion = v + 1
-    val survivors = readFiles(spark, touchedRel, c.schema, colmapOf(v), dvsOf(v),
-      withRowIds = rowTrackingEnabled)
+    val survivors = readTouched(spark, v, touchedRel, pin = false)
     val packed =
       if (partitionCols.nonEmpty)
         survivors.repartition(parallelism, partitionCols.map(col): _*)
       else survivors.repartition(parallelism)
-    val dataDir = newDataDir(newVersion)
+    val dataDir = newDataDir(v + 1)
     writeData(packed, dataDir, colmapOf(v))
-    val newFiles = listParquet(Paths.get(root, dataDir)).map(relativize)
-    val newStats = collectStats(spark, newFiles, c.schema, colmapOf(v))
-    try commit(newVersion, keptRel ++ newFiles, c.schema,
-      carryStats(v, keptRel) ++ newStats,
-      dvsOverride = Some(Nil), // purged: the new snapshot carries no masks
-      op = "REORG")
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        // Same pure-rewrite rebase as compaction. NO dvsOverride on the
-        // rebase commit: carry-forward keeps a concurrent writer's NEW
-        // masks on files we didn't purge (a later write, legitimately
-        // retained — WriteSerializable), while our purged files left the
-        // manifest and shed their bindings with it; a changed binding ON a
-        // purged file still conflicts inside rebaseMerge (our survivors
-        // would be stale).
-        rebaseMerge(v, None, touchedRel, newFiles, newStats, c.schema,
-          colmapOf(v), cdfDefined = false, usedIds = false, txn = None,
-          first = e, addConflict = Some((_: Seq[String]) => false),
-          op = "REORG", allowRowTracking = true)
-    }
+    // Every masked file is purged, so the new snapshot carries no masks:
+    // carry-forward drops the bindings of files that left the manifest.
+    // Same pure-rewrite rebase as compaction: carry-forward keeps a
+    // concurrent writer's NEW masks on files we didn't purge (a later
+    // write, legitimately retained — WriteSerializable), while a changed
+    // binding ON a purged file still conflicts inside rebaseMerge (our
+    // survivors would be stale).
+    commitOrRebase(spark, v, MergeTable.TouchedSplit(touchedRel, keptRel, Some(_ => false)),
+      Some(dataDir), c.schema, None, "REORG", allowRowTracking = true)
   }
 
   // ---- data skipping (Delta file-statistics analog) ----
@@ -4565,14 +4297,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       .orderBy(col("version").desc)
   }
 
-  /** `DESCRIBE DETAIL` analog: one row of table-level facts — format,
-    * location, tip version, last-modified (tip commit's publish time),
-    * file/byte counts, partition columns, deletion-vector totals, and the
-    * number of CHECK constraints. Everything is answered from the commit
-    * log plus O(files) driver-side `Files.size` probes — metadata, never a
-    * data scan (Delta likewise answers DESCRIBE DETAIL from the log; at
-    * 100 TB a storage listing would be the slowest call in the system).
-    */
   /** Delta's `GENERATE symlink_format_manifest`: write
     * `_symlink_format_manifest/[<p>=<v>/...]manifest` text files listing
     * the CURRENT snapshot's data files as absolute paths — the format
@@ -4661,6 +4385,14 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       featuresOverride = Some(current.filterNot(_ == name)), op = "DROP FEATURE")
   }
 
+  /** `DESCRIBE DETAIL` analog: one row of table-level facts — format,
+    * location, tip version, last-modified (tip commit's publish time),
+    * file/byte counts, partition columns, deletion-vector totals, and the
+    * number of CHECK constraints. Everything is answered from the commit
+    * log plus O(files) driver-side `Files.size` probes — metadata, never a
+    * data scan (Delta likewise answers DESCRIBE DETAIL from the log; at
+    * 100 TB a storage listing would be the slowest call in the system).
+    */
   def detail(spark: SparkSession): DataFrame = {
     require(exists, s"MergeTable at $root does not exist")
     import spark.implicits._
@@ -5044,12 +4776,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Delta's `VACUUM ... DRY RUN` analog: the root-relative paths a
-    * [[vacuum]] with the same arguments would reclaim, WITHOUT deleting
-    * anything or moving the horizon. One shared enumeration
-    * ([[reclaimable]]) backs both, so the preview can never drift from
-    * the deletion — the whole point of a dry run.
-    */
   /** Delta's `VACUUM ... RETAIN n HOURS` (the common production form):
     * time-based retention resolved against the IN-COMMIT timestamps —
     * every version committed within the window stays time-travel-readable,
@@ -5087,6 +4813,12 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     math.max(1L, cur - oldestRetained + 1).toInt
   }
 
+  /** Delta's `VACUUM ... DRY RUN` analog: the root-relative paths a
+    * [[vacuum]] with the same arguments would reclaim, WITHOUT deleting
+    * anything or moving the horizon. One shared enumeration
+    * ([[reclaimable]]) backs both, so the preview can never drift from
+    * the deletion — the whole point of a dry run.
+    */
   def vacuumDryRun(retainVersions: Int = 1,
                    minAgeMs: Long = MergeTable.DefaultVacuumMinAgeMs): Seq[String] = {
     require(retainVersions >= 1, "vacuum must retain at least the current version")
@@ -5216,13 +4948,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
   private def newDataDir(version: Long): String =
     s"d${version}u${java.lang.Long.toHexString(System.nanoTime())}"
 
-  /** Writes a full snapshot and commits it. Callers must have ALREADY
-    * applied [[applyGenerated]] where the data could be missing or
-    * violating generated columns (overwrite, merge bootstrap) — this path
-    * does NOT re-apply it, so full-table rewrites whose input is the table
-    * itself (compact / zorder, already validated at original write time)
-    * never pay a redundant per-row generation re-evaluation.
-    */
   /** GENERATED ALWAYS AS IDENTITY assignment (Delta identity-columns
     * analog, declared per handle like `generatedCols`): when the declared
     * column is absent from a write, every row gets `start + step·k` with
@@ -5326,6 +5051,13 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
   private def hwmProps(newHwm: Option[Long]): Option[Seq[(String, String)]] =
     propsWith(newHwm.toSeq.map(h => MergeTable.IdentityHwmProp -> h.toString))
 
+  /** Writes a full snapshot and commits it. Callers must have ALREADY
+    * applied [[applyGenerated]] where the data could be missing or
+    * violating generated columns (overwrite, merge bootstrap) — this path
+    * does NOT re-apply it, so full-table rewrites whose input is the table
+    * itself (compact / zorder, already validated at original write time)
+    * never pay a redundant per-row generation re-evaluation.
+    */
   private def writeVersion(df: DataFrame, version: Long,
                            changes: Option[DataFrame] = None,
                            txn: Option[(String, Long)] = None,
@@ -6136,7 +5868,7 @@ object MergeTable {
     * the moment of submission; thread creation is microseconds against
     * the hundreds of milliseconds a small write job costs.
     */
-  private[lake] def startAsync[T](f: () => T): java.util.concurrent.FutureTask[T] = {
+  private[graft] def startAsync[T](f: () => T): java.util.concurrent.FutureTask[T] = {
     val task = new java.util.concurrent.FutureTask[T](() => f())
     val th = new Thread(task, "graft-async-write")
     th.setDaemon(true)
@@ -6147,17 +5879,36 @@ object MergeTable {
   /** Await [[startAsync]]'s result, unwrapping the ExecutionException so
     * callers see the original failure.
     */
-  private[lake] def awaitAsync[T](t: java.util.concurrent.FutureTask[T]): T =
+  private[graft] def awaitAsync[T](t: java.util.concurrent.FutureTask[T]): T =
     try t.get()
     catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
 
-  /** [[startAsync]] / [[awaitAsync]] for engine callers outside this
-    * package (the MV build overlaps its census builds with the MV write).
+  /** A DML's split of its base snapshot: the `touched` files it rewrites
+    * (or, for a dv write, masks), the `kept` files it carries forward, and
+    * its read set for the lost-race rebase — a test over a race
+    * winner's added files, None when the write read the whole table.
     */
-  private[graft] def startAsyncPublic[T](f: () => T): java.util.concurrent.FutureTask[T] =
-    startAsync(f)
-  private[graft] def awaitAsyncPublic[T](t: java.util.concurrent.FutureTask[T]): T =
-    awaitAsync(t)
+  private[lake] final case class TouchedSplit(touched: Seq[String], kept: Seq[String],
+                                              readConflict: Option[Seq[String] => Boolean])
+
+  /** One dv write's staged masks: `dvRel` holds every masked position of
+    * the `touched` files — this write's and their prior masks — and `cum`
+    * counts them per file.
+    */
+  private[lake] final case class DvMasks(dvRel: String, touched: Seq[String],
+                                         cum: Map[String, Long]) {
+    /** Bindings for a manifest: touched files bind `dvRel`, every other
+      * file keeps its `prior` binding.
+      */
+    def bind(files: Seq[String],
+             prior: Map[String, (String, Long)]): Seq[(String, String, Long)] =
+      files.flatMap { f =>
+        cum.get(f) match {
+          case Some(n) => Some((f, dvRel, n))
+          case None    => prior.get(f).map { case (d, n) => (f, d, n) }
+        }
+      }
+  }
 
   /** Total row count from one parquet file's footer — driver-side
     * metadata read, the direct-write eligibility row bound.
@@ -6493,10 +6244,6 @@ object MergeTable {
     }
   }
 
-  /** Stats are collected only for types the pruner can order back from
-    * their stringified form — anything else (binary, arrays, structs)
-    * would record JVM `toString` garbage that can never prune soundly.
-    */
   /** Above this file count, footer stats collection fans out over the
     * cluster (`parallelize(files).map(readFooter)`) instead of a driver
     * loop — 10^6 footers are still metadata, but not DRIVER metadata.
@@ -6619,6 +6366,10 @@ object MergeTable {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
+  /** Stats are collected only for types the pruner can order back from
+    * their stringified form — anything else (binary, arrays, structs)
+    * would record JVM `toString` garbage that can never prune soundly.
+    */
   private[lake] def statsSupported(dt: org.apache.spark.sql.types.DataType): Boolean = {
     import org.apache.spark.sql.types._
     dt match {

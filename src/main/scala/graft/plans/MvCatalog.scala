@@ -296,7 +296,7 @@ object MvCatalog {
       // interleaving converges because refresh folds each artifact from
       // ITS OWN txn marker.
       val censusTasks = censusCols(groupCols, aggs).map { c =>
-        graft.lake.MergeTable.startAsyncPublic { () =>
+        graft.lake.MergeTable.startAsync { () =>
           new MergeTable(censusPath(mvPath, c)).overwrite(
             base.filter(col(c).isNotNull)
               .groupBy((groupCols :+ c).map(col): _*)
@@ -306,7 +306,7 @@ object MvCatalog {
       }
       mv.overwrite(base.groupBy(groupCols.map(col): _*)
         .agg(aggCols.head, aggCols.tail: _*), txn = Some(s"mv_$name" -> v))
-      censusTasks.foreach(graft.lake.MergeTable.awaitAsyncPublic)
+      censusTasks.foreach(graft.lake.MergeTable.awaitAsync)
       val rootPaths = rootPathsOf(base.queryExecution.analyzed)
       register(spark, MvDef(name, basePath, rootPaths, groupCols, aggs,
         mvPath, s"graft:v$v"))

@@ -3,6 +3,8 @@ package graft.lake
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.GraftSqlShims
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** Write-path stats cost (the 100 TB double-scan question): min/max, null
   * counts, and row counts come from parquet FOOTERS — metadata reads — so
@@ -24,15 +26,15 @@ class StatsScanSpec extends SparkSpec {
     finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  /** Executed-plan strings of every query execution between registration
-    * and drain — the counting instrument.
+  /** Executed plans of every query execution between registration and
+    * drain — the counting instrument.
     */
-  private def recordPlans[A](body: => A): (A, Seq[String]) = {
-    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+  private def recordPlans[A](body: => A): (A, Seq[SparkPlan]) = {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(fn: String,
           qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-        seen.synchronized { seen += qe.executedPlan.toString }
+        seen.synchronized { seen += qe.executedPlan }
       override def onFailure(fn: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
@@ -44,12 +46,21 @@ class StatsScanSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  private def tableScans(plans: Seq[String], marker: String): Seq[String] =
-    plans.filter(p => p.contains(marker) && p.contains("FileScan"))
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** The file scans (adaptive plans and subqueries included) that read
+    * under the table `root`, told apart by each scan's file-index root
+    * paths — never by the plan text, whose `Location:` Spark cuts at
+    * `spark.sql.maxMetadataStringLength` characters.
+    */
+  private def tableScans(plans: Seq[SparkPlan], root: String): Seq[FileSourceScanExec] = {
+    val dir = java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString + "/"
+    plans.flatMap(p => Plans.collectWithSubqueries(p) { case s: FileSourceScanExec => s })
+      .filter(_.relation.location.rootPaths.exists(_.toUri.getPath.startsWith(dir)))
+  }
 
   test("append with non-integral stats columns: ZERO post-write data scans") { withFooterStats {
     val root = scratch("stats_single")
-    val marker = root.substring(root.lastIndexOf('/') + 1)
     val t = new MergeTable(root, Nil, statsCols = Seq("v", "d"))
     t.overwrite(Seq((1L, "a", java.sql.Date.valueOf("2026-08-01")))
       .toDF("k", "v", "d"))
@@ -57,7 +68,7 @@ class StatsScanSpec extends SparkSpec {
       t.append(Seq((2L, "b", java.sql.Date.valueOf("2026-08-02")))
         .toDF("k", "v", "d"))
     }
-    assert(tableScans(plans, marker).isEmpty,
+    assert(tableScans(plans, root).isEmpty,
       s"footer-based stats must not rescan the written files:\n${plans.mkString("\n---\n")}")
     // and the footer stats are REAL: bounds + null counts landed in the log
     val stats = t.statsDetail(t.currentVersion)
@@ -72,16 +83,15 @@ class StatsScanSpec extends SparkSpec {
 
   test("integral sums: exactly one post-write scan, pruned to the integral column") { withFooterStats {
     val root = scratch("stats_sums")
-    val marker = root.substring(root.lastIndexOf('/') + 1)
     val t = new MergeTable(root, Nil, statsCols = Seq("k", "v"))
     t.overwrite(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
     val (_, plans) = recordPlans {
       t.append(Seq((3L, "c")).toDF("k", "v"))
     }
-    val scans = tableScans(plans, marker)
+    val scans = tableScans(plans, root)
     assert(scans.size === 1,
       s"sum collection is ONE narrow scan, got ${scans.size}:\n${plans.mkString("\n---\n")}")
-    assert(scans.head.contains("ReadSchema: struct<k:bigint>"),
+    assert(scans.head.requiredSchema.catalogString === "struct<k:bigint>",
       s"the sum scan must read ONLY the integral column:\n${scans.head}")
     // the sums are exact and pushdown-usable
     val sums = t.fileSums(t.currentVersion)
