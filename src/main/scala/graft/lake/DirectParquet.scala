@@ -6,6 +6,7 @@ import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.types.StructType
 
@@ -74,17 +75,16 @@ private[lake] object DirectParquet {
     }
 
   /** Write `rows` as ONE parquet file at `path`. Each row's first
-    * `fileSchema.length` fields must match `fileSchema`; trailing fields —
-    * e.g. stringified partition values used for grouping — are stripped by
-    * an ordinal projection (`ParquetWriteSupport.writeFields` walks the
-    * ROW's arity, so extra fields must not reach it).
+    * `fileSchema.length` fields must match the write schema; trailing
+    * fields — e.g. stringified partition values used for grouping — are
+    * stripped by `proj`, an `UnsafeProjection` over the file schema
+    * (`ParquetWriteSupport.writeFields` walks the ROW's arity, so extra
+    * fields must not reach it). The caller builds `proj` once per write
+    * and passes it to every file: its codegen costs ~2 ms.
     */
   def writeFile(conf: Configuration, codec: CompressionCodecName,
-                fileSchema: StructType,
+                proj: UnsafeProjection,
                 rows: Iterator[InternalRow], path: java.nio.file.Path): Unit = {
-    val proj = Timing.time("writeData.direct.proj")(
-      org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(fileSchema))
     val writer = Timing.time("writeData.direct.build")(
       new RowBuilder(new org.apache.hadoop.fs.Path(path.toString))
         .withConf(conf)

@@ -102,7 +102,8 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
 
   /** Which pruning engine the LAST [[pruneFilesFor]] call used —
     * `"checkpoint"` (distributed Catalyst filter over the columnar
-    * checkpoint) or `"driver"` (per-file loop). Observability for gates
+    * checkpoint), `"driver"` (per-file loop) or `"none"` (no conjunct
+    * could drop a file, so neither ran). Observability for gates
     * and specs that assert the scale path engaged; never read by the
     * engine itself.
     */
@@ -547,25 +548,30 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       case sources.In(_, vs) if vs.forall(_ == null) => true
       case c => c.references.forall(statted)
     }
+    // partition-prune on the conjuncts that reference partition columns
+    // ALONE — a mixed predicate still prunes through its partition-only
+    // conjuncts (sound: every conjunct must hold independently), where
+    // handing the whole conjunction to the tuple probe would fail
+    // resolution on the first data column and prune nothing
+    val partConjuncts = conjuncts
+      .filter(c => c.references.nonEmpty && c.references.forall(partitionCols.contains))
+    // With neither a partition-only conjunct nor a statted one, no engine
+    // can drop a file: skip both (the checkpoint path would spend a Spark
+    // job keeping every file). The Bloom step below still runs.
+    val canPrune = partConjuncts.nonEmpty || statConjuncts.nonEmpty
     // At large file counts the per-file driver loop below becomes the
     // bottleneck (O(files) stat-string parses + predicate evals PER READ).
     // When a columnar checkpoint covers this version, the same pruning
     // runs as a Catalyst filter over the checkpoint DataFrame instead —
     // distributed, codegen'd, O(kept + tail churn) on the driver.
     val viaCheckpoint: Option[Seq[String]] =
-      if (all.size >= MergeTable.checkpointThreshold(spark))
+      if (canPrune && all.size >= MergeTable.checkpointThreshold(spark))
         pruneFilesDistributed(spark, version, all, conjuncts, statConjuncts, types)
       else None
-    lastPruneVia = if (viaCheckpoint.isDefined) "checkpoint" else "driver"
+    lastPruneVia =
+      if (!canPrune) "none" else if (viaCheckpoint.isDefined) "checkpoint" else "driver"
     var files = viaCheckpoint.getOrElse {
-      // partition-prune on the conjuncts that reference partition columns
-      // ALONE — a mixed predicate still prunes through its partition-only
-      // conjuncts (sound: every conjunct must hold independently), where
-      // handing the whole conjunction to the tuple probe would fail
-      // resolution on the first data column and prune nothing
-      val pred = conjuncts
-        .filter(c => c.references.nonEmpty && c.references.forall(partitionCols.contains))
-        .flatMap(MergeTable.translateFilter).reduceOption(_ && _)
+      val pred = partConjuncts.flatMap(MergeTable.translateFilter).reduceOption(_ && _)
       pred.fold(all)(p => partitionCandidates(spark, all, schemaOf(version), p))
     }
     lazy val stats = statsDetail(version)
@@ -1507,7 +1513,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     * touched set bounds the merge OUTPUT, so collecting it to the driver
     * is safe by construction.
     */
-  private def probeTouchedFiles(spark: SparkSession, srcKeys: DataFrame,
+  private def probeTouchedFiles(spark: SparkSession, keyRows: MergeTable.SourceKeys,
                                 keys: Seq[String], version: Long,
                                 probeRel: Seq[String], schema: StructType,
                                 cmap: Map[String, String],
@@ -1529,13 +1535,21 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
           Files.writeString(p, df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode))
         }
-      val cap = spark.conf.get("spark.graft.mergeProbeInMax", "10000").toInt
+      val srcKeys = keyRows.df
+      val cap = keyRows.cap
       val fastTypesOk = keys.forall(k => simple(schema(k).dataType))
+      // the non-null key rows, from the merge's one bounded key collect;
+      // only a capped collect holding NULL keys cannot tell whether the
+      // non-null rows fit under the cap, and collects them on their own
       val sample: Array[Row] =
         if (!fastTypesOk) Array.empty
-        else srcKeys
-          .filter(keys.map(col(_).isNotNull).reduce(_ && _))
-          .limit(cap + 1).collect()
+        else {
+          val nonNull = keyRows.rows.filter(r => keys.indices.forall(i => !r.isNullAt(i)))
+          if (keyRows.complete || nonNull.length > cap) nonNull
+          else srcKeys
+            .filter(keys.map(col(_).isNotNull).reduce(_ && _))
+            .limit(cap + 1).collect()
+        }
       if (fastTypesOk && sample.isEmpty) (Set.empty, true)
       else if (fastTypesOk && sample.length <= cap) {
         val tuples = sample.distinct
@@ -1576,12 +1590,24 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
   // ---- DML steps: each step the DML entry points share, once ----
 
   /** Delta's MERGE duplicate-source check: a key appearing twice in the
-    * source would match one target row twice.
+    * source would match one target row twice. A source whose key rows all
+    * fit in the merge's one bounded key collect ([[MergeTable.SourceKeys]])
+    * is checked on the driver, with no Spark job, when every key type
+    * groups on the driver exactly as Spark's `groupBy` does
+    * ([[MergeTable.driverGroupKey]]); any other source keeps the `groupBy`.
     */
-  private def requireUniqueKeys(src: DataFrame, keys: Seq[String]): Unit = {
-    val dup = Timing.time("merge.dupCheck")(
-      src.groupBy(keys.map(col): _*).count().filter(col("count") > 1).limit(1).count())
-    require(dup == 0L,
+  private def requireUniqueKeys(src: DataFrame, keyRows: MergeTable.SourceKeys,
+                                keys: Seq[String]): Unit = {
+    val dup = Timing.time("merge.dupCheck") {
+      MergeTable.driverGroupKey(keyRows.df.schema) match {
+        case Some(group) if keyRows.complete =>
+          val seen = new java.util.HashSet[Seq[Any]]()
+          keyRows.rows.exists(r => !seen.add(group(r)))
+        case _ =>
+          src.groupBy(keys.map(col): _*).count().filter(col("count") > 1).limit(1).count() > 0L
+      }
+    }
+    require(!dup,
       s"merge source has duplicate keys on (${keys.mkString(",")}) — Delta MERGE would fail (multiple source rows matched one target row)")
   }
 
@@ -1658,18 +1684,17 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     * the data write AND the change feed skip the distributed write
     * machinery entirely.
     */
-  private def splitByKeys(spark: SparkSession, src: DataFrame, srcKeys: DataFrame,
+  private def splitByKeys(spark: SparkSession, src: DataFrame, keyRows: MergeTable.SourceKeys,
                           keys: Seq[String], v: Long, keysDeterminePartitions: Boolean,
                           wholeScope: Boolean): (MergeTable.TouchedSplit, Boolean) = {
     val oldFiles = filesOf(v)
     val (scopeDirs, probeRel) = mergeScope(src, oldFiles, keysDeterminePartitions)
     val (touched, bounded) =
       if (wholeScope) (probeRel.toSet, false)
-      else probeTouchedFiles(spark, srcKeys, keys, v, probeRel, schemaOf(v),
+      else probeTouchedFiles(spark, keyRows, keys, v, probeRel, schemaOf(v),
         colmapOf(v), dvsOf(v))
     val (t, k) = oldFiles.partition(touched.contains)
-    val direct = bounded && directWriteOk(spark, t,
-      extraRows = spark.conf.get("spark.graft.mergeProbeInMax", "10000").toLong)
+    val direct = bounded && directWriteOk(spark, t, extraRows = keyRows.cap.toLong)
     (MergeTable.TouchedSplit(t, k, scopeDirs.map(scopeConflict)), direct)
   }
 
@@ -1875,17 +1900,18 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
 
     val src = applyGenerated(source).cache()
     try {
-      if (checkUniqueSource) requireUniqueKeys(src, keys)
+      val srcKeys = src.select(keys.map(col): _*)
+      val keyRows = MergeTable.SourceKeys(spark, srcKeys)
+      if (checkUniqueSource) requireUniqueKeys(src, keyRows, keys)
 
       val v = currentVersion
-      val srcKeys = src.select(keys.map(col): _*)
       val cmap = colmapOf(v)
 
       // File pruning: find the data files that contain at least one matched
       // key, within the merge's scope ([[mergeScope]]). A full sync
       // (deleteNotMatchedBySource) skips the probe: every in-scope file is
       // rewritten, because any may hold now-unmatched rows to delete.
-      val (split, direct) = splitByKeys(spark, src, srcKeys, keys, v,
+      val (split, direct) = splitByKeys(spark, src, keyRows, keys, v,
         keysDeterminePartitions, wholeScope = deleteNotMatchedBySource)
 
       // Touched-file rows, read once ([[readTouched]]); survivors of those
@@ -2302,8 +2328,9 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
 
     val src = source.cache()
     try {
-      if (checkUniqueSource) requireUniqueKeys(src, keys)
       val srcKeys = src.select(keys.map(col): _*)
+      val keyRows = MergeTable.SourceKeys(spark, srcKeys)
+      if (checkUniqueSource) requireUniqueKeys(src, keyRows, keys)
       val cmap = colmapOf(v)
 
       // scope + touched-file probe + direct-write eligibility: the same
@@ -2311,7 +2338,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       // As in [[merge]], the scope records the READ SET for the lost-race
       // rebase ([[rebaseMerge]]) — which extends WriteSerializable
       // conflict resolution to the SQL MERGE INTO surface too.
-      val (split, direct) = splitByKeys(spark, src, srcKeys, keys, v,
+      val (split, direct) = splitByKeys(spark, src, keyRows, keys, v,
         keysDeterminePartitions, wholeScope = bySource.nonEmpty)
 
       // pinned on the direct path: consumed by matched / unmatched /
@@ -2762,10 +2789,11 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       s"mergeVectorized on $root: schema collides with reserved columns $DvFileCol/$DvIdxCol")
     val src = applyGenerated(source).cache()
     try {
-      if (checkUniqueSource) requireUniqueKeys(src, keys)
+      val srcKeys = src.select(keys.map(col): _*)
+      if (checkUniqueSource)
+        requireUniqueKeys(src, MergeTable.SourceKeys(spark, srcKeys), keys)
       val files = filesOf(v)
       val dvs = dvsOf(v)
-      val srcKeys = src.select(keys.map(col): _*)
 
       // same opt-in partition pruning as [[merge]]: the position probe
       // scans the scope's files, and the scope is the READ SET for the
@@ -5429,8 +5457,8 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     * final defense. At 100 TB only genuinely tiny micro-batch commits
     * qualify — exactly the writes whose cost is 100% fixed job overhead.
     */
-  private def directWriteOk(spark: SparkSession, touchedRel: Seq[String],
-                            extraRows: Long = 0L): Boolean = {
+  private[lake] def directWriteOk(spark: SparkSession, touchedRel: Seq[String],
+                                  extraRows: Long = 0L): Boolean = {
     val maxBytes = spark.conf.get("spark.graft.directWriteMaxBytes",
       (16L * 1024 * 1024).toString).toLong
     val maxRows = spark.conf.get("spark.graft.directWriteMaxRows", "262144").toLong
@@ -5486,6 +5514,8 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
         val (codec, infix) = DirectParquet.codecOf(spark)
         val name = s"part-00000-${java.util.UUID.randomUUID()}.c000$infix.parquet"
         Files.createDirectories(Paths.get(root, destRel))
+        val proj = Timing.time("writeData.direct.proj")(
+          org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(fileSchema))
         val nd = dataCols.length
         val grouped = rows.groupBy { r =>
           parts.indices.map { i =>
@@ -5507,8 +5537,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
             s"${parts(i)}=${ExternalCatalogUtils.getPartitionValueString(pvals(i))}")
           val dir = Paths.get((Seq(root, destRel) ++ segs).mkString("/"))
           Files.createDirectories(dir)
-          DirectParquet.writeFile(conf, codec, fileSchema, group.iterator,
-            dir.resolve(name))
+          DirectParquet.writeFile(conf, codec, proj, group.iterator, dir.resolve(name))
         }
         MergeTable.directWrites.incrementAndGet()
         true
@@ -5891,6 +5920,53 @@ object MergeTable {
   private[lake] final case class TouchedSplit(touched: Seq[String], kept: Seq[String],
                                               readConflict: Option[Seq[String] => Boolean])
 
+  /** A merge source's key rows (`df`, the key columns in key order),
+    * collected at most once and at most `cap + 1` of them
+    * (`spark.graft.mergeProbeInMax + 1`): the one bounded collect behind
+    * both the duplicate-key check and the touched-file probe's key
+    * sample. `complete` = every source key row was collected.
+    */
+  private[lake] final class SourceKeys(val df: DataFrame, val cap: Int) {
+    lazy val rows: Array[Row] = df.limit(cap + 1).collect()
+    def complete: Boolean = rows.length <= cap
+  }
+
+  private[lake] object SourceKeys {
+    def apply(spark: SparkSession, df: DataFrame): SourceKeys =
+      new SourceKeys(df, spark.conf.get("spark.graft.mergeProbeInMax", "10000").toInt)
+  }
+
+  /** A driver-side grouping key for collected rows of `schema` that is
+    * equal exactly when Spark's `groupBy` puts two rows in one group, or
+    * None when some column's type cannot promise that. NULLs form one
+    * group; floats and doubles fold -0.0 into 0.0 and every NaN into one
+    * (Spark normalizes both before grouping); strings qualify only under
+    * the default binary collation.
+    */
+  private[lake] def driverGroupKey(schema: StructType): Option[Row => Seq[Any]] = {
+    import org.apache.spark.sql.types._
+    val norms: Seq[Option[Any => Any]] = schema.fields.toSeq.map(_.dataType match {
+      case ByteType | ShortType | IntegerType | LongType | BooleanType |
+           DateType | TimestampType => Some(v => v)
+      case dt if dt == StringType => Some(v => v) // the UTF8_BINARY collation only
+      // floatToIntBits/doubleToLongBits map every NaN to one bit pattern
+      case FloatType => Some { v =>
+        val f = v.asInstanceOf[Float]
+        java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)
+      }
+      case DoubleType => Some { v =>
+        val d = v.asInstanceOf[Double]
+        java.lang.Double.doubleToLongBits(if (d == 0.0d) 0.0d else d)
+      }
+      case _ => None
+    })
+    if (norms.exists(_.isEmpty)) None
+    else {
+      val ns = norms.flatten
+      Some(r => ns.indices.map(i => if (r.isNullAt(i)) null else ns(i)(r.get(i))))
+    }
+  }
+
   /** One dv write's staged masks: `dvRel` holds every masked position of
     * the `touched` files — this write's and their prior masks — and `cum`
     * counts them per file.
@@ -5910,19 +5986,50 @@ object MergeTable {
       }
   }
 
-  /** Total row count from one parquet file's footer — driver-side
-    * metadata read, the direct-write eligibility row bound.
+  /** One parquet file's footer, read straight from the file's tail: the
+    * last 8 bytes (the footer length, little-endian, then the `PAR1`
+    * magic), then the footer bytes, decoded by parquet's own metadata
+    * converter: two positioned reads of one channel, with no Hadoop
+    * `Configuration`, `FileSystem` or `ParquetFileReader` to build per
+    * file (~13–28 ms each). None = not a plain parquet footer (an
+    * encrypted `PARE` tail, a truncated or non-parquet file) or any read
+    * error; callers then fall back as for any unreadable footer. Static:
+    * also runs on executors.
+    */
+  private[lake] def readFooter(path: Path)
+      : Option[org.apache.parquet.hadoop.metadata.ParquetMetadata] =
+    try {
+      import java.nio.{ByteBuffer, ByteOrder}
+      val ch = java.nio.channels.FileChannel.open(path)
+      try {
+        def readAt(pos: Long, n: Int): ByteBuffer = {
+          val buf = ByteBuffer.allocate(n)
+          while (buf.hasRemaining)
+            if (ch.read(buf, pos + buf.position()) < 0) throw new java.io.EOFException(path.toString)
+          buf.flip()
+          buf
+        }
+        val size = ch.size()
+        // leading magic + footer length + trailing magic
+        if (size < 12) None
+        else {
+          val tail = readAt(size - 8, 8).order(ByteOrder.LITTLE_ENDIAN)
+          val len = tail.getInt(0)
+          val magic = new String(tail.array, 4, 4, StandardCharsets.US_ASCII)
+          if (magic != "PAR1" || len <= 0 || len > size - 12) None
+          else Some(new org.apache.parquet.format.converter.ParquetMetadataConverter()
+            .readParquetMetadata(
+              new java.io.ByteArrayInputStream(readAt(size - 8 - len, len).array),
+              org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER))
+        }
+      } finally ch.close()
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Total row count from one parquet file's footer ([[readFooter]]) —
+    * driver-side metadata read, the direct-write eligibility row bound.
     */
   private[lake] def footerRowCount(root: String, rel: String): Option[Long] =
-    try {
-      import scala.jdk.CollectionConverters._
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(new java.io.File(root, rel).toURI),
-        new org.apache.hadoop.conf.Configuration())
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try Some(r.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
-      finally r.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
+    readFooter(Paths.get(root, rel)).map(_.getBlocks.asScala.map(_.getRowCount).sum)
 
   /** URL-decode of one log-line field (the static twin of the handle's
     * `dec`, for executor-side stat-line parsing).
@@ -6257,23 +6364,19 @@ object MergeTable {
   private[lake] final case class FooterStat(col: String, mn: String, mx: String,
                                             flag: String, nulls: Option[Long])
 
-  /** Read ONE file's parquet footer and derive its stat entries. Runs on
-    * the driver or inside `parallelize` (static — captures nothing).
-    * None = footer unreadable (caller rescans); a column with unusable
-    * statistics simply yields no entry (readers keep the file).
+  /** Read ONE file's parquet footer ([[readFooter]]) and derive its stat
+    * entries. Runs on the driver or inside `parallelize` (static —
+    * captures nothing). None = footer unreadable (caller rescans); a
+    * column with unusable statistics simply yields no entry (readers keep
+    * the file).
     */
   private[lake] def footerStatsOf(root: String, rel: String,
       cols: Seq[(String, String, org.apache.spark.sql.types.DataType)])
       : Option[Seq[FooterStat]] = {
     import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    try {
-      val p = new org.apache.hadoop.fs.Path(new java.io.File(root, rel).toURI)
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        p, new org.apache.hadoop.conf.Configuration())
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    readFooter(Paths.get(root, rel)).flatMap { footer =>
       try {
-        val blocks = reader.getFooter.getBlocks.asScala.toSeq
+        val blocks = footer.getBlocks.asScala.toSeq
         val rowCount = blocks.map(_.getRowCount).sum
         val countStat = FooterStat(CountStatKey, rowCount.toString,
           rowCount.toString, "V", None)
@@ -6362,8 +6465,8 @@ object MergeTable {
           }
         }
         Some(countStat +: colStats)
-      } finally reader.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
+      } catch { case scala.util.control.NonFatal(_) => None }
+    }
   }
 
   /** Stats are collected only for types the pruner can order back from

@@ -80,6 +80,37 @@ class CheckpointSpec extends SparkSpec {
     }
   }
 
+  test("a filter no engine can prune by starts no Spark job and keeps every file") {
+    withThreshold(1) {
+      // stats on v only: an IN on k (unstatted, not a partition column)
+      // can drop no file, so the checkpoint job would only keep them all
+      val t = new MergeTable(scratch("cp_noprune"), Seq("p"), statsCols = Seq("v"))
+      t.overwrite(spark.range(30).select(col("id").as("k"),
+        col("id").cast("string").as("v"), (col("id") % 3).cast("string").as("p"))
+        .repartition(2))
+      val v = t.currentVersion
+      assert(Files.exists(t.checkpointDir(v).resolve("_SUCCESS")))
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(l)
+      val kept =
+        try {
+          val r = t.pruneFilesFor(spark, v, Seq(sources.In("k", Array[Any](1L, 2L, 40L))))
+          org.apache.spark.sql.GraftSqlShims.waitForListenerBus(spark)
+          r
+        } finally spark.sparkContext.removeSparkListener(l)
+      assert(jobs.get === 0)
+      assert(t.lastPruneVia === "none")
+      assert(kept === t.filesOf(v))
+      // a statted conjunct still engages the checkpoint path
+      t.pruneFilesFor(spark, v, Seq(sources.EqualTo("v", "7")))
+      assert(t.lastPruneVia === "checkpoint")
+    }
+  }
+
   test("no usable checkpoint or non-incremental tail: silent driver fallback") {
     // threshold never met → no checkpoint written → driver path
     val t = seeded("cp_fallback")
