@@ -475,6 +475,12 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     * opening 10^6 parquet footers and opening the handful a selective
     * predicate admits, with zero caller opt-in (the connector wires every
     * `format("graft")` / catalog-table scan through here).
+    *
+    * This is the LOG-level prune. The relation it reads is a
+    * [[ManifestFileIndex]], which then skips by parquet footers the
+    * filters Spark pushes into the scan, as on every other read: files of
+    * columns the log records no stats for are still skipped there, at one
+    * cached footer per file.
     */
   private[graft] def readVersionWhere(spark: SparkSession, version: Long,
                                       filters: Seq[sources.Filter]): DataFrame = {
@@ -525,6 +531,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     // added files). Both engines compose soundly: the driver loop admits
     // per file, and the distributed path ends in `all.filter(keptSet)` —
     // an intersection with the checkpoint survivors.
+    import MergeTable.statCmp
     val all = among.getOrElse(filesOf(version))
     if (filters.isEmpty || all.isEmpty) return all
     val conjuncts0 = MergeTable.flattenAnd(filters)
@@ -594,37 +601,39 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
                    v: Any): Option[Boolean] =
       for (l <- statCmp(dt, mn, v.toString); u <- statCmp(dt, v.toString, mx))
         yield l <= 0 && u <= 0
-    def admit(f: String, c: sources.Filter): Boolean = c match {
+    // one test per conjunct: an `In` parses and sorts its keys here, once
+    def admit(c: sources.Filter): String => Boolean = c match {
       case sources.EqualTo(a, v) if v != null =>
-        range(f, a)((mn, mx, dt) => pointAdmit(mn, mx, dt, v))
+        f => range(f, a)((mn, mx, dt) => pointAdmit(mn, mx, dt, v))
       case sources.EqualNullSafe(a, v) if v != null =>
-        range(f, a)((mn, mx, dt) => pointAdmit(mn, mx, dt, v))
+        f => range(f, a)((mn, mx, dt) => pointAdmit(mn, mx, dt, v))
       case sources.In(a, vs) =>
-        val nn = vs.filter(_ != null)
+        val nn = vs.filter(_ != null).toSeq
+        val keys = types.get(a).map(new MergeTable.InKeys(_, nn))
         // `a IN (NULL, …)` with no non-null values never evaluates TRUE
-        nn.nonEmpty && range(f, a) { (mn, mx, dt) =>
-          val admits = nn.map(v => pointAdmit(mn, mx, dt, v))
-          if (admits.exists(_.isEmpty)) Some(true) else Some(admits.flatten.exists(identity))
-        }
+        f => nn.nonEmpty &&
+          range(f, a)((mn, mx, _) => keys.flatMap(_.admits(mn, mx)).orElse(Some(true)))
       case sources.GreaterThan(a, v) if v != null =>
-        range(f, a)((_, mx, dt) => statCmp(dt, v.toString, mx).map(_ < 0))
+        f => range(f, a)((_, mx, dt) => statCmp(dt, v.toString, mx).map(_ < 0))
       case sources.GreaterThanOrEqual(a, v) if v != null =>
-        range(f, a)((_, mx, dt) => statCmp(dt, v.toString, mx).map(_ <= 0))
+        f => range(f, a)((_, mx, dt) => statCmp(dt, v.toString, mx).map(_ <= 0))
       case sources.LessThan(a, v) if v != null =>
-        range(f, a)((mn, _, dt) => statCmp(dt, mn, v.toString).map(_ < 0))
+        f => range(f, a)((mn, _, dt) => statCmp(dt, mn, v.toString).map(_ < 0))
       case sources.LessThanOrEqual(a, v) if v != null =>
-        range(f, a)((mn, _, dt) => statCmp(dt, mn, v.toString).map(_ <= 0))
+        f => range(f, a)((mn, _, dt) => statCmp(dt, mn, v.toString).map(_ <= 0))
       case sources.IsNotNull(a) =>
-        entry(f, a).forall(_._3 != 'N') // only a definitive all-NULL flag skips
+        f => entry(f, a).forall(_._3 != 'N') // only a definitive all-NULL flag skips
       case sources.IsNull(a) =>
         // a recorded ZERO null count proves no row can match; unknown keeps
-        nullsByFile.get((f, a)).forall(_ > 0L)
-      case _ => true
+        f => nullsByFile.get((f, a)).forall(_ > 0L)
+      case _ => _ => true
     }
     // the checkpoint path already applied partition + stats pruning inside
     // Catalyst — re-running the driver admit loop would only repeat work
-    if (viaCheckpoint.isEmpty)
-      files = files.filter(f => statConjuncts.forall(c => admit(f, c)))
+    if (viaCheckpoint.isEmpty) {
+      val admits = statConjuncts.map(admit)
+      files = files.filter(f => admits.forall(_(f)))
+    }
     val eqs = conjuncts.collect {
       case sources.EqualTo(a, v) if v != null       => (a, v)
       case sources.EqualNullSafe(a, v) if v != null => (a, v)
@@ -1175,55 +1184,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
   } catch { case scala.util.control.NonFatal(e) =>
     if (sys.env.contains("GRAFT_DEBUG_CHECKPOINT")) e.printStackTrace()
     None
-  }
-
-  /** Order two stat strings under the column's type — None = refuse to
-    * decide (the pruner then keeps the file). Dates/timestamps parse the
-    * exact stringifications their external JVM values produce
-    * (`java.sql.Date`/`LocalDate`, `java.sql.Timestamp`/`Instant`/
-    * `LocalDateTime`), normalized to epoch numbers before comparing.
-    */
-  private def statCmp(dt: org.apache.spark.sql.types.DataType,
-                      a: String, b: String): Option[Int] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      // the recorded bounds are Spark min/max extremes, i.e. UTF-8 BINARY
-      // order — compare the same way (String.compareTo is UTF-16 code-unit
-      // order, which disagrees for supplementary chars vs U+E000–U+FFFF;
-      // deciding a skip under the wrong order would be UNSOUND)
-      case StringType => Some(
-        org.apache.spark.unsafe.types.UTF8String.fromString(a)
-          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)))
-      case _ => for (x <- statKey(dt, a); y <- statKey(dt, b)) yield x.compare(y)
-    }
-  }
-
-  private def statKey(dt: org.apache.spark.sql.types.DataType,
-                      s: String): Option[BigDecimal] = {
-    import org.apache.spark.sql.types._
-    def tsMicros: BigDecimal =
-      try {
-        val t = java.sql.Timestamp.valueOf(s)
-        BigDecimal(Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000)
-      } catch {
-        case _: IllegalArgumentException =>
-          val i = try java.time.Instant.parse(s)
-                  catch {
-                    case _: java.time.format.DateTimeParseException =>
-                      java.time.LocalDateTime.parse(s).toInstant(java.time.ZoneOffset.UTC)
-                  }
-          BigDecimal(i.getEpochSecond * 1000000L + i.getNano / 1000)
-      }
-    try dt match {
-      case _: NumericType => Some(BigDecimal(s))
-      case DateType =>
-        val d = try java.time.LocalDate.parse(s)
-                catch { case _: java.time.format.DateTimeParseException =>
-                  java.sql.Date.valueOf(s).toLocalDate }
-        Some(BigDecimal(d.toEpochDay))
-      case TimestampType | TimestampNTZType => Some(tsMicros)
-      case _ => None
-    } catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** Files a commit ADDED vs its predecessor — the recorded per-commit
@@ -6025,6 +5985,92 @@ object MergeTable {
       } finally ch.close()
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** Order two stat strings under the column's type — None = refuse to
+    * decide (the pruner then keeps the file). Dates/timestamps parse the
+    * exact stringifications their external JVM values produce
+    * (`java.sql.Date`/`LocalDate`, `java.sql.Timestamp`/`Instant`/
+    * `LocalDateTime`), normalized to epoch numbers before comparing.
+    */
+  private[lake] def statCmp(dt: org.apache.spark.sql.types.DataType,
+                             a: String, b: String): Option[Int] = {
+    import org.apache.spark.sql.types._
+    dt match {
+      // the recorded bounds are Spark min/max extremes, i.e. UTF-8 BINARY
+      // order — compare the same way (String.compareTo is UTF-16 code-unit
+      // order, which disagrees for supplementary chars vs U+E000–U+FFFF;
+      // deciding a skip under the wrong order would be UNSOUND)
+      case StringType => Some(
+        org.apache.spark.unsafe.types.UTF8String.fromString(a)
+          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)))
+      case _ => for (x <- statKey(dt, a); y <- statKey(dt, b)) yield x.compare(y)
+    }
+  }
+
+  private def statKey(dt: org.apache.spark.sql.types.DataType,
+                      s: String): Option[BigDecimal] = {
+    import org.apache.spark.sql.types._
+    def tsMicros: BigDecimal =
+      try {
+        val t = java.sql.Timestamp.valueOf(s)
+        BigDecimal(Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000)
+      } catch {
+        case _: IllegalArgumentException =>
+          val i = try java.time.Instant.parse(s)
+                  catch {
+                    case _: java.time.format.DateTimeParseException =>
+                      java.time.LocalDateTime.parse(s).toInstant(java.time.ZoneOffset.UTC)
+                  }
+          BigDecimal(i.getEpochSecond * 1000000L + i.getNano / 1000)
+      }
+    try dt match {
+      case _: NumericType => Some(BigDecimal(s))
+      case DateType =>
+        val d = try java.time.LocalDate.parse(s)
+                catch { case _: java.time.format.DateTimeParseException =>
+                  java.sql.Date.valueOf(s).toLocalDate }
+        Some(BigDecimal(d.toEpochDay))
+      case TimestampType | TimestampNTZType => Some(tsMicros)
+      case _ => None
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** An `In` list's non-null keys for the driver prune, parsed ONCE under
+    * the column type and sorted, so each file's [min, max] costs one
+    * binary search instead of a [[statCmp]] parse per key. `admits` answers
+    * exactly as the per-key test (`mn <= v <= mx` for any key, under
+    * [[statCmp]]): None, i.e. keep the file, when any key or either bound
+    * does not parse.
+    */
+  private[lake] final class InKeys(dt: org.apache.spark.sql.types.DataType, keys: Seq[Any]) {
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    // a string compares as UTF-8 bytes, everything else as its statKey
+    private val strings: Option[Array[UTF8String]] =
+      if (dt == StringType) Some(keys.map(v => UTF8String.fromString(v.toString)).sorted.toArray)
+      else None
+    private val numbers: Option[Array[BigDecimal]] = {
+      val parsed = if (dt == StringType) Nil else keys.map(v => statKey(dt, v.toString))
+      if (parsed.exists(_.isEmpty)) None else Some(parsed.flatten.sorted.toArray)
+    }
+
+    def admits(mn: String, mx: String): Option[Boolean] = strings match {
+      case Some(ks) => Some(covers(ks, UTF8String.fromString(mn), UTF8String.fromString(mx)))
+      case None => for (ks <- numbers; lo <- statKey(dt, mn); hi <- statKey(dt, mx))
+        yield covers(ks, lo, hi)
+    }
+
+    /** Some key in [lo, hi]: the first key >= lo, by binary search, is <= hi. */
+    private def covers[T](ks: Array[T], lo: T, hi: T)(implicit ord: Ordering[T]): Boolean = {
+      var l = 0
+      var h = ks.length
+      while (l < h) {
+        val m = (l + h) >>> 1
+        if (ord.lt(ks(m), lo)) l = m + 1 else h = m
+      }
+      l < ks.length && ord.lteq(ks(l), hi)
+    }
+  }
+
   /** Total row count from one parquet file's footer ([[readFooter]]) —
     * driver-side metadata read, the direct-write eligibility row bound.
     */
@@ -6412,6 +6458,21 @@ object MergeTable {
                       (s.genericGetMin == null || s.genericGetMax == null))) None
                   else {
                     val withVals = stats.filter(_.hasNonNullValue)
+                    // an INT64 timestamp counts in its footer's own unit;
+                    // Spark's is micros, and any other annotation gives no
+                    // entry
+                    val toMicros: Option[Long => Long] = {
+                      import org.apache.parquet.schema.LogicalTypeAnnotation.{
+                        TimeUnit, TimestampLogicalTypeAnnotation}
+                      metas.head.getPrimitiveType.getLogicalTypeAnnotation match {
+                        case t: TimestampLogicalTypeAnnotation => t.getUnit match {
+                          case TimeUnit.MILLIS => Some(Math.multiplyExact(_: Long, 1000L))
+                          case TimeUnit.MICROS => Some(identity[Long])
+                          case TimeUnit.NANOS  => Some(Math.floorDiv(_: Long, 1000L))
+                        }
+                        case _ => None
+                      }
+                    }
                     def ext(v: Any): Option[String] = try {
                       dt match {
                         case ByteType | ShortType | IntegerType =>
@@ -6423,9 +6484,9 @@ object MergeTable {
                         case DateType => Some(
                           org.apache.spark.sql.catalyst.util.DateTimeUtils
                             .toJavaDate(v.asInstanceOf[Number].intValue).toString)
-                        case TimestampType => Some(
+                        case TimestampType => toMicros.map(micros =>
                           org.apache.spark.sql.catalyst.util.DateTimeUtils
-                            .toJavaTimestamp(v.asInstanceOf[Number].longValue).toString)
+                            .toJavaTimestamp(micros(v.asInstanceOf[Number].longValue)).toString)
                         case _ => None
                       }
                     } catch { case scala.util.control.NonFatal(_) => None }

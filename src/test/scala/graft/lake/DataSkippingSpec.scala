@@ -420,4 +420,69 @@ class DataSkippingSpec extends SparkSpec {
       .exists(_.forall(_.contains("p=1"))))
     assert(t.exactPartitionFiles(spark, v, Seq(sources.GreaterThan("k", 5))).isEmpty)
   }
+
+  /** The driver admit before `In` keys were parsed once: every key parsed
+    * and compared per file, an undecidable key or bound keeping the file.
+    */
+  private def perKeyAdmit(dt: org.apache.spark.sql.types.DataType, keys: Seq[Any],
+                          mn: String, mx: String): Boolean = {
+    val admits = keys.map(v =>
+      for (l <- MergeTable.statCmp(dt, mn, v.toString);
+           u <- MergeTable.statCmp(dt, v.toString, mx)) yield l <= 0 && u <= 0)
+    admits.exists(_.isEmpty) || admits.flatten.exists(identity)
+  }
+
+  test("a 10^5-value IN prunes exactly as the per-key admit") {
+    val files = 40
+    val t = new MergeTable(scratch("skip_in_1e5"), Seq("p"), statsCols = Seq("k"))
+    // file i holds k in [i * 10^7, i * 10^7 + 950], step 50
+    t.overwrite(spark.range(files * 20).select(
+      ((col("id") / 20).cast("long") * 10000000L + (col("id") % 20) * 50L).as("k"),
+      (col("id") / 20).cast("int").as("p")).repartition(1))
+    val v = t.currentVersion
+    assert(t.filesOf(v).size === files)
+    val rnd = new scala.util.Random(17)
+    // random keys plus both bounds of file 3, so inclusive ends are tested
+    val keys = (Seq(30000000L, 30000950L) ++
+      Seq.fill(100000 - 2)(rnd.nextLong(files * 10000000L))).map(Long.box)
+    assert(keys.size === 100000)
+    val got = t.pruneFilesFor(spark, v, Seq(sources.In("k", keys.toArray[Any])))
+    assert(t.lastPruneVia === "driver")
+    val stats = t.statsDetail(v)
+    val want = t.filesOf(v).filter { f =>
+      val (mn, mx, _) = stats(f)("k")
+      perKeyAdmit(org.apache.spark.sql.types.LongType, keys, mn, mx)
+    }
+    assert(got === want)
+    assert(got.nonEmpty && got.size < files, s"kept ${got.size} of $files")
+    assert(got.exists(_.contains("p=3/")))
+  }
+
+  test("IN keys parsed once decide each range as the per-key admit, per type") {
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(5)
+    val day = java.time.LocalDate.parse("2026-01-01")
+    val cases: Seq[(DataType, Seq[Any], Seq[String])] = Seq(
+      (LongType, Seq.fill(300)(rnd.nextInt(1000).toLong),
+        (0 until 1000 by 29).map(_.toString) :+ "x"),
+      (DoubleType, Seq.fill(300)(rnd.nextDouble() * 100),
+        (0 until 100 by 3).map(i => (i * 1.01).toString)),
+      (StringType, Seq.fill(300)(s"k${rnd.nextInt(1000)}") :+ "\uE000" :+ "\uD83D\uDE00",
+        (0 until 1000 by 29).map(i => s"k$i") :+ "\uE000" :+ "\uD83D\uDE00"),
+      (DateType, Seq.fill(300)(java.sql.Date.valueOf(day.plusDays(rnd.nextInt(400)))),
+        (0 until 400 by 11).map(i => day.plusDays(i).toString) :+ "not-a-date"),
+      (TimestampType, Seq.fill(300)(java.sql.Timestamp.valueOf(
+          day.atStartOfDay.plusMinutes(rnd.nextInt(10000)))),
+        (0 until 10000 by 293).map(i => java.sql.Timestamp.valueOf(
+          day.atStartOfDay.plusMinutes(i)).toString)),
+      // one unparsable key: the per-key admit keeps every file
+      (LongType, Seq[Any](1L, "nope"), Seq("0", "5", "9")),
+      (BooleanType, Seq[Any](true), Seq("false", "true")))
+    for ((dt, keys, bounds) <- cases) {
+      val in = new MergeTable.InKeys(dt, keys)
+      for (mn <- bounds; mx <- bounds)
+        assert(in.admits(mn, mx).getOrElse(true) === perKeyAdmit(dt, keys, mn, mx),
+          s"$dt [$mn, $mx]")
+    }
+  }
 }

@@ -129,4 +129,34 @@ class FooterReadSpec extends SparkSpec {
 
     assert(MergeTable.footerRowCount(t.root, "no/such/file.parquet").isEmpty)
   }
+
+  test("TIMESTAMP_MILLIS footers give bounds in micros, so a pruned read keeps the rows") {
+    val dir = s"${scratch("footer_millis")}/data"
+    val ts = Seq("2026-03-01 10:00:00", "2026-03-02 11:30:00.123").map(java.sql.Timestamp.valueOf)
+    val outKey = "spark.sql.parquet.outputTimestampType"
+    val prior = spark.conf.getOption(outKey)
+    spark.conf.set(outKey, "TIMESTAMP_MILLIS")
+    try Seq((1, ts(0)), (2, ts(1))).toDF("k", "ts").repartition(1).write.parquet(dir)
+    finally prior.fold(spark.conf.unset(outKey))(spark.conf.set(outKey, _))
+    val Seq(p) = parquetFiles(dir)
+    assert(MergeTable.readFooter(p).get.getFileMetaData.getSchema.getFields.asScala
+      .find(_.getName == "ts").get.asPrimitiveType.getLogicalTypeAnnotation.toString.contains("MILLIS"))
+
+    val t = MergeTable.convertParquet(spark, dir)
+    val minKey = MergeTable.FooterStatsMinBytesConf
+    val priorMin = spark.conf.getOption(minKey)
+    spark.conf.set(minKey, "0")
+    try t.analyze(spark, Seq("ts"))
+    finally priorMin.fold(spark.conf.unset(minKey))(spark.conf.set(minKey, _))
+    val Seq(bounds) = t.statsOf(t.currentVersion).values.toSeq
+    assert(bounds("ts") === ((ts(0).toString, ts(1).toString)))
+
+    val since = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    val want = t.read(spark).filter(col("ts") >= since)
+    assert(want.count() === 2L)
+    val pruned = t.readVersionWhere(spark, t.currentVersion,
+      Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("ts", since)))
+      .filter(col("ts") >= since)
+    assert(pruned.count() === 2L)
+  }
 }
