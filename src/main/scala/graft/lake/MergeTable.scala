@@ -100,21 +100,12 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     */
   private[graft] var clock: () => Long = () => System.currentTimeMillis()
 
-  /** Which pruning engine the LAST [[pruneFilesFor]] call used —
-    * `"checkpoint"` (distributed Catalyst filter over the columnar
-    * checkpoint), `"driver"` (per-file loop) or `"none"` (no conjunct
-    * could drop a file, so neither ran). Observability for gates
-    * and specs that assert the scale path engaged; never read by the
-    * engine itself.
+  /** What the LAST [[pruneFilesFor]] call tested per file — `"driver"`
+    * (a partition or stats conjunct, in the driver loop) or `"none"` (no
+    * conjunct could drop a file, so it kept every file untested).
+    * Observability for gates and specs; never read by the engine itself.
     */
   @volatile private[graft] var lastPruneVia: String = ""
-
-  /** How the LAST [[writeCheckpoint]] built its frame — `"incremental"`
-    * (previous frame ± churn), `"distributed"` (full build as a Spark job
-    * over the manifest text), or `"driver"` (full build as driver rows,
-    * below threshold). Observability for specs only.
-    */
-  @volatile private[graft] var lastCheckpointBuildVia: String = ""
 
   /** One commit = ONE log file (`<version>.commit`: schema + file list +
     * per-file stats), published atomically by hard-link put-if-absent — the
@@ -136,8 +127,8 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
                             tsMillis: Option[Long],
                             features: Seq[String]) {
     /** Columns with at least one recorded stats line in this snapshot. A
-      * pruning conjunct on any other column keeps every file in both
-      * pruning engines, so [[pruneFilesFor]] leaves it out.
+      * pruning conjunct on any other column keeps every file, so
+      * [[pruneFilesFor]] leaves it out.
       */
     lazy val statsColumns: Set[String] =
       statsLines.iterator.map { l =>
@@ -180,9 +171,9 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     val schema = MergeTable.parseSchema(dec(lines.head.stripPrefix("schema\t")))
     // An INCREMENTAL commit (Delta add/remove-action analog) records a
     // `base` version plus this commit's file delta instead of the full
-    // manifest; the base chain is bounded by the checkpoint cadence
+    // manifest; the base chain is bounded by the full-manifest cadence
     // ([[MergeTable.CheckpointEvery]]), so resolution reads at most that
-    // many log files — the O(checkpoint + tail) read Delta pays, vs the
+    // many log files — the O(last full manifest + tail) read, vs the
     // O(total files) PER COMMIT a full manifest would cost writers at
     // 100 TB file counts.
     val baseV = lines.collectFirst {
@@ -362,8 +353,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
   def schemaOf(version: Long): StructType = readCommit(version).schema
 
   def filesOf(version: Long): Seq[String] = readCommit(version).files
-  private[lake] def statsLinesOf(version: Long): Seq[String] =
-    readCommit(version).statsLines
 
   def read(spark: SparkSession): DataFrame = readVersion(spark, currentVersion)
 
@@ -408,7 +397,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     val added = newFiles.filterNot(oldSet)
     // Stream-side data skipping: when the source carries a `where` option,
     // its translatable conjuncts prune THIS BATCH's files through the same
-    // partition/stats/checkpoint machinery as batch reads — a consumer of
+    // partition/stats machinery as batch reads — a consumer of
     // one partition of a firehose table reads that partition's files, not
     // every commit's. Sound because the source ALSO applies the predicate
     // to the surviving rows (pruning is an optimization, never the filter).
@@ -476,11 +465,12 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     * predicate admits, with zero caller opt-in (the connector wires every
     * `format("graft")` / catalog-table scan through here).
     *
-    * This is the LOG-level prune. The relation it reads is a
-    * [[ManifestFileIndex]], which then skips by parquet footers the
-    * filters Spark pushes into the scan, as on every other read: files of
-    * columns the log records no stats for are still skipped there, at one
-    * cached footer per file.
+    * This is the LOG-level prune ([[pruneFilesFor]]), on the driver over
+    * the manifest and stat lines the log resolves for `version`. The
+    * relation it reads is a [[ManifestFileIndex]], which then skips by
+    * parquet footers the filters Spark pushes into the scan, as on every
+    * other read: files of columns the log records no stats for are still
+    * skipped there, at one cached footer per file.
     */
   private[graft] def readVersionWhere(spark: SparkSession, version: Long,
                                       filters: Seq[sources.Filter]): DataFrame = {
@@ -504,7 +494,9 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
   /** The subset of `version`'s files that could hold a row satisfying the
     * conjunction of `filters` — the automatic-data-skipping core behind
     * [[readVersionWhere]]. Three sound-conservative prunes compose, each
-    * falling back to "keep" on anything it cannot decide:
+    * falling back to "keep" on anything it cannot decide. The first two
+    * run on the driver over the manifest and stat lines [[readCommit]]
+    * already resolved, with no Spark job at any file count:
     *
     *  1. partition pruning — the translatable conjuncts evaluate over the
     *     manifest's distinct partition tuples ([[partitionCandidates]]:
@@ -528,9 +520,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
                                    among: Option[Seq[String]] = None): Seq[String] = Timing.time("pruneFilesFor") {
     // `among` restricts pruning to a caller-supplied SUBSET of the
     // version's files (the streaming source prunes each micro-batch's
-    // added files). Both engines compose soundly: the driver loop admits
-    // per file, and the distributed path ends in `all.filter(keptSet)` —
-    // an intersection with the checkpoint survivors.
+    // added files); the loop admits per file, so a subset prunes soundly.
     import MergeTable.statCmp
     val all = among.getOrElse(filesOf(version))
     if (filters.isEmpty || all.isEmpty) return all
@@ -562,25 +552,10 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     // resolution on the first data column and prune nothing
     val partConjuncts = conjuncts
       .filter(c => c.references.nonEmpty && c.references.forall(partitionCols.contains))
-    // With neither a partition-only conjunct nor a statted one, no engine
-    // can drop a file: skip both (the checkpoint path would spend a Spark
-    // job keeping every file). The Bloom step below still runs.
-    val canPrune = partConjuncts.nonEmpty || statConjuncts.nonEmpty
-    // At large file counts the per-file driver loop below becomes the
-    // bottleneck (O(files) stat-string parses + predicate evals PER READ).
-    // When a columnar checkpoint covers this version, the same pruning
-    // runs as a Catalyst filter over the checkpoint DataFrame instead —
-    // distributed, codegen'd, O(kept + tail churn) on the driver.
-    val viaCheckpoint: Option[Seq[String]] =
-      if (canPrune && all.size >= MergeTable.checkpointThreshold(spark))
-        pruneFilesDistributed(spark, version, all, conjuncts, statConjuncts, types)
-      else None
+    // With neither a partition-only conjunct nor a statted one, no file
+    // can drop here (the Bloom step below still runs)
     lastPruneVia =
-      if (!canPrune) "none" else if (viaCheckpoint.isDefined) "checkpoint" else "driver"
-    var files = viaCheckpoint.getOrElse {
-      val pred = partConjuncts.flatMap(MergeTable.translateFilter).reduceOption(_ && _)
-      pred.fold(all)(p => partitionCandidates(spark, all, schemaOf(version), p))
-    }
+      if (partConjuncts.nonEmpty || statConjuncts.nonEmpty) "driver" else "none"
     lazy val stats = statsDetail(version)
     lazy val nullsByFile = nullCounts(version)
     def entry(f: String, a: String): Option[(String, String, Char)] =
@@ -628,12 +603,10 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
         f => nullsByFile.get((f, a)).forall(_ > 0L)
       case _ => _ => true
     }
-    // the checkpoint path already applied partition + stats pruning inside
-    // Catalyst — re-running the driver admit loop would only repeat work
-    if (viaCheckpoint.isEmpty) {
-      val admits = statConjuncts.map(admit)
-      files = files.filter(f => admits.forall(_(f)))
-    }
+    val pred = partConjuncts.flatMap(MergeTable.translateFilter).reduceOption(_ && _)
+    val admits = statConjuncts.map(admit)
+    var files = pred.fold(all)(p => partitionCandidates(spark, all, schemaOf(version), p))
+      .filter(f => admits.forall(_(f)))
     val eqs = conjuncts.collect {
       case sources.EqualTo(a, v) if v != null       => (a, v)
       case sources.EqualNullSafe(a, v) if v != null => (a, v)
@@ -644,546 +617,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
         catch { case scala.util.control.NonFatal(_) => () } // prune is optional
     }
     files
-  }
-
-  // ---- columnar checkpoint (Delta checkpoint.parquet + _last_checkpoint) ----
-
-  private[graft] def checkpointDir(version: Long): Path =
-    logDir.resolve(s"$version.checkpoint.parquet")
-  private def lastCheckpointPath: Path = logDir.resolve("_last_checkpoint")
-
-  /** Fixed checkpoint frame schema: internal columns are `_graft_`-prefixed
-    * so the table's PARTITION columns can ride under their own (typed)
-    * names — which is what lets [[MergeTable.translateFilter]]'s Columns
-    * resolve against the frame unchanged. Raw partition strings are kept
-    * beside the typed casts: a cast failure must KEEP the file (the text
-    * path's conservative fallback), and raw-non-null + typed-null is how
-    * the filter detects it.
-    */
-  private[lake] def checkpointSchema: StructType = {
-    import org.apache.spark.sql.types._
-    val statStruct = StructType(Seq(
-      StructField("mn", StringType), StructField("mx", StringType),
-      StructField("flag", StringType), StructField("nulls", LongType),
-      StructField("sum", StringType)))
-    StructType(Seq(
-      StructField("_graft_path", StringType, nullable = false),
-      StructField("_graft_rows", LongType),
-      StructField("_graft_pok", BooleanType, nullable = false),
-      StructField("_graft_stats", MapType(StringType, statStruct))) ++
-      partitionCols.map(c => StructField(s"_graft_raw_$c", StringType)))
-  }
-
-  /** Driver-side row build for a set of manifest files + their stat lines —
-    * shared by the checkpoint writer (full manifest, once per cadence) and
-    * the tail-delta frame (churn-sized, per pruned read). Delegates to the
-    * static [[MergeTable.checkpointRowsFor]] so the distributed full build
-    * runs the IDENTICAL per-file code on executors (frame equality between
-    * the two builders is by shared code, not by transliteration).
-    */
-  private[lake] def checkpointRows(files: Seq[String], statsLines: Seq[String])
-      : Seq[org.apache.spark.sql.Row] =
-    MergeTable.checkpointRowsFor(partitionCols, files, statsLines)
-
-  /** DISTRIBUTED full-frame build: the manifest file list and stat lines
-    * ship to executors as plain strings, cogroup on the (decoded) file
-    * path, and each group emits its row via the SAME static per-file build
-    * the driver path uses ([[MergeTable.checkpointRowsFor]]) — so the two
-    * builders agree by construction. Keeps driver memory at O(manifest
-    * text), never O(files) Row objects with nested stat maps — the
-    * difference between a 10⁶-file CONVERT adoption checkpointing and the
-    * driver OOMing. Stat lines for paths outside `files` drop (the driver
-    * build iterates `files` only); duplicate manifest entries (never
-    * produced, but defensively) each emit their own row, as on the driver.
-    */
-  private[lake] def checkpointFrameDistributed(
-      spark: SparkSession, files: Seq[String],
-      statsLines: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    val pcols = partitionCols
-    val rowEnc = Encoders.row(checkpointSchema)
-    spark.createDataset(files)(Encoders.STRING)
-      .groupByKey(identity[String] _)(Encoders.STRING)
-      .cogroup(spark.createDataset(statsLines)(Encoders.STRING)
-        .groupByKey(MergeTable.statLinePath _)(Encoders.STRING)) {
-        (path, fs, ls) =>
-          if (fs.isEmpty) Iterator.empty
-          else MergeTable.checkpointRowsFor(
-            pcols, fs.map(_ => path).toSeq, ls.toSeq).iterator
-      }(rowEnc)
-  }
-
-  /** Typed view of a checkpoint frame: each partition column cast from its
-    * raw dir string under its schema type (try_cast — a failure reads as
-    * NULL beside a non-null raw, which the pruning filter treats as
-    * keep-the-file).
-    */
-  private def typedCheckpointFrame(df: DataFrame, schema: StructType): DataFrame =
-    df.select(
-      Seq(col("_graft_path"), col("_graft_rows"), col("_graft_pok"),
-        col("_graft_stats")) ++
-      partitionCols.flatMap(c => Seq(col(s"_graft_raw_$c"),
-        col(s"_graft_raw_$c").try_cast(schema(c).dataType).as(c))): _*)
-
-  /** Write the columnar checkpoint for a just-published full-manifest
-    * commit, then move the `_last_checkpoint` pointer (atomic rename, so a
-    * reader never sees a pointer to a half-written checkpoint). BEST
-    * EFFORT by design: the text log stays the source of truth, a crash
-    * before the pointer move simply leaves the previous checkpoint in
-    * force, and any failure here must never fail a durably committed
-    * write. Old checkpoints beyond [[MergeTable.CheckpointKeep]] are
-    * dropped (time-travel pruning of older versions falls back to the
-    * driver path).
-    */
-  private def writeCheckpoint(spark: SparkSession, version: Long,
-                              files: Seq[String], schema: StructType,
-                              statsLines: Seq[String],
-                              delta: Option[(Seq[String], Seq[String])] = None): Unit = try {
-    if (partitionCols.exists(_.startsWith("_graft_"))) return
-    // INCREMENTAL build when a previous checkpoint chain resolves to
-    // version-1: (previous frame − removed + added) — O(commit churn)
-    // driver work, where the full row build is O(total files). The caller
-    // only offers the delta when retained files' stats are unchanged.
-    // Falls back to the full build whenever the chain doesn't resolve.
-    val frame: DataFrame = delta.flatMap { case (added, removed) =>
-      resolvedCheckpointFrame(spark, version - 1).map { prevFrame =>
-        val statByFile = statsLines.groupBy(l => dec(l.takeWhile(_ != '\t')))
-        // drop the previous frame's row for ADDED paths too: a re-add of a
-        // path removed before the previous checkpoint would otherwise
-        // persist two rows for it (the stale one and the fresh one)
-        val drop = (removed ++ added).distinct
-        val minus =
-          if (drop.isEmpty) prevFrame
-          else {
-            val rem = spark.createDataset(drop)(
-              org.apache.spark.sql.Encoders.STRING).toDF("_graft_removed")
-            prevFrame.join(broadcast(rem),
-              col("_graft_path") === col("_graft_removed"), "left_anti")
-          }
-        if (added.isEmpty) minus
-        else minus.unionByName(typedCheckpointFrame(
-          spark.createDataFrame(checkpointRows(added,
-            added.flatMap(f => statByFile.getOrElse(f, Nil))).asJava,
-            checkpointSchema), schema))
-      }
-    }.map { f => lastCheckpointBuildVia = "incremental"; f }.getOrElse {
-      // FULL build — first checkpoint of an adopted (CONVERT) table, or any
-      // broken chain. Above the driver-rows cap the per-file row build runs
-      // as a Spark job over the manifest/stat TEXT (O(total files) on
-      // executors, O(1) rows on the driver); below it the driver path is
-      // cheaper than a job launch.
-      val full =
-        if (files.size > MergeTable.checkpointDriverRowsMax(spark)) {
-          lastCheckpointBuildVia = "distributed"
-          checkpointFrameDistributed(spark, files, statsLines)
-        } else {
-          lastCheckpointBuildVia = "driver"
-          spark.createDataFrame(checkpointRows(files, statsLines).asJava,
-            checkpointSchema)
-        }
-      typedCheckpointFrame(full, schema)
-    }
-    // ~1M manifest rows per output partition: the checkpoint read stays a
-    // handful of splits even at 100 TB file counts
-    val parts = math.max(1, (files.size / 1000000.0).ceil.toInt)
-    frame.repartition(parts)
-      .write
-      // the checkpoint's _SUCCESS IS its completeness marker
-      // ([[latestCheckpointAtOrBefore]] keys usability on it), so this one
-      // write opts back in — the session default suppresses the marker for
-      // plain data dirs, where the _graft_log commit is the real publish
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
-      .mode("overwrite").parquet(checkpointDir(version).toString)
-    val tmp = logDir.resolve(s"_last_checkpoint.tmp${System.nanoTime()}")
-    Files.writeString(tmp, version.toString)
-    Files.move(tmp, lastCheckpointPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    val stale = Files.list(logDir).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".checkpoint.parquet"))
-      .flatMap(p => p.getFileName.toString.stripSuffix(".checkpoint.parquet")
-        .toLongOption.map(_ -> p))
-      .toSeq.sortBy(-_._1).drop(MergeTable.CheckpointKeep)
-    stale.foreach { case (_, p) => deleteRecursively(p) }
-  } catch { case scala.util.control.NonFatal(_) => () }
-
-  /** The newest usable checkpoint at or below `version`: the
-    * `_last_checkpoint` pointer when it qualifies, else a directory scan
-    * (the pointer is a cache exactly like `_LATEST`).
-    */
-  private def latestCheckpointAtOrBefore(version: Long): Option[Long] = {
-    def usable(v: Long): Boolean =
-      v <= version && Files.exists(checkpointDir(v).resolve("_SUCCESS"))
-    val pointed =
-      if (!Files.exists(lastCheckpointPath)) None
-      else Files.readString(lastCheckpointPath).trim.toLongOption.filter(usable)
-    pointed.orElse {
-      if (!Files.isDirectory(logDir)) None
-      else Files.list(logDir).iterator().asScala
-        .flatMap(p => p.getFileName.toString match {
-          case n if n.endsWith(".checkpoint.parquet") =>
-            n.stripSuffix(".checkpoint.parquet").toLongOption
-          case _ => None
-        })
-        .filter(usable).foldLeft(Option.empty[Long])((a, v) =>
-          Some(a.fold(v)(math.max(_, v))))
-    }
-  }
-
-  /** The RAW add/remove delta of one incremental commit: added files with
-    * their stat lines, and removed paths. None when the commit is a full
-    * manifest (no `base` line) or chains to an unexpected base — callers
-    * fall back to the driver path.
-    */
-  private def rawDelta(version: Long)
-      : Option[(Seq[(String, Seq[String])], Seq[String])] = {
-    val lines = Files.readString(commitPath(version)).split("\n").toSeq
-    val base = lines.collectFirst {
-      case l if l.startsWith("base\t") => l.stripPrefix("base\t").toLong
-    }
-    if (!base.contains(version - 1)) return None
-    val added = lines.collect {
-      case l if l.startsWith("add\t") => dec(l.stripPrefix("add\t"))
-    }
-    val removed = lines.collect {
-      case l if l.startsWith("remove\t") => dec(l.stripPrefix("remove\t"))
-    }
-    val statByFile = lines.collect {
-      case l if l.startsWith("stat\t") => l.stripPrefix("stat\t")
-    }.groupBy(l => dec(l.takeWhile(_ != '\t')))
-    Some((added.map(f => f -> statByFile.getOrElse(f, Nil)), removed))
-  }
-
-  /** The checkpoint frame RESOLVED to `version`: (checkpoint − tail
-    * removes + tail adds), with typed partition columns. Driver cost is
-    * O(tail churn) — the add/remove fold over at most CheckpointEvery
-    * incremental commits. None when no checkpoint covers the version or
-    * the tail has a non-incremental commit — callers fall back to the
-    * driver statsLines machinery.
-    */
-  private[graft] def resolvedCheckpointFrame(spark: SparkSession,
-                                             version: Long): Option[DataFrame] = try {
-    if (partitionCols.exists(_.startsWith("_graft_"))) return None
-    val cpV = latestCheckpointAtOrBefore(version) match {
-      case Some(v) => v
-      case None    => return None
-    }
-    // fold the tail's add/removes driver-side (bounded by checkpoint
-    // cadence × per-commit churn — the same lines readCommit resolves).
-    // removedSet holds EVERY path the tail touched, adds included: a
-    // re-added path's base-checkpoint row is stale (old stats), so the
-    // tail's add row must be the ONLY row for it — dropping the base row
-    // on add is what keeps remove→re-add (DELETE then RESTORE) from
-    // double-counting the file in pushed aggregates, and re-add→remove
-    // from resurrecting it.
-    val addedMap = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
-    val removedSet = scala.collection.mutable.LinkedHashSet.empty[String]
-    var v = cpV + 1
-    while (v <= version) {
-      rawDelta(v) match {
-        case None => return None
-        case Some((adds, rems)) =>
-          rems.foreach { r => addedMap.remove(r); removedSet += r }
-          adds.foreach { case (f, st) => addedMap(f) = st; removedSet += f }
-      }
-      v += 1
-    }
-    val schema = schemaOf(version)
-    val cp = spark.read.parquet(checkpointDir(cpV).toString)
-    val minusRemoved =
-      if (removedSet.isEmpty) cp
-      else {
-        val rem = spark.createDataset(removedSet.toSeq)(
-          org.apache.spark.sql.Encoders.STRING).toDF("_graft_removed")
-        cp.join(broadcast(rem), col("_graft_path") === col("_graft_removed"), "left_anti")
-      }
-    Some(
-      if (addedMap.isEmpty) minusRemoved
-      else minusRemoved.unionByName(typedCheckpointFrame(
-        spark.createDataFrame(
-          checkpointRows(addedMap.keys.toSeq,
-            addedMap.values.flatten.toSeq).asJava, checkpointSchema), schema)))
-  } catch { case scala.util.control.NonFatal(e) =>
-    if (sys.env.contains("GRAFT_DEBUG_CHECKPOINT")) e.printStackTrace()
-    None
-  }
-
-  /** Distributed data skipping: evaluate partition + min/max/null pruning
-    * as ONE Catalyst filter over (checkpoint frame − tail removes + tail
-    * adds) and collect only the kept paths. Driver cost is O(tail churn +
-    * kept), never O(total files); the filter itself is codegen'd and runs
-    * wherever the checkpoint's splits are scheduled. None whenever the
-    * checkpoint chain cannot be resolved incrementally — the caller then
-    * runs the (sound, slower) driver loop. Every decision here mirrors the
-    * driver path's conservatism: an undecidable case keeps the file.
-    */
-  private def pruneFilesDistributed(spark: SparkSession, version: Long,
-                                    all: Seq[String],
-                                    conjuncts: Seq[sources.Filter],
-                                    statConjuncts: Seq[sources.Filter],
-                                    types: Map[String, org.apache.spark.sql.types.DataType])
-      : Option[Seq[String]] = try {
-    import org.apache.spark.sql.types.{DataType, StringType}
-    val full = resolvedCheckpointFrame(spark, version) match {
-      case Some(f) => f
-      case None    => return None
-    }
-
-    // partition predicate: same translateFilter Columns as the tuple probe,
-    // resolved against the frame's typed partition columns. NULL (a truly
-    // null partition value) drops; a cast-failure or parse anomaly keeps.
-    val partPred = conjuncts
-      .filter(c => c.references.nonEmpty && c.references.forall(partitionCols.contains))
-      .flatMap(MergeTable.translateFilter).reduceOption(_ && _)
-    val castFailed = partitionCols.map(c =>
-      col(s"_graft_raw_$c").isNotNull && col(c).isNull)
-      .reduceOption(_ || _).getOrElse(lit(false))
-    val partKeep = partPred.fold(lit(true))(p =>
-      !col("_graft_pok") || castFailed || coalesce(p, lit(false)))
-
-    // stats exclusions: one column-expression per single-column conjunct,
-    // each the Catalyst transliteration of the driver admit() cases
-    def statExcluded(conj: sources.Filter): Option[Column] = {
-      val a = conj.references.headOption.getOrElse(return None)
-      if (conj.references.length != 1 || partitionCols.contains(a)) return None
-      val dt: DataType = types.getOrElse(a, return None)
-      val s = element_at(col("_graft_stats"), lit(a))
-      val flag = s.getField("flag")
-      val mnS = s.getField("mn"); val mxS = s.getField("mx")
-      def tc(c: Column): Column =
-        if (dt == StringType) c else c.try_cast(dt)
-      val mn = tc(mnS); val mx = tc(mxS)
-      val allNull = flag === "N"
-      val usable = (flag === "V") || (length(mnS) > 0 && length(mxS) > 0)
-      def exc(cond: Column): Column =
-        coalesce(allNull, lit(false)) || (coalesce(usable, lit(false)) &&
-          coalesce(cond, lit(false)))
-      conj match {
-        case sources.EqualTo(_, vv) if vv != null =>
-          Some(exc(mn > lit(vv) || mx < lit(vv)))
-        case sources.EqualNullSafe(_, vv) if vv != null =>
-          Some(exc(mn > lit(vv) || mx < lit(vv)))
-        case sources.In(_, vs) =>
-          val nn = vs.filter(_ != null)
-          if (nn.isEmpty) Some(lit(true)) // IN over only NULLs: never TRUE
-          else Some(coalesce(allNull, lit(false)) ||
-            (coalesce(usable, lit(false)) && !nn.map(vv =>
-              coalesce(mn <= lit(vv) && lit(vv) <= mx, lit(true)))
-              .reduce(_ || _)))
-        case sources.GreaterThan(_, vv) if vv != null =>
-          Some(exc(lit(vv) >= mx))
-        case sources.GreaterThanOrEqual(_, vv) if vv != null =>
-          Some(exc(lit(vv) > mx))
-        case sources.LessThan(_, vv) if vv != null =>
-          Some(exc(lit(vv) <= mn))
-        case sources.LessThanOrEqual(_, vv) if vv != null =>
-          Some(exc(lit(vv) < mn))
-        case sources.IsNotNull(_) => Some(coalesce(allNull, lit(false)))
-        case sources.IsNull(_) =>
-          Some(coalesce(s.getField("nulls") === 0L, lit(false)))
-        case _ => None
-      }
-    }
-    val statKeep = statConjuncts.flatMap(statExcluded)
-      .reduceOption(_ || _).map(e => !coalesce(e, lit(false)))
-      .getOrElse(lit(true))
-
-    val keptSet = full.filter(partKeep && statKeep)
-      .select("_graft_path").collect().map(_.getString(0)).toSet
-    // preserve the manifest's file order (scan determinism): O(all) set
-    // lookups, no parsing
-    Some(all.filter(keptSet))
-  } catch {
-    // StackOverflowError too: a long IN list on a statted column is an Or
-    // chain as deep as the list, which can overflow the planner — the
-    // driver loop then prunes instead of the merge failing
-    case e: Throwable if scala.util.control.NonFatal(e) || e.isInstanceOf[StackOverflowError] =>
-      if (sys.env.contains("GRAFT_DEBUG_CHECKPOINT")) e.printStackTrace()
-      None
-  }
-
-  /** [[aggregateFromStats]]'s DISTRIBUTED twin: answer the same pushed
-    * metadata aggregates from the checkpoint frame with Spark
-    * aggregations — two metadata-sized jobs (a feasibility census, the
-    * grouped aggregate) instead of an O(files) driver parse loop. At 10^6
-    * files a pushed `count(*)` must not cost the driver a full manifest
-    * decode per query any more than a pruned read may.
-    *
-    * None = cannot answer HERE (no checkpoint, deletion vectors, partition
-    * anomalies, coverage gaps, shapes like data-string min/max, sum
-    * overflow) — the caller falls through to the driver statsLines path,
-    * which either answers or correctly rejects the pushdown. Every
-    * feasibility rule transliterates the driver path's, so this path can
-    * only ever refuse more, never answer differently.
-    */
-  private[graft] def aggregateFromCheckpointDF(spark: SparkSession, version: Long,
-      groupBy: Seq[String], aggs: Seq[(String, String)],
-      filters: Seq[sources.Filter]): Option[Seq[Seq[Any]]] = try {
-    import org.apache.spark.sql.types._
-    val schema = schemaOf(version)
-    if (aggs.isEmpty || !groupBy.forall(partitionCols.contains)) return None
-    // masked rows: the driver path subtracts dv counts for count(*) —
-    // rare metadata here, just fall through to it. readMeta, NOT
-    // readCommit: the whole point of this path is never decoding the
-    // manifest on the driver
-    if (readMeta(version).dvs.nonEmpty) return None
-    def isIntegral(dt: DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    def minMaxOk(c: String): Boolean =
-      schema.fieldNames.contains(c) && (schema(c).dataType match {
-        case StringType => partitionCols.contains(c) // truncated data bounds are not values
-        case _: NumericType | DateType | TimestampType | TimestampNTZType => true
-        case BooleanType => partitionCols.contains(c)
-        case _ => false
-      })
-    val ok = aggs.forall {
-      case ("count", null) => true
-      case ("count", c)    => schema.fieldNames.contains(c)
-      case ("min", c)      => minMaxOk(c)
-      case ("max", c)      => minMaxOk(c)
-      case ("sum", c)      => schema.fieldNames.contains(c) && isIntegral(schema(c).dataType)
-      case ("avg", c)      => schema.fieldNames.contains(c) &&
-        isIntegral(schema(c).dataType) && !partitionCols.contains(c)
-      case _               => false
-    }
-    if (!ok) return None
-    val frame = resolvedCheckpointFrame(spark, version) match {
-      case Some(f) => f
-      case None    => return None
-    }
-    // EXACT partition filters: the whole predicate evaluates over the
-    // typed tuple columns; any translation failure refuses
-    val pred: Option[Column] =
-      if (filters.isEmpty) None
-      else {
-        if (!filters.forall(f => f.references.nonEmpty &&
-            f.references.forall(partitionCols.contains))) return None
-        val ts = filters.map(MergeTable.translateFilter)
-        if (ts.exists(_.isEmpty)) return None
-        Some(ts.flatten.reduce(_ && _))
-      }
-    val scoped = pred.fold(frame)(p => frame.filter(coalesce(p, lit(false))))
-    def s(c: String): Column = element_at(col("_graft_stats"), lit(c))
-    def tcStat(c: String, which: String): Column = {
-      val raw = s(c).getField(which)
-      if (schema(c).dataType == StringType) raw else raw.try_cast(schema(c).dataType)
-    }
-    // ---- feasibility census (ONE metadata-sized job) ----
-    // partition-value exactness matters whenever partition values are
-    // consumed (filters, group-by, partition-col aggs): ANY anomaly row —
-    // unparsed dir, failed cast — in the WHOLE frame refuses (the probe
-    // path's return-None contract). Everything else is per-scope coverage.
-    val needsPartExact = filters.nonEmpty || groupBy.nonEmpty ||
-      aggs.exists(a => a._2 != null && partitionCols.contains(a._2))
-    val anomaly: Column = partitionCols.map(c =>
-      !col("_graft_pok") || (col(s"_graft_raw_$c").isNotNull && col(c).isNull))
-      .reduceOption(_ || _).getOrElse(lit(false))
-    def cnt(cond: Column): Column = sum(when(cond, lit(1L)).otherwise(lit(0L)))
-    val checks = scala.collection.mutable.ArrayBuffer.empty[Column]
-    checks += cnt(col("_graft_rows").isNull) // row-count coverage (countable)
-    aggs.foreach {
-      case ("count", c) if c != null && !partitionCols.contains(c) =>
-        checks += cnt(s(c).isNull || s(c).getField("nulls").isNull)
-      case (op, c) if (op == "min" || op == "max") && !partitionCols.contains(c) =>
-        checks += cnt(s(c).isNull || s(c).getField("flag") === "?" ||
-          (s(c).getField("flag") === "V" &&
-            (tcStat(c, "mn").isNull || tcStat(c, "mx").isNull)))
-      case ("sum", c) =>
-        checks += cnt(s(c).isNull ||
-          (s(c).getField("flag") =!= "N" && s(c).getField("sum").isNull))
-      case ("avg", c) =>
-        checks += cnt(s(c).isNull || s(c).getField("nulls").isNull ||
-          (s(c).getField("flag") =!= "N" && s(c).getField("sum").isNull))
-      case _ => ()
-    }
-    // scope coverage checks evaluate over the SCOPED rows; the anomaly
-    // check over the WHOLE frame (an unparsable partition row outside the
-    // filter's apparent scope still breaks the filter's exactness)
-    val feasScoped = scoped.agg(checks.head, checks.tail.toSeq: _*).head()
-    if ((0 until checks.size).exists(i =>
-        Option(feasScoped.get(i)).exists(_.asInstanceOf[Long] > 0L))) return None
-    if (needsPartExact) {
-      val bad = frame.agg(cnt(anomaly)).head()
-      if (Option(bad.get(0)).exists(_.asInstanceOf[Long] > 0L)) return None
-    }
-    // ---- the aggregate itself (ONE job) ----
-    val aggCols: Seq[Column] = aggs.zipWithIndex.map {
-      case (("count", null), i) => sum(col("_graft_rows")).as(s"_a$i")
-      case (("count", c), i) if partitionCols.contains(c) =>
-        sum(when(col(c).isNull, lit(0L)).otherwise(col("_graft_rows"))).as(s"_a$i")
-      case (("count", c), i) =>
-        sum(col("_graft_rows") - s(c).getField("nulls")).as(s"_a$i")
-      case (("min", c), i) if partitionCols.contains(c) =>
-        min(when(col("_graft_rows") > 0, col(c))).as(s"_a$i")
-      case (("max", c), i) if partitionCols.contains(c) =>
-        max(when(col("_graft_rows") > 0, col(c))).as(s"_a$i")
-      case (("min", c), i) =>
-        min(when(s(c).getField("flag") === "N", lit(null)).otherwise(tcStat(c, "mn"))).as(s"_a$i")
-      case (("max", c), i) =>
-        max(when(s(c).getField("flag") === "N", lit(null)).otherwise(tcStat(c, "mx"))).as(s"_a$i")
-      case (("sum", c), i) =>
-        sum(s(c).getField("sum").try_cast("decimal(38,0)")).as(s"_a$i")
-      case (("avg", c), i) =>
-        sum(s(c).getField("sum").try_cast("decimal(38,0)")).as(s"_a$i")
-      case ((op, c), _) =>
-        throw new IllegalStateException(s"unreachable agg shape ($op, $c)")
-    }
-    // avg divisors (per-group non-null counts) ride as TRAILING columns so
-    // the positional extraction of _a0.._aN stays untouched; convert()
-    // reads them back by NAME
-    val avgDivCols: Seq[Column] = aggs.zipWithIndex.collect {
-      case (("avg", c), i) =>
-        sum(col("_graft_rows") - s(c).getField("nulls")).as(s"_an$i")
-    }
-    val allAggCols = aggCols ++ avgDivCols
-    val grouped =
-      if (groupBy.isEmpty) scoped.agg(allAggCols.head, allAggCols.tail: _*)
-      else scoped.groupBy(groupBy.map(col): _*).agg(allAggCols.head, allAggCols.tail: _*)
-    val collected = grouped.collect().toSeq
-    def convert(i: Int, v: Any, r: Row): Option[Any] = aggs(i) match {
-      case ("avg", _) =>
-        val nn = Option(r.getAs[Any](s"_an$i")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        if (nn == 0L) Some(null)
-        else Option(v) match {
-          case Some(d: java.math.BigDecimal) =>
-            val bi = BigInt(d.toBigInteger)
-            if (bi.isValidLong)
-              Some(java.lang.Double.valueOf(bi.toLong.toDouble / nn.toDouble))
-            else None
-          case _ => None // sum missing while rows exist: inexact, refuse
-        }
-      case ("count", _) => Some(java.lang.Long.valueOf(
-        Option(v).map(_.asInstanceOf[Long]).getOrElse(0L)))
-      case ("sum", _) => Option(v) match {
-        case None => Some(null)
-        case Some(d: java.math.BigDecimal) =>
-          val bi = BigInt(d.toBigInteger)
-          if (bi.isValidLong) Some(java.lang.Long.valueOf(bi.toLong))
-          else None // Long overflow: the real scan must answer (or raise)
-        case Some(_) => None
-      }
-      case _ => Some(v)
-    }
-    val rows0: Seq[Seq[Any]] =
-      if (collected.isEmpty && groupBy.isEmpty)
-        // a GLOBAL aggregate over zero in-scope rows still emits ITS row
-        Seq(aggs.map {
-          case ("count", _) => java.lang.Long.valueOf(0L)
-          case _            => null
-        })
-      else collected.map { r =>
-        val gv = groupBy.indices.map(r.get)
-        val av = aggs.indices.map(i => convert(i, r.get(groupBy.size + i), r) match {
-          case Some(x) => x
-          case None    => return None
-        })
-        gv ++ av
-      }
-    Some(rows0.sortBy(_.take(groupBy.size).mkString("\u0000")))
-  } catch { case scala.util.control.NonFatal(e) =>
-    if (sys.env.contains("GRAFT_DEBUG_CHECKPOINT")) e.printStackTrace()
-    None
   }
 
   /** Files a commit ADDED vs its predecessor — the recorded per-commit
@@ -4884,35 +4317,12 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
 
   /** The distinct data-dir prefixes any retained version references — the
     * unit VACUUM reconciles (one dir per write attempt, not one per file).
-    * When EVERY retained version's manifest resolves through a checkpoint
-    * frame, the enumeration runs as ONE Spark job (union of frames →
-    * distinct dir prefixes) and the driver receives O(data dirs) — never
-    * the O(versions × files) path lists the driver fold materializes. Any
-    * unresolvable version (no checkpoint, non-incremental tail, no active
-    * session) falls the WHOLE enumeration back to the driver lists —
-    * all-or-nothing, mirroring [[pruneFilesFor]]'s fallback discipline.
+    * A lazy fold: the driver holds one resolved manifest at a time plus
+    * the set of dirs, never a versions × files list of prefixes.
     */
-  private def liveDataDirs(floor: Long, cur: Long): Set[String] = {
-    val versions = (floor to cur).filter(ver => Files.exists(commitPath(ver)))
-    val viaCp: Option[Set[String]] =
-      org.apache.spark.sql.SparkSession.getActiveSession.flatMap { s =>
-        val frames = versions.map(ver => resolvedCheckpointFrame(s, ver))
-        if (versions.isEmpty || frames.exists(_.isEmpty)) None
-        else Some(frames.flatten
-          .map(_.select(expr("substring_index(_graft_path, '/', 1)").as("d")))
-          .reduce(_ unionByName _)
-          .distinct().collect().map(_.getString(0)).toSet)
-      }
-    lastVacuumEnumVia = if (viaCp.isDefined) "checkpoint" else "driver"
-    viaCp.getOrElse(versions
-      .flatMap(ver => filesOf(ver).map(_.takeWhile(_ != '/'))).toSet)
-  }
-
-  /** Which enumeration engine the LAST [[reclaimable]] (vacuum or dry run)
-    * used for the live-dir set — `"checkpoint"` or `"driver"`.
-    * Observability for specs only.
-    */
-  @volatile private[graft] var lastVacuumEnumVia: String = ""
+  private def liveDataDirs(floor: Long, cur: Long): Set[String] =
+    (floor to cur).iterator.filter(ver => Files.exists(commitPath(ver)))
+      .flatMap(ver => filesOf(ver).map(_.takeWhile(_ != '/'))).toSet
 
   /** Oldest version still guaranteed readable (0 when never vacuumed).
     * An unparseable horizon file (possible only under pre-atomic-write
@@ -5675,8 +5085,8 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     // bounded by constraints/txns/columns, never by file count), so
     // readMeta stays a single-file read on every commit.
     val fullManifest = files.map(f => s"file\t${enc(f)}") ++ statsLines.map(l => s"stat\t$l")
-    // the commit's own file delta vs its predecessor — drives both the
-    // incremental MANIFEST encoding and the incremental CHECKPOINT build
+    // the commit's own file delta vs its predecessor — drives the
+    // incremental manifest encoding
     val deltaInfo: Option[(Seq[String], Seq[String], Boolean)] = prev.map { p =>
       val prevSet = p.files.toSet
       val added = files.filterNot(prevSet)
@@ -5795,21 +5205,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     val t2 = logDir.resolve(s"_LATEST.tmp${System.nanoTime()}")
     Files.write(t2, version.toString.getBytes(StandardCharsets.UTF_8))
     Files.move(t2, latestPath, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    // Columnar checkpoint (Delta's checkpoint.parquet): piggyback on the
-    // full-manifest cadence — the file/stat lists are already in hand, so
-    // the only added cost is one parquet write per CheckpointEvery commits,
-    // and only once the manifest is big enough for the distributed prune
-    // path to matter. Best-effort (the commit is already durable), and
-    // skipped entirely when no session is active (never the case on the
-    // engine's own write paths).
-    if ((manifest eq fullManifest) &&
-        files.size >= org.apache.spark.sql.SparkSession.getActiveSession
-          .map(MergeTable.checkpointThreshold).getOrElse(Int.MaxValue))
-      org.apache.spark.sql.SparkSession.getActiveSession.foreach(s =>
-        writeCheckpoint(s, version, files, schema, statsLines,
-          // the incremental build is valid only when retained files' stats
-          // are unchanged (a restat can't be expressed as add/remove)
-          deltaInfo.collect { case (a, r, true) => (a, r) }))
     // Delta's delta.compatibility.symlinkFormatManifest.enabled: keep the
     // external-engine manifests in lockstep with every commit. Skipped —
     // never failed — when the snapshot isn't externally readable (dvs /
@@ -6076,63 +5471,6 @@ object MergeTable {
     */
   private[lake] def footerRowCount(root: String, rel: String): Option[Long] =
     readFooter(Paths.get(root, rel)).map(_.getBlocks.asScala.map(_.getRowCount).sum)
-
-  /** URL-decode of one log-line field (the static twin of the handle's
-    * `dec`, for executor-side stat-line parsing).
-    */
-  private[lake] def decField(s: String): String =
-    java.net.URLDecoder.decode(s, java.nio.charset.StandardCharsets.UTF_8)
-
-  /** The (decoded) file path a stat line describes — its grouping key in
-    * both checkpoint builders.
-    */
-  private[lake] def statLinePath(line: String): String =
-    decField(line.takeWhile(_ != '\t'))
-
-  /** Per-file checkpoint row build — STATIC and closure-safe so the
-    * distributed full builder runs it on executors verbatim while the
-    * driver full/delta builders call it through the handle's
-    * `checkpointRows`. One row per `files` entry, in order: row count from
-    * the COUNT pseudo-stat, the per-column stat map, and the keyed (not
-    * positional) partition-value parse — any anomaly (missing key, no `=`
-    * segment) flips `_graft_pok` off and the pruning filter keeps the file
-    * unconditionally (mirrors partVals' return-None contract).
-    */
-  private[lake] def checkpointRowsFor(partitionCols: Seq[String],
-                                      files: Seq[String],
-                                      statsLines: Seq[String]): Seq[Row] = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val parsed = statsLines.map { line =>
-      val p = line.split("\t", -1)
-      (decField(p(0)), decField(p(1)), if (p.length > 2) decField(p(2)) else "",
-        if (p.length > 3) decField(p(3)) else "",
-        if (p.length > 4 && p(4).nonEmpty) p(4) else "?",
-        if (p.length > 5) p(5).toLongOption else None,
-        if (p.length > 6 && decField(p(6)).nonEmpty) Some(decField(p(6))) else None)
-    }.groupBy(_._1)
-    files.map { f =>
-      val lines = parsed.getOrElse(f, Nil)
-      val rowCount = lines.collectFirst {
-        case (_, c, mn, _, _, _, _) if c == MergeTable.CountStatKey => mn.toLongOption
-      }.flatten
-      val statMap: Map[String, Row] = lines.collect {
-        case (_, c, mn, mx, fl, nl, sm) if c != MergeTable.CountStatKey =>
-          c -> Row(mn, mx, fl, nl.map(Long.box).orNull, sm.orNull)
-      }.toMap
-      val segs = f.split('/')
-      val pairs = segs.slice(1, segs.length - 1).filter(_.contains('='))
-        .map(seg => seg.takeWhile(_ != '=') -> seg.substring(seg.indexOf('=') + 1)).toMap
-      var pok = true
-      val raws = partitionCols.map { c =>
-        pairs.get(c) match {
-          case None => pok = false; null
-          case Some(raw) if raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME => null
-          case Some(raw) => ExternalCatalogUtils.unescapePathName(raw)
-        }
-      }
-      Row.fromSeq(Seq(f, rowCount.map(Long.box).orNull, pok, statMap) ++ raws)
-    }
-  }
 
   /** Row-tracking id column (Delta row-tracking analog, see the
     * constructor's `rowTracking`): the HIDDEN physical column data files
@@ -6791,46 +6129,12 @@ object MergeTable {
     */
   val DefaultVacuumMinAgeMs: Long = 30L * 60 * 1000
 
-  /** Full-manifest checkpoint cadence: every N-th version writes the whole
-    * file list even when a delta would be smaller, bounding the base chain
-    * an incremental-commit reader must resolve to < N log files (Delta's
-    * checkpoint.parquet serves the same role at its default interval 10).
+  /** Full-manifest cadence: every N-th version writes the whole file
+    * list even when a delta would be smaller, bounding the base chain an
+    * incremental-commit reader must resolve to < N log files (Delta's
+    * checkpoint interval, default 10, serves the same role).
     */
   val CheckpointEvery: Long = 10L
-
-  /** How many columnar checkpoints to retain (newest first). Time-travel
-    * pruning of versions older than the oldest retained checkpoint falls
-    * back to the driver loop — correctness never depends on a checkpoint.
-    */
-  val CheckpointKeep: Int = 3
-
-  /** Session conf: minimum manifest size (file count) at which (a) a
-    * full-manifest commit also writes a columnar checkpoint and (b) a
-    * pruned read routes through the distributed checkpoint filter instead
-    * of the per-file driver loop. Below it, the driver loop is faster
-    * than a Spark job. Tests/gates lower it to exercise the scale path.
-    */
-  val CheckpointThresholdConf = "spark.graft.checkpointThreshold"
-  val CheckpointThresholdDefault = 1024
-
-  private[graft] def checkpointThreshold(spark: SparkSession): Int =
-    spark.conf.getOption(CheckpointThresholdConf)
-      .flatMap(_.toIntOption).getOrElse(CheckpointThresholdDefault)
-
-  /** Session conf: maximum manifest size a FULL checkpoint build
-    * materializes as driver Rows; above it the build runs as a Spark job
-    * over the manifest text ([[checkpointFrameDistributed]]). Distinct
-    * from [[CheckpointThresholdConf]] (which gates whether checkpoints are
-    * written at all): a ~10³-file full build is cheaper on the driver than
-    * a job launch, while a 10⁶-file CONVERT adoption must never build 10⁶
-    * nested-map Rows driver-side.
-    */
-  val CheckpointDriverRowsMaxConf = "spark.graft.checkpointDriverRowsMax"
-  val CheckpointDriverRowsMaxDefault = 65536
-
-  private[graft] def checkpointDriverRowsMax(spark: SparkSession): Int =
-    spark.conf.getOption(CheckpointDriverRowsMaxConf)
-      .flatMap(_.toIntOption).getOrElse(CheckpointDriverRowsMaxDefault)
 
   /** Session conf: minimum total written bytes at which the write-path
     * stat collection switches from the single aggregation scan to parquet

@@ -2419,65 +2419,48 @@ object LakeQueries {
              |FROM orders WHERE o_orderstatus IN ('F', 'O')""".stripMargin),
       "SQL metadata aggregates: count/min/max under a partition WHERE, from the log"),
 
-    // Columnar checkpoint (Delta's checkpoint.parquet + _last_checkpoint):
-    // a full-manifest commit above spark.graft.checkpointThreshold files
-    // also writes a parquet checkpoint, and every later pruned read runs
-    // its partition+stats file skipping as ONE distributed Catalyst filter
-    // over that frame — O(kept + tail churn) driver work instead of the
-    // per-file parse/eval loop, the shape that survives 10^6-file
-    // manifests. The gate proves (a) the checkpoint exists, (b) the
-    // distributed path ENGAGED (lastPruneVia), (c) it selects exactly the
-    // files the driver loop selects, and (d) tail commits after the
-    // checkpoint (an incremental append) are reflected.
+    // Log-level file pruning past a full-manifest commit: a v0 full
+    // manifest, then an incremental append in the tail, pruned on a
+    // partition column AND a statted data column in one driver pass over
+    // the resolved manifest. The gate proves (a) the prune acts on both
+    // axes and (b) the tail append is reflected (a file it added is kept);
+    // the connector read through the same prune gives the hashed rows.
     "m72_checkpoint_prune" -> GraftQuery(
       (s, dir) => {
         val root = s"$scratchRoot/m72_${sanitize(dir)}"
         cleanDir(root)
-        val key = MergeTable.CheckpointThresholdConf
-        val old = s.conf.getOption(key)
-        s.conf.set(key, "1")
-        try {
-          val orders = t(s, dir, "orders")
-          val table = new MergeTable(root, Seq("o_orderstatus"),
-            statsCols = Seq("o_orderkey"))
-          table.overwrite(orders.filter(col("o_orderkey") % 8 =!= 0)
-            .repartitionByRange(16, col("o_orderkey")))
-          require(Files.exists(table.checkpointDir(0).resolve("_SUCCESS")),
-            "the v0 full manifest must have written a columnar checkpoint")
-          // tail churn past the checkpoint: an incremental append the
-          // distributed prune must surface
-          table.append(orders.filter(col("o_orderkey") % 8 === 0)
-            .repartitionByRange(4, col("o_orderkey")))
-          val maxKey = orders.agg(max(col("o_orderkey")).cast("long")).head.getLong(0)
-          val (lo, hi) = (maxKey / 4, maxKey / 2)
-          val filters = Seq(
-            org.apache.spark.sql.sources.EqualTo("o_orderstatus", "F"),
-            org.apache.spark.sql.sources.GreaterThanOrEqual("o_orderkey", lo),
-            org.apache.spark.sql.sources.LessThanOrEqual("o_orderkey", hi))
-          val all = table.filesOf(table.currentVersion)
-          val pruned = table.pruneFilesFor(s, table.currentVersion, filters)
-          require(table.lastPruneVia == "checkpoint",
-            "the distributed checkpoint prune must engage above the threshold")
-          require(pruned.nonEmpty && pruned.size < all.size &&
-            pruned.forall(_.contains("o_orderstatus=F")),
-            s"checkpoint pruning must act on both axes (${pruned.size} of ${all.size})")
-          // exact agreement with the driver loop on the same snapshot
-          s.conf.set(key, Int.MaxValue.toString)
-          val viaDriver = table.pruneFilesFor(s, table.currentVersion, filters)
-          require(table.lastPruneVia == "driver" && viaDriver == pruned,
-            "checkpoint and driver pruning must select identical files")
-          s.conf.set(key, "1")
-          s.read.format("graft").load(root)
-            .filter(col("o_orderstatus") === "F" &&
-              col("o_orderkey").between(lo, hi))
-            .select("o_orderkey", "o_orderstatus", "o_totalprice")
-        } finally old.fold(s.conf.unset(key))(v => s.conf.set(key, v))
+        val orders = t(s, dir, "orders")
+        val table = new MergeTable(root, Seq("o_orderstatus"),
+          statsCols = Seq("o_orderkey"))
+        table.overwrite(orders.filter(col("o_orderkey") % 8 =!= 0)
+          .repartitionByRange(16, col("o_orderkey")))
+        val base = table.filesOf(table.currentVersion).toSet
+        table.append(orders.filter(col("o_orderkey") % 8 === 0)
+          .repartitionByRange(4, col("o_orderkey")))
+        val maxKey = orders.agg(max(col("o_orderkey")).cast("long")).head.getLong(0)
+        val (lo, hi) = (maxKey / 4, maxKey / 2)
+        val filters = Seq(
+          org.apache.spark.sql.sources.EqualTo("o_orderstatus", "F"),
+          org.apache.spark.sql.sources.GreaterThanOrEqual("o_orderkey", lo),
+          org.apache.spark.sql.sources.LessThanOrEqual("o_orderkey", hi))
+        val all = table.filesOf(table.currentVersion)
+        val pruned = table.pruneFilesFor(s, table.currentVersion, filters)
+        require(pruned.nonEmpty && pruned.size < all.size &&
+          pruned.forall(_.contains("o_orderstatus=F")) &&
+          all.filter(_.contains("o_orderstatus=F")).size > pruned.size,
+          s"pruning must act on both axes (${pruned.size} of ${all.size})")
+        require(pruned.exists(f => !base.contains(f)),
+          "pruning must see the tail append's files")
+        s.read.format("graft").load(root)
+          .filter(col("o_orderstatus") === "F" &&
+            col("o_orderkey").between(lo, hi))
+          .select("o_orderkey", "o_orderstatus", "o_totalprice")
       },
       Some("""SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
              |WHERE o_orderstatus = 'F'
              |  AND o_orderkey BETWEEN (SELECT max(o_orderkey) // 4 FROM orders)
              |                     AND (SELECT max(o_orderkey) // 2 FROM orders)""".stripMargin),
-      "columnar checkpoint: distributed Catalyst file pruning over checkpoint.parquet"),
+      "log-level file pruning on partition and stats axes past an incremental tail"),
 
     // Partition-disjoint OCC (Delta WriteSerializable conflict resolution):
     // two merges scoped to DIFFERENT partitions race one commit slot; the

@@ -409,28 +409,17 @@ final class GraftTable(root: String, declaredParts: Seq[String],
       case _ => return None
     }
 
-    val spark = org.apache.spark.sql.SparkSession.active
-    // at large file counts, answer from the checkpoint frame with Spark
-    // aggregations (two metadata-sized jobs) instead of the O(files)
-    // driver statsLines parse; below the threshold — or whenever the
-    // checkpoint path refuses — the driver path decides
-    val viaCheckpoint: Option[Seq[Seq[Any]]] =
-      if (t.filesOf(v).size >= MergeTable.checkpointThreshold(spark))
-        t.aggregateFromCheckpointDF(spark, v, groupBy, aggs, partitionFilters)
-      else None
-    val answered: Option[Seq[Seq[Any]]] = viaCheckpoint.orElse {
-      // consumed partition-only filters restrict the file set EXACTLY —
-      // None (untranslatable/non-partition, shouldn't happen for consumed
-      // filters) rejects the pushdown rather than risking a wrong answer
-      val restrict: Option[Set[String]] =
-        if (partitionFilters.isEmpty) None
-        else t.exactPartitionFiles(spark, v, partitionFilters) match {
-          case None => return None
-          case some => some
-        }
-      t.aggregateFromStats(v, groupBy, aggs, restrict)
-    }
-    answered.map { rows =>
+    // consumed partition-only filters restrict the file set EXACTLY —
+    // None (untranslatable/non-partition, shouldn't happen for consumed
+    // filters) rejects the pushdown rather than risking a wrong answer
+    val restrict: Option[Set[String]] =
+      if (partitionFilters.isEmpty) None
+      else t.exactPartitionFiles(org.apache.spark.sql.SparkSession.active, v,
+          partitionFilters) match {
+        case None => return None
+        case some => some
+      }
+    t.aggregateFromStats(v, groupBy, aggs, restrict).map { rows =>
       val fields =
         groupBy.map(c => StructField(c, schema(c).dataType, nullable = true)) ++
           aggs.map {

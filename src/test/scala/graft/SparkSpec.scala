@@ -15,6 +15,21 @@ trait SparkSpec extends AnyFunSuite {
     java.nio.file.Files.createDirectories(p)
     p.toString
   }
+
+  /** The number of Spark jobs started while `body` runs, with its result. */
+  def jobCount[A](body: => A): (Int, A) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.sql.GraftSqlShims.waitForListenerBus(spark)
+      (jobs.get, r)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {

@@ -1604,4 +1604,38 @@ class MergeTableSpec extends SparkSpec {
       Map("tbl" -> t))
     assert(!t.features(t.currentVersion).contains("deletionVectors"))
   }
+
+  test("legacy columnar checkpoint entries in the log are inert") {
+    // Earlier releases also wrote `<v>.checkpoint.parquet/` (with a
+    // `_SUCCESS` marker) and a `_last_checkpoint` pointer beside the text
+    // log. Nothing reads them now: every operation works unchanged.
+    val t = new MergeTable(scratch("mt_legacy_cp"), Seq("p"), statsCols = Seq("k"))
+    t.overwrite(df(Seq((1, "a", "p1"), (2, "b", "p1"), (3, "c", "p2"))))
+    val log = java.nio.file.Paths.get(t.root, "_graft_log")
+    val cp = log.resolve("0.checkpoint.parquet")
+    t.filesOf(0).map(f => (f, 1L, true, f.split('/')(1).stripPrefix("p=")))
+      .toDF("_graft_path", "_graft_rows", "_graft_pok", "_graft_raw_p")
+      .write.parquet(cp.toString)
+    java.nio.file.Files.write(cp.resolve("_SUCCESS"), Array.emptyByteArray)
+    java.nio.file.Files.writeString(log.resolve("_last_checkpoint"), "0")
+    def legacy: Map[String, Long] = java.nio.file.Files.walk(log).iterator().asScala
+      .filter(p => p.toString.contains("checkpoint") && java.nio.file.Files.isRegularFile(p))
+      .map(p => p.toString -> java.nio.file.Files.size(p)).toMap
+    val before = legacy
+    assert(before.keySet.exists(_.endsWith("_SUCCESS")))
+
+    t.merge(spark, df(Seq((2, "B", "p2"), (4, "d", "p3"))), Seq("k"))
+    val want = Set((1, "a", "p1"), (2, "B", "p2"), (3, "c", "p2"), (4, "d", "p3"))
+    assert(asSet(t.read(spark)) === want)
+    assert(asSet(new MergeTable(t.root).read(spark)) === want)
+    assert(t.pruneFilesFor(spark, t.currentVersion,
+      Seq(org.apache.spark.sql.sources.EqualTo("p", "p1"))).size === 1)
+    graft.sqlapi.LakeCatalog.register("mt_legacy_cp", t)
+    try assert(asSet(spark.sql("SELECT * FROM mt_legacy_cp VERSION AS OF 0")) ===
+      Set((1, "a", "p1"), (2, "b", "p1"), (3, "c", "p2")))
+    finally graft.sqlapi.LakeCatalog.unregister("mt_legacy_cp")
+    t.vacuum(retainVersions = 1, minAgeMs = 0)
+    assert(asSet(t.read(spark)) === want)
+    assert(legacy === before, "no operation touches the legacy entries")
+  }
 }
