@@ -3,9 +3,11 @@ package graft.functions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+import org.apache.spark.sql.catalyst.trees.TreePattern.{BINARY_COMPARISON, FILTER, LITERAL}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, TimestampNTZType,
+  TimestampType}
 
 /** Session extension entry point (`spark.sql.extensions=graft.functions.
   * GraftExtensions`, set in Sessions.builder): registers `float_dot` in
@@ -78,6 +80,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "bloom_contains(filter, hash_long) takes exactly 2 arguments")
       }))
     e.injectOptimizerRule(_ => DotProductRewrite)
+    e.injectOptimizerRule(_ => SubMillisTimestampBound)
     // materialized-view query rewrite: aggregates over a registered base
     // re-point at the MV table (exact or rollup) while the base is fresh —
     // constant-time no-op when the MvCatalog is empty
@@ -93,6 +96,31 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectPostHocResolutionRule(session =>
       graft.sources.GraftWriteRewrites(session))
   }
+}
+
+/** Optimizer rule: `ts < v` with a sub-millisecond timestamp literal
+  * becomes the equal `ts <= v - 1µs` (and `v > ts` its mirror). Parquet
+  * pushdown rounds `v` down to milliseconds for a `TIMESTAMP_MILLIS`
+  * column but keeps the strict `<`, which skipped row groups whose rows
+  * all hold the rounded value although each satisfies `ts < v`.
+  */
+object SubMillisTimestampBound extends Rule[LogicalPlan] {
+
+  private def subMillis(v: Long): Boolean = v % 1000L != 0L && v != Long.MinValue
+
+  private def timestamp(dt: DataType): Boolean = dt == TimestampType || dt == TimestampNTZType
+
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformWithPruning(_.containsAllPatterns(FILTER, BINARY_COMPARISON, LITERAL)) {
+      case f: Filter =>
+        val c = f.condition.transform {
+          case LessThan(a, Literal(v: Long, dt)) if timestamp(dt) && subMillis(v) =>
+            LessThanOrEqual(a, Literal(v - 1L, dt))
+          case GreaterThan(Literal(v: Long, dt), a) if timestamp(dt) && subMillis(v) =>
+            GreaterThanOrEqual(Literal(v - 1L, dt), a)
+        }
+        if (c eq f.condition) f else f.copy(condition = c)
+    }
 }
 
 /** Optimizer rule: rewrite the interpreted higher-order dot-product idiom

@@ -1,5 +1,6 @@
 package graft.lake
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.BasicFileAttributes
 import java.util.concurrent.atomic.AtomicLong
@@ -7,18 +8,23 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
 import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.schema.MessageType
-import org.apache.spark.sql.{DataFrame, SparkSession, sources}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession, sources}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Expression, Literal,
+  XxHash64}
 import org.apache.spark.sql.execution.datasources.{GraftDatasourceShims, HadoopFsRelation,
   PartitionDirectory, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.util.sketch.BloomFilter
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** A Spark `FileIndex` over ONE snapshot's file list, taken from the table
   * log instead of a file listing (Delta's `TahoeLogFileIndex` idea, and the
-  * shape of Spark's own log-backed `MetadataLogFileIndex`).
+  * shape of Spark's own log-backed `MetadataLogFileIndex`), and graft's one
+  * file-skipping engine: every read, probe and kept-file query of a
+  * snapshot decides "can this file hold a matching row?" here.
   *
   * `spark.read.parquet(paths)` hands its paths to an `InMemoryFileIndex`,
   * which stats every one of them again — past
@@ -39,24 +45,26 @@ import scala.jdk.CollectionConverters._
   *    base path and `userSchema` typing the values (Spark refuses several
   *    base paths in one parse).
   *
-  * `listFiles` also skips files by their parquet footers: after Spark's
-  * partition pruning it drops every file in which no row group can satisfy
-  * the scan's pushed data filters. That is the statistics-level row-group
-  * test the scan task runs on each file, moved to planning time, so a
-  * dropped file is one whose task would have read zero rows, and results
-  * are unchanged by construction: the predicate is built per file from its
-  * own schema (a file lacking a column, or an INT32 file under a widened
-  * long column, gets the filter the task would build, or none and keeps),
-  * the relation is over physical names (column mapping), and the deletion
-  * vector anti-join above keys on positions inside each kept file. Footers
-  * come from a JVM-wide cache keyed by (path, length, mtime)
-  * ([[ManifestFileIndex.cachedFooter]]); a call reads at most
-  * `FooterReadsPerCall` uncached ones and keeps the files past it.
+  * `listFiles` skips files in four steps, each keeping a file it cannot
+  * decide, so a dropped file holds no row satisfying the scan's filters:
+  *  1. Spark's partition pruning, plus the partition conjuncts generated
+  *     columns derive from data filters ([[MergeTable.derivedPartitionConjuncts]]);
+  *  2. the log's stat line per file ([[ManifestFileIndex.Log]]): typed
+  *     `[min, max]` ([[MergeTable.statCmp]], [[MergeTable.InKeys]]), the
+  *     all-NULL flag and the null count, under logical column names;
+  *  3. `bloomidx/<physical col>` sidecars for `=`, `<=>` and `IN`, the
+  *     values hashed on the driver by Spark's own `xxhash64`;
+  *  4. for a file the log does not decide, the row-group statistics test
+  *     the scan task runs, over the predicate that task would build from
+  *     the file's own schema. Footers come from a JVM-wide cache keyed by
+  *     (path, length, mtime) ([[ManifestFileIndex.cachedFooter]]); a call
+  *     reads at most `FooterReadsPerCall` uncached ones and keeps the rest.
   *
-  * `files` are root-relative manifest paths (`<dataDir>/[<p>=<v>/...]part-*`).
+  * `files` are root-relative manifest paths (`<dataDir>/[<p>=<v>/...]part-*`);
+  * `log` is absent for files no snapshot records yet (a write's own output).
   */
 final class ManifestFileIndex(spark: SparkSession, root: String, files: Seq[String],
-                              userSchema: StructType)
+                              userSchema: StructType, log: Option[ManifestFileIndex.Log])
     extends PartitioningAwareFileIndex(spark, Map.empty, Some(userSchema)) {
 
   // every file sits under `root`, so one file system serves them all
@@ -82,8 +90,8 @@ final class ManifestFileIndex(spark: SparkSession, root: String, files: Seq[Stri
   override protected val leafFiles: mutable.LinkedHashMap[Path, FileStatus] =
     mutable.LinkedHashMap.from(statuses.map(s => s.getPath -> s))
 
-  private lazy val localPaths: Map[Path, java.nio.file.Path] =
-    statuses.lazyZip(files).map((s, rel) => s.getPath -> Paths.get(root, rel)).toMap
+  private lazy val relOf: Map[Path, String] =
+    statuses.lazyZip(files).map((s, rel) => s.getPath -> rel).toMap
 
   override protected val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
     statuses.toArray.groupBy(_.getPath.getParent)
@@ -105,14 +113,92 @@ final class ManifestFileIndex(spark: SparkSession, root: String, files: Seq[Stri
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val dirs = super.listFiles(partitionFilters, dataFilters)
-    val pushed =
-      if (dataFilters.isEmpty) Nil
+    import ManifestFileIndex.{bloomTests, logDecidable}
+    // the data conjuncts under the log's logical column names
+    val conjuncts = log.fold(Seq.empty[sources.Filter]) { l =>
+      MergeTable.flattenAnd(dataFilters.flatMap(e => GraftSqlShims.translateFilter(e.transform {
+        case a: AttributeReference => a.withName(l.logicalOf.getOrElse(a.name, a.name))
+      })))
+    }
+    val dirs = super.listFiles(partitionFilters ++ derivedPartitionFilters(conjuncts), dataFilters)
+    val pushed = if (dataFilters.isEmpty) Nil
       else GraftDatasourceShims.parquetPushedFilters(spark, dataFilters)
-    if (pushed.isEmpty) dirs
+    val logTests = log.fold(Seq.empty[String => Option[Boolean]])(l =>
+      logDecidable(l, conjuncts).map(logTest(l, _)))
+    val blooms = log.fold(Seq.empty[String => Boolean])(bloomTests(spark, root, _, conjuncts))
+    if (logTests.isEmpty && blooms.isEmpty && pushed.isEmpty) dirs
     else {
-      val mayMatch = rowGroupsMayMatch(pushed)
-      dirs.map(d => d.copy(files = d.files.filter(f => mayMatch(f.fileStatus))))
+      val footerAdmits = if (pushed.isEmpty) None else Some(rowGroupsMayMatch(pushed))
+      val logCoversAll = logTests.nonEmpty && logTests.size == conjuncts.size
+      def keep(status: FileStatus): Boolean = {
+        val rel = relOf(status.getPath)
+        val decided = logTests.map(_(rel))
+        !decided.contains(Some(false)) && blooms.forall(_(rel)) && footerAdmits.forall(ok =>
+          (logCoversAll && decided.forall(_.isDefined)) || ok(status))
+      }
+      dirs.map(d => d.copy(files = d.files.filter(f => keep(f.fileStatus))))
+    }
+  }
+
+  /** The manifest paths `listFiles` keeps for these filters, in manifest
+    * order: what a scan planned with them would read.
+    */
+  def keptFiles(partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): Seq[String] = {
+    val kept = listFiles(partitionFilters, dataFilters).flatMap(_.files.map(_.getPath)).toSet
+    statuses.lazyZip(files).collect { case (s, rel) if kept(s.getPath) => rel }.toSeq
+  }
+
+  /** Step 1's extra partition conjunct: what generated partition columns
+    * derive from `conjuncts`, resolved against the partition schema.
+    */
+  private def derivedPartitionFilters(conjuncts: Seq[sources.Filter]): Seq[Expression] =
+    log.filter(_.generated.nonEmpty).toSeq.flatMap { l =>
+      MergeTable.derivedPartitionConjuncts(spark, conjuncts, l.generated, l.types)
+        .flatMap(MergeTable.translateFilter).reduceOption(_ && _).flatMap(p =>
+          try Some(MergeTable.conditionOf(spark, partitionSchema, p))
+          catch { case NonFatal(_) => None })
+    }
+
+  /** Step 2 for one conjunct: per file, whether its log entry proves that
+    * some row may satisfy `c` (Some(true)) or that none can (Some(false)),
+    * None when the log cannot decide (no stats, no type, an unparsable
+    * stat string, a legacy `?` line whose empty bound is ambiguous, or a
+    * shape it does not test). All-NULL files (flag `N`) fail every
+    * null-rejecting predicate. An `In` parses and sorts its keys once.
+    */
+  private def logTest(l: ManifestFileIndex.Log, c: sources.Filter): String => Option[Boolean] = {
+    import MergeTable.statCmp
+    def entry(f: String, a: String): Option[(String, String, Char)] =
+      l.stats.get(f).flatMap(_.get(a)).filter(e => e._3 != '?' || (e._1.nonEmpty && e._2.nonEmpty))
+    def range(f: String, a: String)(
+        check: (String, String, DataType) => Option[Boolean]): Option[Boolean] =
+      entry(f, a).flatMap {
+        case (_, _, 'N') => Some(false)
+        case (mn, mx, _) => l.types.get(a).flatMap(dt => check(mn, mx, dt))
+      }
+    def point(a: String, v: Any): String => Option[Boolean] =
+      f => range(f, a)((mn, mx, dt) =>
+        for (lo <- statCmp(dt, mn, v.toString); hi <- statCmp(dt, v.toString, mx))
+          yield lo <= 0 && hi <= 0)
+    c match {
+      case sources.EqualTo(a, v) if v != null => point(a, v)
+      case sources.EqualNullSafe(a, v) if v != null => point(a, v)
+      case sources.In(a, vs) =>
+        val nn = vs.filter(_ != null).toSeq
+        val keys = l.types.get(a).map(new MergeTable.InKeys(_, nn))
+        f => if (nn.isEmpty) Some(false)
+          else range(f, a)((mn, mx, _) => keys.flatMap(_.admits(mn, mx)))
+      case sources.GreaterThan(a, v) if v != null =>
+        f => range(f, a)((_, mx, dt) => statCmp(dt, v.toString, mx).map(_ < 0))
+      case sources.GreaterThanOrEqual(a, v) if v != null =>
+        f => range(f, a)((_, mx, dt) => statCmp(dt, v.toString, mx).map(_ <= 0))
+      case sources.LessThan(a, v) if v != null =>
+        f => range(f, a)((mn, _, dt) => statCmp(dt, mn, v.toString).map(_ < 0))
+      case sources.LessThanOrEqual(a, v) if v != null =>
+        f => range(f, a)((mn, _, dt) => statCmp(dt, mn, v.toString).map(_ <= 0))
+      case sources.IsNotNull(a) => f => entry(f, a).map(_._3 != 'N')
+      case sources.IsNull(a) => f => l.nulls.get((f, a)).map(_ > 0L) // a zero count proves none
+      case _ => _ => None
     }
   }
 
@@ -131,7 +217,7 @@ final class ManifestFileIndex(spark: SparkSession, root: String, files: Seq[Stri
       val key = FooterKey(status.getPath.toString, status.getLen, status.getModificationTime)
       val footer = cachedFooter(key).orElse {
         if (budget <= 0) None
-        else { budget -= 1; Some(loadFooter(key, localPaths(status.getPath))) }
+        else { budget -= 1; Some(loadFooter(key, Paths.get(root, relOf(status.getPath)))) }
       }
       footer.flatten.forall { f =>
         try {
@@ -139,7 +225,7 @@ final class ManifestFileIndex(spark: SparkSession, root: String, files: Seq[Stri
             GraftDatasourceShims.parquetPredicate(spark, f.schema, f.meta.getOrElse(_, null),
               filters).map(FilterCompat.get))
           predicate.forall(p => !RowGroupFilter.filterRowGroups(p, f.blocks, f.schema).isEmpty)
-        } catch { case scala.util.control.NonFatal(_) => true }
+        } catch { case NonFatal(_) => true }
       }
     }
   }
@@ -157,6 +243,92 @@ final class ManifestFileIndex(spark: SparkSession, root: String, files: Seq[Stri
 }
 
 object ManifestFileIndex {
+
+  /** What the table log records about one snapshot's files, for skipping:
+    * logical column types, the logical → physical name map (non-identity
+    * entries), the statted columns, the generated partition columns and,
+    * parsed on first use, the per-file stat entries and null counts.
+    */
+  final class Log(val types: Map[String, DataType], val physicalOf: Map[String, String],
+                  val statted: Set[String], val generated: Seq[(String, String)],
+                  stats0: => Map[String, Map[String, (String, String, Char)]],
+                  nulls0: => Map[(String, String), Long]) {
+    val logicalOf: Map[String, String] = physicalOf.map(_.swap)
+    lazy val stats: Map[String, Map[String, (String, String, Char)]] = stats0
+    lazy val nulls: Map[(String, String), Long] = nulls0
+  }
+
+  /** The conjuncts (logical names) step 2 tests: a conjunct on a column
+    * without stat lines cannot be decided by the log, so an unstatted
+    * snapshot parses no stats; `IN` over only NULLs is never TRUE.
+    */
+  private def logDecidable(l: Log, conjuncts: Seq[sources.Filter]): Seq[sources.Filter] =
+    conjuncts.filter {
+      case sources.In(_, vs) if vs.forall(_ == null) => true
+      case c => c.references.forall(l.statted)
+    }
+
+  /** The file in a `bloomidx/<physical col>` dir naming its column's type. */
+  private[lake] val BloomTypeFile = "_type.json"
+
+  /** The type `root`'s Bloom index on the physical column `physical` was
+    * built under; None without a readable [[BloomTypeFile]] (no index, or
+    * a dir an earlier release keyed by logical name, which a rename can
+    * leave naming another column's data).
+    */
+  private[lake] def bloomIndexType(root: String, physical: String): Option[DataType] =
+    try Some(DataType.fromJson(Files.readString(
+      Paths.get(root, "bloomidx", physical, BloomTypeFile))))
+    catch { case NonFatal(_) => None }
+
+  /** Step 3: one test per `=`, `<=>` or `IN` conjunct (logical names) on a
+    * column whose physical name has a Bloom index built under the type
+    * this snapshot gives the column. Sidecars are keyed by physical name,
+    * which a rename keeps and no later column reuses, so they describe the
+    * same data at every version. The values are hashed as
+    * [[MergeTable.buildBloomIndex]] hashed the column, with no Spark job. A
+    * file without a readable sidecar keeps.
+    */
+  private def bloomTests(spark: SparkSession, root: String, l: Log,
+                         conjuncts: Seq[sources.Filter]): Seq[String => Boolean] = {
+    val lookups = conjuncts.collect {
+      case sources.EqualTo(a, v) if v != null => a -> Seq(v)
+      case sources.EqualNullSafe(a, v) if v != null => a -> Seq(v)
+      case sources.In(a, vs) if vs.exists(_ != null) => a -> vs.toSeq.filter(_ != null)
+    }
+    if (lookups.isEmpty || !Files.isDirectory(Paths.get(root, "bloomidx"))) Nil
+    else {
+      val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+      lookups.flatMap { case (a, vs) =>
+        val phys = l.physicalOf.getOrElse(a, a)
+        val hashes = l.types.get(a).filter(bloomIndexType(root, phys).contains).flatMap { dt =>
+          try Some(vs.map(v => new XxHash64(Seq(Cast(Literal(v), dt, tz)))
+            .eval().asInstanceOf[Long]).toArray)
+          catch { case NonFatal(_) => None }
+        }
+        hashes.map { hs => (rel: String) =>
+          try {
+            val in = Files.newInputStream(Paths.get(root, "bloomidx", phys,
+              java.net.URLEncoder.encode(rel, StandardCharsets.UTF_8) + ".bloom"))
+            try {
+              val bloom = BloomFilter.readFrom(in)
+              hs.exists(bloom.mightContainLong)
+            } finally in.close()
+          } catch { case NonFatal(_) => true }
+        }
+      }
+    }
+  }
+
+  /** False when only the footer step could drop a file for `conjuncts`
+    * (logical names) in snapshot `l` of `root`.
+    */
+  private[lake] def mayDecide(spark: SparkSession, root: String, l: Log,
+                              partitionCols: Seq[String],
+                              conjuncts: Seq[sources.Filter]): Boolean =
+    l.generated.nonEmpty ||
+      conjuncts.exists(c => c.references.nonEmpty && c.references.forall(partitionCols.contains)) ||
+      logDecidable(l, conjuncts).nonEmpty || bloomTests(spark, root, l, conjuncts).nonEmpty
 
   /** A file's footer-cache identity: a rewritten file never reuses its
     * (length, mtime), so an entry cannot outlive the bytes it describes.
@@ -211,8 +383,8 @@ object ManifestFileIndex {
     * remaining `schema` columns (nullable) as the data schema.
     */
   def read(spark: SparkSession, root: String, files: Seq[String],
-           schema: StructType): DataFrame = {
-    val index = new ManifestFileIndex(spark, root, files, schema)
+           schema: StructType, log: Option[Log]): DataFrame = {
+    val index = new ManifestFileIndex(spark, root, files, schema, log)
     val partitionSchema = index.partitionSchema
     val same = GraftDatasourceShims.nameEquality(spark)
     val dataSchema = StructType(schema.filterNot(f =>

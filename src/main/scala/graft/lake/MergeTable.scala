@@ -100,13 +100,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     */
   private[graft] var clock: () => Long = () => System.currentTimeMillis()
 
-  /** What the LAST [[pruneFilesFor]] call tested per file — `"driver"`
-    * (a partition or stats conjunct, in the driver loop) or `"none"` (no
-    * conjunct could drop a file, so it kept every file untested).
-    * Observability for gates and specs; never read by the engine itself.
-    */
-  @volatile private[graft] var lastPruneVia: String = ""
-
   /** One commit = ONE log file (`<version>.commit`: schema + file list +
     * per-file stats), published atomically by hard-link put-if-absent — the
     * commit either fully exists or doesn't, there is no window where a
@@ -127,8 +120,8 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
                             tsMillis: Option[Long],
                             features: Seq[String]) {
     /** Columns with at least one recorded stats line in this snapshot. A
-      * pruning conjunct on any other column keeps every file, so
-      * [[pruneFilesFor]] leaves it out.
+      * conjunct on any other column keeps every file, so the log admit of
+      * [[ManifestFileIndex]] leaves it out.
       */
     lazy val statsColumns: Set[String] =
       statsLines.iterator.map { l =>
@@ -136,6 +129,27 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
         val j = l.indexOf('\t', i + 1)
         if (j < 0) l.substring(i + 1) else l.substring(i + 1, j)
       }.toSet.map(dec) - MergeTable.CountStatKey
+
+    /** [[statsDetail]] and [[nullCounts]], parsed once per resolved commit:
+      * every filtered read of the snapshot consults them.
+      */
+    lazy val statsDetail: Map[String, Map[String, (String, String, Char)]] =
+      statsLines.map { line =>
+        val parts = line.split("\t", -1)
+        val flag = if (parts.length >= 5 && parts(4).nonEmpty) parts(4).charAt(0) else '?'
+        (dec(parts(0)), dec(parts(1)), dec(parts(2)), dec(parts(3)), flag)
+      }.filterNot(_._2 == MergeTable.CountStatKey) // row counts are not column bounds
+        .groupBy(_._1).map { case (f, rows) =>
+          f -> rows.map(r => r._2 -> ((r._3, r._4, r._5))).toMap
+        }
+
+    lazy val nullCounts: Map[(String, String), Long] =
+      statsLines.flatMap { line =>
+        val parts = line.split("\t", -1)
+        if (parts.length >= 6 && dec(parts(1)) != MergeTable.CountStatKey)
+          parts(5).toLongOption.map(n => (dec(parts(0)), dec(parts(1))) -> n)
+        else None
+      }.toMap
   }
 
   /** Single-slot resolved-snapshot cache. SOUND because a published commit
@@ -365,7 +379,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
   def readWithRowIds(spark: SparkSession): DataFrame = {
     require(rowTrackingEnabled, s"MergeTable at $root was not created with rowTracking = true")
     val v = currentVersion
-    readFiles(spark, filesOf(v), schemaOf(v), colmapOf(v), dvsOf(v), withRowIds = true)
+    readVersionFiles(spark, v, filesOf(v), withRowIds = true)
   }
 
   /** Rows ADDED between `fromVersion` (exclusive; pass -1 for "nothing
@@ -408,8 +422,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
         MergeTable.lastStreamPrune = (added.size.toLong, kept.size.toLong)
         kept
       }
-    readFiles(spark, selected, schemaOf(toVersion),
-      colmapOf(toVersion), dvsOf(toVersion))
+    readVersionFiles(spark, toVersion, selected)
   }
 
   /** The translatable conjuncts of a SQL predicate string, resolved
@@ -421,21 +434,22 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     */
   private[graft] def eligibleFilters(spark: SparkSession, version: Long,
                                      whereSql: String): Seq[sources.Filter] = {
-    import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Expression}
-    val frame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf(version))
-    val cond = frame.filter(expr(whereSql)).queryExecution.analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }
-    require(cond.forall(_.deterministic),
+    val cond = MergeTable.conditionOf(spark, schemaOf(version), expr(whereSql))
+    require(cond.deterministic,
       s"stream source on $root: where option must be deterministic, got: $whereSql")
-    def split(e: Expression): Seq[Expression] = e match {
-      case CAnd(l, r) => split(l) ++ split(r)
-      case x          => Seq(x)
-    }
-    cond.toSeq.flatMap(split)
-      .flatMap(e => org.apache.spark.sql.GraftSqlShims.translateFilter(e))
+    translatedConjuncts(cond)
   }
+
+  /** A resolved condition's top-level conjuncts as `sources.Filter`s; one
+    * Spark cannot translate is left out.
+    */
+  private def translatedConjuncts(
+      cond: org.apache.spark.sql.catalyst.expressions.Expression): Seq[sources.Filter] =
+    cond match {
+      case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
+        translatedConjuncts(l) ++ translatedConjuncts(r)
+      case x => org.apache.spark.sql.GraftSqlShims.translateFilter(x).toSeq
+    }
 
   /** Time-travel read of any retained snapshot: that version's file list,
     * schema, column mapping and deletion vectors, scanned as one relation
@@ -448,176 +462,42 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     require(version >= horizon,
       s"version $version of $root was vacuumed (oldest retained version is $horizon) — " +
         "re-run vacuum with a larger retainVersions to keep longer time-travel windows")
-    readFiles(spark, filesOf(version), schemaOf(version), colmapOf(version), dvsOf(version))
+    readVersionFiles(spark, version, filesOf(version))
   }
 
-  /** [[readVersion]] with Delta-style AUTOMATIC data skipping: `filters`
-    * (a scan's pushed predicates, `org.apache.spark.sql.sources.Filter`
-    * form) prune the snapshot's FILE LIST before any data file is opened —
-    * the manifest-level skipping Delta applies to every read, composed
-    * from the three metadata indexes the log already maintains (partition
-    * values, per-file min/max stats, Bloom sidecars). Pruning selects
-    * files, never rows: the caller still applies the exact predicate above
-    * the scan, and a file is dropped only when NO row in it can satisfy
-    * the conjunction — so skipping is an optimization, never a
-    * correctness dependency. At 100 TB this is the difference between
-    * opening 10^6 parquet footers and opening the handful a selective
-    * predicate admits, with zero caller opt-in (the connector wires every
-    * `format("graft")` / catalog-table scan through here).
-    *
-    * This is the LOG-level prune ([[pruneFilesFor]]), on the driver over
-    * the manifest and stat lines the log resolves for `version`. The
-    * relation it reads is a [[ManifestFileIndex]], which then skips by
-    * parquet footers the filters Spark pushes into the scan, as on every
-    * other read: files of columns the log records no stats for are still
-    * skipped there, at one cached footer per file.
-    */
-  private[graft] def readVersionWhere(spark: SparkSession, version: Long,
-                                      filters: Seq[sources.Filter]): DataFrame = {
-    val horizon = vacuumHorizon
-    require(version >= horizon,
-      s"version $version of $root was vacuumed (oldest retained version is $horizon) — " +
-        "re-run vacuum with a larger retainVersions to keep longer time-travel windows")
-    readFiles(spark, pruneFilesFor(spark, version, filters), schemaOf(version),
-      colmapOf(version), dvsOf(version))
-  }
-
-  /** Read an explicit SUBSET of `version`'s files — for callers that ran
-    * [[pruneFilesFor]] themselves (e.g. to observe the kept-file count)
-    * and must not pay the prune twice. `files` must come from that prune:
-    * dv masks and the column mapping still apply.
-    */
-  private[graft] def readVersionFiles(spark: SparkSession, version: Long,
-                                      files: Seq[String]): DataFrame =
-    readFiles(spark, files, schemaOf(version), colmapOf(version), dvsOf(version))
-
-  /** The subset of `version`'s files that could hold a row satisfying the
-    * conjunction of `filters` — the automatic-data-skipping core behind
-    * [[readVersionWhere]]. Three sound-conservative prunes compose, each
-    * falling back to "keep" on anything it cannot decide. The first two
-    * run on the driver over the manifest and stat lines [[readCommit]]
-    * already resolved, with no Spark job at any file count:
-    *
-    *  1. partition pruning — the translatable conjuncts evaluate over the
-    *     manifest's distinct partition tuples ([[partitionCandidates]]:
-    *     metadata-sized, falls back on data-column references and
-    *     non-deterministic predicates);
-    *  2. per-file min/max pruning — each single-column conjunct checks the
-    *     commit-recorded stat range ([[statsOf]]); files without stats are
-    *     kept, all-NULL files are skipped for null-rejecting predicates
-    *     (`=`, ranges, IN, IS NOT NULL can never match a NULL);
-    *  3. Bloom pruning — equality conjuncts consult per-file Bloom
-    *     sidecars when an index was built ([[buildBloomIndex]]); files
-    *     without a sidecar are kept.
-    *
-    * Stat strings compare under the column's type: numerics as decimals,
-    * strings lexically, dates/timestamps parsed back to epoch numbers (the
-    * stringified external JVM values [[collectStatsFor]] recorded) — an
-    * unparsable value keeps the file.
+  /** The subset of `version`'s files (or of `among`, a subset of them: the
+    * streaming source prunes each micro-batch's added files) that
+    * [[ManifestFileIndex]] keeps for a read filtered by `filters` ([[keptBy]]),
+    * or all of them when no conjunct names a partition column, a statted
+    * column or a Bloom-indexed one.
     */
   private[graft] def pruneFilesFor(spark: SparkSession, version: Long,
                                    filters: Seq[sources.Filter],
-                                   among: Option[Seq[String]] = None): Seq[String] = Timing.time("pruneFilesFor") {
-    // `among` restricts pruning to a caller-supplied SUBSET of the
-    // version's files (the streaming source prunes each micro-batch's
-    // added files); the loop admits per file, so a subset prunes soundly.
-    import MergeTable.statCmp
-    val all = among.getOrElse(filesOf(version))
-    if (filters.isEmpty || all.isEmpty) return all
-    val conjuncts0 = MergeTable.flattenAnd(filters)
-    val types = schemaOf(version).fields.map(f => f.name -> f.dataType).toMap
-    // Delta's generated-column partition pruning: when a partition column
-    // is GENERATED from a data column (the reference's year/month-from-
-    // date pattern), filters on the BASE column derive partition
-    // conjuncts — `WHERE d = X` on a (y = year(d))-partitioned table
-    // prunes to y = year(X) with zero caller involvement.
-    val derived =
-      if (generatedCols.isEmpty) Nil
-      else MergeTable.derivedPartitionConjuncts(spark, conjuncts0,
-        generatedCols.filter { case (p, _) => partitionCols.contains(p) }, types)
-    val conjuncts = conjuncts0 ++ derived
-    // A conjunct on a column with no recorded stats can only keep every
-    // file, so the stats prune skips it: a merge's key list on an
-    // unstatted key then builds no per-key expression at all. IN over only
-    // NULLs needs no stats (it is never TRUE).
-    val statted = readCommit(version).statsColumns
-    val statConjuncts = conjuncts.filter {
-      case sources.In(_, vs) if vs.forall(_ == null) => true
-      case c => c.references.forall(statted)
+                                   among: Option[Seq[String]] = None): Seq[String] =
+    Timing.time("pruneFilesFor") {
+      val all = among.getOrElse(filesOf(version))
+      val conjuncts = MergeTable.flattenAnd(filters)
+      val names = schemaOf(version).fieldNames
+      // with nothing the partitions, the log or a Bloom index decide, only
+      // footers could drop a file: keep them all and plan nothing
+      if (!ManifestFileIndex.mayDecide(spark, root, logOf(version), partitionCols, conjuncts)) all
+      else conjuncts // one naming a column the version lacks could only keep files
+        .filter(_.references.forall(r => names.exists(_.equalsIgnoreCase(r))))
+        .flatMap(MergeTable.translateFilter).reduceOption(_ && _)
+        .fold(all)(keptBy(spark, version, all, _))
     }
-    // partition-prune on the conjuncts that reference partition columns
-    // ALONE — a mixed predicate still prunes through its partition-only
-    // conjuncts (sound: every conjunct must hold independently), where
-    // handing the whole conjunction to the tuple probe would fail
-    // resolution on the first data column and prune nothing
-    val partConjuncts = conjuncts
-      .filter(c => c.references.nonEmpty && c.references.forall(partitionCols.contains))
-    // With neither a partition-only conjunct nor a statted one, no file
-    // can drop here (the Bloom step below still runs)
-    lastPruneVia =
-      if (partConjuncts.nonEmpty || statConjuncts.nonEmpty) "driver" else "none"
-    lazy val stats = statsDetail(version)
-    lazy val nullsByFile = nullCounts(version)
-    def entry(f: String, a: String): Option[(String, String, Char)] =
-      stats.get(f).flatMap(_.get(a))
-    // range(...) = can any NON-NULL value of `a` in this file pass `check`?
-    // All-NULL files (flag 'N') fail every null-rejecting predicate; an
-    // undecidable case (no stats, no type, unparsable stat string, or a
-    // legacy line whose empty bound is ambiguous) keeps the file.
-    def range(f: String, a: String)(
-        check: (String, String, org.apache.spark.sql.types.DataType) => Option[Boolean]): Boolean =
-      entry(f, a) match {
-        case Some((_, _, 'N')) => false
-        case Some((mn, mx, fl)) if fl == 'V' || (mn.nonEmpty && mx.nonEmpty) =>
-          types.get(a).flatMap(dt => check(mn, mx, dt)).getOrElse(true)
-        case _ => true
-      }
-    def pointAdmit(mn: String, mx: String, dt: org.apache.spark.sql.types.DataType,
-                   v: Any): Option[Boolean] =
-      for (l <- statCmp(dt, mn, v.toString); u <- statCmp(dt, v.toString, mx))
-        yield l <= 0 && u <= 0
-    // one test per conjunct: an `In` parses and sorts its keys here, once
-    def admit(c: sources.Filter): String => Boolean = c match {
-      case sources.EqualTo(a, v) if v != null =>
-        f => range(f, a)((mn, mx, dt) => pointAdmit(mn, mx, dt, v))
-      case sources.EqualNullSafe(a, v) if v != null =>
-        f => range(f, a)((mn, mx, dt) => pointAdmit(mn, mx, dt, v))
-      case sources.In(a, vs) =>
-        val nn = vs.filter(_ != null).toSeq
-        val keys = types.get(a).map(new MergeTable.InKeys(_, nn))
-        // `a IN (NULL, …)` with no non-null values never evaluates TRUE
-        f => nn.nonEmpty &&
-          range(f, a)((mn, mx, _) => keys.flatMap(_.admits(mn, mx)).orElse(Some(true)))
-      case sources.GreaterThan(a, v) if v != null =>
-        f => range(f, a)((_, mx, dt) => statCmp(dt, v.toString, mx).map(_ < 0))
-      case sources.GreaterThanOrEqual(a, v) if v != null =>
-        f => range(f, a)((_, mx, dt) => statCmp(dt, v.toString, mx).map(_ <= 0))
-      case sources.LessThan(a, v) if v != null =>
-        f => range(f, a)((mn, _, dt) => statCmp(dt, mn, v.toString).map(_ < 0))
-      case sources.LessThanOrEqual(a, v) if v != null =>
-        f => range(f, a)((mn, _, dt) => statCmp(dt, mn, v.toString).map(_ <= 0))
-      case sources.IsNotNull(a) =>
-        f => entry(f, a).forall(_._3 != 'N') // only a definitive all-NULL flag skips
-      case sources.IsNull(a) =>
-        // a recorded ZERO null count proves no row can match; unknown keeps
-        f => nullsByFile.get((f, a)).forall(_ > 0L)
-      case _ => _ => true
-    }
-    val pred = partConjuncts.flatMap(MergeTable.translateFilter).reduceOption(_ && _)
-    val admits = statConjuncts.map(admit)
-    var files = pred.fold(all)(p => partitionCandidates(spark, all, schemaOf(version), p))
-      .filter(f => admits.forall(_(f)))
-    val eqs = conjuncts.collect {
-      case sources.EqualTo(a, v) if v != null       => (a, v)
-      case sources.EqualNullSafe(a, v) if v != null => (a, v)
-    }
-    eqs.foreach { case (a, v) =>
-      if (types.contains(a) && files.exists(f => Files.exists(bloomPath(a, f))))
-        try files = bloomAdmitted(spark, a, v, types(a), files)
-        catch { case scala.util.control.NonFatal(_) => () } // prune is optional
-    }
-    files
-  }
+
+  /** The files of `files` (of snapshot `version`) that the scan of their
+    * read filtered by `predicate` keeps ([[ManifestFileIndex.keptFiles]]),
+    * found by planning it with no Spark job; none when the plan has no scan.
+    */
+  private def keptBy(spark: SparkSession, version: Long, files: Seq[String],
+                     predicate: Column): Seq[String] =
+    readFiles(spark, files, schemaOf(version), colmapOf(version), log = Some(logOf(version)))
+      .filter(predicate).queryExecution.sparkPlan.collectFirst {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s.relation.location
+          .asInstanceOf[ManifestFileIndex].keptFiles(s.partitionFilters, s.dataFilters)
+      }.getOrElse(Nil)
 
   /** Files a commit ADDED vs its predecessor — the recorded per-commit
     * operation metrics when present (one metadata-line parse), a manifest
@@ -708,6 +588,25 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       substring_index(col("_metadata.file_path"), "/", -(partitionCols.size + 2)),
       "\\+", "%2B"))
 
+  /** Files `fs` of snapshot `version` (all of them, or a subset such as
+    * [[pruneFilesFor]] keeps), read ([[readFiles]]) with the version's
+    * schema, column mapping, deletion vectors and log skipping.
+    */
+  private[graft] def readVersionFiles(spark: SparkSession, version: Long, fs: Seq[String],
+                                      keepPos: Boolean = false, fileCol: Option[String] = None,
+                                      withRowIds: Boolean = false): DataFrame =
+    readFiles(spark, fs, schemaOf(version), colmapOf(version), dvsOf(version), keepPos,
+      fileCol, withRowIds, Some(logOf(version)))
+
+  /** What snapshot `version`'s log records for file skipping. */
+  private def logOf(version: Long): ManifestFileIndex.Log = {
+    val c = readCommit(version)
+    new ManifestFileIndex.Log(c.schema.fields.map(f => f.name -> f.dataType).toMap,
+      c.colmap.toMap, c.statsColumns,
+      generatedCols.filter { case (p, _) => partitionCols.contains(p) },
+      c.statsDetail, c.nullCounts)
+  }
+
   /** Read a subset of a snapshot's files with its schema, as ONE parquet
     * relation over a [[ManifestFileIndex]] of exactly those files. The log
     * already names every live file, so nothing is listed: each file costs
@@ -733,13 +632,17 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     * `input_file_name()`, which Spark refuses to resolve above the dv
     * anti-join (two file sources in one plan); `_metadata.file_path` binds
     * to its own scan, so it stays unambiguous.
+    *
+    * `log` is what the snapshot's log records for skipping; files no
+    * snapshot records yet (a write's own output) are read without it.
     */
   private def readFiles(spark: SparkSession, fs: Seq[String], schema: StructType,
                         colmap: Map[String, String],
                         dvs: Map[String, (String, Long)] = Map.empty,
                         keepPos: Boolean = false,
                         fileCol: Option[String] = None,
-                        withRowIds: Boolean = false): DataFrame = {
+                        withRowIds: Boolean = false,
+                        log: Option[ManifestFileIndex.Log] = None): DataFrame = {
     import MergeTable.{DvFileCol, DvIdxCol, RowIdCol}
     val hit = fs.filter(dvs.contains)
     val needPos = keepPos || hit.nonEmpty
@@ -770,7 +673,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       // from this same expression, so keys match by construction — and a
       // bare basename would be ambiguous (dynamic partitioning gives every
       // partition dir of one task the SAME part-file name).
-      val df = ManifestFileIndex.read(spark, root, fs, physSchema)
+      val df = ManifestFileIndex.read(spark, root, fs, physSchema, log)
       val posCols =
         (if (needPos)
           Seq(relPathCol.as(DvFileCol),
@@ -908,9 +811,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     */
   private def probeTouchedFiles(spark: SparkSession, keyRows: MergeTable.SourceKeys,
                                 keys: Seq[String], version: Long,
-                                probeRel: Seq[String], schema: StructType,
-                                cmap: Map[String, String],
-                                dvs: Map[String, (String, Long)]): (Set[String], Boolean) =
+                                probeRel: Seq[String]): (Set[String], Boolean) =
     Timing.time("merge.probe") {
       import org.apache.spark.sql.types._
       def simple(dt: DataType): Boolean = dt match {
@@ -930,6 +831,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
         }
       val srcKeys = keyRows.df
       val cap = keyRows.cap
+      val schema = schemaOf(version)
       val fastTypesOk = keys.forall(k => simple(schema(k).dataType))
       // the non-null key rows, from the merge's one bounded key collect;
       // only a capped collect holding NULL keys cannot tell whether the
@@ -943,35 +845,29 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
             .filter(keys.map(col(_).isNotNull).reduce(_ && _))
             .limit(cap + 1).collect()
         }
-      if (fastTypesOk && sample.isEmpty) (Set.empty, true)
-      else if (fastTypesOk && sample.length <= cap) {
+      val fast = fastTypesOk && sample.length <= cap
+      if (fast && (sample.isEmpty || probeRel.isEmpty)) (Set.empty, true) // no job
+      else if (fast) {
         val tuples = sample.distinct
-        val colVals: Seq[Array[Any]] = keys.indices.map(i =>
-          tuples.map(_.get(i): Any).distinct.toArray)
-        val kept = pruneFilesFor(spark, version,
-          keys.zipWithIndex.map { case (k, i) => sources.In(k, colVals(i)) },
-          among = Some(probeRel))
-        if (kept.isEmpty) (Set.empty, true)
-        else {
-          val inFilter = keys.zipWithIndex
-            .map { case (k, i) => col(k).isin(colVals(i).toIndexedSeq: _*) }
-            .reduce(_ && _)
-          val scan = readFiles(spark, kept, schema, cmap, dvs,
-            fileCol = Some("_graft_file")).filter(inFilter)
-          val exact =
-            if (keys.size == 1) scan // single key: the In filter IS the tuple match
-            else {
-              val keyDf = spark.createDataFrame(
-                java.util.Arrays.asList(tuples: _*), srcKeys.schema)
-              scan.join(broadcast(keyDf), keys, "left_semi")
-            }
-          dumpPlan("merge_probe_fast", exact)
-          (exact.agg(collect_set(col("_graft_file"))).head
-            .getSeq[String](0).toSet, true)
-        }
+        // one In per key column: the scan's file index skips every file
+        // that cannot hold one of the keys
+        val inFilter = keys.indices
+          .map(i => col(keys(i)).isin(tuples.map(_.get(i)).distinct.toIndexedSeq: _*))
+          .reduce(_ && _)
+        val scan = readVersionFiles(spark, version, probeRel, fileCol = Some("_graft_file"))
+          .filter(inFilter)
+        val exact =
+          if (keys.size == 1) scan // single key: the In filter IS the tuple match
+          else {
+            val keyDf = spark.createDataFrame(
+              java.util.Arrays.asList(tuples: _*), srcKeys.schema)
+            scan.join(broadcast(keyDf), keys, "left_semi")
+          }
+        dumpPlan("merge_probe_fast", exact)
+        (exact.agg(collect_set(col("_graft_file"))).head
+          .getSeq[String](0).toSet, true)
       } else {
-        val legacy = readFiles(spark, probeRel, schema, cmap, dvs,
-            fileCol = Some("_graft_file"))
+        val legacy = readVersionFiles(spark, version, probeRel, fileCol = Some("_graft_file"))
           .join(srcKeys, keys, "left_semi")
         dumpPlan("merge_probe_legacy", legacy)
         (legacy
@@ -1011,6 +907,18 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
   private def partDirOf(f: String): String = {
     val segs = f.split('/')
     segs.slice(1, segs.length - 1).mkString("/")
+  }
+
+  /** A partition directory's values, unescaped, NULL for the default
+    * partition.
+    */
+  private def partValuesOf(dir: String): Seq[String] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    dir.split('/').toSeq.map { seg =>
+      val raw = seg.substring(seg.indexOf('=') + 1)
+      if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+      else ExternalCatalogUtils.unescapePathName(raw)
+    }
   }
 
   /** The files of `files` inside the partition directories `dirs` — one
@@ -1084,8 +992,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     val (scopeDirs, probeRel) = mergeScope(src, oldFiles, keysDeterminePartitions)
     val (touched, bounded) =
       if (wholeScope) (probeRel.toSet, false)
-      else probeTouchedFiles(spark, keyRows, keys, v, probeRel, schemaOf(v),
-        colmapOf(v), dvsOf(v))
+      else probeTouchedFiles(spark, keyRows, keys, v, probeRel)
     val (t, k) = oldFiles.partition(touched.contains)
     val direct = bounded && directWriteOk(spark, t, extraRows = keyRows.cap.toLong)
     (MergeTable.TouchedSplit(t, k, scopeDirs.map(scopeConflict)), direct)
@@ -1093,15 +1000,14 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
 
   /** Snapshot `v`'s files split for a predicate DML ([[delete]],
     * [[update]], [[overwriteWhere]]): the files holding at least one
-    * predicate-TRUE row, probed over the predicate's partition candidates
-    * only, then the rest. The predicate doubles as the read set.
+    * predicate-TRUE row — a filtered read, so the scan's file index skips
+    * the files that cannot hold one — then the rest. The predicate doubles
+    * as the read set.
     */
   private def splitByPredicate(spark: SparkSession, v: Long,
                                predicate: Column): MergeTable.TouchedSplit = {
     val schema = schemaOf(v)
-    val probe = partitionCandidates(spark, filesOf(v), schema, predicate)
-    val touched = readFiles(spark, probe, schema, colmapOf(v), dvsOf(v),
-        fileCol = Some("_graft_file"))
+    val touched = readVersionFiles(spark, v, filesOf(v), fileCol = Some("_graft_file"))
       .filter(predicate)
       .select("_graft_file").distinct()
       .collect().map(_.getString(0)).toSet
@@ -1131,8 +1037,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     */
   private def readTouched(spark: SparkSession, v: Long, touchedRel: Seq[String],
                           pin: Boolean): DataFrame = {
-    val td = readFiles(spark, touchedRel, schemaOf(v), colmapOf(v), dvsOf(v),
-      withRowIds = rowTrackingEnabled)
+    val td = readVersionFiles(spark, v, touchedRel, withRowIds = rowTrackingEnabled)
     if (pin) td.cache() else td
   }
 
@@ -2115,9 +2020,10 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     val files = filesOf(v)
     val dvs = dvsOf(v)
 
-    val probe = partitionCandidates(spark, files, schema, predicate)
-    val live = readFiles(spark, probe, schema, colmapOf(v), dvs, keepPos = true)
-    val matched = live.filter(coalesce(predicate, lit(false)) === true)
+    // the bare predicate, not `coalesce(p, false) === true` (the same rows):
+    // Spark pushes it to the scan, so its file index can skip files
+    val live = readVersionFiles(spark, v, files, keepPos = true)
+    val matched = live.filter(predicate)
 
     val attempt = newDataDir(v + 1)
     val masks = stageMasks(spark, matched, attempt, dvs, maxNewDvRows) match {
@@ -2194,7 +2100,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       val (scopeDirs, probeRel) = mergeScope(src, files, keysDeterminePartitions)
 
       // matched target rows WITH their file/position — these become masks
-      val live = readFiles(spark, probeRel, schema, colmapOf(v), dvs, keepPos = true)
+      val live = readVersionFiles(spark, v, probeRel, keepPos = true)
       val matched = live.join(srcKeys, keys, "left_semi").cache()
 
       val attempt = newDataDir(v + 1)
@@ -2266,9 +2172,8 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       s"updateVectorized on $root: schema collides with reserved columns $DvFileCol/$DvIdxCol")
     val files = filesOf(v)
     val dvs = dvsOf(v)
-    val probe = partitionCandidates(spark, files, schema, predicate)
-    val live = readFiles(spark, probe, schema, colmapOf(v), dvs, keepPos = true)
-    val matched = live.filter(coalesce(predicate, lit(false)) === true).cache()
+    val live = readVersionFiles(spark, v, files, keepPos = true)
+    val matched = live.filter(predicate).cache() // bare: see deleteVectorized
 
     val attempt = newDataDir(v + 1)
     val masks = stageMasks(spark, matched, attempt, dvs, maxNewDvRows) match {
@@ -2427,7 +2332,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
         import MergeTable.ChangeType
         val deleted =
           if (touchedRel.isEmpty) None
-          else Some(readFiles(spark, touchedRel, schema, colmapOf(v), dvsOf(v))
+          else Some(readVersionFiles(spark, v, touchedRel)
             .filter(coalesce(predicate, lit(false)) === true)
             .withColumn(ChangeType, lit("delete")))
         val inserted = aligned.withColumn(ChangeType, lit("insert"))
@@ -2501,31 +2406,23 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     val v = currentVersion
     val files = filesOf(v)
-    val data = readFiles(spark, files, schemaOf(v), colmapOf(v), dvsOf(v),
+    val data = readVersionFiles(spark, v, files,
       withRowIds = rowTrackingEnabled) // row ids survive the rewrite verbatim
-    def dirOf(f: String): String = {
-      val segs = f.split('/'); segs.slice(1, segs.length - 1).mkString("/")
-    }
     def size(f: String): Long =
       try Files.size(Paths.get(root, f)) catch { case _: java.io.IOException => 0L }
     // files-per-partition budget from CURRENT on-disk bytes (one stat pass)
-    val nFilesByDir: Map[String, Int] = files.groupBy(dirOf).map { case (d, fs) =>
+    val nFilesByDir: Map[String, Int] = files.groupBy(partDirOf).map { case (d, fs) =>
       d -> math.max(1L, (fs.map(size).sum + targetFileBytes - 1) / targetFileBytes).toInt
     }
     if (partitionCols.isEmpty) {
       val n = nFilesByDir.values.headOption.getOrElse(1)
       writeVersion(data.repartition(n), v + 1, op = "OPTIMIZE", assignIds = false)
     } else {
-      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       // dir "p=a/q=b" → the same key a row's values build below: decoded
       // partition values joined on \u0001, null encoded as \u0000 — both
       // sides go through Spark's own cast-to-string, so they agree
       val nByKey: Map[String, Int] = nFilesByDir.map { case (d, n) =>
-        d.split('/').map { seg =>
-          val raw = seg.substring(seg.indexOf('=') + 1)
-          if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) "\u0000"
-          else ExternalCatalogUtils.unescapePathName(raw)
-        }.mkString("\u0001") -> n
+        partValuesOf(d).map(v => if (v == null) "\u0000" else v).mkString("\u0001") -> n
       }
       val rowKey = concat_ws("\u0001",
         partitionCols.map(c => coalesce(col(c).cast("string"), lit("\u0000"))): _*)
@@ -2586,39 +2483,26 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
 
   /** Partition-scoped compaction (Delta `OPTIMIZE ... WHERE` analog):
     * rewrite only the files of partitions whose VALUES satisfy
-    * `partitionPredicate` (a predicate over partition columns only); every
-    * other file is carried forward by manifest reference, stats included.
-    * At 100 TB compaction is routinely restricted to the recently-written
-    * hot partitions — a full-table OPTIMIZE is neither affordable nor
-    * needed. The predicate is evaluated over the DISTINCT partition-value
-    * tuples parsed from the manifest's file paths (unescaped, cast to the
-    * schema's types) — metadata-sized, never a data scan.
+    * `partitionPredicate` (a deterministic predicate over partition
+    * columns only); every other file is carried forward by manifest
+    * reference, stats included. At 100 TB compaction is routinely
+    * restricted to the recently-written hot partitions — a full-table
+    * OPTIMIZE is neither affordable nor needed. The files come from
+    * Spark's partition pruning over the manifest's partition values
+    * ([[ManifestFileIndex]]) — metadata-sized, never a data scan.
     */
   def compactPartitions(spark: SparkSession, partitionPredicate: Column,
                         parallelism: Int = 8): Unit = {
     require(partitionCols.nonEmpty, "compactPartitions requires a partitioned table")
     require(parallelism > 0, "parallelism must be positive")
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    import org.apache.spark.sql.types.{StringType, StructField}
     val v = currentVersion
     val schema = schemaOf(v)
     val oldFiles = filesOf(v)
-    val rows = oldFiles.map(partDirOf).distinct.map { d =>
-      val vals = d.split('/').toSeq.map { seg =>
-        val raw = seg.substring(seg.indexOf('=') + 1)
-        if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-        else ExternalCatalogUtils.unescapePathName(raw)
-      }
-      org.apache.spark.sql.Row.fromSeq(d +: vals)
-    }
-    val strSchema = StructType(StructField("_dir", StringType) +:
-      partitionCols.map(c => StructField(c, StringType)))
-    val matching = spark.createDataFrame(rows.asJava, strSchema)
-      .select(col("_dir") +: partitionCols.map(c =>
-        col(c).cast(schema(c).dataType).as(c)): _*)
-      .filter(partitionPredicate)
-      .select("_dir").collect().map(_.getString(0)).toSet
-    val (touchedRel, keptRel) = oldFiles.partition(f => matching.contains(partDirOf(f)))
+    val cond = MergeTable.conditionOf(spark, schema, partitionPredicate)
+    require(cond.deterministic && cond.references.forall(a => partitionCols.contains(a.name)),
+      s"compactPartitions on $root: not a deterministic partition predicate: $partitionPredicate")
+    val matching = keptBy(spark, v, oldFiles, partitionPredicate).toSet
+    val (touchedRel, keptRel) = oldFiles.partition(matching)
     if (touchedRel.isEmpty) { commitUnchanged(v, "OPTIMIZE"); return }
     val packed = readTouched(spark, v, touchedRel, pin = false)
       .repartition(parallelism, partitionCols.map(col): _*)
@@ -2689,15 +2573,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     * the pruners keep those files rather than guess.
     */
   private[lake] def statsDetail(version: Long)
-      : Map[String, Map[String, (String, String, Char)]] =
-    readCommit(version).statsLines.map { line =>
-      val parts = line.split("\t", -1)
-      val flag = if (parts.length >= 5 && parts(4).nonEmpty) parts(4).charAt(0) else '?'
-      (dec(parts(0)), dec(parts(1)), dec(parts(2)), dec(parts(3)), flag)
-    }.filterNot(_._2 == MergeTable.CountStatKey) // row counts are not column bounds
-      .groupBy(_._1).map { case (f, rows) =>
-        f -> rows.map(r => r._2 -> ((r._3, r._4, r._5))).toMap
-      }
+      : Map[String, Map[String, (String, String, Char)]] = readCommit(version).statsDetail
 
   /** Per-file ROW COUNTS recorded in the commit log (the count stat lines
     * [[collectStatsFor]] writes alongside min/max — Delta's
@@ -3002,7 +2878,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     * the constructor's `statsCols` only — re-run analyze after large
     * ingests if the analyzed columns differ, or construct the table with
     * the right `statsCols` to keep them fresh automatically.
-    * [[candidateFiles]] treats files lacking a column's stats
+    * [[ManifestFileIndex]] treats files lacking a column's stats
     * conservatively (kept), so mixed coverage degrades pruning, never
     * correctness.
     */
@@ -3027,56 +2903,29 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
   }
 
   /** The current snapshot's files that MIGHT contain a row with
-    * `column ∈ [lo, hi]`: a file is skipped when its recorded [min, max]
-    * doesn't intersect the range, or when it holds no non-null value of the
-    * column (BETWEEN never matches NULL). Files without recorded stats are
-    * kept — pruning is only ever an optimization, never a correctness
-    * assumption.
+    * `column ∈ [lo, hi]`: the files [[readRange]]'s scan keeps
+    * ([[ManifestFileIndex]]), found by planning it with no Spark job.
     */
   def candidateFiles(column: String, lo: Any, hi: Any): Seq[String] = {
     val v = currentVersion
-    val stats = statsDetail(v)
-    val numeric = schemaOf(v).fields.find(_.name == column).exists(f =>
-      f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
-    def le(a: String, b: String): Boolean =
-      if (numeric) BigDecimal(a) <= BigDecimal(b) else a <= b
-    filesOf(v).filter { f =>
-      stats.get(f).flatMap(_.get(column)) match {
-        case Some((_, _, 'N')) => false // all-NULL file: no row can match a range
-        case Some((mn, mx, fl)) if fl == 'V' || (mn.nonEmpty && mx.nonEmpty) =>
-          // 'V' makes an EMPTY-STRING bound a real value, not a null marker
-          try le(mn, hi.toString) && le(lo.toString, mx)
-          catch { case _: NumberFormatException => true } // unparsable: keep
-        case Some(_) => true // legacy line, empty bound: ambiguous — keep
-        case None    => true // no stats recorded for this file
-      }
-    }
+    keptBy(SparkSession.active, v, filesOf(v), col(column).between(lit(lo), lit(hi)))
   }
 
-  /** Range read with file skipping: only stats-overlapping files are
-    * scanned, then the exact predicate filters residually (stats prune
-    * files, not rows). Semantics = `read(spark).filter(col BETWEEN lo hi)`.
+  /** Range read with file skipping: `read(spark).filter(col BETWEEN lo
+    * AND hi)`, whose scan skips every file that cannot hold a row in range.
     */
-  def readRange(spark: SparkSession, column: String, lo: Any, hi: Any): DataFrame = {
-    val v = currentVersion
-    readFiles(spark, candidateFiles(column, lo, hi), schemaOf(v), colmapOf(v), dvsOf(v))
-      .filter(col(column).between(lit(lo), lit(hi)))
-  }
+  def readRange(spark: SparkSession, column: String, lo: Any, hi: Any): DataFrame =
+    read(spark).filter(col(column).between(lit(lo), lit(hi)))
 
   /** The subset of `files` whose PARTITION VALUES could satisfy
-    * `predicate` — automatic, SOUND probe pruning for the rewriting
-    * operators (DELETE / UPDATE / dv-DELETE / replaceWhere): the FULL
-    * predicate is evaluated over the manifest's distinct partition tuples
-    * (metadata-sized, no data scan), and a file is skipped only when its
-    * partition's rows cannot be predicate-TRUE. Pruning is only possible
-    * when the predicate references partition columns alone — a reference
-    * to any data column fails resolution against the tuple frame and
-    * falls back to every file (the conservative default; the probe is an
-    * optimization, never a correctness assumption). At 100 TB this turns
-    * `DELETE WHERE day = X` from a full-table probe into a one-partition
-    * scan with zero caller opt-in — the contrast with merge's
-    * `keysDeterminePartitions`, which needs a promise because merge's
-    * predicate is a key equality, not a partition predicate.
+    * `predicate` — the read set of a predicate DML's lost-race rebase
+    * ([[predicateConflict]]): the FULL predicate is evaluated over the
+    * files' distinct partition tuples (metadata-sized, no data scan), and
+    * a file is dropped only when its partition's rows cannot be
+    * predicate-TRUE. A predicate that reads data columns falls back to
+    * its partition-only and generated-column conjuncts, and to every file
+    * when there are none (the conservative default: a kept file is a
+    * conflict, never a wrong rebase).
     */
   private[lake] def partitionCandidates(spark: SparkSession, files: Seq[String],
                                         schema: StructType,
@@ -3103,20 +2952,9 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
                          exact: Boolean): Option[Seq[String]] = {
     if (files.isEmpty) return Some(files)
     if (partitionCols.isEmpty) return if (exact) None else Some(files)
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     import org.apache.spark.sql.types.{StringType, StructField}
-    def partDir(f: String): String = {
-      val segs = f.split('/')
-      segs.slice(1, segs.length - 1).mkString("/")
-    }
-    val rows = files.map(partDir).distinct.map { d =>
-      val vals = d.split('/').toSeq.map { seg =>
-        val raw = seg.substring(seg.indexOf('=') + 1)
-        if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-        else ExternalCatalogUtils.unescapePathName(raw)
-      }
-      org.apache.spark.sql.Row.fromSeq(d +: vals)
-    }
+    val rows = files.map(partDirOf).distinct.map(d =>
+      org.apache.spark.sql.Row.fromSeq(d +: partValuesOf(d)))
     val strSchema = StructType(StructField("_dir", StringType) +:
       partitionCols.map(c => StructField(c, StringType)))
     val typed = spark.createDataFrame(rows.asJava, strSchema)
@@ -3141,7 +2979,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
         .select("_dir").collect().map(_.getString(0)).toSet)
       catch { case scala.util.control.NonFatal(_) => None }) match {
         case None       => if (exact) None else Some(files)
-        case Some(dirs) => Some(files.filter(f => dirs.contains(partDir(f))))
+        case Some(dirs) => Some(files.filter(f => dirs.contains(partDirOf(f))))
       }
     deterministic match {
       case Some(false) => // nondeterministic: pruning would be unsound
@@ -3172,20 +3010,10 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
   private def derivedTuplePredicate(spark: SparkSession, schema: StructType,
                                     predicate: Column): Option[Column] =
     try {
-      import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Expression}
-      val frame = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      val cond = frame.filter(predicate).queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }
-      if (cond.isEmpty || !cond.get.deterministic) None
+      val cond = MergeTable.conditionOf(spark, schema, predicate)
+      if (!cond.deterministic) None
       else {
-        def split(e: Expression): Seq[Expression] = e match {
-          case CAnd(l, r) => split(l) ++ split(r)
-          case x          => Seq(x)
-        }
-        val fs = split(cond.get)
-          .flatMap(e => org.apache.spark.sql.GraftSqlShims.translateFilter(e))
+        val fs = translatedConjuncts(cond)
         val types = schema.fields.map(f => f.name -> f.dataType).toMap
         val partOnly = fs.filter(f =>
           f.references.nonEmpty && f.references.forall(partitionCols.contains))
@@ -3199,19 +3027,18 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
 
   // ---- per-file Bloom index (Delta bloom-filter-index analog) ----
 
-  private def bloomPath(colName: String, rel: String): Path =
-    // URL-encoded rel path: filename-safe and collision-free ('/' → %2F)
-    Paths.get(root, "bloomidx", colName, enc(rel) + ".bloom")
-
   /** Build (or rebuild) a per-file Bloom filter index over `colName` —
     * point-lookup file skipping for high-cardinality columns min/max
     * stats can't prune (Delta's bloom filter index, as SIDECAR files:
-    * `bloomidx/<col>/<flattened file path>.bloom`, one per data file,
-    * nothing in the commit log). One file-grouped aggregation pass
+    * `bloomidx/<physical col>/<flattened file path>.bloom`, one per data
+    * file, beside a `_type.json` naming the column's type; nothing in the
+    * commit log). Keyed by physical name, an index follows
+    * [[renameColumn]] and serves time travel to any version giving the
+    * column the same type. One file-grouped aggregation pass
     * (the [[collectStats]] shape): xxhash64 per value, `bloom_agg` per
     * file, KB-sized filters collected driver-side — metadata, never data.
     * A file REWRITTEN after indexing simply has no sidecar and is kept by
-    * [[bloomCandidateFiles]] unpruned — degradation, never wrong answers;
+    * the lookups unpruned — degradation, never wrong answers;
     * re-run after large rewrites. Requires a session with GraftExtensions
     * (the library's standard session — `bloom_agg` is registered there).
     */
@@ -3223,9 +3050,10 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     require(c.schema.fieldNames.contains(colName),
       s"buildBloomIndex on $root: no column '$colName' in " +
         s"(${c.schema.fieldNames.mkString(", ")})")
-    val dir = Paths.get(root, "bloomidx", colName)
+    val dir = Paths.get(root, "bloomidx", physOf(colmapOf(v), colName))
     if (Files.exists(dir)) deleteRecursively(dir) // rebuild covers the snapshot
     Files.createDirectories(dir)
+    Files.writeString(dir.resolve(ManifestFileIndex.BloomTypeFile), c.schema(colName).dataType.json)
     // Sidecars are written EXECUTOR-SIDE, straight out of the grouped
     // aggregate — at 100 TB (~10⁶ files) collecting one KB-sized filter
     // per file would put GBs on the driver and serialize 10⁶ Files.write
@@ -3254,11 +3082,10 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
                                  dvs: Map[String, (String, Long)] = Map.empty,
                                  estItemsPerFile: Long = 100000L): Unit = {
     if (cols.isEmpty || relFiles.isEmpty) return
-    cols.foreach(c => Files.createDirectories(Paths.get(root, "bloomidx", c)))
     // Local copies only: the closure must not capture `this` (MergeTable
     // is not serializable — by design, handles are driver objects).
     val rootStr = root
-    val colsStr = cols
+    val colsStr = cols.map(c => c -> physOf(colmap, c))
     val aggs = cols.map(c => expr(s"bloom_agg(`h_$c`, ${estItemsPerFile}L)").as(s"bf_$c"))
     readFiles(spark, relFiles, schema, colmap, dvs, fileCol = Some("_graft_file"))
       .select(col("_graft_file") +: cols.map(c => xxhash64(col(c)).as(s"h_$c")): _*)
@@ -3267,8 +3094,8 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
         rows.foreach { r =>
           // _graft_file is relPathCol — already the manifest-relative string
-          colsStr.foreach { c =>
-            val p = Paths.get(rootStr, "bloomidx", c,
+          colsStr.foreach { case (c, phys) =>
+            val p = Paths.get(rootStr, "bloomidx", phys,
               java.net.URLEncoder.encode(r.getAs[String]("_graft_file"),
                 StandardCharsets.UTF_8) + ".bloom")
             Files.write(p, r.getAs[Array[Byte]](s"bf_$c"))
@@ -3283,52 +3110,30 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     */
   def dropBloomIndex(column: Option[String] = None): Unit = {
     val base = Paths.get(root, "bloomidx")
-    val target = column.fold(base)(base.resolve)
+    val colmap = if (exists) columnMapping else Map.empty[String, String]
+    val target = column.fold(base)(c => base.resolve(physOf(colmap, c)))
     if (Files.exists(target)) deleteRecursively(target)
   }
 
   /** The current snapshot's files that MIGHT contain `column = value`:
-    * a file is skipped when its Bloom sidecar definitively excludes the
-    * value's hash; files without a sidecar (never indexed, or rewritten
-    * since) are kept — pruning is an optimization, never a correctness
-    * assumption (the [[candidateFiles]] discipline).
+    * the files [[readPoint]]'s scan keeps, found by planning it with no
+    * Spark job. A file is skipped when its Bloom sidecar excludes the
+    * value's hash, or when its partition, log stats or footer rule it out
+    * ([[ManifestFileIndex]]); a file without a sidecar (never indexed, or
+    * rewritten since) is kept by the Bloom step.
     */
   def bloomCandidateFiles(spark: SparkSession, column: String, value: Any): Seq[String] = {
     val v = currentVersion
-    bloomAdmitted(spark, column, value, schemaOf(v)(column).dataType, filesOf(v))
+    keptBy(spark, v, filesOf(v), col(column) === lit(value))
   }
 
-  private def bloomAdmitted(spark: SparkSession, column: String, value: Any,
-                            dt: org.apache.spark.sql.types.DataType,
-                            files: Seq[String]): Seq[String] = {
-    // hash the lookup value EXACTLY as the index did: Spark's own xxhash64
-    // over the column's type (a JVM-side reimplementation would silently
-    // diverge on type widths)
-    val h = spark.range(1)
-      .select(xxhash64(lit(value).cast(dt)).as("h")).head().getLong(0)
-    files.filter { f =>
-      val p = bloomPath(column, f)
-      !Files.exists(p) || {
-        val in = Files.newInputStream(p)
-        try org.apache.spark.util.sketch.BloomFilter.readFrom(in).mightContainLong(h)
-        finally in.close()
-      }
-    }
-  }
-
-  /** Point lookup with Bloom + min/max file skipping: scan only files
-    * that both stat-ranges and Bloom sidecars admit, then filter exactly.
-    * Semantics = `read(spark).filter(col === value)`; cost = O(admitted
-    * files) — on a high-cardinality key with a built index, typically one
-    * file per lookup instead of a full scan.
+  /** Point lookup with file skipping: `read(spark).filter(col === value)`,
+    * whose scan reads only the files that partitions, log stats, Bloom
+    * sidecars and footers admit — on a high-cardinality key with a built
+    * index, typically one file per lookup instead of a full scan.
     */
-  def readPoint(spark: SparkSession, column: String, value: Any): DataFrame = {
-    val v = currentVersion
-    val byStats = candidateFiles(column, value, value).toSet
-    val admitted = bloomCandidateFiles(spark, column, value).filter(byStats.contains)
-    readFiles(spark, admitted, schemaOf(v), colmapOf(v), dvsOf(v))
-      .filter(col(column) === lit(value))
-  }
+  def readPoint(spark: SparkSession, column: String, value: Any): DataFrame =
+    read(spark).filter(col(column) === lit(value))
 
   /** Z-order clustering compaction (Delta OPTIMIZE ZORDER analog): rewrite
     * the current snapshot ordered by the interleaved bits of the rank-
@@ -3345,7 +3150,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     require(zCols.nonEmpty, "zorderCompact requires at least one column")
     require(parallelism > 0, "parallelism must be positive")
     val v = currentVersion
-    val data = readFiles(spark, filesOf(v), schemaOf(v), colmapOf(v), dvsOf(v),
+    val data = readVersionFiles(spark, v, filesOf(v),
       withRowIds = rowTrackingEnabled) // row ids survive the rewrite verbatim
     // Per-type ORDER-PRESERVING projection to double (the rank-normalize
     // input): numerics/timestamps cast directly; dates via their day
@@ -3459,25 +3264,17 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     if (!props.get(MergeTable.AutoCompactProp).contains("true")) return
     val minN = props.get(MergeTable.AutoCompactMinFilesProp)
       .map(_.toInt).getOrElse(50)
-    def dirOf(f: String): String = {
-      val segs = f.split('/'); segs.slice(1, segs.length - 1).mkString("/")
-    }
     if (partitionCols.isEmpty) {
       if (filesOf(currentVersion).size >= minN) compact(spark)
     } else {
-      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      val byDir = filesOf(currentVersion).groupBy(dirOf)
-      val hot = newFiles.map(dirOf).distinct
+      val v = currentVersion
+      val byDir = filesOf(v).groupBy(partDirOf)
+      val hot = newFiles.map(partDirOf).distinct
         .filter(d => byDir.getOrElse(d, Nil).size >= minN)
       if (hot.nonEmpty) {
-        val pred = hot.map { d =>
-          d.split('/').toSeq.zip(partitionCols).map { case (seg, c) =>
-            val raw = seg.substring(seg.indexOf('=') + 1)
-            if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) col(c).isNull
-            else col(c) === lit(ExternalCatalogUtils.unescapePathName(raw))
-          }.reduce(_ && _)
-        }.reduce(_ || _)
-        compactPartitions(spark, pred)
+        val schema = schemaOf(v)
+        compactPartitions(spark, MergeTable.partitionSetPredicate(
+          partitionCols.map(c => c -> schema(c).dataType), hot.map(partValuesOf)))
       }
     }
   }
@@ -3748,9 +3545,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     val base = Paths.get(root).toAbsolutePath.normalize
     val mroot = base.resolve(MergeTable.SymlinkManifestDir)
     if (Files.exists(mroot)) deleteRecursively(mroot) // stale partitions must vanish
-    c.files.groupBy { f =>
-      val segs = f.split('/'); segs.slice(1, segs.length - 1).mkString("/")
-    }.foreach { case (part, fs) =>
+    c.files.groupBy(partDirOf).foreach { case (part, fs) =>
       val dir = if (part.isEmpty) mroot else mroot.resolve(part)
       Files.createDirectories(dir)
       Files.writeString(dir.resolve("manifest"),
@@ -3840,20 +3635,11 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
   def partitions(spark: SparkSession): DataFrame = {
     require(exists, s"MergeTable at $root does not exist")
     require(partitionCols.nonEmpty, s"MergeTable at $root is not partitioned")
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     import org.apache.spark.sql.types.{LongType, StringType, StructField}
     val schema = schemaOf(currentVersion)
-    val byDir = filesOf(currentVersion).groupBy { f =>
-      val segs = f.split('/')
-      segs.slice(1, segs.length - 1).mkString("/")
-    }
+    val byDir = filesOf(currentVersion).groupBy(partDirOf)
     val rows = byDir.toSeq.map { case (d, fs) =>
-      val vals = d.split('/').toSeq.map { seg =>
-        val raw = seg.substring(seg.indexOf('=') + 1)
-        if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-        else ExternalCatalogUtils.unescapePathName(raw)
-      }
-      org.apache.spark.sql.Row.fromSeq(vals :+ fs.size.toLong)
+      org.apache.spark.sql.Row.fromSeq(partValuesOf(d) :+ fs.size.toLong)
     }
     val strSchema = StructType(
       partitionCols.map(c => StructField(c, StringType)) :+
@@ -3933,7 +3719,9 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     * change would silently re-type every historical directory. Time
     * travel still reads old versions under their own (narrow) schema, and
     * carried-forward min/max stats compare numerically, so data skipping
-    * keeps pruning across the change.
+    * keeps pruning across the change. A Bloom index on the column is
+    * dropped: its sidecars hash the narrow type, which a lookup under the
+    * wide type would miss.
     */
   def alterColumnType(colName: String, newType: org.apache.spark.sql.types.DataType): Unit = {
     require(exists, s"MergeTable at $root does not exist")
@@ -3952,6 +3740,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
         "byte→short→int→long, float→double, byte/short/int→double)")
     val evolved = StructType(c.schema.fields.map(f =>
       if (f.name == colName) f.copy(dataType = newType) else f))
+    dropBloomIndex(Some(colName))
     commit(v + 1, c.files, evolved, c.statsLines, op = "ALTER COLUMN")
   }
 
@@ -4717,12 +4506,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     * unknown and fall back).
     */
   private[lake] def nullCounts(version: Long): Map[(String, String), Long] =
-    readCommit(version).statsLines.flatMap { line =>
-      val parts = line.split("\t", -1)
-      if (parts.length >= 6 && dec(parts(1)) != MergeTable.CountStatKey)
-        parts(5).toLongOption.map(n => (dec(parts(0)), dec(parts(1))) -> n)
-      else None
-    }.toMap
+    readCommit(version).nullCounts
 
   /** Per-(file, column) EXACT integral sums from the stats lines' 7th
     * field; a file whose column is all-NULL records "" and is absent here
@@ -4951,16 +4735,15 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
       Timing.time("writeData.job")(pw.parquet(s"$root/$dataDir"))
     }
     // Bloom index freshness: once an index exists for a column (the
-    // bloomidx/<col> dir), every write builds sidecars for ITS new files
+    // bloomidx/<physical col> dir), every write builds sidecars for ITS new files
     // right here — one extra scan of just-written data, the price Delta
     // pays inline too. Without this, post-build files silently degrade to
     // "keep" on every point lookup and the index decays with table churn.
-    val idx = Paths.get(root, "bloomidx")
-    if (Files.exists(idx)) {
+    if (Files.exists(Paths.get(root, "bloomidx"))) {
       val logical = StructType(df0.schema.fields.filterNot(_.name == MergeTable.RowIdCol))
-      val bloomCols = Files.list(idx).iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(logical.fieldNames.contains).toSeq.sorted
+      val bloomCols = logical.fields.toSeq.filter(f =>
+        ManifestFileIndex.bloomIndexType(root, physOf(colmap, f.name)).contains(f.dataType))
+        .map(_.name)
       if (bloomCols.nonEmpty) {
         val newRel = listParquet(Paths.get(root, dataDir)).map(relativize)
         buildBloomSidecars(df0.sparkSession, newRel, logical, colmap, bloomCols)
@@ -5953,8 +5736,9 @@ object MergeTable {
     *  - ranges: only for shapes monotone (and non-null-for-non-null) over
     *    the base column's actual type, and always widened to inclusive
     *    bounds (E need not be injective).
-    * E(v) evaluates through Spark itself on a one-row frame — the exact
-    * semantics the write path used to derive the partition values.
+    * E(v) evaluates through Spark itself on a one-row local frame — the
+    * exact semantics the write path used to derive the partition values,
+    * folded on the driver with no Spark job.
     */
   private[lake] def derivedPartitionConjuncts(
       spark: SparkSession, conjuncts: Seq[sources.Filter],
@@ -5963,8 +5747,8 @@ object MergeTable {
     def eval(exprText: String, c: String, v: Any): Option[Any] =
       try {
         val dt = types(c)
-        Option(spark.range(1).select(lit(v).cast(dt).as(c))
-          .select(expr(exprText).as("r")).head.get(0))
+        Option(spark.createDataFrame(java.util.List.of(Row()), new StructType())
+          .select(lit(v).cast(dt).as(c)).select(expr(exprText).as("r")).head.get(0))
       } catch { case scala.util.control.NonFatal(_) => None }
     gens.flatMap { case (p, exprText) =>
       val t = exprText.toLowerCase.replaceAll("[\\s`]", "")
@@ -5972,6 +5756,9 @@ object MergeTable {
         t match {
           case shape.re(c) if types.contains(c) =>
             val monotone = shape.monotone(types(c))
+            // a range bound on c derives an inclusive one on p
+            def bound(v: Any, mk: (String, Any) => sources.Filter): Seq[sources.Filter] =
+              if (v == null || !monotone) Nil else eval(exprText, c, v).map(mk(p, _)).toSeq
             conjuncts.flatMap {
               case sources.EqualTo(`c`, v) if v != null =>
                 eval(exprText, c, v).map(r => sources.EqualTo(p, r)).toSeq
@@ -5981,14 +5768,10 @@ object MergeTable {
                 val rs = vs.toSeq.map(v => eval(exprText, c, v))
                 if (rs.exists(_.isEmpty)) Nil
                 else Seq(sources.In(p, rs.flatten.distinct.toArray))
-              case sources.GreaterThan(`c`, v) if v != null && monotone =>
-                eval(exprText, c, v).map(r => sources.GreaterThanOrEqual(p, r)).toSeq
-              case sources.GreaterThanOrEqual(`c`, v) if v != null && monotone =>
-                eval(exprText, c, v).map(r => sources.GreaterThanOrEqual(p, r)).toSeq
-              case sources.LessThan(`c`, v) if v != null && monotone =>
-                eval(exprText, c, v).map(r => sources.LessThanOrEqual(p, r)).toSeq
-              case sources.LessThanOrEqual(`c`, v) if v != null && monotone =>
-                eval(exprText, c, v).map(r => sources.LessThanOrEqual(p, r)).toSeq
+              case sources.GreaterThan(`c`, v) => bound(v, sources.GreaterThanOrEqual)
+              case sources.GreaterThanOrEqual(`c`, v) => bound(v, sources.GreaterThanOrEqual)
+              case sources.LessThan(`c`, v) => bound(v, sources.LessThanOrEqual)
+              case sources.LessThanOrEqual(`c`, v) => bound(v, sources.LessThanOrEqual)
               case _ => Nil
             }
           case _ => Nil
@@ -6018,6 +5801,31 @@ object MergeTable {
     }.sql
   }
 
+  /** Rows whose partition tuple is one of `tuples` (values in `cols`'
+    * order, each cast to its column's type, NULL for the default
+    * partition): ONE `struct(cols) INSET {...}` at any set size, where an
+    * `Or` of per-tuple equalities grows as deep as the set and a literal
+    * `IN` list as long. The set orders its structs with NULL fields equal,
+    * so a NULL value keeps `IS NULL` semantics. Partition columns only, so
+    * it reaches Spark's partition pruning in [[ManifestFileIndex.listFiles]].
+    */
+  private[graft] def partitionSetPredicate(cols: Seq[(String, org.apache.spark.sql.types.DataType)],
+                                           tuples: Seq[Seq[Any]]): Column = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, InSet, Literal}
+    val tz = Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
+    val set: Set[Any] = tuples.map(t => new GenericInternalRow(
+      cols.lazyZip(t).map { case ((_, dt), v) => Cast(Literal(v), dt, tz).eval() }.toArray)).toSet
+    org.apache.spark.sql.GraftSqlShims.column(InSet(
+      org.apache.spark.sql.GraftSqlShims.expression(struct(cols.map(c => col(c._1)): _*)), set))
+  }
+
+  /** `predicate` resolved against `schema`: its analyzed filter condition. */
+  private[lake] def conditionOf(spark: SparkSession, schema: StructType,
+                                predicate: Column): org.apache.spark.sql.catalyst.expressions.Expression =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema).filter(predicate)
+      .queryExecution.analyzed.asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Filter]
+      .condition
+
   /** Top-level conjuncts of a pushed-filter array (Spark hands a scan the
     * predicate as an implicitly-ANDed array whose elements may themselves
     * be `And` trees).
@@ -6030,7 +5838,7 @@ object MergeTable {
 
   /** `sources.Filter` → `Column` — the ONE translation shared by the
     * connector's bridge re-push (filters reach the inner parquet scan's
-    * `PushedFilters`), the partition prune of [[MergeTable.pruneFilesFor]],
+    * `PushedFilters`), the filtered reads of [[MergeTable.pruneFilesFor]],
     * and the connector's `canDeleteWhere`/`canOverwrite` guards. Partial on
     * purpose: an untranslatable filter is simply not pushed/pruned — Spark
     * always re-evaluates the full predicate above the scan.

@@ -301,7 +301,7 @@ object PersistedAnnIndex {
   /** Which path the last [[searchAdaptive]] took — `"adc nProbe=N/M"`
     * (N probed of M cells: N=M is full coverage) or `"exact-subset"`.
     * Observability for specs only (single-JVM), exactly the
-    * [[graft.lake.MergeTable.lastPruneVia]] idiom. The coverage fraction
+    * `MergeTable.lastStreamPrune` idiom. The coverage fraction
     * is the honest recall signal on weakly-clustered data: IVF recall at
     * partial probe approaches nProbe/nCells when neighbors spread evenly
     * across cells — the documented speed/recall tradeoff, not a defect —

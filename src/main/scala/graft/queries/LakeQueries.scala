@@ -1965,8 +1965,7 @@ object LakeQueries {
         val orders = t(s, dir, "orders")
         val table = new MergeTable(root) // NO statsCols
         table.overwrite(orders.repartitionByRange(8, col("o_orderkey")))
-        require(table.candidateFiles("o_orderkey", 100, 200).size ==
-          table.filesOf(0).size, "without stats every file is a candidate")
+        require(table.statsOf(0).isEmpty, "no stats before analyze")
         graft.sqlapi.LakeSql.run(s,
           "ANALYZE TABLE tbl COMPUTE STATISTICS FOR COLUMNS o_orderkey",
           Map("tbl" -> table))

@@ -5,7 +5,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode}
+import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
@@ -256,13 +256,6 @@ object GraftDataSource {
       .filter(_.nonEmpty).map(_.stripPrefix("\"").stripSuffix("\"")).toSeq
   }
 
-  /** sources.Filter → Column, for re-applying pushed filters inside the
-    * bridged DataFrame (where parquet pushdown can act on them). One
-    * shared implementation with the data-skipping pruner —
-    * [[MergeTable.translateFilter]].
-    */
-  private[sources] def translate(f: Filter): Option[Column] =
-    MergeTable.translateFilter(f)
 }
 
 /** The V2 [[Table]] over one MergeTable root: current-snapshot reads
@@ -295,15 +288,13 @@ final class GraftTable(root: String, declaredParts: Seq[String],
 
   private def cdfMode: Boolean = opts.get("readchangefeed").exists(_.toBoolean)
 
-  /** The scan's base DataFrame. `filters` (the builder's pushed
-    * predicates) drive MergeTable's automatic data skipping on the
-    * snapshot path — partition values, per-file min/max stats, and Bloom
-    * sidecars prune the file list before any footer is opened
-    * ([[MergeTable.readVersionWhere]]). CDF reads ignore them (feed files
-    * carry no stats).
+  /** The scan's base DataFrame: the pinned snapshot's read, or the
+    * change feed. The bridge filters it by the pushed predicates, so the
+    * snapshot's [[graft.lake.ManifestFileIndex]] skips files by partition
+    * values, log stats, Bloom sidecars and footers before any data file is
+    * opened.
     */
-  private[sources] def baseFrame(spark: org.apache.spark.sql.SparkSession,
-                                 filters: Seq[Filter] = Nil): DataFrame = {
+  private[sources] def baseFrame(spark: org.apache.spark.sql.SparkSession): DataFrame = {
     val t = MergeTable.open(root)
     if (cdfMode) {
       // Delta's CDF range options: version bounds directly, or timestamp
@@ -325,7 +316,7 @@ final class GraftTable(root: String, declaredParts: Seq[String],
         .getOrElse(t.currentVersion)
       t.changes(spark, from, to)
     }
-    else t.readVersionWhere(spark, pinnedVersion(t), filters)
+    else t.readVersion(spark, pinnedVersion(t))
   }
 
   private[sources] def resolvedSchema: StructType = {
@@ -453,12 +444,12 @@ final class GraftTable(root: String, declaredParts: Seq[String],
     override def canDeleteWhere(filters: Array[Filter]): Boolean =
       !cdfMode && opts.get("versionasof").isEmpty &&
         opts.get("timestampasof").isEmpty &&
-        filters.forall(f => GraftDataSource.translate(f).isDefined)
+        filters.forall(f => MergeTable.translateFilter(f).isDefined)
 
     override def deleteWhere(filters: Array[Filter]): Unit = {
       val spark = org.apache.spark.sql.SparkSession.active
       val t = MergeTable.open(root)
-      val pred = filters.flatMap(GraftDataSource.translate(_))
+      val pred = filters.flatMap(MergeTable.translateFilter(_))
         .reduceOption(_ && _).getOrElse(lit(true))
       val cdf = t.properties.get(MergeTable.ChangeFeedProp).contains("true")
       val dv = t.properties.get(MergeTable.DeletionVectorsProp).contains("true") &&
@@ -512,8 +503,9 @@ final class GraftTable(root: String, declaredParts: Seq[String],
   * `.explain` on a `format("graft")` read shows the pruned `ReadSchema`
   * and the filters under `PushedFilters` on the inner parquet scan.
   * Every filter is also returned as residual, so Spark re-applies the
-  * exact predicate above the scan (pushdown is an optimization, never a
-  * correctness dependency — the [[MergeTable.candidateFiles]] discipline).
+  * exact predicate above the scan: pushdown only lets the scan's
+  * [[graft.lake.ManifestFileIndex]] skip files that hold no matching row,
+  * never decides which rows come back.
   *
   * Aggregate pushdown ([[SupportsPushDownAggregates]], the JDBC-connector
   * shape): `count(*)` / `min` / `max` — optionally grouped by partition
@@ -537,7 +529,7 @@ final class GraftScanBuilder(table: GraftTable)
   private var aggResult: Option[(StructType, Seq[Row])] = None
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(f => GraftDataSource.translate(f).isDefined)
+    pushed = filters.filter(f => MergeTable.translateFilter(f).isDefined)
     // PARTITION-ONLY filters are CONSUMED (not residual): the bridged frame
     // re-applies every pushed filter with Spark's own evaluation, so
     // correctness never depends on file pruning — and with no residual
@@ -608,8 +600,8 @@ final class GraftV1BridgeScan(table: GraftTable, pruned: Option[StructType],
 
   override def toV1TableScan[T <: BaseRelation with TableScan](
       context: SQLContext): T = {
-    val base = table.baseFrame(context.sparkSession, filters.toSeq)
-    val filtered = filters.flatMap(GraftDataSource.translate)
+    val base = table.baseFrame(context.sparkSession)
+    val filtered = filters.flatMap(MergeTable.translateFilter)
       .foldLeft(base)(_ filter _)
     // an empty required schema (count(*)) projects zero columns — the
     // bridged rows must still match readSchema exactly
@@ -932,7 +924,7 @@ final class GraftWriteBuilder(table: MergeTable,
   override def truncate(): WriteBuilder = { overwriteAll = true; this }
 
   override def canOverwrite(filters: Array[Filter]): Boolean =
-    filters.forall(f => GraftDataSource.translate(f).isDefined)
+    filters.forall(f => MergeTable.translateFilter(f).isDefined)
 
   override def overwrite(filters: Array[Filter]): WriteBuilder = {
     if (filters.isEmpty || filters.forall(_ == sources.AlwaysTrue()))
@@ -954,7 +946,7 @@ final class GraftWriteBuilder(table: MergeTable,
             require(txn.isEmpty,
               "txnAppId/txnVersion are not supported on filtered overwrites — " +
                 "use append/overwrite, or the API's replaceWhere")
-            val pred = overwriteFilters.flatMap(GraftDataSource.translate(_))
+            val pred = overwriteFilters.flatMap(MergeTable.translateFilter(_))
               .reduce(_ && _) // canOverwrite vouched every filter translates
             table.overwriteWhere(data.sparkSession, pred, data)
           }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, OverwritePartit
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 
 import graft.lake.MergeTable
 
@@ -58,12 +58,9 @@ case class GraftDynamicOverwriteCommand(root: String, query: LogicalPlan)
       val touched = data.select(pcols.map(col): _*).distinct().collect()
       if (touched.isEmpty) table.append(data.limit(0)) // no-op commit, Delta too
       else {
-        val pred = touched.toSeq.map { row =>
-          pcols.zipWithIndex.map { case (c, i) =>
-            if (row.isNullAt(i)) col(c).isNull else col(c) === lit(row.get(i))
-          }.reduce(_ && _)
-        }.reduce(_ || _)
-        table.overwriteWhere(session, pred, data)
+        val schema = table.schemaOf(table.currentVersion)
+        table.overwriteWhere(session, MergeTable.partitionSetPredicate(
+          pcols.map(c => c -> schema(c).dataType), touched.toSeq.map(_.toSeq)), data)
       }
     }
     Nil

@@ -16,6 +16,37 @@ trait SparkSpec extends AnyFunSuite {
     p.toString
   }
 
+  /** `body` with the session confs `kvs` set, restored after. */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally olds.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Runs `d` and returns how many data files its graft scans opened
+    * (the scans' `numFiles`; dv sidecar scans not counted).
+    */
+  def filesScanned(d: org.apache.spark.sql.DataFrame): Long = {
+    d.collect()
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(d.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec
+            if s.relation.location.isInstanceOf[graft.lake.ManifestFileIndex] => s
+      }.map(_.metrics("numFiles").value).sum
+  }
+
+  /** Snapshot `version` of `t` filtered by `filters`, as the connector's
+    * scan filters it.
+    */
+  def readWhere(t: graft.lake.MergeTable, version: Long,
+                filters: Seq[org.apache.spark.sql.sources.Filter]): org.apache.spark.sql.DataFrame =
+    filters.flatMap(graft.lake.MergeTable.translateFilter)
+      .foldLeft(t.readVersion(spark, version))(_ filter _)
+
   /** The number of Spark jobs started while `body` runs, with its result. */
   def jobCount[A](body: => A): (Int, A) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -4,12 +4,15 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources
 
-/** Automatic data skipping ([[MergeTable.pruneFilesFor]] /
-  * [[MergeTable.readVersionWhere]]) — Delta's manifest-level file pruning
-  * applied to every connector scan with zero caller opt-in. The invariant
-  * under test everywhere: pruning selects FILES, never rows — for any
-  * filter set, (pruned scan + exact predicate) ≡ (full scan + exact
-  * predicate), and a file is dropped only when no row in it can match.
+/** Automatic data skipping: [[ManifestFileIndex]]'s `listFiles`, and the
+  * entry points that read its kept set ([[MergeTable.pruneFilesFor]],
+  * filtered `readVersion`s, `candidateFiles`, `readRange`,
+  * `readPoint`, `bloomCandidateFiles`, the connector scan) — Delta's
+  * manifest-level file pruning applied to every scan with zero caller
+  * opt-in. The invariant under test everywhere: pruning selects FILES,
+  * never rows — for any filter set, (pruned scan + exact predicate) ≡
+  * (full scan + exact predicate), and a file is dropped only when no row
+  * in it can match.
   */
 class DataSkippingSpec extends SparkSpec {
   import spark.implicits._
@@ -48,7 +51,7 @@ class DataSkippingSpec extends SparkSpec {
     // equivalence: pruned read + predicate == full read + predicate
     val full = t.read(spark).filter(col("k") >= 9 && col("k") < 11)
       .select("k", "v", "p").collect().map(_.toString).sorted.toSeq
-    val pruned = t.readVersionWhere(spark, t.currentVersion,
+    val pruned = readWhere(t, t.currentVersion,
         Seq(sources.GreaterThanOrEqual("k", 9L), sources.LessThan("k", 11L)))
       .filter(col("k") >= 9 && col("k") < 11)
       .select("k", "v", "p").collect().map(_.toString).sorted.toSeq
@@ -63,7 +66,7 @@ class DataSkippingSpec extends SparkSpec {
     // tightness: no admitted-file check may drop a matching row
     val hit = t.pruneFilesFor(spark, t.currentVersion,
       Seq(sources.EqualTo("v", "v15")))
-    val viaRead = t.readVersionWhere(spark, t.currentVersion,
+    val viaRead = readWhere(t, t.currentVersion,
       Seq(sources.EqualTo("v", "v15"))).filter(col("v") === "v15").count()
     assert(viaRead === 1L)
     assert(hit.nonEmpty)
@@ -76,10 +79,12 @@ class DataSkippingSpec extends SparkSpec {
     val kept = t.pruneFilesFor(spark, t.currentVersion,
       Seq(sources.EqualTo("k", 5L)))
     assert(kept === t.filesOf(t.currentVersion))
-    // untranslatable / unsupported filters: no pruning either
+    // untranslatable / unsupported filters: no pruning either (footer
+    // skipping off: only the log decides here)
     val t2 = statsTable("skip_weird")
-    val kept2 = t2.pruneFilesFor(spark, t2.currentVersion,
-      Seq(sources.Or(sources.EqualTo("k", 1L), sources.EqualTo("v", "v25"))))
+    val kept2 = withConf("spark.sql.parquet.filterPushdown" -> "false")(
+      t2.pruneFilesFor(spark, t2.currentVersion,
+        Seq(sources.Or(sources.EqualTo("k", 1L), sources.EqualTo("v", "v25")))))
     assert(kept2 === t2.filesOf(t2.currentVersion))
   }
 
@@ -97,7 +102,7 @@ class DataSkippingSpec extends SparkSpec {
     // nulls-free p=a file is proven out, the all-NULL p=b file stays
     val forIsNull = t.pruneFilesFor(spark, t.currentVersion, Seq(sources.IsNull("k")))
     assert(forIsNull.size === 1 && forIsNull.head.contains("p=b"))
-    assert(t.readVersionWhere(spark, t.currentVersion, Seq(sources.IsNull("k")))
+    assert(readWhere(t, t.currentVersion, Seq(sources.IsNull("k")))
       .filter(col("k").isNull).count() === 2L)
   }
 
@@ -118,7 +123,7 @@ class DataSkippingSpec extends SparkSpec {
       Seq(sources.GreaterThan("d", java.sql.Date.valueOf("2026-01-03"))))
     assert(lateD.size === 1 && lateD.head.contains("p=1"))
     // equivalence on the timestamp cut
-    assert(t.readVersionWhere(spark, t.currentVersion,
+    assert(readWhere(t, t.currentVersion,
         Seq(sources.GreaterThan("ts", cutTs)))
       .filter(col("ts") > lit(cutTs)).count() ===
       t.read(spark).filter(col("ts") > lit(cutTs)).count())
@@ -137,7 +142,7 @@ class DataSkippingSpec extends SparkSpec {
     val hit = t.pruneFilesFor(spark, t.currentVersion,
       Seq(sources.EqualTo("v", "key42")))
     assert(hit.size === 1 && hit.head.contains("p=0"))
-    assert(t.readVersionWhere(spark, t.currentVersion,
+    assert(readWhere(t, t.currentVersion,
         Seq(sources.EqualTo("v", "key42")))
       .filter(col("v") === "key42").count() === 1L)
   }
@@ -185,6 +190,51 @@ class DataSkippingSpec extends SparkSpec {
     assert(t.readPoint(spark, "v", "k75").count() === 1L)
   }
 
+  test("widening a Bloom-indexed column keeps equality reads exact") {
+    // sidecars hash the values as INT; after the widening a lookup hashes
+    // the same value as LONG, which xxhash64 tells apart
+    val t = new MergeTable(scratch("skip_bloom_widen"), Nil)
+    t.overwrite(spark.range(40).select(col("id").cast("int").as("k")).repartition(2))
+    t.buildBloomIndex(spark, "k")
+    val narrow = t.currentVersion
+    t.alterColumnType("k", org.apache.spark.sql.types.LongType)
+    t.append(spark.range(40, 60).select(col("id").as("k")).repartition(1))
+    for (k <- Seq(7L, 45L)) {
+      assert(t.read(spark).filter(col("k") === k).count() === 1L, s"read().filter($k)")
+      assert(t.readPoint(spark, "k", k).count() === 1L, s"readPoint($k)")
+    }
+    // an index rebuilt as LONG does not serve the version that reads k as INT
+    t.buildBloomIndex(spark, "k")
+    assert(t.bloomCandidateFiles(spark, "k", 45L).size === 1)
+    assert(t.readVersion(spark, narrow).filter(col("k") === 7).count() === 1L, "time travel")
+  }
+
+  test("a Bloom index follows renames: a reused logical name reads its own data") {
+    // a -> b, then c -> a: the index built on the first `a` hashed what is
+    // now `b`, and must neither skip files for the new `a` nor stop
+    // serving `b` or time travel to the first `a`
+    val t = new MergeTable(scratch("skip_bloom_rename"), Nil)
+    t.overwrite(spark.range(40).select(col("id").as("a"), (col("id") + 1000).as("c"))
+      .repartition(4))
+    t.buildBloomIndex(spark, "a")
+    val v0 = t.currentVersion
+    t.renameColumn("a", "b")
+    t.renameColumn("c", "a")
+    assert(t.read(spark).filter(col("a") === 1005L).count() === 1L, "read().filter")
+    assert(t.readPoint(spark, "a", 1005L).count() === 1L, "readPoint")
+    assert(t.bloomCandidateFiles(spark, "b", 5L).size === 1, "the index still serves b")
+    assert(t.readVersion(spark, v0).filter(col("a") === 5L).count() === 1L, "time travel")
+    t.buildBloomIndex(spark, "a")
+    assert(t.bloomCandidateFiles(spark, "a", 1006L).size === 1, "a rebuilt on the new a")
+    assert(t.readVersion(spark, v0).filter(col("a") === 6L).count() === 1L, "time travel")
+    t.delete(spark, col("a") === 1005L)
+    assert(t.read(spark).filter(col("b") === 5L).count() === 0L, "delete")
+    t.merge(spark, Seq((77L, 1007L)).toDF("b", "a"), Seq("a"))
+    assert(t.read(spark).filter(col("a") === 1007L).select("b").as[Long].collect().toSeq ===
+      Seq(77L), "merge")
+    assert(t.read(spark).count() === 39L)
+  }
+
   test("the connector scan prunes automatically and stays exact") {
     val t = statsTable("skip_conn")
     val root = t.root
@@ -193,12 +243,12 @@ class DataSkippingSpec extends SparkSpec {
     assert(viaConn.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
       .toSeq === Seq((15L, "v15", "1")))
     // the bridged plan's parquet scan reads ONLY the admitted file: the
-    // pruned frame is what the V1 bridge wraps, so its inputFiles are the
-    // file-skipping result, not the full manifest
-    val pruned = t.readVersionWhere(spark, t.currentVersion,
+    // pruned frame is what the V1 bridge wraps, and its scan's file index
+    // keeps the file-skipping result, not the full manifest
+    val pruned = readWhere(t, t.currentVersion,
       Seq(sources.EqualTo("k", 15L)))
-    assert(pruned.inputFiles.length === 1)
-    assert(t.read(spark).inputFiles.length === 3)
+    assert(filesScanned(pruned) === 1L)
+    assert(filesScanned(t.read(spark)) === 3L)
   }
 
   test("empty-string minimum is a value, not a null marker") {
@@ -210,9 +260,9 @@ class DataSkippingSpec extends SparkSpec {
     t.overwrite(df.repartition(1))
     val forEq = t.pruneFilesFor(spark, t.currentVersion, Seq(sources.EqualTo("v", "zebra")))
     assert(forEq.exists(_.contains("p=a")), "the empty-min file holds 'zebra'")
-    assert(t.readVersionWhere(spark, t.currentVersion,
+    assert(readWhere(t, t.currentVersion,
       Seq(sources.EqualTo("v", "zebra"))).filter(col("v") === "zebra").count() === 1L)
-    assert(t.readVersionWhere(spark, t.currentVersion,
+    assert(readWhere(t, t.currentVersion,
       Seq(sources.EqualTo("v", ""))).filter(col("v") === "").count() === 1L)
     // and candidateFiles (the readRange path) agrees
     assert(t.candidateFiles("v", "zebra", "zebra").exists(_.contains("p=a")))
@@ -231,7 +281,7 @@ class DataSkippingSpec extends SparkSpec {
       mn.length <= MergeTable.StatsMaxLen && mx.length <= MergeTable.StatsMaxLen + 1 })
     // soundness: every stored value is still found through a pruned read
     for (v <- Seq(longA, longZ, "k" * 500, "m"))
-      assert(t.readVersionWhere(spark, t.currentVersion,
+      assert(readWhere(t, t.currentVersion,
         Seq(sources.EqualTo("v", v))).filter(col("v") === v).count() === 1L, s"lost $v")
     // tightness: "j" sits inside p=a's a..z span but below p=b's
     // truncated "kkk…" minimum — truncation still prunes p=b
@@ -329,7 +379,7 @@ class DataSkippingSpec extends SparkSpec {
     assert(rg.nonEmpty && rg.forall(_.contains("y=2026")))
     // soundness: pruned read + exact predicate ≡ full read + predicate
     val pred = col("d") >= lit(java.sql.Date.valueOf("2026-01-01"))
-    assert(t.readVersionWhere(spark, t.currentVersion,
+    assert(readWhere(t, t.currentVersion,
         Seq(sources.GreaterThanOrEqual("d", java.sql.Date.valueOf("2026-01-01"))))
       .filter(pred).count() === t.read(spark).filter(pred).count())
     // IN derives a value set PER generated column — the admitted files are
@@ -367,13 +417,37 @@ class DataSkippingSpec extends SparkSpec {
     assert(t.read(spark).count() === 23)
   }
 
+  test("DML probes reach partition pruning in listFiles: footers of other partitions stay unread") {
+    // no stats: a data conjunct is tested on footers, so the footers read
+    // by each DML are those of the files its partition conjunct kept
+    val t = new MergeTable(scratch("skip_dmlparts"), Seq("p"))
+    t.overwrite(spark.range(60).select(col("id").as("k"),
+      (col("id") % 3).cast("string").as("p")).repartition(2))
+    def partFiles(p: String) = t.filesOf(t.currentVersion).count(_.contains(s"p=$p/"))
+    def footersRead(body: => Unit): Long = {
+      val before = ManifestFileIndex.footerReads.get
+      body
+      ManifestFileIndex.footerReads.get - before
+    }
+    val in1 = partFiles("1")
+    assert(in1 > 0 && in1 < t.filesOf(t.currentVersion).size)
+    assert(footersRead(t.delete(spark, col("p") === "1" && col("k") > 40L)) === in1)
+    val in2 = partFiles("2")
+    assert(footersRead(t.deleteVectorized(spark, col("p") === "2" && col("k") > 50L)) === in2)
+    val in0 = partFiles("0")
+    assert(footersRead(t.updateVectorized(spark, col("p") === "0" && col("k") > 50L,
+      Map("k" -> (col("k") + 1000L)))) === in0)
+    assert(t.read(spark).count() === 60L - 6L - 3L)
+    assert(t.read(spark).filter(col("k") > 1000L).count() === 3L)
+  }
+
   test("pruning survives rename (re-keyed stats) and stays off for dropped columns") {
     val t = statsTable("skip_rename")
     t.renameColumn("k", "kk")
     val hit = t.pruneFilesFor(spark, t.currentVersion,
       Seq(sources.EqualTo("kk", 15L)))
     assert(hit.size === 1 && hit.head.contains("p=1"))
-    assert(t.readVersionWhere(spark, t.currentVersion,
+    assert(readWhere(t, t.currentVersion,
         Seq(sources.EqualTo("kk", 15L)))
       .filter(col("kk") === 15).count() === 1L)
   }
@@ -446,8 +520,10 @@ class DataSkippingSpec extends SparkSpec {
     val keys = (Seq(30000000L, 30000950L) ++
       Seq.fill(100000 - 2)(rnd.nextLong(files * 10000000L))).map(Long.box)
     assert(keys.size === 100000)
-    val got = t.pruneFilesFor(spark, v, Seq(sources.In("k", keys.toArray[Any])))
-    assert(t.lastPruneVia === "driver")
+    val footers = ManifestFileIndex.footerReads.get
+    val (jobs, got) = jobCount(t.pruneFilesFor(spark, v, Seq(sources.In("k", keys.toArray[Any]))))
+    assert(jobs === 0)
+    assert(ManifestFileIndex.footerReads.get === footers, "the log decides every file")
     val stats = t.statsDetail(v)
     val want = t.filesOf(v).filter { f =>
       val (mn, mx, _) = stats(f)("k")
@@ -514,14 +590,14 @@ class DataSkippingSpec extends SparkSpec {
         col("p") === "3" && col("k") > 39L, Set("3")),
       (Seq(sources.EqualTo("p", "0")), col("p") === "0", Set()))
     for ((fs, pred, want) <- shapes) {
-      val kept = t.pruneFilesFor(spark, v, fs)
-      assert(t.lastPruneVia === "driver", s"$fs")
+      val (jobs, kept) = jobCount(t.pruneFilesFor(spark, v, fs))
+      assert(jobs === 0, s"$fs")
       assert(parts(kept) === want, s"kept partitions for $fs")
       // pruned scan + predicate ≡ full scan + predicate
       assert(rowsOf(t.readVersionFiles(spark, v, kept).filter(pred)) ===
         rowsOf(t.read(spark).filter(pred)), s"rows for $fs")
     }
-    assert(t.readVersionWhere(spark, v, Seq(sources.EqualTo("p", "1")))
+    assert(readWhere(t, v, Seq(sources.EqualTo("p", "1")))
       .select("k").as[Long].collect().sorted === (10L to 19L).toArray)
   }
 
@@ -530,12 +606,13 @@ class DataSkippingSpec extends SparkSpec {
     val v0 = t.currentVersion
     t.append(Seq((50L, "v50", "4")).toDF("k", "v", "p"))
     val fs = Seq(sources.EqualTo("p", "4"))
-    assert(t.pruneFilesFor(spark, v0, fs).isEmpty, "partition 4 does not exist at v0")
-    assert(t.lastPruneVia === "driver")
-    assert(t.readVersionWhere(spark, v0, fs).count() === 0L)
+    val (jobs, atV0) = jobCount(t.pruneFilesFor(spark, v0, fs))
+    assert(atV0.isEmpty, "partition 4 does not exist at v0")
+    assert(jobs === 0)
+    assert(readWhere(t, v0, fs).count() === 0L)
     val now = t.pruneFilesFor(spark, t.currentVersion, fs)
     assert(parts(now) === Set("4"))
-    assert(t.readVersionWhere(spark, t.currentVersion, fs)
+    assert(readWhere(t, t.currentVersion, fs)
       .select("k").as[Long].collect().toSeq === Seq(50L))
   }
 
@@ -555,8 +632,8 @@ class DataSkippingSpec extends SparkSpec {
       .map(_.map(_.toList)) === Some(Seq(List(20L))))
     assert(t.aggregateFromStats(v, Seq("p"), Seq(("count", null: String), ("sum", "k")))
       .map(_.map(_.toList)) === Some(Seq(List("1", 10L, 145L), List("2", 10L, 245L))))
-    val kept = t.pruneFilesFor(spark, v, Seq(sources.EqualTo("p", "0")))
-    assert(t.lastPruneVia === "driver")
+    val (jobs, kept) = jobCount(t.pruneFilesFor(spark, v, Seq(sources.EqualTo("p", "0"))))
+    assert(jobs === 0)
     assert(kept.isEmpty, "remove, re-add, remove resurrected a deleted file")
     assert(t.read(spark).count() === 20L)
     assert(t.read(spark).filter(col("p") === "0").count() === 0L)
@@ -574,9 +651,9 @@ class DataSkippingSpec extends SparkSpec {
     for (v <- vals) {
       val fs = Seq(if (v == null) sources.IsNull("p")
                    else sources.EqualTo("p", v): sources.Filter)
-      t.pruneFilesFor(spark, 0, fs)
-      assert(t.lastPruneVia === "driver")
-      val got = t.readVersionWhere(spark, 0, fs)
+      val (jobs, kept) = jobCount(t.pruneFilesFor(spark, 0, fs))
+      assert(jobs === 0)
+      val got = readWhere(t, 0, fs)
         .select("k").as[Long].collect().toSeq.sorted
       // Hive layout stores an EMPTY string as the default partition, so it
       // reads back as NULL: both rows surface under IS NULL, none under
@@ -586,6 +663,7 @@ class DataSkippingSpec extends SparkSpec {
         else if (v == "") Seq.empty[Long]
         else Seq(vals.indexOf(v).toLong)
       assert(got === expect, s"value '$v'")
+      assert(kept.isEmpty === expect.isEmpty, s"kept files for '$v'")
     }
   }
 
@@ -597,14 +675,187 @@ class DataSkippingSpec extends SparkSpec {
       col("id").cast("string").as("v"), (col("id") % 3).cast("string").as("p"))
       .repartition(2))
     val v = t.currentVersion
+    // only footers could drop a file: nothing is planned and no footer read
+    val footers = ManifestFileIndex.footerReads.get
     val (jobs, kept) = jobCount(
       t.pruneFilesFor(spark, v, Seq(sources.In("k", Array[Any](1L, 2L, 40L)))))
     assert(jobs === 0)
-    assert(t.lastPruneVia === "none")
     assert(kept === t.filesOf(v))
-    // a statted conjunct runs the driver loop, still with no job
-    val (jobs2, _) = jobCount(t.pruneFilesFor(spark, v, Seq(sources.EqualTo("v", "7"))))
+    assert(ManifestFileIndex.footerReads.get === footers)
+    // a statted conjunct is decided from the log, still with no job and
+    // no footer read
+    val (jobs2, hit) = jobCount(t.pruneFilesFor(spark, v, Seq(sources.EqualTo("v", "7"))))
     assert(jobs2 === 0)
-    assert(t.lastPruneVia === "driver")
+    assert(hit.nonEmpty && hit.size < kept.size)
+    assert(ManifestFileIndex.footerReads.get === footers)
+  }
+
+  test("U+FFFD beside a supplementary character: every entry point keeps the row") {
+    // bounds are in UTF-8 byte order, where U+1F600 (a surrogate pair in
+    // UTF-16) sorts after U+FFFD; in UTF-16 order it sorts before
+    val t = new MergeTable(scratch("skip_utf8"), Nil, statsCols = Seq("ts", "s"))
+    val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    val v = "\uFFFD"
+    t.overwrite(Seq((ts, "a"), (ts, v), (ts, "\uD83D\uDE00")).toDF("ts", "s").repartition(1))
+    val all = t.filesOf(t.currentVersion)
+    assert(all.size === 1)
+    assert(t.statsOf(t.currentVersion)(all.head)("s") === (("a", "\uD83D\uDE00")))
+    def found(d: org.apache.spark.sql.DataFrame, via: String): Unit =
+      assert(d.select("s").as[String].collect().toSeq === Seq(v), via)
+    found(t.read(spark).filter(col("s") === v), "read().filter")
+    found(t.readRange(spark, "s", v, v), "readRange")
+    found(t.readPoint(spark, "s", v), "readPoint")
+    assert(t.candidateFiles("s", v, v) === all, "candidateFiles")
+    assert(t.pruneFilesFor(spark, t.currentVersion, Seq(sources.EqualTo("s", v))) === all,
+      "pruneFilesFor")
+    found(readWhere(t, t.currentVersion, Seq(sources.EqualTo("s", v)))
+      .filter(col("s") === v), "readWhere")
+    found(spark.read.format("graft").load(t.root).filter(col("s") === v), "format(graft)")
+  }
+
+  test("log stats and a Bloom index: point and 100-key IN reads open no footer, run one job") {
+    // file i holds the keys ≡ i (mod 8): every file's [min, max] spans the
+    // whole key range, so only the Bloom sidecars tell the files apart
+    val t = new MergeTable(scratch("skip_onejob"), Nil, statsCols = Seq("k"))
+    t.overwrite(spark.range(0, 800, 1, 8)
+      .select(((col("id") % 100) * 8 + col("id") / 100).cast("long").as("k"),
+        concat(lit("v"), col("id")).as("v")))
+    val v = t.currentVersion
+    val all = t.filesOf(v)
+    assert(all.size === 8)
+    t.buildBloomIndex(spark, "k")
+    val holding3 = t.read(spark).filter(col("k") === 3L)
+      .select(input_file_name()).as[String].collect().toSeq
+    assert(holding3.size === 1)
+    val footers = ManifestFileIndex.footerReads.get
+    val (bloomJobs, bloomKept) = jobCount(t.bloomCandidateFiles(spark, "k", 3L))
+    assert(bloomJobs === 0)
+    assert(bloomKept.size === 1 && holding3.head.endsWith(bloomKept.head))
+    val keys = (0 until 100).map(i => 3L + 8 * i) // all in file 3
+    for ((pred, filter) <- Seq(
+        (col("k") === 3L, sources.EqualTo("k", 3L): sources.Filter),
+        (col("k").isin(keys: _*), sources.In("k", keys.toArray[Any])))) {
+      val kept = t.pruneFilesFor(spark, v, Seq(filter))
+      assert(kept === bloomKept, s"admitted for $pred")
+      val (jobs, scanned) = jobCount(filesScanned(t.read(spark).filter(pred)))
+      assert(jobs === 1, s"jobs for $pred")
+      assert(scanned === 1L, s"files scanned for $pred")
+    }
+    assert(ManifestFileIndex.footerReads.get === footers, "no footer read")
+    assert(t.read(spark).filter(col("k").isin(keys: _*)).count() === 100L)
+  }
+
+  test("a partition-set predicate of 10^5 tuples builds, analyzes, evaluates and prunes") {
+    import org.apache.spark.sql.types.{IntegerType, StringType}
+    val cols = Seq("p" -> StringType, "q" -> IntegerType)
+    // typed values (dynamic partition overwrite) and directory strings
+    // cast to the column type (auto-compaction), NULL for the default
+    // partition
+    val typed = (0 until 100000).map(i => Seq[Any](s"p$i", if (i % 1000 == 0) null else i))
+    val dirStrings = typed.map(t => Seq[Any](t(0), Option(t(1)).map(_.toString).orNull))
+    val rows = Seq(("p5", Some(5)), ("p1000", None), ("p7", Some(8)), ("x", Some(1)),
+      ("p2000", Some(2000))).toDF("p", "q")
+    for (tuples <- Seq(typed, dirStrings)) {
+      val pred = MergeTable.partitionSetPredicate(cols, tuples)
+      assert(rows.filter(pred).as[(String, Option[Int])].collect().toSet ===
+        Set(("p5", Some(5)), ("p1000", None)))
+    }
+    // as a partition filter: compaction rewrites exactly the listed partitions
+    val t = new MergeTable(scratch("skip_partset"), Seq("p", "q"))
+    t.overwrite(rows.withColumn("k", lit(1)).repartition(2))
+    t.append(rows.withColumn("k", lit(2)).repartition(2))
+    val before = t.filesOf(t.currentVersion)
+    t.compactPartitions(spark, MergeTable.partitionSetPredicate(cols, dirStrings))
+    val after = t.filesOf(t.currentVersion)
+    val listed = Set("p=p5/q=5", "p=p1000/q=__HIVE_DEFAULT_PARTITION__")
+    def dir(f: String) = f.split('/').slice(1, 3).mkString("/")
+    assert((before.toSet -- after).map(dir) === listed)
+    assert(after.filterNot(before.toSet).map(dir).sorted === listed.toSeq.sorted)
+    assert(t.read(spark).count() === 10L)
+  }
+
+  test("property: every file-selecting entry point keeps every file holding a match") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.scalacheck.{Gen, Prop, Test}
+    val strings = Gen.oneOf("", "a", "z", "\uFFFD", "\uE000", "\uFFFF", "\uD83D\uDE00",
+      "a\uD83D\uDE00", "\uE000b", "\uD83D\uDC00")
+    val doubles = Gen.oneOf(
+      Gen.oneOf(Double.NaN, 0.0, -0.0, 1.5, -1.5, Double.PositiveInfinity,
+        Double.NegativeInfinity, Double.MaxValue),
+      Gen.choose(-3, 3).map(_.toDouble))
+    val t0 = java.time.LocalDateTime.parse("2026-03-01T00:00:00")
+    // 1.5 ms steps: half the values lose their last 500 µs when written as MILLIS
+    val stamps = Gen.choose(0, 12).map(n => java.sql.Timestamp.valueOf(t0.plusNanos(n * 1500000L)))
+    val kinds: Map[String, (DataType, Gen[Any])] = Map(
+      "string" -> (StringType, strings), "double" -> (DoubleType, doubles),
+      "TIMESTAMP_MILLIS" -> (TimestampType, stamps), "TIMESTAMP_MICROS" -> (TimestampType, stamps))
+    case class SkipCase(kind: String, statted: Boolean, bloom: Boolean,
+                              rows: Seq[(Option[Any], Int)], probes: Seq[Any])
+    val genCase = for {
+      kind <- Gen.oneOf(kinds.keys.toSeq.sorted)
+      statted <- Gen.oneOf(true, false)
+      bloom <- Gen.oneOf(true, false)
+      rows <- Gen.choose(2, 12).flatMap(Gen.listOfN(_,
+        Gen.zip(Gen.option(kinds(kind)._2), Gen.choose(0, 2))))
+      probes <- Gen.listOfN(2, kinds(kind)._2)
+    } yield SkipCase(kind, statted, bloom, rows, probes)
+    var runs = 0
+    val prop = Prop.forAllNoShrink(genCase) { c =>
+      runs += 1
+      val (dt, _) = kinds(c.kind)
+      val t = new MergeTable(scratch(s"skip_prop$runs"), Seq("f"),
+        statsCols = if (c.statted) Seq("c") else Nil)
+      val schema = StructType(Seq(StructField("c", dt), StructField("f", IntegerType)))
+      val df = spark.createDataFrame(
+        java.util.Arrays.asList(c.rows.map { case (v, f) => Row(v.orNull, f) }: _*), schema)
+      withConf((if (dt == TimestampType) Seq("spark.sql.parquet.outputTimestampType" -> c.kind)
+          else Nil): _*)(t.overwrite(df.repartition(2)))
+      if (c.bloom) t.buildBloomIndex(spark, "c")
+      val v = t.currentVersion
+      val Seq(p, q) = c.probes
+      val x = col("c")
+      val preds: Seq[(org.apache.spark.sql.Column, sources.Filter)] = Seq(
+        (x === lit(p), sources.EqualTo("c", p)),
+        (x <=> lit(p), sources.EqualNullSafe("c", p)),
+        (x < lit(p), sources.LessThan("c", p)),
+        (x >= lit(q), sources.GreaterThanOrEqual("c", q)),
+        (x.between(lit(p), lit(q)),
+          sources.And(sources.GreaterThanOrEqual("c", p), sources.LessThanOrEqual("c", q))),
+        (x.isin(p, q), sources.In("c", Array(p, q))),
+        (x.isNull, sources.IsNull("c")),
+        (x.isNotNull, sources.IsNotNull("c")))
+      // the truth, from Spark's own reader over every file: per predicate,
+      // the files holding a TRUE row and the number of such rows
+      val truth = spark.read.schema(schema.fields(0).toDDL)
+        .parquet(t.filesOf(v).map(f => s"${t.root}/$f"): _*)
+        .select(input_file_name() +: preds.map(pr => coalesce(pr._1, lit(false))): _*)
+        .collect()
+      def holding(i: Int): Set[String] =
+        truth.filter(_.getBoolean(i + 1)).map(_.getString(0)).toSet
+      def keeps(kept: Seq[String], i: Int, via: String): Unit =
+        holding(i).foreach(f => assert(kept.exists(f.endsWith), s"$via dropped $f for ${preds(i)._1}"))
+      def rowsOf(d: org.apache.spark.sql.DataFrame): Int = d.select("c").collect().length
+      for (((pred, filter), i) <- preds.zipWithIndex) {
+        val want = truth.count(_.getBoolean(i + 1))
+        keeps(t.pruneFilesFor(spark, v, Seq(filter)), i, "pruneFilesFor")
+        assert(rowsOf(t.read(spark).filter(pred)) === want, s"read().filter($pred)")
+      }
+      keeps(t.bloomCandidateFiles(spark, "c", p), 0, "bloomCandidateFiles")
+      keeps(t.candidateFiles("c", p, q), 4, "candidateFiles")
+      assert(rowsOf(t.readPoint(spark, "c", p)) === truth.count(_.getBoolean(1)), "readPoint")
+      assert(rowsOf(t.readRange(spark, "c", p, q)) === truth.count(_.getBoolean(5)), "readRange")
+      assert(rowsOf(readWhere(t, v, Seq(preds(2)._2)).filter(preds(2)._1)) ===
+        truth.count(_.getBoolean(3)), "readWhere")
+      assert(rowsOf(spark.read.format("graft").load(t.root).filter(preds(5)._1)) ===
+        truth.count(_.getBoolean(6)), "format(graft)")
+      true
+    }
+    // the forked test JVM inherits the environment, not sbt's -D flags
+    val seed = sys.env.get("GRAFT_SKIP_SEED").map(_.toLong).getOrElse(System.nanoTime())
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(16).withWorkers(1)
+      .withInitialSeed(org.scalacheck.rng.Seed(seed)), prop)
+    assert(res.passed, s"failing seed $seed (rerun with GRAFT_SKIP_SEED=$seed): " +
+      org.scalacheck.util.Pretty.pretty(res))
   }
 }

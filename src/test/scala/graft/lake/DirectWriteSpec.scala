@@ -14,16 +14,6 @@ import java.sql.Timestamp
 class DirectWriteSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withConf[T](kvs: (String, String)*)(f: => T): T = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def baseRows: DataFrame = Seq(
     (1L, "aa", Timestamp.valueOf("2026-01-01 10:00:00.123456"), Some(1.5), Seq("x", "y"), "p 1:a"),
     (2L, "ab", Timestamp.valueOf("2026-01-02 11:00:00"), None, Seq.empty[String], "p 1:a"),

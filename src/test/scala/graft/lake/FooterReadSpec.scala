@@ -154,7 +154,7 @@ class FooterReadSpec extends SparkSpec {
     val since = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     val want = t.read(spark).filter(col("ts") >= since)
     assert(want.count() === 2L)
-    val pruned = t.readVersionWhere(spark, t.currentVersion,
+    val pruned = readWhere(t, t.currentVersion,
       Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("ts", since)))
       .filter(col("ts") >= since)
     assert(pruned.count() === 2L)

@@ -2,8 +2,6 @@ package graft.lake
 
 import graft.SparkSpec
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
@@ -17,19 +15,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
   *    (or null count) admits the predicate, and footers are read once per
   *    JVM, not once per handle.
   */
-class FooterSkippingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class FooterSkippingSpec extends SparkSpec {
   import spark.implicits._
 
   private def rows(d: DataFrame): Seq[String] =
     d.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
-
-  /** Runs `d` and returns the data files it opened (dv sidecars not counted). */
-  private def filesScanned(d: DataFrame): Long = {
-    d.collect()
-    collect(d.queryExecution.executedPlan) {
-      case s: FileSourceScanExec if s.relation.location.isInstanceOf[ManifestFileIndex] => s
-    }.map(_.metrics("numFiles").value).sum
-  }
 
   /** The same files through Spark's own file index: no planning-time skip. */
   private def unpruned(t: MergeTable, physSchema: StructType, select: Seq[Column]): DataFrame =
@@ -132,6 +122,23 @@ class FooterSkippingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         unit)
       assert(check(got.filter(col("ts") < at(10)), want.filter(col("ts") < at(10))) === 2L,
         unit)
+    }
+  }
+
+  test("a sub-millisecond bound keeps a TIMESTAMP_MILLIS file of its rounded value") {
+    // the file's one row holds 10 ms; `< 10.5 ms` used to push to the
+    // row-group filter as `< 10 ms` and skip it
+    val dir = s"${scratch("fskip_ts_submillis")}/data"
+    withConf("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MILLIS")(
+      Seq((1, java.sql.Timestamp.valueOf(ts0.plusNanos(10000000L)))).toDF("k", "ts")
+        .repartition(1).write.parquet(dir))
+    val t = MergeTable.convertParquet(spark, dir)
+    val bound = lit(java.sql.Timestamp.valueOf(ts0.plusNanos(10500000L)))
+    for (p <- Seq(col("ts") < bound, bound > col("ts"))) {
+      assert(check(t.read(spark).filter(p), identity(t).filter(p)) === 1L, s"$p")
+      assert(t.pruneFilesFor(spark, t.currentVersion,
+        Seq(org.apache.spark.sql.sources.LessThan("ts", java.sql.Timestamp.valueOf(
+          ts0.plusNanos(10500000L))))) === t.filesOf(t.currentVersion))
     }
   }
 

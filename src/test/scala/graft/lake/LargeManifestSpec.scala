@@ -6,8 +6,8 @@ import org.apache.spark.sql.sources
 
 /** Log-level pruning on a table of more than 1,024 files with stats on
   * the key: a prune runs on the driver over the resolved manifest at any
-  * file count, so it starts no Spark job, and a merge at the
-  * `mergeProbeInMax` key cap prunes through the same loop.
+  * file count, so it starts no Spark job and reads no footer, and a merge
+  * at the `mergeProbeInMax` key cap prunes through the same file index.
   */
 class LargeManifestSpec extends SparkSpec {
   import spark.implicits._
@@ -35,16 +35,16 @@ class LargeManifestSpec extends SparkSpec {
   test("a point and a range conjunct on the key prune with no Spark job") {
     val t = table
     val v = t.currentVersion
+    val footers = ManifestFileIndex.footerReads.get
     val (pointJobs, point) = jobCount(
       t.pruneFilesFor(spark, v, Seq(sources.EqualTo("k", 5005L))))
     assert(pointJobs === 0)
-    assert(t.lastPruneVia === "driver")
     assert(point.size === 1)
     assert(keysIn(t, point) === (5000L to 5009L).toSet)
     val (rangeJobs, range) = jobCount(t.pruneFilesFor(spark, v,
       Seq(sources.GreaterThanOrEqual("k", 5005L), sources.LessThan("k", 5030L))))
     assert(rangeJobs === 0)
-    assert(t.lastPruneVia === "driver")
+    assert(ManifestFileIndex.footerReads.get === footers, "the log stats decide every file")
     assert(range.size === 3)
     assert(keysIn(t, range) === (5000L to 5029L).toSet)
   }

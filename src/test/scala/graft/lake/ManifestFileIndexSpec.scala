@@ -5,8 +5,6 @@ import graft.plans.MvCatalog
 import graft.sqlapi.LakeSql
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims}
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions.{col, concat, lit}
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -22,7 +20,7 @@ import scala.collection.mutable
   *    index replaced, across the partition-value, column-mapping, deletion
   *    vector, row-id and time-travel shapes.
   */
-class ManifestFileIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class ManifestFileIndexSpec extends SparkSpec {
   import spark.implicits._
 
   /** Descriptions of the Spark jobs `body` started. */
@@ -65,12 +63,6 @@ class ManifestFileIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def relations(d: DataFrame) =
     d.queryExecution.analyzed.collect { case r: LogicalRelation => r.relation }
-
-  private def filesScanned(d: DataFrame): Long = {
-    d.collect()
-    collect(d.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
-      .map(_.metrics("numFiles").value).sum
-  }
 
   test("read, readVersion, delete and merge run no file-listing job") {
     val t = new MergeTable(scratch("mfi_nolist"), Seq("day"))

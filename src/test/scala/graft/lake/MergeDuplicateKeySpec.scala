@@ -14,12 +14,6 @@ import org.apache.spark.sql.functions._
 class MergeDuplicateKeySpec extends SparkSpec {
   import spark.implicits._
 
-  private def withConf[T](k: String, v: String)(f: => T): T = {
-    val old = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try f finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-  }
-
   /** The check as a Spark `groupBy` states it. */
   private def groupByHasDup(src: DataFrame, keys: Seq[String]): Boolean =
     src.groupBy(keys.map(col): _*).count().filter(col("count") > 1).limit(1).count() > 0
@@ -103,7 +97,7 @@ class MergeDuplicateKeySpec extends SparkSpec {
   }
 
   test("a source over the cap is checked in full") {
-    withConf("spark.graft.mergeProbeInMax", "2") {
+    withConf("spark.graft.mergeProbeInMax" -> "2") {
       val seed = Seq((1, "a")).toDF("k", "v")
       // the duplicate sits past the first cap + 1 rows
       val dup = Seq((5, "p"), (6, "q"), (7, "r"), (8, "s"), (5, "t")).toDF("k", "v")
