@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, T
 
 /** Session extension entry point (`spark.sql.extensions=graft.functions.
   * GraftExtensions`, set in Sessions.builder): registers `float_dot` in
-  * every session and injects [[DotProductRewrite]] into the optimizer —
+  * every session, injects [[DotProductRewrite]] into the optimizer and
+  * the graft read, metadata-aggregate and write rules —
   * the SparkSessionExtensions surface for engine-level additions, as
   * opposed to per-session FunctionRegistry calls.
   */
@@ -90,6 +91,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // parser extension (unregistered names delegate untouched)
     e.injectParser((session, delegate) =>
       new graft.sqlapi.GraftSqlParser(session, delegate))
+    // batch reads of graft V2 tables (format("graft"), GraftCatalog)
+    // resolve to the MergeTable plan, as Delta's DeltaAnalysis does
+    e.injectResolutionRule(session => graft.sources.GraftReadResolution(session))
+    // aggregates the table log answers exactly become a local relation,
+    // once the operator optimizations have settled the plan
+    e.injectPreCBORule(_ => graft.lake.MetadataOnlyAggregate)
     // dynamic partition overwrite on graft V2 tables: the node has no V1
     // write bridge, so a post-hoc resolution rule (Delta's mechanism)
     // rewrites it to an overwriteWhere command over the touched partitions

@@ -61,11 +61,15 @@ import scala.util.control.NonFatal
   *     reads at most `FooterReadsPerCall` uncached ones and keeps the rest.
   *
   * `files` are root-relative manifest paths (`<dataDir>/[<p>=<v>/...]part-*`);
-  * `log` is absent for files no snapshot records yet (a write's own output).
+  * `log` names the snapshot of `root` they belong to, and is absent for files
+  * no snapshot records yet (a write's own output).
   */
-final class ManifestFileIndex(spark: SparkSession, root: String, files: Seq[String],
+final class ManifestFileIndex(spark: SparkSession, val root: String, files: Seq[String],
                               userSchema: StructType, log: Option[ManifestFileIndex.Log])
     extends PartitioningAwareFileIndex(spark, Map.empty, Some(userSchema)) {
+
+  /** The snapshot of `root` the files belong to, if any. */
+  def snapshot: Option[ManifestFileIndex.Log] = log
 
   // every file sits under `root`, so one file system serves them all
   private val fs = new Path(root).getFileSystem(hadoopConf)
@@ -244,12 +248,13 @@ final class ManifestFileIndex(spark: SparkSession, root: String, files: Seq[Stri
 
 object ManifestFileIndex {
 
-  /** What the table log records about one snapshot's files, for skipping:
-    * logical column types, the logical → physical name map (non-identity
-    * entries), the statted columns, the generated partition columns and,
-    * parsed on first use, the per-file stat entries and null counts.
+  /** What the table log records about one snapshot's files, for skipping
+    * and metadata answers: its version, logical column types, the logical →
+    * physical name map (non-identity entries), the statted columns, the
+    * generated partition columns and, parsed on first use, the per-file stat
+    * entries and null counts.
     */
-  final class Log(val types: Map[String, DataType], val physicalOf: Map[String, String],
+  final class Log(val version: Long, val types: Map[String, DataType], val physicalOf: Map[String, String],
                   val statted: Set[String], val generated: Seq[(String, String)],
                   stats0: => Map[String, Map[String, (String, String, Char)]],
                   nulls0: => Map[(String, String), Long]) {

@@ -601,7 +601,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
   /** What snapshot `version`'s log records for file skipping. */
   private def logOf(version: Long): ManifestFileIndex.Log = {
     val c = readCommit(version)
-    new ManifestFileIndex.Log(c.schema.fields.map(f => f.name -> f.dataType).toMap,
+    new ManifestFileIndex.Log(version, c.schema.fields.map(f => f.name -> f.dataType).toMap,
       c.colmap.toMap, c.statsColumns,
       generatedCols.filter { case (p, _) => partitionCols.contains(p) },
       c.statsDetail, c.nullCounts)
@@ -646,48 +646,39 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     import MergeTable.{DvFileCol, DvIdxCol, RowIdCol}
     val hit = fs.filter(dvs.contains)
     val needPos = keepPos || hit.nonEmpty
-    val base = if (fs.isEmpty) {
-      var s = schema
-      if (withRowIds) s = s.add(RowIdCol, org.apache.spark.sql.types.LongType)
-      if (needPos)
-        s = s.add(DvFileCol, org.apache.spark.sql.types.StringType)
-          .add(DvIdxCol, org.apache.spark.sql.types.LongType)
-      fileCol.foreach(c => s = s.add(c, org.apache.spark.sql.types.StringType))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-    } else {
-      // data files store PHYSICAL column names (see writeData); scan with
-      // the physical schema, project back to logical right above the scan.
-      // A renamed column reads its original physical data; a column added
-      // after a DROP asks for its fresh physical name, so dropped data can
-      // never resurrect (old files simply lack the fresh name → NULL).
-      // The hidden row-id column (never in `schema`, never colmapped) is
-      // appended to the scan only when the caller asked for it.
-      val physSchema0 =
-        if (colmap.isEmpty) schema
-        else StructType(schema.fields.map(f => f.copy(name = physOf(colmap, f.name))))
-      val physSchema =
-        if (withRowIds) physSchema0.add(RowIdCol, org.apache.spark.sql.types.LongType)
-        else physSchema0
-      // ONE relation over the snapshot's file list (see ManifestFileIndex).
-      // The dv key is the MANIFEST-relative path (see relPathCol): both join sides derive
-      // from this same expression, so keys match by construction — and a
-      // bare basename would be ambiguous (dynamic partitioning gives every
-      // partition dir of one task the SAME part-file name).
-      val df = ManifestFileIndex.read(spark, root, fs, physSchema, log)
-      val posCols =
-        (if (needPos)
-          Seq(relPathCol.as(DvFileCol),
-            col("_metadata.row_index").as(DvIdxCol))
-        else Nil) ++
-          fileCol.map(c => relPathCol.as(c)).toSeq
-      // always project to the COMMIT schema's column order — the raw scan
-      // appends partition columns last, which would diverge from the
-      // declared schema once ADD COLUMNS places one mid-schema
-      val logicalCols =
-        schema.fields.toSeq.map(f => col(physOf(colmap, f.name)).as(f.name)) ++
-          (if (withRowIds) Seq(col(RowIdCol)) else Nil)
-      df.select(logicalCols ++ posCols: _*)
-    }
+    // data files store PHYSICAL column names (see writeData); scan with
+    // the physical schema, project back to logical right above the scan.
+    // A renamed column reads its original physical data; a column added
+    // after a DROP asks for its fresh physical name, so dropped data can
+    // never resurrect (old files simply lack the fresh name → NULL).
+    // The hidden row-id column (never in `schema`, never colmapped) is
+    // appended to the scan only when the caller asked for it.
+    val physSchema0 =
+      if (colmap.isEmpty) schema
+      else StructType(schema.fields.map(f => f.copy(name = physOf(colmap, f.name))))
+    val physSchema =
+      if (withRowIds) physSchema0.add(RowIdCol, org.apache.spark.sql.types.LongType)
+      else physSchema0
+    // ONE relation over the snapshot's file list (see ManifestFileIndex),
+    // an empty snapshot's included: it scans no file.
+    // The dv key is the MANIFEST-relative path (see relPathCol): both join sides derive
+    // from this same expression, so keys match by construction — and a
+    // bare basename would be ambiguous (dynamic partitioning gives every
+    // partition dir of one task the SAME part-file name).
+    val df = ManifestFileIndex.read(spark, root, fs, physSchema, log)
+    val posCols =
+      (if (needPos)
+        Seq(relPathCol.as(DvFileCol),
+          col("_metadata.row_index").as(DvIdxCol))
+      else Nil) ++
+        fileCol.map(c => relPathCol.as(c)).toSeq
+    // always project to the COMMIT schema's column order — the raw scan
+    // appends partition columns last, which would diverge from the
+    // declared schema once ADD COLUMNS places one mid-schema
+    val logicalCols =
+      schema.fields.toSeq.map(f => col(physOf(colmap, f.name)).as(f.name)) ++
+        (if (withRowIds) Seq(col(RowIdCol)) else Nil)
+    val base = df.select(logicalCols ++ posCols: _*)
     if (hit.isEmpty) base
     else {
       val dirs = hit.map(f => dvs(f)._1).distinct.sorted
@@ -2594,10 +2585,10 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     * partition columns — ENTIRELY from the commit log, reading ZERO data
     * files. This is what makes `SELECT count(*) FROM t` on a 100 TB table
     * a metadata operation (Delta answers the same shapes from its
-    * `stats.numRecords`/min/max; the connector's aggregate pushdown routes
-    * here). Returns `None` whenever the log cannot answer EXACTLY, and the
-    * caller falls back to a real scan — pushdown is an optimization, never
-    * a correctness dependency:
+    * `stats.numRecords`/min/max; the [[MetadataOnlyAggregate]] optimizer
+    * rule routes here). Returns `None` whenever the log cannot answer
+    * EXACTLY, and the caller falls back to a real scan — the metadata answer
+    * is an optimization, never a correctness dependency:
     *
     *  - `count`: every live file must carry a recorded row count
     *    ([[fileRowCounts]]); deletion-vector masked rows are subtracted
@@ -2614,8 +2605,8 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     *  - `groupBy` columns must be partition columns: groups and their
     *    member files come from the manifest's directory tuples.
     *
-    * Aggs are `(op, column)` with op ∈ count|min|max (column ignored for
-    * count). Result rows are `groupBy values ++ agg values` in external
+    * Aggs are `(op, column)` with op ∈ count|min|max|sum|avg (column null
+    * for count(*)). Result rows are `groupBy values ++ agg values` in external
     * JVM types (the caller builds Rows/schema).
     */
   def aggregateFromStats(version: Long, groupBy: Seq[String],
@@ -2624,8 +2615,8 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     import org.apache.spark.sql.types._
     val schema = schemaOf(version)
     // `restrictTo` is an EXACT file subset the caller derived from
-    // partition-only predicates ([[exactPartitionFiles]]): the per-file
-    // math composes unchanged over any subset of the snapshot
+    // partition-only predicates (the scan's own partition pruning): the
+    // per-file math composes unchanged over any subset of the snapshot
     val files = restrictTo match {
       case Some(keep) => filesOf(version).filter(keep)
       case None       => filesOf(version)
@@ -2841,33 +2832,6 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     }) catch { case e: RuntimeException if e eq Unanswerable => None }
   }
 
-  /** EXACT file restriction by PARTITION-ONLY filters — the scan-side
-    * companion of [[aggregateFromStats]]'s `restrictTo`. Unlike
-    * [[pruneFilesFor]] (conservative: keeps any file that MIGHT match),
-    * this keeps precisely the files whose partition tuple satisfies every
-    * filter, which is what a metadata-only `count(*) WHERE part = x`
-    * needs. None when any filter touches a non-partition column or fails
-    * to translate — callers then keep the real scan.
-    */
-  private[graft] def exactPartitionFiles(spark: SparkSession, version: Long,
-                                         filters: Seq[sources.Filter])
-      : Option[Set[String]] = {
-    if (filters.isEmpty) return Some(filesOf(version).toSet)
-    if (partitionCols.isEmpty) return None
-    if (!filters.forall(f => f.references.nonEmpty &&
-        f.references.forall(partitionCols.contains))) return None
-    val translated = filters.map(MergeTable.translateFilter)
-    if (translated.exists(_.isEmpty)) return None
-    val pred = translated.flatten.reduce(_ && _)
-    // exact-mode tuple probe: TRUE keeps, FALSE/NULL drops, and ANY
-    // evaluation fallback (e.g. an ANSI cast failure on a directory
-    // value) returns None so the caller keeps the real scan — the
-    // conservative keep-all fallback that is sound for pruning would
-    // silently aggregate over unfiltered files here
-    partitionCandidatesExact(spark, filesOf(version), schemaOf(version), pred)
-      .map(_.toSet)
-  }
-
   /** ANALYZE TABLE analog: (re)compute per-file min/max statistics of
     * `cols` over every file of the current snapshot and commit them —
     * retrofits data skipping onto a table created without `statsCols`
@@ -2929,29 +2893,8 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     */
   private[lake] def partitionCandidates(spark: SparkSession, files: Seq[String],
                                         schema: StructType,
-                                        predicate: Column): Seq[String] =
-    // exact=false always yields Some: every fallback keeps all files
-    tupleProbe(spark, files, schema, predicate, exact = false).get
-
-  /** EXACT-mode companion of [[partitionCandidates]]: Some(kept) only when
-    * the WHOLE predicate was evaluated exactly over every distinct
-    * partition tuple — None on ANY fallback (tuple evaluation failure such
-    * as an ANSI cast error on a directory value, a nondeterministic
-    * predicate, or data-column references). Callers that answer queries
-    * from metadata ([[exactPartitionFiles]] → [[metadataAggregate]]) MUST
-    * use this: the conservative keep-everything fallback that is sound for
-    * pruning would silently aggregate over unfiltered files there.
-    */
-  private[lake] def partitionCandidatesExact(spark: SparkSession, files: Seq[String],
-                                             schema: StructType,
-                                             predicate: Column): Option[Seq[String]] =
-    tupleProbe(spark, files, schema, predicate, exact = true)
-
-  private def tupleProbe(spark: SparkSession, files: Seq[String],
-                         schema: StructType, predicate: Column,
-                         exact: Boolean): Option[Seq[String]] = {
-    if (files.isEmpty) return Some(files)
-    if (partitionCols.isEmpty) return if (exact) None else Some(files)
+                                        predicate: Column): Seq[String] = {
+    if (files.isEmpty || partitionCols.isEmpty) return files
     import org.apache.spark.sql.types.{StringType, StructField}
     val rows = files.map(partDirOf).distinct.map(d =>
       org.apache.spark.sql.Row.fromSeq(d +: partValuesOf(d)))
@@ -2974,29 +2917,23 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     // cast errors that the full scan would surface per-row, with its own
     // error context) fall back to no pruning — the probe is an
     // optimization and must never be the place an error first appears.
-    def probe(p: Column): Option[Seq[String]] =
+    def probe(p: Column): Seq[String] =
       (try Some(typed.filter(coalesce(p, lit(false)) === true)
         .select("_dir").collect().map(_.getString(0)).toSet)
       catch { case scala.util.control.NonFatal(_) => None }) match {
-        case None       => if (exact) None else Some(files)
-        case Some(dirs) => Some(files.filter(f => dirs.contains(partDirOf(f))))
+        case None       => files
+        case Some(dirs) => files.filter(f => dirs.contains(partDirOf(f)))
       }
     deterministic match {
-      case Some(false) => // nondeterministic: pruning would be unsound
-        if (exact) None else Some(files)
+      case Some(false) => files // nondeterministic: pruning would be unsound
       case Some(true)  => probe(predicate)
       case None =>
         // the WHOLE predicate reads data columns — but its partition-only
         // conjuncts, plus conjuncts DERIVED through generated partition
         // columns (`DELETE WHERE d = X` on a y = year(d) layout), are
         // still implied by it and probe the tuples soundly. This is what
-        // partition-prunes the DML rewrite probes with zero opt-in. An
-        // IMPLIED predicate is never exact — exact mode refuses instead.
-        if (exact) None
-        else derivedTuplePredicate(spark, schema, predicate) match {
-          case None    => Some(files)
-          case Some(p) => probe(p)
-        }
+        // partition-prunes the DML rewrite probes with zero opt-in.
+        derivedTuplePredicate(spark, schema, predicate).fold(files)(probe)
     }
   }
 
@@ -5837,9 +5774,8 @@ object MergeTable {
     }
 
   /** `sources.Filter` → `Column` — the ONE translation shared by the
-    * connector's bridge re-push (filters reach the inner parquet scan's
-    * `PushedFilters`), the filtered reads of [[MergeTable.pruneFilesFor]],
-    * and the connector's `canDeleteWhere`/`canOverwrite` guards. Partial on
+    * filtered reads of [[MergeTable.pruneFilesFor]], the connector's
+    * `canDeleteWhere`/`canOverwrite` guards and the writes behind them. Partial on
     * purpose: an untranslatable filter is simply not pushed/pruned — Spark
     * always re-evaluates the full predicate above the scan.
     */

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.lake.MergeTable
+import graft.lake.{MergeTable, MetadataOnlyAggregate}
 import graft.queries.Registry.{t, scratchRoot}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -2263,12 +2263,12 @@ object LakeQueries {
              |FROM orders GROUP BY o_orderstatus""".stripMargin),
       "idempotent writer options: replayed txnVersion is a no-op, marker atomic"),
 
-    // Aggregate pushdown (Delta/JDBC SupportsPushDownAggregates shape):
+    // Metadata-only aggregate (Delta's OptimizeMetadataOnlyDeltaQuery):
     // count(*)/min/max grouped by the partition column answered ENTIRELY
     // from the commit log's per-file row counts and min/max stats — the
-    // require() pins the plan (PushedAggregates, zero FileScans), so at
-    // 100 TB this query reads manifests, not data. Two commits prove the
-    // counts compose across carried + fresh files.
+    // require() pins the plan (the rule's local relation, zero FileScans),
+    // so at 100 TB this query reads manifests, not data. Two commits prove
+    // the counts compose across carried + fresh files.
     "m68_agg_pushdown" -> GraftQuery(
       (s, dir) => {
         val root = s"$scratchRoot/m68_${sanitize(dir)}"
@@ -2285,10 +2285,10 @@ object LakeQueries {
             sum("o_orderkey").as("key_sum"),
             min("o_totalprice").as("min_price"), max("o_totalprice").as("max_price"))
         val plan = df.queryExecution.executedPlan.toString
-        require(plan.contains("PushedAggregates"),
+        require(MetadataOnlyAggregate.answered(df),
           s"aggregate must be answered from the log, got:\n$plan")
         require(!plan.contains("FileScan"),
-          "a pushed aggregate must not scan any data file")
+          "a metadata answer must not scan any data file")
         df
       },
       Some("""SELECT o_orderstatus, count(*) AS cnt,
@@ -2296,13 +2296,13 @@ object LakeQueries {
              |       CAST(sum(o_orderkey) AS BIGINT) AS key_sum,
              |       min(o_totalprice) AS min_price, max(o_totalprice) AS max_price
              |FROM orders GROUP BY o_orderstatus""".stripMargin),
-      "aggregate pushdown: count/min/max per partition from the log, zero data files read"),
+      "metadata aggregate: count/min/max per partition from the log, zero data files read"),
 
-    // Aggregate pushdown UNDER a partition predicate: partition-only
-    // filters are CONSUMED by the scan (evaluated exactly at file level +
-    // re-applied inside the bridge), so no residual Filter blocks the
-    // aggregate offer — `count(*) WHERE part IN (…)` stays a metadata
-    // answer. The require() proves the filtered aggregate still pushed.
+    // Metadata-only aggregate UNDER a partition predicate: the file set is
+    // the scan's own partition pruning of the filter, which is exact for a
+    // partition-only predicate — `count(*) WHERE part IN (…)` stays a
+    // metadata answer. The require() proves the filtered aggregate was
+    // answered from the log.
     "m69_filtered_agg" -> GraftQuery(
       (s, dir) => {
         val root = s"$scratchRoot/m69_${sanitize(dir)}"
@@ -2317,17 +2317,17 @@ object LakeQueries {
             min("o_custkey").as("min_cust"), max("o_custkey").as("max_cust"),
             min("o_orderstatus").as("min_status"), max("o_orderstatus").as("max_status"))
         val plan = df.queryExecution.executedPlan.toString
-        require(plan.contains("PushedAggregates"),
+        require(MetadataOnlyAggregate.answered(df),
           s"partition-filtered aggregate must stay a metadata answer:\n$plan")
         require(!plan.contains("FileScan"),
-          "a pushed aggregate must not scan any data file")
+          "a metadata answer must not scan any data file")
         df
       },
       Some("""SELECT count(*) AS cnt,
              |       min(o_custkey) AS min_cust, max(o_custkey) AS max_cust,
              |       min(o_orderstatus) AS min_status, max(o_orderstatus) AS max_status
              |FROM orders WHERE o_orderstatus IN ('F', 'O')""".stripMargin),
-      "filtered aggregate pushdown: partition WHERE consumed, count/min/max from the log"),
+      "filtered metadata aggregate: partition WHERE pruned exactly, count/min/max from the log"),
 
     // DDL lifecycle closeout, all through spark.sql (the parser-extension
     // path): CREATE OR REPLACE swaps schema AND partition layout in one
@@ -2384,8 +2384,8 @@ object LakeQueries {
              |GROUP BY o_orderpriority""".stripMargin),
       "CREATE OR REPLACE + COMMENT ON + SHOW CREATE + TRUNCATE via spark.sql"),
 
-    // The aggregate pushdown reaching plain SQL: a registered lake name
-    // inside spark.sql resolves to a connector-backed view, so
+    // The metadata-only aggregate reaching plain SQL: a registered lake
+    // name inside spark.sql resolves to a view over the snapshot's read, so
     // `SELECT count(*)/count(c)/min/max ... WHERE <partition filter>`
     // is answered FROM THE LOG — the "how big is this 100 TB table"
     // query as a metadata read, through the exact SQL a user would type.
@@ -2406,10 +2406,10 @@ object LakeQueries {
                |       min(o_custkey) AS min_cust, max(o_custkey) AS max_cust
                |FROM $name WHERE o_orderstatus IN ('F', 'O')""".stripMargin)
           val plan = df.queryExecution.executedPlan.toString
-          require(plan.contains("PushedAggregates"),
+          require(MetadataOnlyAggregate.answered(df),
             s"the SQL aggregate must be answered from the log, got:\n$plan")
           require(!plan.contains("FileScan"),
-            "a pushed SQL aggregate must not scan any data file")
+            "a SQL metadata answer must not scan any data file")
           df
         } finally graft.sqlapi.LakeCatalog.unregister(name)
       },
@@ -2583,13 +2583,13 @@ object LakeQueries {
              |FROM (VALUES ('inCommitTimestamps')) t(feature)""".stripMargin),
       "DROP FEATURE lifecycle: refused until purge+vacuum, data identical through it"),
 
-    // AVG pushdown: exact integral sum / non-null count, both already in
-    // the log — `avg(col)` on a 100 TB table joins count/min/max/sum as a
-    // metadata answer (Delta's stats stop short of this). Deterministic
+    // AVG from the log: exact integral sum / non-null count, both already
+    // in the log — `avg(col)` on a 100 TB table joins count/min/max/sum as
+    // a metadata answer (Delta's stats stop short of this). Deterministic
     // where a scan's double-accumulated Average is only exact while its
     // running sum stays below 2^53; beyond that the scan is
     // order-dependent and the log's answer is the canonical one. The
-    // require() pins the no-FileScan plan shape.
+    // require() pins the local-relation, no-FileScan plan shape.
     "m76_avg_pushdown" -> GraftQuery(
       (s, dir) => {
         val root = s"$scratchRoot/m76_${sanitize(dir)}"
@@ -2605,16 +2605,16 @@ object LakeQueries {
             avg("o_orderkey").as("avg_key"),
             avg("o_custkey").as("avg_cust"))
         val plan = df.queryExecution.executedPlan.toString
-        require(plan.contains("PushedAggregates"),
+        require(MetadataOnlyAggregate.answered(df),
           s"avg must be answered from the log, got:\n$plan")
         require(!plan.contains("FileScan"),
-          "a pushed avg must not scan any data file")
+          "an avg metadata answer must not scan any data file")
         df
       },
       Some("""SELECT o_orderstatus, count(*) AS cnt,
              |       avg(o_orderkey) AS avg_key, avg(o_custkey) AS avg_cust
              |FROM orders GROUP BY o_orderstatus""".stripMargin),
-      "avg pushdown: exact sum over non-null count, zero data files read"),
+      "avg from the log: exact sum over non-null count, zero data files read"),
 
     // The CANONICAL concurrent pair, in the correctness gate: background
     // compaction racing ingest into the same partition. Whichever writer

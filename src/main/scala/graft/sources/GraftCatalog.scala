@@ -26,7 +26,7 @@ import graft.lake.MergeTable
   *   CREATE TABLE cat.lake.c AS SELECT ...;          -- CTAS
   *   INSERT INTO cat.lake.t SELECT ...;              -- AppendData
   *   INSERT OVERWRITE cat.lake.t SELECT ...;         -- truncate + append
-  *   SELECT ... FROM cat.lake.t;                     -- pruned + pushed scan
+  *   SELECT ... FROM cat.lake.t;                     -- the MergeTable read
   *   DELETE FROM cat.lake.t WHERE p;                 -- SupportsDelete
   *   TRUNCATE TABLE cat.lake.t;
   *   ALTER TABLE cat.lake.t ADD COLUMN c INT;        -- log-only commits
@@ -106,12 +106,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
       .toArray.sortBy(_.name())
   }
 
-  override def loadTable(ident: Identifier): Table = {
-    val p = tableDir(ident)
-    if (!isTable(p)) throw new NoSuchTableException(ident)
-    new GraftTable(p.toString, Nil, new StructType(),
-      Map("path" -> p.toString)).asV2
-  }
+  override def loadTable(ident: Identifier): Table = graftTable(ident, Map.empty)
 
   override def tableExists(ident: Identifier): Boolean = isTable(tableDir(ident))
 
@@ -119,24 +114,22 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     * time-travel SQL resolves through this overload; the pinned version
     * rides the same reader option as the connector's `versionAsOf`.
     */
-  override def loadTable(ident: Identifier, version: String): Table = {
-    val p = tableDir(ident)
-    if (!isTable(p)) throw new NoSuchTableException(ident)
-    new GraftTable(p.toString, Nil, new StructType(),
-      Map("path" -> p.toString, "versionAsOf" -> version)).asV2
-  }
+  override def loadTable(ident: Identifier, version: String): Table =
+    graftTable(ident, Map("versionAsOf" -> version))
 
   /** `TIMESTAMP AS OF ts` — Spark hands the timestamp as MICROSECONDS
     * since the epoch; resolution against the commit timeline (in-commit
     * timestamps when present, mtime fallback) happens here so the scan
     * pins a concrete version.
     */
-  override def loadTable(ident: Identifier, timestamp: Long): Table = {
+  override def loadTable(ident: Identifier, timestamp: Long): Table =
+    graftTable(ident, Map("versionAsOf" ->
+      openAt(ident).versionAt(timestamp / 1000L).toString))
+
+  private def graftTable(ident: Identifier, options: Map[String, String]): Table = {
     val p = tableDir(ident)
     if (!isTable(p)) throw new NoSuchTableException(ident)
-    val v = MergeTable.open(p.toString).versionAt(timestamp / 1000L)
-    new GraftTable(p.toString, Nil, new StructType(),
-      Map("path" -> p.toString, "versionAsOf" -> v.toString)).asV2
+    new GraftTable(p.toString, Nil, new StructType(), options + ("path" -> p.toString)).asV2
   }
 
   /** Spark-managed reserved properties that must not leak into the commit
@@ -199,6 +192,10 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
       !reservedProps.contains(k) && !k.startsWith(TableCatalog.OPTION_PREFIX)
     }
     if (user.nonEmpty) created.setProperties(user)
+    // reads report every column nullable, so declared NOT NULL columns
+    // ride the CHECK machinery, as ALTER COLUMN SET NOT NULL does
+    schema.fields.filterNot(_.nullable).foreach(f => created.addCheckConstraint(
+      org.apache.spark.sql.SparkSession.active, s"graft_notnull_${f.name}", s"${f.name} IS NOT NULL"))
     loadTable(ident)
   }
 

@@ -4,15 +4,15 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode}
+import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.execution.datasources.GraftDatasourceShims
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, Filter, InsertableRelation, RelationProvider, TableScan}
+import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, Filter, InsertableRelation}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -24,24 +24,24 @@ import graft.lake.MergeTable
   * glue_jobs/01_silver_delta_upsert.py:115-121), over [[MergeTable]].
   *
   * Architecture = Delta's own: a DataSource V2 [[TableProvider]] whose
-  * scan and write are the V1-bridge flavors ([[V1Scan]] / [[V1Write]],
-  * the same bridge Spark's JDBC V2 connector ships on). The bridge is the
-  * POINT, not a shortcut: MergeTable's read path already composes
-  * deletion-vector masks, column mapping, and type widening into a
-  * DataFrame plan — re-deriving all of that as a bespoke
-  * `PartitionReader[InternalRow]` would duplicate the one component the
-  * whole library is built around. The V2 pushdown surface stays real:
-  * pruned columns and translated filters are applied INSIDE the bridged
-  * DataFrame, so they reach the underlying parquet scan's
-  * `PushedFilters`/`ReadSchema` exactly as a native scan's would.
+  * table is resolved, for batch reads, to the plan [[MergeTable]] itself
+  * builds — the injected [[GraftReadResolution]] rule replaces the V2
+  * relation with `readVersion` at the pinned version (or `changes` for the
+  * change feed), one Parquet relation over the snapshot's
+  * [[graft.lake.ManifestFileIndex]] with the column-mapping projection and
+  * the deletion-vector anti-join above it, as Delta's `DeltaAnalysis` turns
+  * `DeltaTableV2` into a `LogicalRelation`. Column pruning, filter pushdown,
+  * file skipping and columnar batches are then Spark's own, and aggregates
+  * the log can answer become a local relation
+  * ([[graft.lake.MetadataOnlyAggregate]]). Writes stay on the V2 table
+  * ([[V1Write]]).
   *
   * Registered under the short name `graft` via the standard
   * `DataSourceRegister` service file, so `format("graft")` resolves with
   * zero session configuration. Also implements the V1
-  * [[RelationProvider]]/[[CreatableRelationProvider]] pair — Spark routes
-  * `ErrorIfExists`/`Ignore` path saves (and `partitionBy` writes, which
-  * path-based V2 tables reject) through the V1 API, Delta's arrangement
-  * too.
+  * [[CreatableRelationProvider]] — Spark routes `ErrorIfExists`/`Ignore`
+  * path saves (and `partitionBy` writes, which path-based V2 tables reject)
+  * through the V1 API, Delta's arrangement too.
   *
   * Partition layout on first write resolves, in order: explicit
   * `partitionBy(...)` (V1 route), a `partitionCols` option
@@ -50,7 +50,7 @@ import graft.lake.MergeTable
   * never silently re-layout a table.
   */
 final class GraftDataSource extends TableProvider with DataSourceRegister
-    with RelationProvider with CreatableRelationProvider
+    with CreatableRelationProvider
     with org.apache.spark.sql.sources.StreamSinkProvider
     with org.apache.spark.sql.sources.StreamSourceProvider {
 
@@ -175,13 +175,6 @@ final class GraftDataSource extends TableProvider with DataSourceRegister
 
   // ---- V1 route (ErrorIfExists/Ignore saves, partitionBy writes) ----
 
-  override def createRelation(ctx: SQLContext,
-                              parameters: Map[String, String]): BaseRelation = {
-    val table = MergeTable.open(parameters.getOrElse("path",
-      throw new IllegalArgumentException("format(\"graft\") requires a path")))
-    GraftDataSource.relationFor(ctx, table.read(ctx.sparkSession))
-  }
-
   override def createRelation(ctx: SQLContext, mode: SaveMode,
                               parameters: Map[String, String],
                               data: DataFrame): BaseRelation = {
@@ -226,24 +219,16 @@ final class GraftDataSource extends TableProvider with DataSourceRegister
       case SaveMode.Ignore if exists          => () // no-op by contract
       case SaveMode.Ignore                    => table.overwrite(data, txn)
     }
-    GraftDataSource.relationFor(ctx, table.read(ctx.sparkSession))
+    // Spark only reads the returned relation's schema
+    val written = GraftDatasourceShims.asNullable(table.schemaOf(table.currentVersion))
+    new BaseRelation {
+      override def sqlContext: SQLContext = ctx
+      override def schema: StructType = written
+    }
   }
 }
 
 object GraftDataSource {
-
-  /** `reportedSchema` must EXACTLY equal the V2 scan's readSchema when
-    * bridging (Spark hard-checks the two, nullability included); the
-    * plain V1 route passes the frame's own schema.
-    */
-  private[sources] def relationFor(ctx: SQLContext, df: DataFrame,
-                                   reportedSchema: StructType = null): BaseRelation =
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = ctx
-      override def schema: StructType =
-        Option(reportedSchema).getOrElse(df.schema)
-      override def buildScan(): RDD[Row] = df.rdd
-    }
 
   /** `["a","b"]` — the JSON shape Spark serializes `partitionBy` columns
     * into for V1 path writes. Minimal parse, loud on anything else.
@@ -258,12 +243,13 @@ object GraftDataSource {
 
 }
 
-/** The V2 [[Table]] over one MergeTable root: current-snapshot reads
-  * (pruned + filtered), append/truncate writes through the commit
-  * protocol. `ACCEPT_ANY_SCHEMA` delegates write-schema validation to
-  * MergeTable's own append/overwrite checks (extra columns fail loudly,
-  * alignment is by name) — necessary because a bootstrap write targets a
-  * table whose schema does not exist yet.
+/** The V2 [[Table]] over one MergeTable root: batch reads resolve to the
+  * MergeTable plan of the pinned snapshot or change feed
+  * ([[GraftReadResolution]]); append/truncate/overwrite writes and deletes
+  * run through the commit protocol. `ACCEPT_ANY_SCHEMA` delegates
+  * write-schema validation to MergeTable's own append/overwrite checks
+  * (extra columns fail loudly, alignment is by name) — necessary because a
+  * bootstrap write targets a table whose schema does not exist yet.
   */
 final class GraftTable(root: String, declaredParts: Seq[String],
                        declaredSchema: StructType,
@@ -277,24 +263,24 @@ final class GraftTable(root: String, declaredParts: Seq[String],
 
   /** The snapshot version the reader options pin — `versionAsOf` /
     * `timestampAsOf` (Delta's reader-option time travel) — or the current
-    * version. CDF mode (`readChangeFeed`) reads the commit range
+    * version, resolved once so the schema and the read name one snapshot.
+    * CDF mode (`readChangeFeed`) reads the commit range
     * `startingVersion..endingVersion` of the feed instead.
     */
-  private def pinnedVersion(t: MergeTable): Long =
+  private lazy val pinnedVersion: Long = {
+    val t = MergeTable.open(root)
     opts.get("versionasof").map(_.toLong)
       .orElse(opts.get("timestampasof")
         .map(ts => t.versionAt(graft.sqlapi.LakeSql.parseTsMillis(ts))))
       .getOrElse(t.currentVersion)
+  }
 
   private def cdfMode: Boolean = opts.get("readchangefeed").exists(_.toBoolean)
 
-  /** The scan's base DataFrame: the pinned snapshot's read, or the
-    * change feed. The bridge filters it by the pushed predicates, so the
-    * snapshot's [[graft.lake.ManifestFileIndex]] skips files by partition
-    * values, log stats, Bloom sidecars and footers before any data file is
-    * opened.
+  /** What a batch read of the table is: the pinned snapshot's read, or the
+    * change feed.
     */
-  private[sources] def baseFrame(spark: org.apache.spark.sql.SparkSession): DataFrame = {
+  private[sources] def baseFrame(spark: SparkSession): DataFrame = {
     val t = MergeTable.open(root)
     if (cdfMode) {
       // Delta's CDF range options: version bounds directly, or timestamp
@@ -316,113 +302,21 @@ final class GraftTable(root: String, declaredParts: Seq[String],
         .getOrElse(t.currentVersion)
       t.changes(spark, from, to)
     }
-    else t.readVersion(spark, pinnedVersion(t))
+    else t.readVersion(spark, pinnedVersion)
   }
 
+  /** The schema the read reports: the snapshot's, nullable as
+    * `readVersion` reports it (NOT NULL is the CHECK machinery's job), or
+    * the feed's own.
+    */
   private[sources] def resolvedSchema: StructType = {
     val probe = new MergeTable(root)
     if (!probe.exists) declaredSchema
     else if (cdfMode)
       // feed frames carry the user columns plus the CDF markers; resolve
       // the exact shape from the feed itself (metadata-sized analysis)
-      baseFrame(org.apache.spark.sql.SparkSession.active).schema
-    else probe.schemaOf(pinnedVersion(probe))
-  }
-
-  /** Translate a pushed [[Aggregation]] and answer it from the commit log
-    * ([[MergeTable.aggregateFromStats]]). None whenever the shape or the
-    * log can't produce an EXACT answer: unsupported functions (anything
-    * beyond count(*)/min/max), non-column arguments, group-bys that aren't
-    * partition columns, CDF reads, missing row counts / stats coverage,
-    * deletion vectors under min/max. Time-travel reads ARE answerable —
-    * stats live in the pinned version's own commit.
-    */
-  /** Partition layout for the scan builder's filter-consumption decision:
-    * the log's once the table exists, the declared one before.
-    */
-  private[sources] def tablePartitionCols: Seq[String] = {
-    val probe = new MergeTable(root)
-    if (probe.exists) MergeTable.open(root).partitionCols else declaredParts
-  }
-
-  private[sources] def metadataAggregate(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation,
-      partitionFilters: Seq[Filter] = Nil)
-      : Option[(StructType, Seq[Row])] = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{Avg, Count, CountStar, Max, Min, Sum}
-    import org.apache.spark.sql.connector.expressions.NamedReference
-    import org.apache.spark.sql.types.{LongType, StructField}
-    if (cdfMode) return None
-    val probe = new MergeTable(root)
-    if (!probe.exists) return None
-    val t = MergeTable.open(root)
-    val v = pinnedVersion(t)
-    val schema = t.schemaOf(v)
-
-    def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-      e match {
-        case nr: NamedReference if nr.fieldNames.length == 1 &&
-          schema.fieldNames.contains(nr.fieldNames()(0)) => Some(nr.fieldNames()(0))
-        case _ => None
-      }
-
-    val groupBy: Seq[String] = {
-      val gs = agg.groupByExpressions.toSeq.map(colOf)
-      if (gs.exists(_.isEmpty)) return None
-      gs.flatten
-    }
-    val aggs: Seq[(String, String)] = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => ("count", null)
-      case c: Count if !c.isDistinct => colOf(c.column) match {
-        case Some(n) => ("count", n) // rows minus recorded null counts
-        case None    => return None
-      }
-      case m: Min => colOf(m.column) match {
-        case Some(c) => ("min", c)
-        case None    => return None
-      }
-      case m: Max => colOf(m.column) match {
-        case Some(c) => ("max", c)
-        case None    => return None
-      }
-      case sm: Sum if !sm.isDistinct => colOf(sm.column) match {
-        case Some(c) => ("sum", c) // exact integral partial sums in the log
-        case None    => return None
-      }
-      // AVG = exact integral sum / non-null count, both log-answerable —
-      // deterministic where a scan's double-accumulated Average is only
-      // exact while the running sum stays below 2^53 (beyond that the scan
-      // itself is order-dependent; the log's answer is the canonical one)
-      case a: Avg if !a.isDistinct => colOf(a.column) match {
-        case Some(c) => ("avg", c)
-        case None    => return None
-      }
-      case _ => return None
-    }
-
-    // consumed partition-only filters restrict the file set EXACTLY —
-    // None (untranslatable/non-partition, shouldn't happen for consumed
-    // filters) rejects the pushdown rather than risking a wrong answer
-    val restrict: Option[Set[String]] =
-      if (partitionFilters.isEmpty) None
-      else t.exactPartitionFiles(org.apache.spark.sql.SparkSession.active, v,
-          partitionFilters) match {
-        case None => return None
-        case some => some
-      }
-    t.aggregateFromStats(v, groupBy, aggs, restrict).map { rows =>
-      val fields =
-        groupBy.map(c => StructField(c, schema(c).dataType, nullable = true)) ++
-          aggs.map {
-            case ("count", null) => StructField("count(*)", LongType, nullable = false)
-            case ("count", c)    => StructField(s"count($c)", LongType, nullable = false)
-            case ("sum", c)      => StructField(s"sum($c)", LongType, nullable = true)
-            case ("avg", c) => StructField(s"avg($c)",
-              org.apache.spark.sql.types.DoubleType, nullable = true)
-            case (op, c) => StructField(s"$op($c)", schema(c).dataType, nullable = true)
-          }
-      (StructType(fields), rows.map(Row.fromSeq))
-    }
+      baseFrame(SparkSession.active).schema
+    else GraftDatasourceShims.asNullable(probe.schemaOf(pinnedVersion))
   }
 
   private[sources] def asV2: Table = new Table
@@ -430,6 +324,8 @@ final class GraftTable(root: String, declaredParts: Seq[String],
       with org.apache.spark.sql.connector.catalog.SupportsDelete {
 
     override def graftRoot: String = root
+
+    override def readFrame(spark: SparkSession): DataFrame = baseFrame(spark)
 
     override def name(): String = s"graft.`$root`"
 
@@ -447,7 +343,7 @@ final class GraftTable(root: String, declaredParts: Seq[String],
         filters.forall(f => MergeTable.translateFilter(f).isDefined)
 
     override def deleteWhere(filters: Array[Filter]): Unit = {
-      val spark = org.apache.spark.sql.SparkSession.active
+      val spark = SparkSession.active
       val t = MergeTable.open(root)
       val pred = filters.flatMap(MergeTable.translateFilter(_))
         .reduceOption(_ && _).getOrElse(lit(true))
@@ -484,8 +380,11 @@ final class GraftTable(root: String, declaredParts: Seq[String],
       caps
     }
 
+    // reads never plan this scan: GraftReadResolution replaces them first.
+    // DELETE FROM plans its target as a scan it never runs (filters go to
+    // deleteWhere), so the scan has a schema and no batch
     override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      new GraftScanBuilder(GraftTable.this)
+      () => new Scan { override def readSchema(): StructType = schema() }
 
     override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
       require(!cdfMode && opts.get("versionasof").isEmpty &&
@@ -496,118 +395,6 @@ final class GraftTable(root: String, declaredParts: Seq[String],
         yield a -> v.toLong
       new GraftWriteBuilder(handle, txn)
     }
-  }
-}
-
-/** Column pruning + filter pushdown land in the bridged DataFrame plan —
-  * `.explain` on a `format("graft")` read shows the pruned `ReadSchema`
-  * and the filters under `PushedFilters` on the inner parquet scan.
-  * Every filter is also returned as residual, so Spark re-applies the
-  * exact predicate above the scan: pushdown only lets the scan's
-  * [[graft.lake.ManifestFileIndex]] skip files that hold no matching row,
-  * never decides which rows come back.
-  *
-  * Aggregate pushdown ([[SupportsPushDownAggregates]], the JDBC-connector
-  * shape): `count(*)` / `min` / `max` — optionally grouped by partition
-  * columns — are answered ENTIRELY from the commit log via
-  * [[MergeTable.aggregateFromStats]] when the log can answer exactly
-  * (recorded row counts, full stats coverage, no deletion vectors for
-  * min/max). On a 100 TB table that turns `SELECT count(*) FROM t` into a
-  * metadata read of the manifest — zero data files opened, and the plan
-  * shows `PushedAggregates` over a local one-row relation instead of a
-  * distributed scan. Complete pushdown only: when the log can't answer,
-  * `pushAggregation` returns false and the normal scan runs.
-  */
-final class GraftScanBuilder(table: GraftTable)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
-
-  private var required: Option[StructType] = None
-  private var pushed: Array[Filter] = Array.empty
-  private var consumed: Array[Filter] = Array.empty
-  private var aggResult: Option[(StructType, Seq[Row])] = None
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(f => MergeTable.translateFilter(f).isDefined)
-    // PARTITION-ONLY filters are CONSUMED (not residual): the bridged frame
-    // re-applies every pushed filter with Spark's own evaluation, so
-    // correctness never depends on file pruning — and with no residual
-    // Filter left above the scan, Spark can offer the aggregate, keeping
-    // `count(*) WHERE part = x` a metadata answer
-    val pcols = table.tablePartitionCols.toSet
-    consumed =
-      if (pcols.isEmpty) Array.empty
-      else pushed.filter(f => f.references.nonEmpty &&
-        f.references.forall(pcols.contains))
-    filters.filterNot(consumed.contains)
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = Some(requiredSchema)
-
-  // supportCompletePushDown and pushAggregation receive the same
-  // Aggregation back-to-back — compute the metadata answer once
-  private var memo: Option[(AnyRef, Option[(StructType, Seq[Row])])] = None
-  private def answer(agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Option[(StructType, Seq[Row])] = memo match {
-    case Some((key, res)) if key eq agg => res
-    case _ =>
-      val res = table.metadataAggregate(agg, consumed.toSeq)
-      memo = Some((agg, res))
-      res
-  }
-
-  override def supportCompletePushDown(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    answer(agg).isDefined
-
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    // complete pushdown only: partial (per-split intermediate rows) has no
-    // meaning for a metadata answer, so an unanswerable aggregation falls
-    // back to the ordinary scan instead of half-pushing
-    aggResult = answer(agg)
-    aggResult.isDefined
-  }
-
-  override def build(): Scan = aggResult match {
-    case Some((schema, rows)) => new GraftAggScan(schema, rows)
-    case None => new GraftV1BridgeScan(table, required, pushed)
-  }
-}
-
-/** The result of a completely-pushed aggregation: a LOCAL relation holding
-  * the pre-computed rows (driver metadata, no executor work at all).
-  */
-final class GraftAggScan(schema: StructType, rows: Seq[Row]) extends V1Scan {
-  override def readSchema(): StructType = schema
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T = {
-    val df = context.sparkSession.createDataFrame(
-      rows.asJava, schema)
-    GraftDataSource.relationFor(context, df, schema).asInstanceOf[T]
-  }
-}
-
-final class GraftV1BridgeScan(table: GraftTable, pruned: Option[StructType],
-                              filters: Array[Filter]) extends V1Scan {
-
-  override def readSchema(): StructType =
-    pruned.getOrElse(table.resolvedSchema)
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T = {
-    val base = table.baseFrame(context.sparkSession)
-    val filtered = filters.flatMap(MergeTable.translateFilter)
-      .foldLeft(base)(_ filter _)
-    // an empty required schema (count(*)) projects zero columns — the
-    // bridged rows must still match readSchema exactly
-    val projected = filtered.select(
-      readSchema().fieldNames.map(col).toIndexedSeq: _*)
-    GraftDataSource.relationFor(context, projected, readSchema()).asInstanceOf[T]
   }
 }
 
@@ -898,10 +685,15 @@ final class GraftStreamSink(root: String, pcols: Seq[String], keys: Seq[String],
 }
 
 /** Marks the V2 table as graft's, with enough state for the analyzer
-  * rewrites ([[GraftWriteRewrites]]) to reach the MergeTable underneath —
-  * the pattern Delta uses to claim plan nodes Spark has no V1 bridge for.
+  * rules ([[GraftReadResolution]], [[GraftWriteRewrites]]) to reach the
+  * MergeTable underneath — the pattern Delta uses to claim plan nodes.
   */
-trait GraftV2Marker { def graftRoot: String }
+trait GraftV2Marker {
+  def graftRoot: String
+
+  /** What a batch read of the table resolves to. */
+  def readFrame(spark: SparkSession): DataFrame
+}
 
 /** Append by default; `truncate()` (Spark's overwrite-mode hook for
   * path-based saves) swaps the commit to a full overwrite; an

@@ -71,12 +71,11 @@ import graft.lake.MergeTable
   * half-parsing.
   *
   * Time travel rewrites every `name VERSION AS OF n` table reference in an
-  * arbitrary SELECT to a temp view over a version-pinned CONNECTOR read
-  * (`format("graft")` + `versionAsOf`) and runs the rewritten statement
-  * through `spark.sql` — the full SELECT surface (joins, windows,
-  * aggregates) composes with versioned reads, and because the views are V2
-  * relations the outer query's filters reach MergeTable's automatic data
-  * skipping exactly like direct connector scans.
+  * arbitrary SELECT to a temp view over that snapshot's `readVersion` and
+  * runs the rewritten statement through `spark.sql` — the full SELECT
+  * surface (joins, windows, aggregates) composes with versioned reads, and
+  * the outer query's filters reach MergeTable's automatic data skipping
+  * exactly like API reads.
   */
 object LakeSql {
 
@@ -615,15 +614,13 @@ object LakeSql {
           java.util.regex.Matcher.quoteReplacement(view)
       }
     })
-    // Snapshot views route through the CONNECTOR (version pinned at
-    // rewrite time, so semantics stay eager): a V2 relation participates
-    // in Spark's filter pushdown, which hands the outer query's
-    // predicates to MergeTable's automatic data skipping — SQL reads
-    // prune files exactly like format("graft") reads do.
+    // Snapshot views are the snapshot's own read (version pinned at
+    // rewrite time, so semantics stay eager; the handle re-opened so the
+    // layout comes from the log): the outer query's predicates reach its
+    // ManifestFileIndex, and its aggregates the log's metadata answer, as
+    // on any MergeTable read.
     def snapshotView(table: MergeTable, ver: Long, view: String): Unit =
-      spark.read.format("graft").option("path", table.root)
-        .option("versionAsOf", ver.toString).load()
-        .createOrReplaceTempView(view)
+      MergeTable.open(table.root).readVersion(spark, ver).createOrReplaceTempView(view)
     rewritten = TimeTravelRef.replaceAllIn(rewritten, m => {
       val (name, ver) = (m.group(1), m.group(2).toLong)
       val table = resolve(name, targets)

@@ -347,10 +347,11 @@ class PlanSpec extends SparkSpec {
     // the one-pass claim IS the operator: Q queries share a single
     // partition-pruned codes scan (a search() loop would show Q scans)
     val plan = finalPlan(q)
-    val scans = plan.linesIterator.count(_.contains("Scan graft"))
-    assert(scans == 1, s"expected ONE codes scan, found $scans:\n$plan")
-    // and the probed-cell union reached the connector as a pushed filter
-    assert(plan.contains("In(cell"),
+    val scans = plan.linesIterator.filter(l => l.contains("FileScan parquet") &&
+      l.contains("ManifestFileIndex") && "[\\[,]codes#\\d+".r.findFirstIn(l).isDefined).toSeq
+    assert(scans.size == 1, s"expected ONE codes scan, found ${scans.size}:\n$plan")
+    // and the probed-cell union reached the codes scan as a partition filter
+    assert("PartitionFilters: \\[cell#\\d+ IN".r.findFirstIn(scans.head).isDefined,
       s"cell pruning not pushed into the codes scan:\n$plan")
   }
 
@@ -416,14 +417,17 @@ class PlanSpec extends SparkSpec {
     try {
       val q = spark.sql("SELECT k FROM plan_skip_t WHERE p = '1' AND k = 15")
       assert(q.collect().map(_.getLong(0)).toSeq === Seq(15L))
-      // the rewritten view is a V2 relation over the graft connector, and
-      // BOTH predicates reach it as pushed filters — the partition
-      // conjunct and the stats conjunct feed the manifest-level pruning
+      // the rewritten view is the snapshot's own scan over its manifest,
+      // and BOTH predicates reach it — the partition conjunct as a
+      // partition filter, the stats conjunct as a pushed filter — so the
+      // manifest-level pruning opens one file
       val plan = finalPlan(q)
-      assert(plan.contains("graft.sources.GraftDataSource"),
-        s"SQL view did not route through the connector:\n$plan")
-      assert(plan.contains("EqualTo(k,15)") && plan.contains("EqualTo(p,1)"),
-        s"predicates not pushed to the connector scan:\n$plan")
+      assert(plan.contains("ManifestFileIndex"),
+        s"SQL view did not read the snapshot's manifest:\n$plan")
+      assert(plan.contains("EqualTo(k,15)") &&
+        "PartitionFilters: \\[[^\\]]*\\(p#\\d+ = 1\\)".r.findFirstIn(plan).isDefined,
+        s"predicates not pushed to the snapshot scan:\n$plan")
+      assert(filesScanned(spark.sql("SELECT k FROM plan_skip_t WHERE p = '1' AND k = 15")) === 1L)
     } finally graft.sqlapi.LakeCatalog.unregister("plan_skip_t")
   }
 

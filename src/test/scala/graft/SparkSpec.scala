@@ -39,17 +39,26 @@ trait SparkSpec extends AnyFunSuite {
       }.map(_.metrics("numFiles").value).sum
   }
 
-  /** Snapshot `version` of `t` filtered by `filters`, as the connector's
-    * scan filters it.
-    */
+  /** Snapshot `version` of `t` filtered by `filters`. */
   def readWhere(t: graft.lake.MergeTable, version: Long,
                 filters: Seq[org.apache.spark.sql.sources.Filter]): org.apache.spark.sql.DataFrame =
     filters.flatMap(graft.lake.MergeTable.translateFilter)
       .foldLeft(t.readVersion(spark, version))(_ filter _)
 
+  /** Whether the table log answered `df`'s aggregate: the metadata rule's
+    * local relation is in its optimized plan, its physical plan scans no
+    * file, and collecting it starts no Spark job.
+    */
+  def answeredFromLog(df: org.apache.spark.sql.DataFrame): Boolean =
+    graft.lake.MetadataOnlyAggregate.answered(df) &&
+      !df.queryExecution.executedPlan.toString.contains("FileScan") &&
+      jobCount(df.collect())._1 == 0
+
   /** The number of Spark jobs started while `body` runs, with its result. */
   def jobCount[A](body: => A): (Int, A) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    // events of jobs that ended before `body` must not reach the listener
+    org.apache.spark.sql.GraftSqlShims.waitForListenerBus(spark)
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()

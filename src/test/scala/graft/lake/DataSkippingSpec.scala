@@ -242,12 +242,9 @@ class DataSkippingSpec extends SparkSpec {
       .filter(col("k") === 15).select("k", "v", "p")
     assert(viaConn.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
       .toSeq === Seq((15L, "v15", "1")))
-    // the bridged plan's parquet scan reads ONLY the admitted file: the
-    // pruned frame is what the V1 bridge wraps, and its scan's file index
-    // keeps the file-skipping result, not the full manifest
-    val pruned = readWhere(t, t.currentVersion,
-      Seq(sources.EqualTo("k", 15L)))
-    assert(filesScanned(pruned) === 1L)
+    // the connector read is the snapshot's own scan: its file index keeps
+    // the file-skipping result, not the full manifest
+    assert(filesScanned(spark.read.format("graft").load(root).filter(col("k") === 15)) === 1L)
     assert(filesScanned(t.read(spark)) === 3L)
   }
 
@@ -467,32 +464,30 @@ class DataSkippingSpec extends SparkSpec {
     assert(t.read(spark).filter(col("x").isNull).count() === 1L)
   }
 
-  test("partitionCandidatesExact: Some only when the WHOLE predicate evaluated exactly") {
+  test("exact partition sets answer from the log; other filters scan") {
     val t = statsTable("skip_exact")
     val v = t.currentVersion
     val files = t.filesOf(v)
     val schema = t.schemaOf(v)
-    // exact partition predicate → exactly the one matching partition's file
-    val exact = t.partitionCandidatesExact(spark, files, schema, col("p") === "1")
-    assert(exact.isDefined && exact.get.forall(_.contains("p=1")) && exact.get.nonEmpty)
-    // data-column references: the tuple probe cannot evaluate the WHOLE
-    // predicate — exact mode must refuse (the pruning path would fall back
-    // to keeping everything, which is sound for pruning but NOT exact)
-    assert(t.partitionCandidatesExact(spark, files, schema,
-      col("p") === "1" && col("k") > 5).isEmpty)
-    // nondeterministic predicates can never be exact over tuples
-    assert(t.partitionCandidatesExact(spark, files, schema,
-      rand() < 0.5).isEmpty)
-    // the pruning-mode companion keeps its conservative fallback on the
-    // same inputs (subset-prunes via the implied partition conjunct)
-    val pruned = t.partitionCandidates(spark, files, schema,
-      col("p") === "1" && col("k") > 5)
-    assert(pruned.forall(_.contains("p=1")))
-    // exactPartitionFiles: partition-only filters answer exactly; any
-    // data-column filter refuses so metadata aggregates fall back to a scan
-    assert(t.exactPartitionFiles(spark, v, Seq(sources.EqualTo("p", "1")))
-      .exists(_.forall(_.contains("p=1"))))
-    assert(t.exactPartitionFiles(spark, v, Seq(sources.GreaterThan("k", 5))).isEmpty)
+    def rows(filter: org.apache.spark.sql.Column) = t.read(spark).filter(filter).agg(count(lit(1)))
+    // a partition-only filter: the scan's own pruning is the exact file set
+    val exact = rows(col("p") === "1")
+    assert(answeredFromLog(exact))
+    assert(exact.head.getLong(0) === 10L)
+    // a data-column or nondeterministic conjunct keeps the scan, exactly
+    val mixed = rows(col("p") === "1" && col("k") > 15)
+    assert(!answeredFromLog(mixed) && mixed.head.getLong(0) === 4L)
+    assert(!graft.lake.MetadataOnlyAggregate.answered(rows(col("p") === "1" && rand() < 0.5)))
+    // a filter that fails to evaluate over the partition values declines
+    // to the scan, which reports the failure itself
+    val failing = rows(col("p").cast("date") === lit("2024-01-01").cast("date"))
+    assert(!graft.lake.MetadataOnlyAggregate.answered(failing))
+    intercept[Exception](failing.collect())
+    // the rebase read set keeps its conservative fallback on the same
+    // inputs (subset-prunes via the implied partition conjunct)
+    assert(t.partitionCandidates(spark, files, schema,
+      col("p") === "1" && col("k") > 5).forall(_.contains("p=1")))
+    assert(t.partitionCandidates(spark, files, schema, rand() < 0.5) === files)
   }
 
   /** The driver admit before `In` keys were parsed once: every key parsed

@@ -5,20 +5,18 @@ import graft.lake.MergeTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-/** Aggregate pushdown through the `format("graft")` connector:
+/** Metadata-only aggregates over `format("graft")` and API reads:
   * count(*)/min/max answered from the commit log's per-file row counts and
-  * min/max stats — zero data files scanned — with exact fallback to a real
-  * scan whenever the log cannot answer (no recorded counts, deletion
-  * vectors under min/max, string bounds, non-partition group-bys).
+  * min/max stats — zero data files scanned, no Spark job — with exact
+  * fallback to a real scan whenever the log cannot answer (no recorded
+  * counts, deletion vectors under min/max, string bounds, non-partition
+  * group-bys, data-column filters).
   */
 class AggPushdownSpec extends SparkSpec {
   import spark.implicits._
 
   private def planOf(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
-
-  private def isPushed(df: DataFrame): Boolean =
-    planOf(df).contains("PushedAggregates")
 
   test("count(*)/min/max answered from the log: pushed plan, no file scan") {
     val root = scratch("agg_basic")
@@ -34,8 +32,8 @@ class AggPushdownSpec extends SparkSpec {
         org.apache.spark.sql.functions.max("k").as("mx"),
         org.apache.spark.sql.functions.min("d").as("mnd"),
         org.apache.spark.sql.functions.max("d").as("mxd"))
-    assert(isPushed(df), s"expected PushedAggregates in:\n${planOf(df)}")
-    assert(!planOf(df).contains("FileScan"), "a pushed aggregate must not scan files")
+    assert(answeredFromLog(df), s"expected a metadata answer in:\n${planOf(df)}")
+    assert(!planOf(df).contains("FileScan"), "a metadata answer must not scan files")
     val r = df.collect().head
     assert((r.getLong(0), r.getInt(1), r.getInt(2)) === ((4L, 1, 9)))
     assert(r.getDate(3) === java.sql.Date.valueOf("2023-12-31"))
@@ -52,14 +50,14 @@ class AggPushdownSpec extends SparkSpec {
     val df = spark.read.format("graft").load(root).groupBy("p")
       .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("cnt"),
         org.apache.spark.sql.functions.max("k").as("mx"))
-    assert(isPushed(df), s"expected PushedAggregates in:\n${planOf(df)}")
+    assert(answeredFromLog(df), s"expected a metadata answer in:\n${planOf(df)}")
     assert(df.collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet ===
       Set(("p1", 2L, 2), ("p2", 2L, 4), ("p3", 1L, 5)))
     // min/max over the PARTITION column itself: exact from directory names
     val df2 = spark.read.format("graft").load(root)
       .agg(org.apache.spark.sql.functions.min("p").as("mn"),
         org.apache.spark.sql.functions.max("p").as("mx"))
-    assert(isPushed(df2))
+    assert(answeredFromLog(df2))
     assert(df2.collect().head.toSeq === Seq("p1", "p3"))
   }
 
@@ -70,11 +68,11 @@ class AggPushdownSpec extends SparkSpec {
     t.deleteVectorized(spark, col("k") === 4)
     val cnt = spark.read.format("graft").load(root)
       .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("cnt"))
-    assert(isPushed(cnt), s"count must push under dvs:\n${planOf(cnt)}")
+    assert(answeredFromLog(cnt), s"count must be a metadata answer under dvs:\n${planOf(cnt)}")
     assert(cnt.collect().head.getLong(0) === 3L)
     val mx = spark.read.format("graft").load(root)
       .agg(org.apache.spark.sql.functions.max("k").as("mx"))
-    assert(!isPushed(mx), "a mask could hide the extremal row — must scan")
+    assert(!answeredFromLog(mx), "a mask could hide the extremal row — must scan")
     assert(mx.collect().head.getInt(0) === 3, "fallback still answers correctly")
   }
 
@@ -84,7 +82,7 @@ class AggPushdownSpec extends SparkSpec {
     t.overwrite(Seq((1, "a"), (2, "b")).toDF("k", "v"))
     val cnt = spark.read.format("graft").load(root)
       .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("cnt"))
-    assert(!isPushed(cnt))
+    assert(!answeredFromLog(cnt))
     assert(cnt.collect().head.getLong(0) === 2L)
 
     // string min/max: recorded bounds are truncated prefixes, never pushed
@@ -93,14 +91,13 @@ class AggPushdownSpec extends SparkSpec {
     t2.overwrite(Seq((1, "aa"), (2, "zz")).toDF("k", "v"))
     val mn = spark.read.format("graft").load(root2)
       .agg(org.apache.spark.sql.functions.min("v").as("mn"))
-    assert(!isPushed(mn))
+    assert(!answeredFromLog(mn))
     assert(mn.collect().head.getString(0) === "aa")
 
-    // a WHERE above the aggregate keeps the real scan (filters stay
-    // residual in this connector, so Spark never offers the aggregate)
+    // a data-column WHERE under the aggregate keeps the real scan
     val filtered = spark.read.format("graft").load(root2).filter(col("k") > 1)
       .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("cnt"))
-    assert(!isPushed(filtered))
+    assert(!answeredFromLog(filtered))
     assert(filtered.collect().head.getLong(0) === 1L)
   }
 
@@ -112,18 +109,18 @@ class AggPushdownSpec extends SparkSpec {
     val v0 = spark.read.format("graft").option("versionAsOf", 0).load(root)
       .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("cnt"),
         org.apache.spark.sql.functions.max("k").as("mx"))
-    assert(isPushed(v0))
+    assert(answeredFromLog(v0))
     assert(v0.collect().head.toSeq === Seq(3L, 3))
     // ANALYZE retrofits counts onto a stats-less table
     val root2 = scratch("agg_analyze")
     val t2 = new MergeTable(root2)
     t2.overwrite(Seq((1, 5.5), (2, 7.25)).toDF("k", "x"))
-    assert(!isPushed(spark.read.format("graft").load(root2)
+    assert(!answeredFromLog(spark.read.format("graft").load(root2)
       .agg(org.apache.spark.sql.functions.max("x").as("mx"))))
     t2.analyze(spark, Seq("x"))
     val mx = spark.read.format("graft").load(root2)
       .agg(org.apache.spark.sql.functions.max("x").as("mx"))
-    assert(isPushed(mx))
+    assert(answeredFromLog(mx))
     assert(mx.collect().head.getDouble(0) === 7.25)
   }
 
@@ -131,36 +128,53 @@ class AggPushdownSpec extends SparkSpec {
     val root = scratch("agg_pfilter")
     val t = new MergeTable(root, Seq("p"), statsCols = Seq("k"))
     t.overwrite(Seq((1, "p1"), (2, "p1"), (3, "p2"), (4, "p2"), (5, "p3")).toDF("k", "p"))
-    // count(*) WHERE p = 'p1': the filter is partition-only → consumed by
-    // the scan, no residual Filter blocks the aggregate offer
+    // count(*) WHERE p = 'p1': the filter is partition-only, so the scan's
+    // own partition pruning gives the exact file set
     val cnt = spark.read.format("graft").load(root).filter(col("p") === "p1")
       .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("cnt"),
         org.apache.spark.sql.functions.max("k").as("mx"))
-    assert(isPushed(cnt), s"partition WHERE must still push:\n${planOf(cnt)}")
+    assert(answeredFromLog(cnt), s"partition WHERE must stay a metadata answer:\n${planOf(cnt)}")
     assert(cnt.collect().head.toSeq === Seq(2L, 2))
-    // compound partition predicates (IN / != / OR) consume too
+    // compound partition predicates (IN / != / OR) prune exactly too
     val in = spark.read.format("graft").load(root)
       .filter(col("p").isin("p1", "p3"))
       .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("cnt"))
-    assert(isPushed(in))
+    assert(answeredFromLog(in))
     assert(in.collect().head.getLong(0) === 3L)
     // a data-column conjunct keeps the real scan and exact results
     val mixed = spark.read.format("graft").load(root)
       .filter(col("p") === "p1" && col("k") > 1)
       .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("cnt"))
-    assert(!isPushed(mixed))
+    assert(!answeredFromLog(mixed))
     assert(mixed.collect().head.getLong(0) === 1L)
-    // plain row reads under a consumed filter stay exact (the bridge
-    // re-applies every pushed filter inside the frame)
+    // plain row reads under a partition filter stay exact
     assert(spark.read.format("graft").load(root).filter(col("p") =!= "p2")
       .select("k").as[Int].collect().toSet === Set(1, 2, 5))
     // group-by + partition WHERE: per-group metadata answer on the subset
     val grouped = spark.read.format("graft").load(root)
       .filter(col("p") =!= "p3").groupBy("p")
       .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("cnt"))
-    assert(isPushed(grouped))
+    assert(answeredFromLog(grouped))
     assert(grouped.collect().map(r => (r.getString(0), r.getLong(1))).toSet ===
       Set(("p1", 2L), ("p2", 2L)))
+  }
+
+  test("API reads get the metadata answer; an unstatted column scans") {
+    val root = scratch("agg_api")
+    val t = new MergeTable(root, Seq("p"), statsCols = Seq("k"))
+    t.overwrite(Seq((1, 10L, "p1"), (2, 20L, "p1"), (3, 30L, "p2")).toDF("k", "v", "p"))
+    val cnt = t.read(spark).agg(org.apache.spark.sql.functions.count(
+      org.apache.spark.sql.functions.lit(1)).as("cnt"))
+    assert(answeredFromLog(cnt), s"expected a metadata answer in:\n${planOf(cnt)}")
+    assert(cnt.collect().head.getLong(0) === 3L)
+    // a partition filter with a sum over a column the log records no
+    // stats for: the rule declines, the scan answers
+    val sumV = t.readVersion(spark, t.currentVersion).filter(col("p") === "p1")
+      .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("cnt"),
+        org.apache.spark.sql.functions.sum("v").as("sv"))
+    assert(!answeredFromLog(sumV))
+    assert(planOf(sumV).contains("FileScan"))
+    assert(sumV.collect().head.toSeq === Seq(2L, 30L))
   }
 
   test("empty table: global aggregate emits its one row, grouped emits none") {
@@ -171,7 +185,7 @@ class AggPushdownSpec extends SparkSpec {
     val g = spark.read.format("graft").load(root)
       .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("cnt"),
         org.apache.spark.sql.functions.max("k").as("mx"))
-    assert(isPushed(g))
+    assert(answeredFromLog(g))
     assert(g.collect().map(_.toSeq).toSeq === Seq(Seq(0L, null)))
     val grouped = spark.read.format("graft").load(root).groupBy("p")
       .agg(org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("cnt"))
@@ -188,7 +202,7 @@ class AggPushdownSpec extends SparkSpec {
     val df = spark.read.format("graft").load(root)
       .agg(org.apache.spark.sql.functions.count(col("x")).as("nx"),
         org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("cnt"))
-    assert(isPushed(df), s"count(col) must push:\n${planOf(df)}")
+    assert(answeredFromLog(df), s"count(col) must be a metadata answer:\n${planOf(df)}")
     assert(df.collect().head.toSeq === Seq(3L, 5L))
     // count over the PARTITION column: the Hive DEFAULT dir holds the nulls
     val t2root = scratch("agg_countpart")
@@ -197,7 +211,7 @@ class AggPushdownSpec extends SparkSpec {
       .toDF("k", "p"))
     val pc = spark.read.format("graft").load(t2root)
       .agg(org.apache.spark.sql.functions.count(col("p")).as("np"))
-    assert(isPushed(pc))
+    assert(answeredFromLog(pc))
     assert(pc.collect().head.getLong(0) === 2L)
     // a NULLABLE column with NO recorded stats falls back (a non-nullable
     // one would be rewritten to count(*) by Catalyst and legitimately push)
@@ -206,7 +220,7 @@ class AggPushdownSpec extends SparkSpec {
     t3.overwrite(Seq[(Int, Option[Int])]((1, Some(5)), (2, None)).toDF("k", "y"))
     val ny = spark.read.format("graft").load(t3root)
       .agg(org.apache.spark.sql.functions.count(col("y")).as("ny"))
-    assert(!isPushed(ny))
+    assert(!answeredFromLog(ny))
     assert(ny.collect().head.getLong(0) === 1L)
   }
 
@@ -219,13 +233,13 @@ class AggPushdownSpec extends SparkSpec {
     val df = spark.read.format("graft").load(root)
       .agg(org.apache.spark.sql.functions.sum("x").as("sx"),
         org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("cnt"))
-    assert(isPushed(df), s"sum must push:\n${planOf(df)}")
+    assert(answeredFromLog(df), s"sum must be a metadata answer:\n${planOf(df)}")
     assert(df.collect().head.toSeq === Seq(103L, 4L))
     // grouped + partition-filtered sums compose
     val g = spark.read.format("graft").load(root)
       .filter(col("p") === "p1").groupBy("p")
       .agg(org.apache.spark.sql.functions.sum("x").as("sx"))
-    assert(isPushed(g))
+    assert(answeredFromLog(g))
     assert(g.collect().map(r => (r.getString(0), r.getLong(1))).toSeq === Seq(("p1", 3L)))
     // an all-NULL column sums to NULL, still metadata-answered
     val t2root = scratch("agg_sumnull")
@@ -233,15 +247,15 @@ class AggPushdownSpec extends SparkSpec {
     t2.overwrite(Seq[Option[Long]](None, None).toDF("x"))
     val n = spark.read.format("graft").load(t2root)
       .agg(org.apache.spark.sql.functions.sum("x").as("sx"))
-    assert(isPushed(n))
+    assert(answeredFromLog(n))
     assert(n.collect().head.isNullAt(0))
-    // DOUBLE columns never push (FP accumulation is order-dependent)
+    // DOUBLE columns never answer from the log (FP accumulation is order-dependent)
     val t3root = scratch("agg_sumdbl")
     val t3 = new MergeTable(t3root, Nil, statsCols = Seq("d"))
     t3.overwrite(Seq(1.5, 2.5).toDF("d"))
     val d = spark.read.format("graft").load(t3root)
       .agg(org.apache.spark.sql.functions.sum("d").as("sd"))
-    assert(!isPushed(d))
+    assert(!answeredFromLog(d))
     assert(d.collect().head.getDouble(0) === 4.0)
   }
 
@@ -252,13 +266,13 @@ class AggPushdownSpec extends SparkSpec {
     val mn = spark.read.format("graft").load(root)
       .agg(org.apache.spark.sql.functions.min("x").as("mn"),
         org.apache.spark.sql.functions.max("x").as("mx"))
-    assert(isPushed(mn))
+    assert(answeredFromLog(mn))
     assert(mn.collect().head.toSeq === Seq(null, null))
     t.append(Seq[(Int, Option[Int])]((3, Some(42)), (4, None)).toDF("k", "x"))
     val mixed = spark.read.format("graft").load(root)
       .agg(org.apache.spark.sql.functions.min("x").as("mn"),
         org.apache.spark.sql.functions.max("x").as("mx"))
-    assert(isPushed(mixed))
+    assert(answeredFromLog(mixed))
     assert(mixed.collect().head.toSeq === Seq(42, 42))
   }
 }

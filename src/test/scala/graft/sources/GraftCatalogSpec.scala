@@ -236,6 +236,43 @@ class GraftCatalogSpec extends SparkSpec {
     spark.sql(s"ALTER TABLE $cat.nn.t ALTER COLUMN k DROP NOT NULL")
   }
 
+  test("writes whose query reads the target commit one version each") {
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.self")
+    spark.sql(s"CREATE TABLE $cat.self.t (k BIGINT, v STRING, p STRING) PARTITIONED BY (p)")
+    spark.sql(s"INSERT INTO $cat.self.t VALUES (1, 'a', 'p1'), (2, 'b', 'p2')")
+    val wh = spark.conf.get(s"spark.sql.catalog.$cat.warehouse")
+    def version: Long = MergeTable.open(s"$wh/self/t").currentVersion
+    def step(sql: String, want: Seq[(Long, String, String)]): Unit = {
+      val before = version
+      spark.sql(sql)
+      assert(version === before + 1, s"one commit for: $sql")
+      assert(spark.sql(s"SELECT k, v, p FROM $cat.self.t").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq.sorted === want, sql)
+    }
+    step(s"INSERT INTO $cat.self.t SELECT * FROM $cat.self.t WHERE p = 'p1'",
+      Seq((1L, "a", "p1"), (1L, "a", "p1"), (2L, "b", "p2")))
+    step(s"INSERT OVERWRITE $cat.self.t PARTITION (p = 'p2') " +
+      s"SELECT k + 10, v FROM $cat.self.t WHERE p = 'p2'",
+      Seq((1L, "a", "p1"), (1L, "a", "p1"), (12L, "b", "p2")))
+    withConf("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      step(s"INSERT OVERWRITE $cat.self.t SELECT k + 100, v, p FROM $cat.self.t WHERE p = 'p1'",
+        Seq((12L, "b", "p2"), (101L, "a", "p1"), (101L, "a", "p1")))
+    }
+    step(s"DELETE FROM $cat.self.t WHERE k > 100", Seq((12L, "b", "p2")))
+  }
+
+  test("declared NOT NULL columns stay enforced through the nullable read schema") {
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.nn2")
+    spark.sql(s"CREATE TABLE $cat.nn2.t (k BIGINT NOT NULL, v STRING)")
+    spark.sql(s"INSERT INTO $cat.nn2.t VALUES (1, 'a')")
+    assert(spark.table(s"$cat.nn2.t").schema.forall(_.nullable))
+    val ex = intercept[Exception](
+      spark.sql(s"INSERT INTO $cat.nn2.t VALUES (CAST(NULL AS BIGINT), 'b')"))
+    assert(ex.getMessage.contains("graft_notnull_k") ||
+      Option(ex.getCause).exists(_.getMessage.contains("graft_notnull_k")))
+    assert(spark.sql(s"SELECT count(*) FROM $cat.nn2.t").head.getLong(0) === 1L)
+  }
+
   test("scan pruning and filter pushdown survive the catalog route") {
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.plan")
     spark.sql(s"CREATE TABLE $cat.plan.t (k BIGINT, v STRING, w STRING)")

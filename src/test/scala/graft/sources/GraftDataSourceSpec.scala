@@ -8,12 +8,20 @@ import org.apache.spark.sql.functions.col
   * call-shape (`format("delta")` reads/writes in both Glue jobs) over
   * MergeTable: path-based read and write, partitioned bootstrap, append
   * vs overwrite modes, agreement with API handles on the same root, and
-  * pushdown reaching the inner parquet scan.
+  * the API read's pushdown on the connector's scan.
   */
 class GraftDataSourceSpec extends SparkSpec {
   import spark.implicits._
 
   private def rows3 = Seq((1, "a", "p1"), (2, "b", "p1"), (3, "c", "p2"))
+
+  /** The filters `df`'s graft scans push to Parquet, one string per scan. */
+  private def pushedFilters(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.location.isInstanceOf[graft.lake.ManifestFileIndex] =>
+        s.metadata.getOrElse("PushedFilters", "")
+    }
 
   test("write bootstrap + read back by bare path; modes append and overwrite") {
     val root = scratch("dsv2_rw")
@@ -74,7 +82,12 @@ class GraftDataSourceSpec extends SparkSpec {
       .filter(col("k") > 990).select("k", "v")
     assert(q.count() === 10L)
     val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [GreaterThan(k,990)]"),
+    // the connector scan pushes exactly what the API read of the same
+    // query pushes
+    val api = MergeTable.open(root).read(spark).filter(col("k") > 990).select("k", "v")
+    assert(pushedFilters(q) === pushedFilters(api) && pushedFilters(q).size === 1,
+      s"the connector must push the API read's filters:\n$plan")
+    assert(pushedFilters(q).head.contains("GreaterThan(k,990)"),
       s"the filter must be pushed into the graft scan:\n$plan")
     assert(plan.contains("ReadSchema: struct<k:int,v:string>"),
       s"the scan must prune to the projected columns (no p):\n$plan")
