@@ -92,8 +92,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectParser((session, delegate) =>
       new graft.sqlapi.GraftSqlParser(session, delegate))
     // batch reads of graft V2 tables (format("graft"), GraftCatalog)
-    // resolve to the MergeTable plan, as Delta's DeltaAnalysis does
-    e.injectResolutionRule(session => graft.sources.GraftReadResolution(session))
+    // become the MergeTable plan, as Delta's DeltaAnalysis does; in the
+    // optimizer, so every execution reads the snapshot current at it
+    e.injectOptimizerRule(session => graft.sources.GraftReadResolution(session))
     // aggregates the table log answers exactly become a local relation,
     // once the operator optimizations have settled the plan
     e.injectPreCBORule(_ => graft.lake.MetadataOnlyAggregate)

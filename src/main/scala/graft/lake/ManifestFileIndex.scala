@@ -61,15 +61,13 @@ import scala.util.control.NonFatal
   *     reads at most `FooterReadsPerCall` uncached ones and keeps the rest.
   *
   * `files` are root-relative manifest paths (`<dataDir>/[<p>=<v>/...]part-*`);
-  * `log` names the snapshot of `root` they belong to, and is absent for files
-  * no snapshot records yet (a write's own output).
+  * `snapshot` is what the log records about the snapshot of `root` they
+  * belong to, and is absent for files no snapshot records yet (a write's own
+  * output).
   */
 final class ManifestFileIndex(spark: SparkSession, val root: String, files: Seq[String],
-                              userSchema: StructType, log: Option[ManifestFileIndex.Log])
+                              userSchema: StructType, val snapshot: Option[ManifestFileIndex.Log])
     extends PartitioningAwareFileIndex(spark, Map.empty, Some(userSchema)) {
-
-  /** The snapshot of `root` the files belong to, if any. */
-  def snapshot: Option[ManifestFileIndex.Log] = log
 
   // every file sits under `root`, so one file system serves them all
   private val fs = new Path(root).getFileSystem(hadoopConf)
@@ -119,7 +117,7 @@ final class ManifestFileIndex(spark: SparkSession, val root: String, files: Seq[
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     import ManifestFileIndex.{bloomTests, logDecidable}
     // the data conjuncts under the log's logical column names
-    val conjuncts = log.fold(Seq.empty[sources.Filter]) { l =>
+    val conjuncts = snapshot.fold(Seq.empty[sources.Filter]) { l =>
       MergeTable.flattenAnd(dataFilters.flatMap(e => GraftSqlShims.translateFilter(e.transform {
         case a: AttributeReference => a.withName(l.logicalOf.getOrElse(a.name, a.name))
       })))
@@ -127,9 +125,9 @@ final class ManifestFileIndex(spark: SparkSession, val root: String, files: Seq[
     val dirs = super.listFiles(partitionFilters ++ derivedPartitionFilters(conjuncts), dataFilters)
     val pushed = if (dataFilters.isEmpty) Nil
       else GraftDatasourceShims.parquetPushedFilters(spark, dataFilters)
-    val logTests = log.fold(Seq.empty[String => Option[Boolean]])(l =>
+    val logTests = snapshot.fold(Seq.empty[String => Option[Boolean]])(l =>
       logDecidable(l, conjuncts).map(logTest(l, _)))
-    val blooms = log.fold(Seq.empty[String => Boolean])(bloomTests(spark, root, _, conjuncts))
+    val blooms = snapshot.fold(Seq.empty[String => Boolean])(bloomTests(spark, root, _, conjuncts))
     if (logTests.isEmpty && blooms.isEmpty && pushed.isEmpty) dirs
     else {
       val footerAdmits = if (pushed.isEmpty) None else Some(rowGroupsMayMatch(pushed))
@@ -156,7 +154,7 @@ final class ManifestFileIndex(spark: SparkSession, val root: String, files: Seq[
     * derive from `conjuncts`, resolved against the partition schema.
     */
   private def derivedPartitionFilters(conjuncts: Seq[sources.Filter]): Seq[Expression] =
-    log.filter(_.generated.nonEmpty).toSeq.flatMap { l =>
+    snapshot.filter(_.generated.nonEmpty).toSeq.flatMap { l =>
       MergeTable.derivedPartitionConjuncts(spark, conjuncts, l.generated, l.types)
         .flatMap(MergeTable.translateFilter).reduceOption(_ && _).flatMap(p =>
           try Some(MergeTable.conditionOf(spark, partitionSchema, p))

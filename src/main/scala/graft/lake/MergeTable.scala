@@ -2756,6 +2756,11 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
 
     def liveCount(f: String): Long =
       counts(f) - dvs.get(f).map(_._2).getOrElse(0L)
+    // a group exists only while a row of it does: the scan returns no
+    // group for a partition whose every row a deletion vector masks
+    val liveGroups =
+      if (groupBy.isEmpty) groups
+      else groups.filter { case (_, m) => !m.forall(counts.contains) || m.map(liveCount).sum > 0 }
 
     // raised when a value-level check (sum overflow) proves the log cannot
     // answer exactly — the caller falls back to the real scan
@@ -2827,7 +2832,7 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     }
     if (!boundsParse) return None
 
-    try Some(groups.toSeq.sortBy(_._1.mkString("\u0000")).map { case (gv, members) =>
+    try Some(liveGroups.toSeq.sortBy(_._1.mkString("\u0000")).map { case (gv, members) =>
       gv ++ aggs.map { case (op, c) => aggValue(op, c, members) }
     }) catch { case e: RuntimeException if e eq Unanswerable => None }
   }
@@ -3866,6 +3871,20 @@ final class MergeTable(val root: String, val partitionCols: Seq[String] = Nil,
     commit(v + 1, c.files, c.schema, c.statsLines,
       constraintsOverride = Some(c.constraints.filterNot(_._1 == name)),
       op = "DROP CONSTRAINT")
+  }
+
+  /** `ALTER COLUMN c DROP NOT NULL` on a column the commit schema declares
+    * NOT NULL: a metadata-only commit marking it nullable. A no-op when it
+    * already is.
+    */
+  def dropNotNull(colName: String): Unit = {
+    require(exists, s"MergeTable at $root does not exist")
+    val v = currentVersion
+    val c = readCommit(v)
+    if (c.schema.fields.exists(f => f.name == colName && !f.nullable))
+      commit(v + 1, c.files, StructType(c.schema.fields.map(f =>
+        if (f.name == colName) f.copy(nullable = true) else f)), c.statsLines,
+        op = "ALTER COLUMN")
   }
 
   /** The CHECK constraints in force on the current version. */

@@ -192,10 +192,6 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
       !reservedProps.contains(k) && !k.startsWith(TableCatalog.OPTION_PREFIX)
     }
     if (user.nonEmpty) created.setProperties(user)
-    // reads report every column nullable, so declared NOT NULL columns
-    // ride the CHECK machinery, as ALTER COLUMN SET NOT NULL does
-    schema.fields.filterNot(_.nullable).foreach(f => created.addCheckConstraint(
-      org.apache.spark.sql.SparkSession.active, s"graft_notnull_${f.name}", s"${f.name} IS NOT NULL"))
     loadTable(ident)
   }
 
@@ -226,8 +222,9 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
       case n: TableChange.UpdateColumnNullability =>
         // NOT NULL rides the CHECK machinery exactly like the LakeSql
         // sugar: SET validates existing data then fuses enforcement into
-        // every write; DROP on a column never constrained is a no-op
-        // (Delta's tolerance)
+        // every write. DROP removes that constraint and relaxes a NOT NULL
+        // the commit schema declares (CREATE TABLE's); on a column never
+        // constrained it is a no-op (Delta's tolerance)
         require(n.fieldNames.length == 1,
           s"ALTER TABLE ${ident.name}: nested column nullability changes are not supported")
         val c = n.fieldNames.head
@@ -235,8 +232,10 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
         if (!n.nullable)
           t.addCheckConstraint(org.apache.spark.sql.SparkSession.active, cname,
             s"$c IS NOT NULL")
-        else if (t.checkConstraints.exists(_._1 == cname))
-          t.dropCheckConstraint(cname)
+        else {
+          if (t.checkConstraints.exists(_._1 == cname)) t.dropCheckConstraint(cname)
+          t.dropNotNull(c)
+        }
       case other =>
         throw new UnsupportedOperationException(
           s"ALTER TABLE ${ident.name}: unsupported change $other")

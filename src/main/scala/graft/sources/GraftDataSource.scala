@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.GraftDatasourceShims
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.functions.{lit, raise_error, when}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, Filter, InsertableRelation}
 import org.apache.spark.sql.types.StructType
@@ -25,9 +25,10 @@ import graft.lake.MergeTable
   *
   * Architecture = Delta's own: a DataSource V2 [[TableProvider]] whose
   * table is resolved, for batch reads, to the plan [[MergeTable]] itself
-  * builds — the injected [[GraftReadResolution]] rule replaces the V2
-  * relation with `readVersion` at the pinned version (or `changes` for the
-  * change feed), one Parquet relation over the snapshot's
+  * builds — the [[GraftReadResolution]] optimizer rule replaces the V2
+  * relation, on every execution, with `readVersion` at the pinned version
+  * (the current one when none is pinned) or `changes` for the change feed:
+  * one Parquet relation over the snapshot's
   * [[graft.lake.ManifestFileIndex]] with the column-mapping projection and
   * the deletion-vector anti-join above it, as Delta's `DeltaAnalysis` turns
   * `DeltaTableV2` into a `LogicalRelation`. Column pruning, filter pushdown,
@@ -38,7 +39,10 @@ import graft.lake.MergeTable
   *
   * Registered under the short name `graft` via the standard
   * `DataSourceRegister` service file, so `format("graft")` resolves with
-  * zero session configuration. Also implements the V1
+  * zero session configuration. Batch READS need the rule, so the session
+  * must install `spark.sql.extensions=graft.functions.GraftExtensions`
+  * (`Sessions.builder` does); without it a read fails with an error naming
+  * that setting. Writes and streams need no extension. Also implements the V1
   * [[CreatableRelationProvider]] — Spark routes `ErrorIfExists`/`Ignore`
   * path saves (and `partitionBy` writes, which path-based V2 tables reject)
   * through the V1 API, Delta's arrangement too.
@@ -211,7 +215,8 @@ final class GraftDataSource extends TableProvider with DataSourceRegister
     }
     if (!alreadyApplied) mode match {
       case SaveMode.Overwrite                 => table.overwrite(data, txn)
-      case SaveMode.Append                    => table.append(data, txn)
+      case SaveMode.Append                    =>
+        table.append(GraftWriteBuilder.notNullChecked(table, data), txn)
       case SaveMode.ErrorIfExists if exists   =>
         throw new IllegalArgumentException(
           s"a graft table already exists at $root (SaveMode.ErrorIfExists)")
@@ -262,18 +267,16 @@ final class GraftTable(root: String, declaredParts: Seq[String],
   }
 
   /** The snapshot version the reader options pin — `versionAsOf` /
-    * `timestampAsOf` (Delta's reader-option time travel) — or the current
-    * version, resolved once so the schema and the read name one snapshot.
-    * CDF mode (`readChangeFeed`) reads the commit range
+    * `timestampAsOf` (Delta's reader-option time travel) — or the version
+    * current at this call, so each execution of an unpinned read sees the
+    * latest commit. CDF mode (`readChangeFeed`) reads the commit range
     * `startingVersion..endingVersion` of the feed instead.
     */
-  private lazy val pinnedVersion: Long = {
-    val t = MergeTable.open(root)
+  private def pinnedVersion(t: MergeTable): Long =
     opts.get("versionasof").map(_.toLong)
       .orElse(opts.get("timestampasof")
         .map(ts => t.versionAt(graft.sqlapi.LakeSql.parseTsMillis(ts))))
       .getOrElse(t.currentVersion)
-  }
 
   private def cdfMode: Boolean = opts.get("readchangefeed").exists(_.toBoolean)
 
@@ -302,12 +305,12 @@ final class GraftTable(root: String, declaredParts: Seq[String],
         .getOrElse(t.currentVersion)
       t.changes(spark, from, to)
     }
-    else t.readVersion(spark, pinnedVersion)
+    else t.readVersion(spark, pinnedVersion(t))
   }
 
   /** The schema the read reports: the snapshot's, nullable as
-    * `readVersion` reports it (NOT NULL is the CHECK machinery's job), or
-    * the feed's own.
+    * `readVersion` reports it (writes enforce the commit schema's NOT NULL
+    * columns themselves, see [[GraftWriteBuilder]]), or the feed's own.
     */
   private[sources] def resolvedSchema: StructType = {
     val probe = new MergeTable(root)
@@ -316,7 +319,7 @@ final class GraftTable(root: String, declaredParts: Seq[String],
       // feed frames carry the user columns plus the CDF markers; resolve
       // the exact shape from the feed itself (metadata-sized analysis)
       baseFrame(SparkSession.active).schema
-    else GraftDatasourceShims.asNullable(probe.schemaOf(pinnedVersion))
+    else GraftDatasourceShims.asNullable(probe.schemaOf(pinnedVersion(probe)))
   }
 
   private[sources] def asV2: Table = new Table
@@ -380,11 +383,17 @@ final class GraftTable(root: String, declaredParts: Seq[String],
       caps
     }
 
-    // reads never plan this scan: GraftReadResolution replaces them first.
-    // DELETE FROM plans its target as a scan it never runs (filters go to
-    // deleteWhere), so the scan has a schema and no batch
+    // reads never plan this scan when GraftReadResolution is installed: it
+    // replaces them first. DELETE FROM plans its target as a scan it never
+    // runs (filters go to deleteWhere), so the scan has a schema and no batch
     override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      () => new Scan { override def readSchema(): StructType = schema() }
+      () => new Scan {
+        override def readSchema(): StructType = schema()
+        override def toBatch(): org.apache.spark.sql.connector.read.Batch =
+          throw new UnsupportedOperationException(s"reading graft table $root needs the " +
+            "graft read rule: start the session with " +
+            "spark.sql.extensions=graft.functions.GraftExtensions")
+      }
 
     override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
       require(!cdfMode && opts.get("versionasof").isEmpty &&
@@ -703,7 +712,9 @@ trait GraftV2Marker {
   * new rows land in ONE atomic commit. All paths run the standard
   * MergeTable writes: identity/generated columns, CHECK constraints,
   * row-id assignment, and the atomic `_LATEST` publish apply exactly as
-  * API writes.
+  * API writes. Columns the commit schema declares NOT NULL are checked
+  * here, in the write itself: the table reports every column nullable, so
+  * Spark adds no null assertion of its own.
   */
 final class GraftWriteBuilder(table: MergeTable,
                               txn: Option[(String, Long)] = None)
@@ -728,12 +739,13 @@ final class GraftWriteBuilder(table: MergeTable,
   override def build(): Write = new V1Write {
     override def toInsertableRelation: InsertableRelation =
       new InsertableRelation {
-        override def insert(data: DataFrame, legacyOverwrite: Boolean): Unit = {
+        override def insert(data0: DataFrame, legacyOverwrite: Boolean): Unit = {
           // Delta's idempotent-writer options: an already-applied
           // (txnAppId, txnVersion) is a NO-OP; otherwise the marker
           // commits atomically with the data
           if (txn.exists { case (a, ver) =>
                 table.exists && table.lastTxnVersion(a).exists(_ >= ver) }) return
+          val data = GraftWriteBuilder.notNullChecked(table, data0)
           if (overwriteFilters.nonEmpty) {
             require(txn.isEmpty,
               "txnAppId/txnVersion are not supported on filtered overwrites — " +
@@ -746,5 +758,25 @@ final class GraftWriteBuilder(table: MergeTable,
           else table.append(data, txn)
         }
       }
+  }
+}
+
+object GraftWriteBuilder {
+
+  /** `data` with a per-row check on every column `table`'s current commit
+    * schema declares NOT NULL: a NULL there fails the write. Fused into
+    * the write's own plan, never a second scan.
+    */
+  private[sources] def notNullChecked(table: MergeTable, data: DataFrame): DataFrame = {
+    val required =
+      if (!table.exists) Set.empty[String]
+      else table.schemaOf(table.currentVersion).fields.filterNot(_.nullable).map(_.name).toSet
+    if (!data.columns.exists(required)) data
+    else data.select(data.columns.toSeq.map { c =>
+      val v = data.col(s"`${c.replace("`", "``")}`")
+      if (!required(c)) v
+      else when(v.isNull, raise_error(lit(s"NOT NULL constraint violated: column $c is NULL")))
+        .otherwise(v).as(c)
+    }: _*)
   }
 }

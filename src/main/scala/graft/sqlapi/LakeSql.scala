@@ -492,11 +492,14 @@ object LakeSql {
         resolve(tgt, targets)
           .addCheckConstraint(spark, s"graft_notnull_$colName", s"$colName IS NOT NULL")
       case DropNotNullShape(tgt, colName) =>
-        // DROP NOT NULL on a never-constrained column is a no-op, not an
-        // error (Delta's tolerance — the desired end state already holds)
+        // drops the SET NOT NULL constraint and relaxes a NOT NULL the
+        // commit schema declares; on a never-constrained column it is a
+        // no-op, not an error (Delta's tolerance — the desired end state
+        // already holds)
         val nn = resolve(tgt, targets)
         if (nn.checkConstraints.exists(_._1 == s"graft_notnull_$colName"))
           nn.dropCheckConstraint(s"graft_notnull_$colName")
+        nn.dropNotNull(colName)
       case _ =>
         throw new IllegalArgumentException(
           "unsupported statement — supported shapes: DELETE FROM t WHERE p; " +

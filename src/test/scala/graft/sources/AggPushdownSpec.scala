@@ -76,6 +76,23 @@ class AggPushdownSpec extends SparkSpec {
     assert(mx.collect().head.getInt(0) === 3, "fallback still answers correctly")
   }
 
+  test("deletion vectors: a partition whose every row is masked is no group") {
+    val root = scratch("agg_dv_group")
+    val t = new MergeTable(root, Seq("p"), statsCols = Seq("k"))
+    t.overwrite(Seq((1, "p1"), (2, "p1"), (3, "p2"), (4, "p2")).toDF("k", "p"))
+    t.deleteVectorized(spark, col("p") === "p2")
+    assert(t.deletionVectors.nonEmpty, "the masked files stay live")
+    val scanned = t.read(spark).select("p").as[String].collect().groupBy(identity)
+      .map { case (p, ps) => (p, ps.length.toLong) }.toSeq.sorted
+    assert(scanned === Seq(("p1", 2L)))
+    Seq("API" -> t.read(spark), "format(graft)" -> spark.read.format("graft").load(root))
+      .foreach { case (what, df) =>
+        val g = df.groupBy("p").count()
+        assert(answeredFromLog(g), s"$what: expected a metadata answer in:\n${planOf(g)}")
+        assert(g.as[(String, Long)].collect().toSeq.sorted === scanned, what)
+      }
+  }
+
   test("no recorded counts / string bounds / filters: exact fallback") {
     val root = scratch("agg_fallback")
     val t = new MergeTable(root) // NO statsCols: no counts in the log

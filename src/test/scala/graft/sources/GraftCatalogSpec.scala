@@ -261,16 +261,31 @@ class GraftCatalogSpec extends SparkSpec {
     step(s"DELETE FROM $cat.self.t WHERE k > 100", Seq((12L, "b", "p2")))
   }
 
-  test("declared NOT NULL columns stay enforced through the nullable read schema") {
+  test("the commit schema's NOT NULL columns stay enforced through the nullable read schema") {
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.nn2")
     spark.sql(s"CREATE TABLE $cat.nn2.t (k BIGINT NOT NULL, v STRING)")
-    spark.sql(s"INSERT INTO $cat.nn2.t VALUES (1, 'a')")
-    assert(spark.table(s"$cat.nn2.t").schema.forall(_.nullable))
-    val ex = intercept[Exception](
-      spark.sql(s"INSERT INTO $cat.nn2.t VALUES (CAST(NULL AS BIGINT), 'b')"))
-    assert(ex.getMessage.contains("graft_notnull_k") ||
-      Option(ex.getCause).exists(_.getMessage.contains("graft_notnull_k")))
-    assert(spark.sql(s"SELECT count(*) FROM $cat.nn2.t").head.getLong(0) === 1L)
+    // a table whose commit schema declares NOT NULL and which has no
+    // CHECK constraint, as written outside the catalog
+    val wh = spark.conf.get(s"spark.sql.catalog.$cat.warehouse")
+    new MergeTable(s"$wh/nn2/api").createEmpty(new org.apache.spark.sql.types.StructType()
+      .add("k", "bigint", nullable = false).add("v", "string"))
+    def violated(e: Throwable): Boolean = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("NOT NULL constraint violated: column k"))
+    for (name <- Seq("t", "api")) {
+      val root = s"$wh/nn2/$name"
+      assert(MergeTable.open(root).checkConstraints.isEmpty, name)
+      spark.sql(s"INSERT INTO $cat.nn2.$name VALUES (1, 'a')")
+      assert(spark.table(s"$cat.nn2.$name").schema.forall(_.nullable), name)
+      assert(violated(intercept[Exception](
+        spark.sql(s"INSERT INTO $cat.nn2.$name VALUES (CAST(NULL AS BIGINT), 'b')"))), name)
+      assert(violated(intercept[Exception](Seq((Option.empty[Long], "c")).toDF("k", "v")
+        .write.format("graft").mode("append").save(root))), name)
+      assert(spark.sql(s"SELECT count(*) FROM $cat.nn2.$name").head.getLong(0) === 1L, name)
+      spark.sql(s"ALTER TABLE $cat.nn2.$name ALTER COLUMN k DROP NOT NULL")
+      spark.sql(s"INSERT INTO $cat.nn2.$name VALUES (CAST(NULL AS BIGINT), 'b')")
+      assert(spark.sql(s"SELECT count(*) FROM $cat.nn2.$name WHERE k IS NULL")
+        .head.getLong(0) === 1L, name)
+    }
   }
 
   test("scan pruning and filter pushdown survive the catalog route") {

@@ -109,6 +109,20 @@ class GraftDataSourceSpec extends SparkSpec {
       spark.read.format("graft").load(scratch("dsv2_missing")).collect())
   }
 
+  test("without GraftExtensions a batch read fails naming the extension") {
+    val root = scratch("dsv2_noext")
+    new MergeTable(root).overwrite(Seq((1, "a")).toDF("k", "v"))
+    val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("path", root))
+    val ds = new GraftDataSource
+    val table = ds.getTable(ds.inferSchema(opts), Array.empty, opts)
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
+    val scan = table.newScanBuilder(opts).build()
+    assert(scan.readSchema() === table.schema())
+    val ex = intercept[UnsupportedOperationException](scan.toBatch)
+    assert(ex.getMessage.contains("spark.sql.extensions=graft.functions.GraftExtensions"))
+  }
+
   test("reader options: versionAsOf, timestampAsOf, readChangeFeed") {
     val root = scratch("dsv2_opts")
     rows3.toDF("k", "v", "p").write.format("graft").mode("overwrite").save(root) // v0

@@ -80,4 +80,30 @@ class ReadSurfaceParitySpec extends SparkSpec {
     assertSame(feed, t.changes(spark, 1, cur), "readChangeFeed")
     assert(rows(feed).nonEmpty)
   }
+
+  test("an unpinned read reads the snapshot current at each execution") {
+    val wh = spark.conf.get(s"spark.sql.catalog.$cat.warehouse")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(wh, "ns"))
+    val root = s"$wh/ns/cur"
+    val t = new MergeTable(root, Seq("p"), statsCols = Seq("k"))
+    t.overwrite(Seq((1, "a", "p0"), (2, "b", "p1")).toDF("k", "v", "p"))
+    val conn = spark.read.format("graft").load(root)
+    val table = spark.table(s"$cat.ns.cur")
+    val pinned = spark.read.format("graft").option("versionAsOf", "0").load(root)
+    t.append(Seq((3, "c", "p1")).toDF("k", "v", "p"))
+    t.deleteVectorized(spark, col("k") === 1)
+    Seq("format(graft)" -> conn, "catalog table" -> table).foreach { case (what, df) =>
+      assertSame(df, t.read(spark), what)
+      assert(df.count() === 2L, what)
+      assert(df.filter(col("v") =!= "b").count() === 1L, what)
+    }
+    assertSame(pinned, t.readVersion(spark, 0), "versionAsOf")
+    // a column the read was defined with that the snapshot no longer has
+    // fails the query instead of reading another column
+    t.renameColumn("v", "label")
+    val ex = intercept[Exception](conn.filter(col("k") > 0).collect())
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("read it again")), ex)
+    assert(spark.read.format("graft").load(root).columns.toSeq === Seq("k", "label", "p"))
+  }
 }
